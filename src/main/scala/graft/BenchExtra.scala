@@ -95,7 +95,7 @@ object BenchExtra {
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(2000)
+        org.apache.spark.sql.graft.shim.waitUntilEmpty(spark.sparkContext)
         spark.sparkContext.removeSparkListener(listener)
         println(f"[stages] $name wall=$wall%.3fs jobs=${jobs.get()}")
         stages.sortBy(_._1).foreach { case (id, n, ms, nm) =>
@@ -148,9 +148,10 @@ object BenchExtra {
           spark.sparkContext.setJobDescription(s"stress: $n")
           val t0 = System.nanoTime()
           t()
-          vectors(n) += (System.nanoTime() - t0) / 1e9
-          Thread.sleep(800)
-          System.err.println(f"[stress-stages] $n rep$r (${(System.nanoTime() - t0) / 1e9}%.2fs): " +
+          val dt = (System.nanoTime() - t0) / 1e9
+          vectors(n) += dt
+          org.apache.spark.sql.graft.shim.waitUntilEmpty(spark.sparkContext)
+          System.err.println(f"[stress-stages] $n rep$r ($dt%.2fs): " +
             stages.synchronized(stages.sortBy(_._1).toList)
               .map { case (id, nt, ms) => s"$id/${nt}t/${ms}ms" }.mkString(" "))
         }

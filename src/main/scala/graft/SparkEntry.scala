@@ -86,7 +86,7 @@ object Queries {
     * decontamination queries share. Mirrors the `bench_items` CTEs.
     */
   private def benchmarkPrefix(d: DataFrame, mod: Int, rem: Int): DataFrame = {
-    val tokens = filter(split(lower(trim(col("text"))), "\\s+"), t => t =!= "")
+    val tokens = graft.ops.TextKernel.lowerWordsCol(col("text"))
     d.filter(col("doc_id") % mod === rem && size(tokens) >= 8)
       .select(array_join(slice(tokens, 1, 12), " ").as("text"))
   }

@@ -131,12 +131,12 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
 /** Static call targets for generated code (stable Java-visible names). */
 object GraftFunctions {
   def normalizeStr(s: String): String = Text.normalizeStr(s)
-  def polyHash(s: String): Long = graft.ops.TextAnalysis.polyHash(s)
 
-  /** Allocation-free form over the raw UTF8String: pure-ASCII inputs (the
-    * engine's decimal id strings — every byte IS its codepoint) hash
-    * straight off the bytes; anything else falls back to the String
-    * decode + codePointAt walk. Identical output either way.
+  /** [[graft.ops.TextKernel.polyHash]] over the raw UTF8String, allocation-
+    * free: pure-ASCII inputs (the engine's decimal id strings — every byte
+    * IS its codepoint) hash straight off the bytes; anything else falls
+    * back to the String decode + codePointAt walk. Identical output either
+    * way.
     */
   def polyHash(u: UTF8String): Long = {
     val n = u.numBytes()
@@ -144,8 +144,8 @@ object GraftFunctions {
     var i = 0
     while (i < n) {
       val b = u.getByte(i)
-      if (b < 0) return graft.ops.TextAnalysis.polyHash(u.toString)
-      acc = (acc * 31 + b) % 2147483647L
+      if (b < 0) return graft.ops.TextKernel.polyHash(u.toString)
+      acc = (acc * 31 + b) % graft.ops.TextKernel.PolyMod
       i += 1
     }
     acc

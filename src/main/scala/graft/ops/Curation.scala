@@ -54,7 +54,7 @@ object Curation {
           nChars >= nTokens * 3 && nChars <= nTokens * 13 && punct * 10 <= nChars
         // bigram repeat mass — the shared kernel, so the composed pipeline
         // can never drift from the standalone repetitionSignals op
-        val (n, distinct, _) = TextAnalysis.bigramStats(TextAnalysis.lowerTokens(text))
+        val (n, distinct, _) = TextAnalysis.bigramStats(TextKernel.lowerWords(text))
         val dupX = TextAnalysis.dupBigramX1000(n, distinct)
         digest.reset()
         val md5Hex = digest.digest(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -21,15 +21,11 @@ import org.apache.spark.sql.functions._
   */
 object Decontaminate {
 
-  /** Normalized word tokens (lowercase, `\s+` split, empties dropped) —
-    * the same normalization as [[Dedup.shinglesOf]], as a pure Column. */
-  private def toks(text: Column): Column =
-    filter(split(lower(trim(text)), "\\s+"), t => t =!= "")
-
-  /** Distinct word n-grams of `text`; texts shorter than n fall back to
-    * the whole text as one gram, mirroring [[Dedup.shinglesOfTokens]]. */
+  /** Distinct word n-grams of `text` over [[TextKernel.lowerWordsCol]];
+    * texts shorter than n fall back to the whole text as one gram — the
+    * Column twin of [[Dedup.shinglesOf]]. */
   def grams(text: Column, n: Int): Column =
-    array_distinct(Shingles.tokenNGrams(toks(text), n))
+    array_distinct(TextKernel.tokenNGrams(TextKernel.lowerWordsCol(text), n))
 
   /** (doc_id, n_contaminated) for every CONTAMINATED doc — the number of
     * distinct word n-grams the doc shares with any benchmark item. Clean

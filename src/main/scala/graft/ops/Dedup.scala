@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.TextKernel.{FnvOffset, FnvPrime, avalanche, gramHash64}
 
 /** Deduplication operators for training-data pipelines: exact (hash
   * groupBy), MinHash+LSH, SimHash, and exact n-gram Jaccard verification.
@@ -9,9 +10,9 @@ import org.apache.spark.sql.functions._
   * Scale design:
   *  - exact dedup is a single hash-shuffle on md5(text) with map-side
   *    partial aggregation;
-  *  - MinHash signatures are computed narrowly (one pass per doc, pure
-  *    column expressions — no UDF), then ONLY (band, hash) pairs shuffle:
-  *    ~bands×8 bytes per doc instead of the text;
+  *  - MinHash signatures are computed narrowly (one typed pass per doc
+  *    over [[TextKernel]] tokens and hashes), then ONLY (band, hash) pairs
+  *    shuffle: ~bands×8 bytes per doc instead of the text;
   *  - candidate pairs come from bucket-local self-pairing (collect_list
   *    within an LSH bucket; buckets are tiny by construction), then exact
   *    Jaccard verification joins the shingle sets back by doc id — the
@@ -26,16 +27,6 @@ object Dedup {
     docs.groupBy(md5(text).as("content_md5"))
       .agg(min(key).as("keep_id"), count(lit(1)).as("dup_count"))
 
-  /** Deterministic 64-bit mix for MinHash permutations (xxhash64 seeded by
-    * permutation index via string concat keeps it a pure Column expr).
-    */
-  private def hashWithSeed(c: Column, seed: Int): Column =
-    xxhash64(concat(lit(s"p$seed:"), c))
-
-  /** MinHash signature: array of `numHashes` minima over the shingle set. */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    array((0 until numHashes).map(i => array_min(transform(shingles, s => hashWithSeed(s, i)))): _*)
-
   /** maxBucket caps LSH bucket size: buckets above it are degenerate
     * (boilerplate/low-information members) and would otherwise enumerate
     * O(n²) pairs — the standard skew guard for LSH dedup at scale.
@@ -43,27 +34,13 @@ object Dedup {
   final case class LshConfig(numHashes: Int = 32, bands: Int = 8, shingleSize: Int = 3,
       jaccardThreshold: Double = 0.5, maxBucket: Int = 64)
 
-  /** Word-shingle set per doc (distinct n-grams, lowercased) as a Column.
-    *
-    * WARNING (measured, thread-dump verified): Catalyst higher-order
-    * functions re-evaluate INLINED child expressions once per array
-    * element — `split(text)` inside the transform lambda makes this
-    * quadratic in token count, and any computed `text` column nests
-    * further. Use the typed `shingleRows` for anything hot; this stays for
-    * small-column use and as the semantic reference.
-    */
-  def shingleSet(text: Column, n: Int): Column =
-    array_distinct(Shingles.tokenNGrams(split(lower(trim(text)), "\\s+"), n))
-
-  /** Typed (doc_id, shingles) — one linear pass per document. Input is
-    * [[Spread.spread]]-guarded (a tiny input otherwise runs this CPU-heavy
-    * pass on 1-2 scan tasks); note the spread projection matches
-    * [[bandHashRows]]', so minhashLshPairs' two passes over the same docs
-    * share one reused exchange when it fires.
+  /** Typed (doc_id, shingles) — one linear pass per document over
+    * [[TextKernel.docTexts]] (spread-guarded: a tiny input otherwise runs
+    * this CPU-heavy pass on 1-2 scan tasks).
     */
   def shingleRows(spark: SparkSession, docs: DataFrame, n: Int): DataFrame = {
     import spark.implicits._
-    Spread.spread(docs.select(col("doc_id"), col("text"))).as[(Long, String)]
+    TextKernel.docTexts(docs)
       .mapPartitions(_.map { case (id, text) => (id, shinglesOf(text, n)) })
       .toDF("doc_id", "shingles")
   }
@@ -74,62 +51,18 @@ object Dedup {
   // CollapseProject duplicates the shingle build into every aggregate —
   // this is the documented case for dropping to mapPartitions.
 
-  /** Deterministic 64-bit string hash (FNV-1a then avalanche) — plain Scala. */
-  def hash64(s: String, seed: Long): Long = {
-    var h = 0xcbf29ce484222325L ^ seed
-    var i = 0
-    while (i < s.length) {
-      h ^= s.charAt(i).toLong
-      h *= 0x100000001b3L
-      i += 1
-    }
-    h ^= (h >>> 32); h *= 0xd6e8feb86659fd93L; h ^= (h >>> 32)
-    h
-  }
-
-  /** Streamed [[hash64]] over the gram `tokens(from until from+len)` joined
-    * by a single space — byte-for-byte the same char sequence as hashing
-    * the materialized `mkString(" ")` gram, with zero gram-string
-    * allocation (the same streaming trick as DupSpans.gramDigestRows).
-    */
-  private def gramHash64(tokens: Array[String], from: Int, len: Int, seed: Long): Long = {
-    var h = 0xcbf29ce484222325L ^ seed
-    var t = from
-    val end = from + len
-    while (t < end) {
-      if (t > from) { h ^= ' '.toLong; h *= 0x100000001b3L }
-      val s = tokens(t)
-      var i = 0
-      while (i < s.length) {
-        h ^= s.charAt(i).toLong
-        h *= 0x100000001b3L
-        i += 1
-      }
-      t += 1
-    }
-    h ^= (h >>> 32); h *= 0xd6e8feb86659fd93L; h ^= (h >>> 32)
-    h
-  }
-
-  /** The normalized token array [[shinglesOf]] shingles over (SQL-trim,
-    * ROOT lowercase, whitespace split, empties dropped).
-    */
-  private def shingleTokens(text: String): Array[String] =
-    TextAnalysis.sqlTrim(text).toLowerCase(java.util.Locale.ROOT)
-      .split("\\s+").filter(_.nonEmpty)
-
-  /** Scala-side shingle set (must mirror shingleSet's Column semantics).
-    * Trims with SQL-trim (spaces ONLY — Java String.trim also strips control
-    * chars ≤ U+0020, which neither Spark SQL `trim` nor the DuckDB oracles
-    * do; on a text starting with '\n' the Java-trim variant hash-diverged
-    * from every cross-engine shingle oracle).
+  /** Distinct word n-grams of `text` over [[TextKernel.lowerWords]] — the
+    * Scala twin of `array_distinct(TextKernel.tokenNGrams(lowerWordsCol))`.
+    * Never Java `String.trim` first: it also strips control chars ≤ U+0020,
+    * which neither Spark SQL `trim` nor the DuckDB oracles do; on a text
+    * starting with U+0001 that variant hash-diverged from every
+    * cross-engine shingle oracle.
     */
   def shinglesOf(text: String, n: Int): Array[String] =
-    shinglesOfTokens(shingleTokens(text), n)
+    shinglesOfTokens(TextKernel.lowerWords(text), n)
 
-  /** [[shinglesOf]] over already-normalized (trimmed, lowercased,
-    * whitespace-split) tokens — for callers that computed the token array
-    * anyway (avoids re-normalizing the raw text on hot paths).
+  /** [[shinglesOf]] over an already-computed [[TextKernel.lowerWords]]
+    * token array (avoids re-normalizing the raw text on hot paths).
     */
   def shinglesOfTokens(tokens: Array[String], n: Int): Array[String] = {
     val grams =
@@ -140,7 +73,7 @@ object Dedup {
 
   /** (doc_id, band, band_hash) rows via a single fused pass per document.
     *
-    * Signature values are EXACTLY `hash64(gram, i * phi)` for every
+    * Signature values are EXACTLY `TextKernel.hash64(gram, i * phi)` for every
     * permutation i — the hash family is effectively frozen by the
     * scale-pinned recall==exact oracles (q_minhash_dedup,
     * q_near_dup_keeper): a "one base hash + cheap per-permutation mix"
@@ -157,39 +90,38 @@ object Dedup {
   def bandHashRows(spark: SparkSession, docs: DataFrame, cfg: LshConfig): DataFrame = {
     import spark.implicits._
     val rowsPerBand = cfg.numHashes / cfg.bands
-    Spread.spread(docs.select(col("doc_id"), col("text"))).as[(Long, String)].mapPartitions { it =>
+    TextKernel.docTexts(docs).mapPartitions { it =>
       val numH = cfg.numHashes
       val states = new Array[Long](numH)
       it.flatMap { case (docId, text) =>
-        val tokens = shingleTokens(text)
+        val tokens = TextKernel.lowerWords(text)
         val n = cfg.shingleSize
         val mins = Array.fill(numH)(Long.MaxValue)
         // fold the gram tokens(from until from+len) joined by ' ' into all
         // numH seeded FNV states, then avalanche + min-update each
         @inline def vote(from: Int, len: Int): Unit = {
           var i = 0
-          while (i < numH) { states(i) = 0xcbf29ce484222325L ^ (i * 0x9E3779B97F4A7C15L); i += 1 }
+          while (i < numH) { states(i) = FnvOffset ^ (i * 0x9E3779B97F4A7C15L); i += 1 }
           val end = from + len
           var t = from
           while (t < end) {
             if (t > from) {
               var j = 0
-              while (j < numH) { states(j) = (states(j) ^ ' '.toLong) * 0x100000001b3L; j += 1 }
+              while (j < numH) { states(j) = (states(j) ^ ' '.toLong) * FnvPrime; j += 1 }
             }
             val s = tokens(t)
             var ci = 0
             while (ci < s.length) {
               val c = s.charAt(ci).toLong
               var j = 0
-              while (j < numH) { states(j) = (states(j) ^ c) * 0x100000001b3L; j += 1 }
+              while (j < numH) { states(j) = (states(j) ^ c) * FnvPrime; j += 1 }
               ci += 1
             }
             t += 1
           }
           var k = 0
           while (k < numH) {
-            var h = states(k)
-            h ^= (h >>> 32); h *= 0xd6e8feb86659fd93L; h ^= (h >>> 32)
+            val h = avalanche(states(k))
             if (h < mins(k)) mins(k) = h
             k += 1
           }
@@ -201,10 +133,10 @@ object Dedup {
           while (st <= last) { vote(st, n); st += 1 }
         }
         (0 until cfg.bands).iterator.map { b =>
-          var h = 0xcbf29ce484222325L ^ b.toLong
+          var h = FnvOffset ^ b.toLong
           var i = b * rowsPerBand
           while (i < (b + 1) * rowsPerBand) {
-            h ^= mins(i); h *= 0x100000001b3L
+            h ^= mins(i); h *= FnvPrime
             i += 1
           }
           (docId, b, h)
@@ -265,15 +197,15 @@ object Dedup {
     */
   def shingleHashRows(spark: SparkSession, docs: DataFrame, n: Int): DataFrame = {
     import spark.implicits._
-    Spread.spread(docs.select(col("doc_id"), col("text"))).as[(Long, String)]
+    TextKernel.docTexts(docs)
       .mapPartitions(_.map { case (id, text) =>
-        // Streamed [[gramHash64]] produces byte-identical values to
-        // hash64(gram.mkString, seed) with zero gram-string allocation;
+        // Streamed [[TextKernel.gramHash64]] produces byte-identical values to
+        // TextKernel.hash64(gram.mkString, seed) with zero gram-string allocation;
         // dedup is by hash value (sorted) instead of by gram string —
         // exactly equivalent downstream, because the verify join consumes
         // these arrays only through array_intersect/array_union SIZES
         // (set semantics: order- and duplicate-insensitive).
-        val tokens = shingleTokens(text)
+        val tokens = TextKernel.lowerWords(text)
         val hs =
           if (tokens.length < n) Array(gramHash64(tokens, 0, tokens.length, 0x5EED5EED5EEDL))
           else {
@@ -308,28 +240,7 @@ object Dedup {
     verifyPairs(shingleHashRows(spark, docs, cfg.shingleSize), candidates, cfg)
   }
 
-  /** 62-bit SimHash token hash from two independent polynomial codepoint
-    * hashes: h = scramble(p1) | (scramble(p2) << 31). Chosen over xxhash64
-    * so an independent engine recomputes the whole signature exactly
-    * (DuckDB: list_reduce over unicode codepoints) — giving SimHash a
-    * cross-engine oracle; 62 bits also keeps every shift below the BIGINT
-    * sign bit on both engines.
-    *
-    * Diffusion matters here (measured at sf0.01): the naive `acc*31+cp`
-    * poly hash leaves the last characters in the low bits only — token
-    * pairs like singular/plural get near-identical hashes, signature bits
-    * correlate across documents, and hamming<=3 pair count exploded 1.5k →
-    * 16k. Large LCG multipliers (1103515245 / 1566083941, products stay
-    * under 2^63) plus a final quadratic scramble (p*p%m+p)%m restore
-    * mixing: 1.2k pairs, on par with xxhash64's 1.9k.
-    */
-  def polyHash64(s: String): Long = {
-    def scramble(p: Long, mod: Long): Long = (p * p % mod + p) % mod
-    scramble(graft.ops.TextAnalysis.polyHashSeeded(s, 7L, 2147483647L, 1103515245L), 2147483647L) |
-      (scramble(graft.ops.TextAnalysis.polyHashSeeded(s, 13L, 2147483629L, 1566083941L), 2147483629L) << 31)
-  }
-
-  /** SimHash bit width (bits 0..61 — see polyHash64). */
+  /** SimHash bit width (bits 0..61 — see [[TextKernel.polyHash64]]). */
   val SimhashBits = 62
 
   /** Typed single-pass SimHash signatures over distinct lowercase tokens
@@ -340,13 +251,13 @@ object Dedup {
     */
   def simhashRows(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    Spread.spread(docs.select(col("doc_id"), col("text"))).as[(Long, String)].mapPartitions { it =>
+    TextKernel.docTexts(docs).mapPartitions { it =>
       it.map { case (docId, text) =>
-        val tokens = text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty).distinct
+        val tokens = TextKernel.lowerWords(text).distinct
         val votes = new Array[Int](SimhashBits)
         var ti = 0
         while (ti < tokens.length) {
-          val h = polyHash64(tokens(ti))
+          val h = TextKernel.polyHash64(tokens(ti))
           var bit = 0
           while (bit < SimhashBits) {
             if (((h >>> bit) & 1L) == 1L) votes(bit) += 1 else votes(bit) -= 1

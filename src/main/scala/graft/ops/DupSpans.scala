@@ -26,18 +26,17 @@ import org.apache.spark.sql.functions._
 object DupSpans {
 
   /** One row per k-token window: (doc_id, pos, gram) with 0-based token
-    * position and the space-joined gram text. Tokenization mirrors
-    * [[Dedup.shinglesOf]] (SQL-trim, ROOT lowercase, `\s+` split, empties
-    * dropped). Documents shorter than k tokens emit nothing — no k-window
-    * exists, so they can never carry a duplicated span.
+    * position and the space-joined gram text, over
+    * [[TextKernel.lowerWords]]. Documents shorter than k tokens emit
+    * nothing — no k-window exists, so they can never carry a duplicated
+    * span.
     */
   def gramPositionRows(spark: SparkSession, docs: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"gram size must be positive, got $k")
     import spark.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)].mapPartitions { it =>
       it.flatMap { case (docId, text) =>
-        val toks = TextAnalysis.sqlTrim(text)
-          .toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
+        val toks = TextKernel.lowerWords(text)
         if (toks.length < k) Iterator.empty
         else (0 to toks.length - k).iterator.map(i =>
           (docId, i, toks.slice(i, i + k).mkString(" ")))
@@ -52,18 +51,17 @@ object DupSpans {
     * gram STRING is never materialized into a row, and the per-gram
     * hex-encode + unhex round-trip of the Column md5 path disappears
     * (guide §1.2 step 2: per-task work, measured as the dominant narrow
-    * stage). Input is [[Spread.spread]]-guarded: tokenize+hash is the
-    * CPU-heavy pass a tiny input would otherwise run on 1-2 scan tasks.
+    * stage). Input is [[TextKernel.docTexts]] (spread-guarded): tokenize+hash
+    * is the CPU-heavy pass a tiny input would otherwise run on 1-2 scan tasks.
     */
   def gramDigestRows(spark: SparkSession, docs: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"gram size must be positive, got $k")
     import spark.implicits._
-    Spread.spread(docs.select(col("doc_id"), col("text"))).as[(Long, String)]
+    TextKernel.docTexts(docs)
       .mapPartitions { it =>
         val digest = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (docId, text) =>
-          val toks = TextAnalysis.sqlTrim(text)
-            .toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
+          val toks = TextKernel.lowerWords(text)
           if (toks.length < k) Iterator.empty
           else {
             val bytes = toks.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -119,11 +117,11 @@ object DupSpans {
     val perDoc = dupSpans(spark, docs, k, minCount)
       .groupBy(col("doc_id"))
       .agg(sum(col("end_tok") - col("start_tok") + 1).as("dup_tokens"))
-    val toks = filter(split(lower(trim(col("text"))), "\\s+"), t => t =!= "")
-    // the n_tokens side reads the SAME spread projection as the gram pass,
-    // so when Spread fires the two sides share one reused exchange (one
-    // physical evaluation of `docs` instead of two)
-    Spread.spread(docs.select(col("doc_id"), col("text")))
+    val toks = TextKernel.lowerWordsCol(col("text"))
+    // the n_tokens side reads the same TextKernel.docTexts projection as
+    // the gram pass, so when Spread fires the two sides share one reused
+    // exchange (one physical evaluation of `docs` instead of two)
+    TextKernel.docTexts(docs)
       .select(col("doc_id"), size(toks).cast("long").as("n_tokens"))
       .join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"),

@@ -27,7 +27,7 @@ object Sampling {
     * recomputable (polyHash over the decimal string, seed 7).
     */
   def hashBucket(id: Column): Column =
-    Similarity.polyHashCol(id.cast("string")) % Buckets
+    graft.functions.GraftFunctions.poly_hash(id.cast("string")) % Buckets
 
   /** The split's OWN hash bucket: same polynomial, but over the salted
     * string "<id>:split" — effectively independent of [[hashBucket]], so
@@ -47,7 +47,7 @@ object Sampling {
     * multiplication decorrelates the two buckets (measured 9.7%).
     */
   def splitBucket(id: Column): Column =
-    Similarity.polyHashCol(concat(id.cast("string"), lit(":split"))) % Buckets
+    graft.functions.GraftFunctions.poly_hash(concat(id.cast("string"), lit(":split"))) % Buckets
 
   /** Keep rows whose bucket falls under their stratum's threshold.
     * `rates` maps stratum value -> keep fraction in [0, 1]; strata absent

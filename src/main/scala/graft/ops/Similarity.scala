@@ -115,18 +115,6 @@ object Similarity {
     topK(scored, k)
   }
 
-  /** Polynomial codepoint hash of a string column — the Catalyst twin of
-    * TextAnalysis.polyHash (acc = (acc*31 + cp) % (2^31-1), seed 7), chosen
-    * because an independent engine recomputes it exactly (DuckDB:
-    * list_reduce over unicode codepoints). Backed by the NATIVE codegen
-    * expression (functions.PolyHash — a direct static call inside
-    * whole-stage codegen); the former sequence→transform→aggregate HOF
-    * chain materialized an index array per row and evaluated lambdas per
-    * element, on a hash that deterministic sampling applies to every
-    * corpus row.
-    */
-  def polyHashCol(s: Column): Column = graft.functions.GraftFunctions.poly_hash(s)
-
   /** Deterministic, corpus-size-INDEPENDENT centroid pick: the
     * `numCentroids` corpus vectors with the smallest
     * (polyHash(vec_id), vec_id). orderBy+limit plans as
@@ -140,7 +128,7 @@ object Similarity {
     import spark.implicits._
     corpus
       .select(col("vec_id"), col("embedding"))
-      .orderBy(polyHashCol(col("vec_id").cast("string")), col("vec_id"))
+      .orderBy(graft.functions.GraftFunctions.poly_hash(col("vec_id").cast("string")), col("vec_id"))
       .limit(numCentroids)
       .as[(Long, Array[Float])]
       .collect() // exactly min(numCentroids, |corpus|) rows, by construction
@@ -367,7 +355,7 @@ object Similarity {
   def planeMatrix(planes: Int, dim: Int): Array[Array[Double]] =
     planeCache.computeIfAbsent((planes, dim), { key =>
       Array.tabulate(key._1, key._2) { (p, j) =>
-        Dedup.hash64(s"plane$p:$j", 0L).toDouble / Long.MaxValue.toDouble
+        TextKernel.hash64(s"plane$p:$j", 0L).toDouble / Long.MaxValue.toDouble
       }
     })
 

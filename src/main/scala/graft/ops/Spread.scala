@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions.col
   * sides of the repeated-line strip) land on IDENTICAL repartition
   * subtrees, which exchange reuse collapses into one physical scan.
   *
-  * The threshold is parameterised (`spark.graft.spreadMaxBytesPerCore`,
-  * default 8 MB/core): inputs estimated under `cores × threshold` bytes
+  * The threshold is one session conf, `spark.graft.spreadMaxBytesPerCore`
+  * (default 8 MB/core): inputs estimated under `cores × threshold` bytes
   * repartition; the one-off shuffle of ≤ 8 MB/core of text costs far less
   * than leaving the cluster idle through a CPU-bound pass. Reading plan
   * statistics runs no Spark jobs, keeping query construction lazy.
@@ -35,7 +35,6 @@ object Spread {
   private def maxBytes(df: DataFrame): BigInt = {
     val spark = df.sparkSession
     val perCore = spark.conf.getOption("spark.graft.spreadMaxBytesPerCore")
-      .orElse(sys.env.get("SPARK_GRAFT_SPREAD_MAX_BYTES_PER_CORE"))
       .map(_.toLong).getOrElse(8L * 1024 * 1024)
     BigInt(spark.sparkContext.defaultParallelism) * perCore
   }

@@ -124,7 +124,7 @@ object TextAnalysis {
     // when it fires the tokenize+explode subtree evaluates once behind a
     // reused exchange instead of twice
     val toks = Spread.spread(docs.select(col("doc_id"), col("text")))
-      .select(col("doc_id"), explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
+      .select(col("doc_id"), explode(TextKernel.lowerSplitCol(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
     val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("tok").asc)
@@ -150,8 +150,8 @@ object TextAnalysis {
     require(overlap >= 0 && overlap < chunkSize, "0 <= overlap < chunkSize")
     val stride = chunkSize - overlap
     import spark.implicits._
-    Spread.spread(docs.select(col("doc_id"), col("text"))).as[(Long, String)].flatMap { case (id, text) =>
-      val toks = sqlTrim(text).split("\\s+").filter(_.nonEmpty)
+    TextKernel.docTexts(docs).flatMap { case (id, text) =>
+      val toks = TextKernel.words(text)
       val n = toks.length
       Iterator.from(0)
         .map(_ * stride)
@@ -178,7 +178,7 @@ object TextAnalysis {
     * language order), "und" when nothing hits.
     */
   def langIdColumns(text: Column): Column = {
-    val tokens = split(lower(trim(text)), "\\s+")
+    val tokens = TextKernel.lowerSplitCol(text)
     val langs = Stopwords.toSeq.sortBy(_._1)
     val scored = langs.zipWithIndex.map { case ((lang, words), i) =>
       val hits = size(filter(tokens, t => t.isInCollection(words)))
@@ -202,44 +202,17 @@ object TextAnalysis {
     */
   def fingerprintColumns(spark: org.apache.spark.sql.SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    Spread.spread(docs.select(col("doc_id"), col("text"))).as[(Long, String)].mapPartitions { it =>
+    TextKernel.docTexts(docs).mapPartitions { it =>
       it.map { case (id, text) =>
         val t = sqlTrim(text).toLowerCase(java.util.Locale.ROOT)
-        val grams = graft.ops.Dedup.shinglesOfTokens(t.split("\\s+").filter(_.nonEmpty), 3)
-        (id, polyHashSeeded(t, 13L, 2147483647L),
-          grams.iterator.map(polyHashSeeded(_, 13L, 2147483647L)).min,
+        val grams = Dedup.shinglesOfTokens(TextKernel.words(t), 3)
+        (id, TextKernel.polyHashSeeded(t, 13L, TextKernel.PolyMod),
+          grams.iterator.map(TextKernel.polyHashSeeded(_, 13L, TextKernel.PolyMod)).min,
           grams.length.toLong)
       }
     }.toDF("doc_id", "full_hash", "min_gram_hash", "n_distinct_grams")
   }
 
-  /** Polynomial rolling hash over codepoints: acc = (acc*31 + cp) mod
-    * 2^31-1, seed 7 — chosen because an independent engine can recompute
-    * it exactly (DuckDB: list_reduce over unicode codepoints), giving the
-    * fingerprint family a cross-engine oracle that xxhash64 cannot have.
-    */
-  def polyHash(s: String): Long = polyHashSeeded(s, 7L, 2147483647L)
-
-  /** Seeded/modulus/multiplier-parameterized polynomial codepoint hash —
-    * two independent instances combine into the 62-bit SimHash token hash
-    * (Dedup.polyHash64) while staying DuckDB-recomputable. Keep
-    * `mult * (mod-1)` below 2^63 (both engines hash in signed 64-bit).
-    */
-  def polyHashSeeded(s: String, seed: Long, mod: Long, mult: Long = 31L): Long = {
-    var acc = seed
-    var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      acc = (acc * mult + cp) % mod
-      i += Character.charCount(cp)
-    }
-    acc
-  }
-
-  /** (doc_id, poly_hash, min_gram_poly): whole-text polynomial hash +
-    * minimum over 3-token-gram hashes (winnowing minimum) — one typed pass
-    * per doc, no shuffle.
-    */
   /** SQL-trim analog: strips SPACES only (Java String.trim also strips
     * control chars ≤ U+0020, which the DuckDB/Spark SQL trim() does not —
     * a latent cross-engine mismatch on texts with leading newlines/tabs).
@@ -252,32 +225,21 @@ object TextAnalysis {
     s.substring(a, b)
   }
 
+  /** (doc_id, poly_hash, min_gram_poly): whole-text polynomial hash +
+    * minimum over 3-token-gram hashes (winnowing minimum) — one typed pass
+    * per doc, no shuffle.
+    */
   def polyFingerprintRows(spark: org.apache.spark.sql.SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    Spread.spread(docs.select(col("doc_id"), col("text"))).as[(Long, String)].mapPartitions { it =>
+    TextKernel.docTexts(docs).mapPartitions { it =>
       it.map { case (id, text) =>
         val t = sqlTrim(text).toLowerCase(java.util.Locale.ROOT)
-        val grams = graft.ops.Dedup.shinglesOfTokens(t.split("\\s+").filter(_.nonEmpty), 3)
-        (id, polyHash(t), grams.iterator.map(polyHash).min)
+        val grams = Dedup.shinglesOfTokens(TextKernel.words(t), 3)
+        (id, TextKernel.polyHash(t), grams.iterator.map(TextKernel.polyHash).min)
       }
     }.toDF("doc_id", "poly_hash", "min_gram_poly")
   }
 
-  /** Repetition quality signals (the Gopher-style repetitiveness filters a
-    * training-data pipeline cuts on): per document, over the ordered word
-    * bigram sequence —
-    *   n_bigrams          total bigram occurrences,
-    *   distinct_bigrams   distinct bigrams,
-    *   top_bigram_count   occurrences of the most frequent bigram,
-    *   dup_bigram_x1000   floor(1000 · (n - distinct) / n)  (repeat mass),
-    *   top_bigram_x1000   floor(1000 · top / n)             (mode mass).
-    * Fractions are integer-scaled (never float — cross-engine hash safety)
-    * and all columns are BIGINT. One typed narrow pass per doc: the bigram
-    * multiset is counted in a per-row hash map and only the 6 scalars leave
-    * the task — no shuffle, nothing content-sized moves. (A pure-Column
-    * formulation would need aggregate-over-transform HOFs, which re-evaluate
-    * the token split per element — the measured round-1 trap.)
-    */
   /** Per-doc word-bigram multiset summary: (total, distinct, top count).
     * Single source of truth for the repeat-mass arithmetic — shared by
     * [[repetitionSignals]] and the composed curation pass so the standalone
@@ -300,39 +262,31 @@ object TextAnalysis {
   private[ops] def dupBigramX1000(n: Long, distinct: Long): Long =
     if (n == 0) 0L else 1000L * (n - distinct) / n
 
-  /** Lowercased whitespace tokens of the SQL-trimmed text.
-    *
-    * NOTE the shingle/fingerprint/vocab family deliberately keeps Java
-    * `\s` here (mirrored as RE2 `\s` in its oracles): the two differ
-    * only on U+000B, which the oracle corpus cannot contain (the
-    * generator emits words + single spaces), and re-basing the dedup
-    * tokenization would reshard every persisted signature. The
-    * token-count/quality/curation family, whose outputs are per-doc
-    * COUNTS a user reads directly, uses the explicit [ \t-\r] class on
-    * both sides instead ([[tokenCount]], Curation.curate).
+  /** Repetition quality signals (the Gopher-style repetitiveness filters a
+    * training-data pipeline cuts on): per document, over the ordered word
+    * bigram sequence —
+    *   n_bigrams          total bigram occurrences,
+    *   distinct_bigrams   distinct bigrams,
+    *   top_bigram_count   occurrences of the most frequent bigram,
+    *   dup_bigram_x1000   floor(1000 · (n - distinct) / n)  (repeat mass),
+    *   top_bigram_x1000   floor(1000 · top / n)             (mode mass).
+    * Fractions are integer-scaled (never float — cross-engine hash safety)
+    * and all columns are BIGINT. One typed narrow pass per doc: the bigram
+    * multiset is counted in a per-row hash map and only the 6 scalars leave
+    * the task — no shuffle, nothing content-sized moves. (A pure-Column
+    * formulation would need aggregate-over-transform HOFs, which re-evaluate
+    * the token split per element — the measured round-1 trap.)
     */
-  private[ops] def lowerTokens(text: String): Array[String] =
-    sqlTrim(text).toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
-
   def repetitionSignals(spark: org.apache.spark.sql.SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    Spread.spread(docs.select(col("doc_id"), col("text"))).as[(Long, String)].mapPartitions { it =>
+    TextKernel.docTexts(docs).mapPartitions { it =>
       it.map { case (id, text) =>
-        val (n, distinct, top) = bigramStats(lowerTokens(text))
+        val (n, distinct, top) = bigramStats(TextKernel.lowerWords(text))
         val topX = if (n == 0) 0L else 1000L * top / n
         (id, n, distinct, top, dupBigramX1000(n, distinct), topX)
       }
     }.toDF("doc_id", "n_bigrams", "distinct_bigrams", "top_bigram_count",
       "dup_bigram_x1000", "top_bigram_x1000")
-  }
-
-  /** Ordered (positional, non-distinct) token k-grams — winnowing is
-    * window-positional, so unlike `Dedup.shinglesOf` duplicates must stay.
-    */
-  def orderedShingles(text: String, n: Int): Array[String] = {
-    val tokens = sqlTrim(text).toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
-    if (tokens.length < n) Array(tokens.mkString(" "))
-    else Array.tabulate(tokens.length - n + 1)(i => tokens.slice(i, i + n).mkString(" "))
   }
 
   /** True winnowing fingerprint (the local-minimum document fingerprinting
@@ -350,7 +304,7 @@ object TextAnalysis {
       k: Int = 3,
       w: Int = 4): DataFrame = {
     import spark.implicits._
-    Spread.spread(docs.select(col("doc_id"), col("text"))).as[(Long, String)].mapPartitions { it =>
+    TextKernel.docTexts(docs).mapPartitions { it =>
       it.map { case (id, text) =>
         val fp = winnowDistinctSorted(text, k, w)
         var sum = 0L
@@ -365,17 +319,6 @@ object TextAnalysis {
   def winnowSet(text: String, k: Int = 3, w: Int = 4): scala.collection.SortedSet[Long] =
     scala.collection.immutable.SortedSet.from(winnowDistinctSorted(text, k, w))
 
-  private def polyStep(s: String, acc0: Long, mod: Long, mult: Long): Long = {
-    var acc = acc0
-    var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      acc = (acc * mult + cp) % mod
-      i += Character.charCount(cp)
-    }
-    acc
-  }
-
   /** Sorted distinct window minima. Hot path: gram hashes are folded
     * incrementally over the token array (no k-gram strings are ever
     * allocated — hashing "w1 w2 w3" char-by-char with the ' ' separator is
@@ -385,34 +328,13 @@ object TextAnalysis {
     * here are the operator's throughput.
     */
   private[ops] def winnowDistinctSorted(text: String, k: Int, w: Int): Array[Long] = {
-    val mod = 2147483647L
-    val tokens = sqlTrim(text).toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
-    val m = if (tokens.length < k) 1 else tokens.length - k + 1
+    val tokens = TextKernel.lowerWords(text)
+    // fewer than k tokens: the whole token run is the one gram
+    val len = math.min(k, tokens.length)
+    val m = tokens.length - len + 1
     val hs = new Array[Long](m)
-    if (tokens.length < k) {
-      // joined-short-text fallback, same as orderedShingles
-      var acc = 7L
-      var j = 0
-      while (j < tokens.length) {
-        if (j > 0) acc = (acc * 31 + ' '.toInt) % mod
-        acc = polyStep(tokens(j), acc, mod, 31)
-        j += 1
-      }
-      hs(0) = acc
-    } else {
-      var i = 0
-      while (i < m) {
-        var acc = 7L
-        var j = i
-        while (j < i + k) {
-          if (j > i) acc = (acc * 31 + ' '.toInt) % mod
-          acc = polyStep(tokens(j), acc, mod, 31)
-          j += 1
-        }
-        hs(i) = acc
-        i += 1
-      }
-    }
+    var i = 0
+    while (i < m) { hs(i) = TextKernel.polyGramHash(tokens, i, len); i += 1 }
     val mins =
       if (m <= w) Array(hs.min)
       else {
@@ -441,16 +363,5 @@ object TextAnalysis {
       r += 1
     }
     if (n == mins.length) mins else java.util.Arrays.copyOf(mins, n)
-  }
-}
-
-/** Shared shingling helpers (pure Column expressions). */
-object Shingles {
-  /** Word n-grams of a token array as strings "w1 w2 w3". */
-  def tokenNGrams(tokens: Column, n: Int): Column = {
-    val idx = sequence(lit(0), greatest(size(tokens) - n, lit(0)))
-    // for texts shorter than n tokens, fall back to the whole text as one gram
-    when(size(tokens) < n, array(array_join(tokens, " ")))
-      .otherwise(transform(idx, i => array_join(slice(tokens, i + 1, lit(n)), " ")))
   }
 }

@@ -30,7 +30,7 @@ object SyntheticPages {
 
   /** Deterministic positive pseudo-hash, CROSS-ENGINE RECOMPUTABLE: an LCG
     * step mod 2^31-1 followed by the quadratic scramble the poly-hash family
-    * already uses (ops/Dedup.polyHash64). Every intermediate product stays
+    * already uses (ops/TextKernel.polyHash64). Every intermediate product stays
     * under 2^63, so DuckDB BIGINT arithmetic reproduces it exactly — which
     * is what lets the extraction CONTENT (cell strings, not just counts) be
     * predicted by the SQL oracle (round-3 mix was a 64-bit xorshift needing

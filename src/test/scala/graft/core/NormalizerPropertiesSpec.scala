@@ -89,8 +89,8 @@ class NormalizerPropertiesSpec extends AnyFunSuite {
 
   test("polyHash lands in [0, 2^31-1) and is stable") {
     check(Prop.forAll(weirdString) { s =>
-      val h = graft.ops.TextAnalysis.polyHash(s)
-      h >= 0L && h < 2147483647L && graft.ops.TextAnalysis.polyHash(s) == h
+      val h = graft.ops.TextKernel.polyHash(s)
+      h >= 0L && h < 2147483647L && graft.ops.TextKernel.polyHash(s) == h
     })
   }
 
@@ -130,7 +130,7 @@ class NormalizerPropertiesSpec extends AnyFunSuite {
     check(Prop.forAll(astral) { s =>
       graft.functions.GraftFunctions.polyHash(
         org.apache.spark.unsafe.types.UTF8String.fromString(s)) ==
-        graft.ops.TextAnalysis.polyHash(s)
+        graft.ops.TextKernel.polyHash(s)
     })
   }
 

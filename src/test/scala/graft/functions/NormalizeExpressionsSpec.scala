@@ -37,21 +37,21 @@ class NormalizeExpressionsSpec extends AnyFunSuite {
     val out = vals.toDF("s").repartition(2)
       .select(col("s"), GraftFunctions.poly_hash(col("s")).as("h")).collect()
     out.foreach { r =>
-      assert(r.getLong(1) == graft.ops.TextAnalysis.polyHash(r.getString(0)),
+      assert(r.getLong(1) == graft.ops.TextKernel.polyHash(r.getString(0)),
         s"mismatch for '${r.getString(0)}'")
     }
     // the Column-API twin delegates to the same expression
     val viaCol = vals.toDF("s")
-      .select(graft.ops.Similarity.polyHashCol(col("s"))).collect().map(_.getLong(0)).toSeq
-    assert(viaCol == vals.map(graft.ops.TextAnalysis.polyHash))
+      .select(GraftFunctions.poly_hash(col("s"))).collect().map(_.getLong(0)).toSeq
+    assert(viaCol == vals.map(graft.ops.TextKernel.polyHash))
     // SQL surface
     GraftFunctions.registerAll(spark)
     assert(spark.sql("SELECT graft_poly_hash('12345') AS h").collect().head.getLong(0)
-      == graft.ops.TextAnalysis.polyHash("12345"))
+      == graft.ops.TextKernel.polyHash("12345"))
     // ExpectsInputTypes: a BIGINT argument implicit-casts to string at
     // analysis time (previously a codegen/eval-time ClassCastException)
     assert(spark.sql("SELECT graft_poly_hash(12345) AS h").collect().head.getLong(0)
-      == graft.ops.TextAnalysis.polyHash("12345"))
+      == graft.ops.TextKernel.polyHash("12345"))
   }
 
   test("null propagates (null-intolerant unary)") {

@@ -120,4 +120,32 @@ class OpsPropertiesSpec extends AnyFunSuite {
       }
     }, minTests = 10)
   }
+
+  // the tokenizer's adversarial alphabet: whitespace that `\s` and SQL
+  // trim treat differently, case-mapping edge cases (final sigma, dotted
+  // capital I, sharp s) and astral codepoints
+  private val kernelText: Gen[String] = Gen.listOf(Gen.frequency(
+    6 -> Gen.alphaChar.map(_.toString),
+    4 -> Gen.oneOf(" ", "  ", "\t", "\n", "\u000B", "\u00A0"),
+    2 -> Gen.oneOf("Σ", "σ", "ς", "İ", "ß"),
+    1 -> Gen.oneOf("😀", "𝔸", "🜁"))).map(_.mkString)
+
+  test("TextKernel.lowerWords == SQL-trim, ROOT-lowercase, \\s+ split, empties dropped") {
+    check(Prop.forAll(kernelText) { s =>
+      val reference = TextAnalysis.sqlTrim(s).toLowerCase(java.util.Locale.ROOT)
+        .split("\\s+").filter(_.nonEmpty)
+      TextKernel.lowerWords(s).sameElements(reference)
+    }, minTests = 2000)
+  }
+
+  test("TextKernel.polyGramHash == polyHash of the joined gram (short and k-window branches)") {
+    val gen = for { s <- kernelText; k <- Gen.choose(1, 5) } yield (TextKernel.lowerWords(s), k)
+    check(Prop.forAll(gen) { case (tokens, k) =>
+      if (tokens.length < k)
+        TextKernel.polyGramHash(tokens, 0, tokens.length) == TextKernel.polyHash(tokens.mkString(" "))
+      else (0 to tokens.length - k).forall { i =>
+        TextKernel.polyGramHash(tokens, i, k) == TextKernel.polyHash(tokens.slice(i, i + k).mkString(" "))
+      }
+    }, minTests = 1000)
+  }
 }

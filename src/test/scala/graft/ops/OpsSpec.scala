@@ -505,7 +505,7 @@ class OpsSpec extends AnyFunSuite {
     // full_hash == min_gram_hash and exactly one distinct gram
     assert(out(2L)._1 == out(2L)._2 && out(2L)._3 == 1L)
     // seed 13 is an INDEPENDENT instance: differs from the seed-7 poly twin
-    assert(out(1L)._1 != TextAnalysis.polyHash("ab c d e"))
+    assert(out(1L)._1 != TextKernel.polyHash("ab c d e"))
   }
 
   test("winnowing fingerprint: shared w+k-1 token run guarantees an overlap") {

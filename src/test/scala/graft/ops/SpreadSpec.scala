@@ -84,7 +84,7 @@ class SpreadSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     df.collect().foreach { r =>
       val expected = Dedup.shinglesOf(r.getString(1), 3)
-        .map(Dedup.hash64(_, 0x5EED5EED5EEDL)).distinct.sorted.toSeq
+        .map(TextKernel.hash64(_, 0x5EED5EED5EEDL)).distinct.sorted.toSeq
       assert(typed(r.getLong(0)) == expected, s"doc ${r.getLong(0)}")
     }
   }
@@ -107,7 +107,7 @@ class SpreadSpec extends AnyFunSuite {
     df.collect().foreach { r =>
       val grams = Dedup.shinglesOf(r.getString(1), cfg.shingleSize)
       val mins = (0 until cfg.numHashes).map { i =>
-        grams.map(g => Dedup.hash64(g, i * 0x9E3779B97F4A7C15L)).min
+        grams.map(g => TextKernel.hash64(g, i * 0x9E3779B97F4A7C15L)).min
       }
       (0 until cfg.bands).foreach { b =>
         var h = 0xcbf29ce484222325L ^ b.toLong
