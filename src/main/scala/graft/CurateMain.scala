@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Cli
 import graft.ops.{Curation, Decontaminate, DupSpans, LineDedup}
@@ -35,7 +35,8 @@ import graft.ops.{Curation, Decontaminate, DupSpans, LineDedup}
   * transforms text in place (its own digests shuffle, not the text), so
   * document text crosses the wire at most twice end to end regardless of
   * how many gates are enabled. Per-stage counts in the final stats line
-  * cost one scalar job each.
+  * are observed as a side effect of one count of the output, which stays
+  * persisted for the write (see [[run]]).
   *
   * Cluster topology belongs to spark-submit flags, not this code; the
   * session is `getOrCreate()` with no master override.
@@ -44,7 +45,7 @@ import graft.ops.{Curation, Decontaminate, DupSpans, LineDedup}
   * `{"input_docs":N,"after_line_strip":L,"kept_quality":Q,"kept_span_gate":S,"contaminated":C,"output_docs":O,"wall_sec":W}`
   * — a skipped stage reports -1 (never conflated with a stage that ran and
   * matched zero docs); null-text rows are dropped at intake and excluded
-  * from input_docs.
+  * from input_docs; rows with a null doc_id count in input_docs only.
   */
 object CurateMain {
 
@@ -95,99 +96,95 @@ object CurateMain {
 
   /** The pipeline itself, IO-free for testability: returns the curated
     * (doc_id, text) frame plus per-stage counts. `benchmark` needs a
-    * `text` column. With `computeStats = false` the call is construction-
-    * pure — no Spark jobs, no persists, all stats -1 — so the chain can be
-    * registered as a lazily-built query (the driver's oracle replay).
+    * `text` column. Both modes build one plan; with `computeStats = false`
+    * the call is construction-pure — no Spark jobs, no persists, all stats
+    * -1 — so the chain can be registered as a lazily-built query (the
+    * driver's oracle replay).
     *
-    * CACHE LIFETIME (computeStats = true): up to 4 intermediate frames are
-    * persisted MEMORY_AND_DISK and intentionally NOT unpersisted here —
-    * the returned frame still depends on them, so releasing them inside
-    * this method would force the caller's write to recompute every stage.
-    * The one-shot CLI main frees them with the session; a long-lived
-    * session calling run() repeatedly should unpersist after consuming the
-    * result (`spark.catalog.clearCache()` or track/unpersist explicitly)
-    * or cached blocks accumulate until eviction pressure.
+    * STATS (computeStats = true): each gate count is a `Dataset.observe`
+    * on its frame, collected as a side effect of the ONE action this call
+    * runs — a `count()` of the output, which is persisted MEMORY_AND_DISK
+    * so the caller's write reads the cached rows instead of re-running the
+    * chain. That output is the only frame left persisted: a caller in a
+    * long-lived session frees it after consuming it (`unpersist()` on the
+    * returned frame or `spark.catalog.clearCache()`).
     */
   def run(spark: SparkSession, docs: DataFrame, benchmark: Option[DataFrame],
       args: Args, computeStats: Boolean = true): (DataFrame, Stats) = {
+    // A fresh Observation per stat point (none when construction-pure),
+    // read once the output's action has run. Adaptive execution drops a
+    // subtree whose consumer turned out empty, and its observation with
+    // it; such a stat falls back to counting its frame directly.
+    def observed(df: DataFrame): (DataFrame, Option[() => Long]) =
+      if (!computeStats) (df, None)
+      else {
+        val o = Observation()
+        (df.observe(o, count(lit(1)).as("n")),
+          Some(() => o.get.get("n").fold(df.count())(_.asInstanceOf[Long])))
+      }
     // null text is dropped at intake (counted out of input_docs) so both
     // the skip-line-dedup path (typed signal pass would NPE) and the strip
     // path (posexplode drops the row silently) see the same corpus
-    val input0 = docs.select(col("doc_id"), col("text")).filter(col("text").isNotNull)
+    val (intake, inputN) = observed(
+      docs.select(col("doc_id"), col("text")).filter(col("text").isNotNull))
     // The strip consumes `input` twice (line-digest side + rebuild join
     // side). When the input is itself an expensive subtree — the
-    // end-to-end path feeds the whole extraction pipeline in here — the
-    // construction-pure mode pins one exchange above it so both strip
-    // sides share a single evaluation; a plain scan passes through
-    // (re-scanning is cheaper than shuffling; the ops' own Spread guard
-    // owns scan parallelism). The persisted mode needs no pin.
-    // The explicit doc_id not-null filter (construction-pure mode only) is
-    // a PLAN-SHAPE pin, not a semantic change: rows with a null doc_id can
-    // never reach the output anyway (the final keep-set semi-join on
-    // doc_id drops them), but without the explicit filter the optimizer
-    // infers isnotnull(doc_id) from the keep-set joins on SOME branches of
-    // the shared subtree and not others, the branch canonical forms stop
-    // matching, and AQE materializes the pinned exchange (and everything
-    // under it, including the extraction feed) once per variant instead of
-    // once — observed as two full extraction stages per action.
-    val input =
-      if (computeStats) input0
-      else graft.ops.Spread.shareIfComplex(input0.filter(col("doc_id").isNotNull))
-    // every gate is a scalar (doc_id) stream; text joins once at the end.
-    // Each gate frame (and the stripped corpus feeding them all) is
-    // persisted so its subtree executes exactly once — serving both its
-    // stat count and the keep-set joins — instead of re-running the
-    // strip/span/decontamination shuffles per consumer. MEMORY_AND_DISK:
-    // at corpus scale the text spills rather than OOMs (a multi-job
-    // production pipeline would write the stripped corpus as an
-    // intermediate table instead); blocks are freed with the session — a
-    // long-lived session embedding this call should unpersist via
-    // spark.catalog.clearCache().
-    def cached(df: DataFrame): DataFrame =
-      if (computeStats) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
-    // construction-pure analog of the persist (guide §2.4 "share one
-    // exchange"): the stripped corpus feeds FOUR consumers (quality gate,
-    // span gate, decontamination, final semi-join). With no persist, each
-    // consumer would re-evaluate the whole strip subtree — including the
-    // upstream extraction when this chain runs end-to-end — so the
-    // computeStats=false path pins one hash exchange on doc_id that
-    // exchange reuse collapses the consumers onto: the strip (and
-    // everything below it) executes exactly once per action, at the cost
-    // of one (doc_id, text) shuffle. The persisted path needs no pin —
-    // consumers hit the cached blocks.
-    def shared(df: DataFrame): DataFrame =
-      if (computeStats) df else df.repartition(col("doc_id"))
-    val lined =
-      if (args.skipLineDedup) shared(input)
-      else shared(cached(LineDedup.stripRepeatedLines(input, args.lineMinDf)
-        .filter(col("text") =!= "")))
-    val keepQuality = cached(Curation.curate(spark, lined).select(col("doc_id")))
+    // end-to-end path feeds the whole extraction pipeline in here — one
+    // exchange is pinned above it so both strip sides share a single
+    // evaluation; a plain scan passes through (re-scanning is cheaper than
+    // shuffling; the ops' own Spread guard owns scan parallelism).
+    // The explicit doc_id not-null filter is a PLAN-SHAPE pin: rows with a
+    // null doc_id can never reach the output anyway (the final keep-set
+    // semi-join on doc_id drops them), but without the explicit filter the
+    // optimizer infers isnotnull(doc_id) from the keep-set joins on SOME
+    // branches of the shared subtree and not others, the branch canonical
+    // forms stop matching, and AQE materializes the pinned exchange (and
+    // everything under it, including the extraction feed) once per variant
+    // instead of once — observed as two full extraction stages per action.
+    // Such rows are counted in input_docs (observed above the pin) and by
+    // no later gate.
+    val input = graft.ops.Spread.shareIfComplex(intake.filter(col("doc_id").isNotNull))
+    // Every gate is a scalar (doc_id) stream; text joins once at the end.
+    // The stripped corpus feeds FOUR consumers (quality gate, span gate,
+    // decontamination, final semi-join); one hash exchange on doc_id is
+    // pinned above it (guide §2.4 "share one exchange") and exchange reuse
+    // collapses the consumers onto it, so the strip (and everything below
+    // it, observations included) executes exactly once per action, at the
+    // cost of one (doc_id, text) shuffle.
+    val (stripped, strippedN) =
+      if (args.skipLineDedup) (input, None)
+      else observed(LineDedup.stripRepeatedLines(input, args.lineMinDf)
+        .filter(col("text") =!= ""))
+    val lined = stripped.repartition(col("doc_id"))
+    val (keepQuality, qualityN) = observed(Curation.curate(spark, lined).select(col("doc_id")))
     val keepSpan =
       if (args.skipSpanGate) None
-      else Some(cached(DupSpans.dupCoverage(spark, lined, args.gramK)
+      else Some(observed(DupSpans.dupCoverage(spark, lined, args.gramK)
         .filter(col("dup_tokens") * 1000 <= col("n_tokens") * args.maxDupPermille)
         .select(col("doc_id"))))
     val dropContam = benchmark.map(b =>
-      cached(Decontaminate.contaminationHits(spark, lined, b, args.gramK)
+      observed(Decontaminate.contaminationHits(spark, lined, b, args.gramK)
         .select(col("doc_id"))))
 
     val keep = dropContam.foldLeft(
-      keepSpan.foldLeft(keepQuality)((k, s) => k.join(s, Seq("doc_id"))))(
-      (k, d) => k.join(d, Seq("doc_id"), "left_anti"))
+      keepSpan.foldLeft(keepQuality)((k, s) => k.join(s._1, Seq("doc_id"))))(
+      (k, d) => k.join(d._1, Seq("doc_id"), "left_anti"))
     val out = lined.join(keep, Seq("doc_id"), "left_semi")
 
-    // -1 = stage skipped (vs a legitimate 0 from a stage that ran)
-    val stats =
-      if (!computeStats) Stats(-1L, -1L, -1L, -1L, -1L, -1L)
-      else Stats(
-        inputDocs = input.count(),
-        afterLineStrip = if (args.skipLineDedup) -1L else lined.count(),
-        keptQuality = keepQuality.count(),
-        keptSpanGate = keepSpan.map(_.count()).getOrElse(-1L),
-        contaminated = dropContam.map(_.count()).getOrElse(-1L),
-        outputDocs = out.count())
-    (out, stats)
+    if (!computeStats) (out, Stats(-1L, -1L, -1L, -1L, -1L, -1L))
+    else {
+      val cachedOut = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val outputDocs = cachedOut.count()
+      // -1 = stage skipped (vs a legitimate 0 from a stage that ran)
+      def n(stat: Option[() => Long]): Long = stat.fold(-1L)(_())
+      (cachedOut, Stats(
+        inputDocs = n(inputN),
+        afterLineStrip = n(strippedN),
+        keptQuality = n(qualityN),
+        keptSpanGate = n(keepSpan.flatMap(_._2)),
+        contaminated = n(dropContam.flatMap(_._2)),
+        outputDocs = outputDocs))
+    }
   }
 
   def main(argv: Array[String]): Unit = {

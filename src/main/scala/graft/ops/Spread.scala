@@ -47,14 +47,15 @@ object Spread {
     * shuffle-partition count, so spreading again would only add a redundant
     * text exchange — measured inside the curation chain, where the gate ops
     * would otherwise re-spread the already doc_id-partitioned stripped
-    * corpus.
+    * corpus. A `Dataset.observe` tap (CollectMetrics) passes rows through
+    * unchanged and counts as narrow.
     */
   private def scanShaped(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical._
     p match {
       case _: LeafNode => true
       case u: Union => u.children.forall(scanShaped)
-      case _: Project | _: Filter | _: Generate | _: SubqueryAlias =>
+      case _: Project | _: Filter | _: Generate | _: SubqueryAlias | _: CollectMetrics =>
         scanShaped(p.children.head)
       case _ => false
     }

@@ -1,7 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shim
+import org.apache.spark.sql.types._
+import graft.ops.{Curation, Decontaminate, DupSpans, LineDedup}
 
 class CurateMainSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
@@ -34,8 +38,6 @@ class CurateMainSpec extends AnyFunSuite {
   }
 
   test("null-text rows are dropped at intake on BOTH paths, not NPE'd or silently forked") {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
     val rows = java.util.Arrays.asList(
@@ -52,9 +54,11 @@ class CurateMainSpec extends AnyFunSuite {
       outB.select("doc_id").collect().map(_.getLong(0)).toSet)
   }
 
-  test("pipeline: gates compose — banner lines stripped, near-dup family span-gated, benchmark overlap dropped") {
-    // corpus: base docs + prefix twins (dupCoverage drops the whole planted
-    // family) + a banner line on every 5th doc (line strip removes it)
+  /** The planted corpus of the "gates compose" test and its benchmark:
+    * base docs + prefix twins (dupCoverage drops the whole planted family)
+    * + a banner line on every 5th doc (line strip removes it); the
+    * benchmark is the 12-token question prefix of every 20th doc. */
+  private def planted: (DataFrame, DataFrame) = {
     val toks = split(col("text"), " ")
     val half = floor(size(toks) / 2).cast("int")
     val base = concat_ws("\n",
@@ -64,11 +68,32 @@ class CurateMainSpec extends AnyFunSuite {
       when(col("doc_id") % 5 === 0, concat(lit("visit our sponsor\n"), base))
         .otherwise(base).as("text"))
     val corpus = graft.ops.Dedup.withPlantedNearDups(lined)
-    // benchmark: the 12-token question prefix of every 20th doc
     val qtoks = filter(split(lower(trim(col("text"))), "\\s+"), t => t =!= "")
     val benchmark = docs.filter(col("doc_id") % 20 === 0 && size(qtoks) >= 8)
       .select(array_join(slice(qtoks, 1, 12), " ").as("text"))
+    (corpus, benchmark)
+  }
 
+  /** The six stats as direct counts of the frames the gates compute,
+    * built and counted one by one. */
+  private def directStats(corpus: DataFrame, benchmark: DataFrame, args: CurateMain.Args): CurateMain.Stats = {
+    val intake = corpus.select(col("doc_id"), col("text")).filter(col("text").isNotNull)
+    val lined = LineDedup.stripRepeatedLines(intake, args.lineMinDf).filter(col("text") =!= "")
+    val quality = Curation.curate(spark, lined).select(col("doc_id"))
+    val span = DupSpans.dupCoverage(spark, lined, args.gramK)
+      .filter(col("dup_tokens") * 1000 <= col("n_tokens") * args.maxDupPermille)
+      .select(col("doc_id"))
+    val contam = Decontaminate.contaminationHits(spark, lined, benchmark, args.gramK)
+      .select(col("doc_id"))
+    val output = lined.join(quality, Seq("doc_id"), "left_semi")
+      .join(span, Seq("doc_id"), "left_semi")
+      .join(contam, Seq("doc_id"), "left_anti")
+    CurateMain.Stats(intake.count(), lined.count(), quality.count(),
+      span.count(), contam.count(), output.count())
+  }
+
+  test("pipeline: gates compose — banner lines stripped, near-dup family span-gated, benchmark overlap dropped") {
+    val (corpus, benchmark) = planted
     val (out, stats) = CurateMain.run(spark, corpus, Some(benchmark), CurateMain.Args())
     val outIds = out.select("doc_id").collect().map(_.getLong(0)).toSet
 
@@ -110,5 +135,71 @@ class CurateMainSpec extends AnyFunSuite {
     val (out2, s2) = CurateMain.run(spark, corpus, None, args)
     assert(s1 == s2)
     assert(out1.orderBy("doc_id").collect().toSeq == out2.orderBy("doc_id").collect().toSeq)
+  }
+
+  test("stats: each observed count equals a direct count of the frame it taps; a null doc_id counts at intake only") {
+    val (corpus, benchmark) = planted
+    val args = CurateMain.Args()
+    val (out, stats) = CurateMain.run(spark, corpus, Some(benchmark), args)
+    assert(stats == directStats(corpus, benchmark, args))
+    out.unpersist()
+
+    // a row with a null doc_id is counted at intake and by no later gate:
+    // it can never reach the output (the keep sets join on doc_id)
+    val schema = StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))
+    val orphan = spark.createDataFrame(java.util.Arrays.asList(
+      Row(null, "an orphan page body with plenty of distinct words that no other document shares")), schema)
+    val (outNull, statsNull) =
+      CurateMain.run(spark, corpus.unionByName(orphan), Some(benchmark), args)
+    assert(statsNull == stats.copy(inputDocs = stats.inputDocs + 1))
+    outNull.unpersist()
+  }
+
+  test("job and cache budget: construction-pure runs no job; stats mode persists the output once and counts it once") {
+    val (corpus, benchmark) = planted
+    val sc = spark.sparkContext
+    // job -> root SQL execution description (the action's call site, also
+    // for the query-stage jobs adaptive execution submits)
+    val execs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          execs.put(x.executionId, x.rootExecutionId.flatMap(r => Option(execs.get(r))).getOrElse(x.description)); ()
+        case _ => ()
+      }
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val exec = Option(js.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        sites.add(exec.flatMap(id => Option(execs.get(id.toLong))).getOrElse(s"job ${js.jobId} outside SQL")); ()
+      }
+    }
+    shim.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      CurateMain.run(spark, corpus, Some(benchmark), CurateMain.Args(), computeStats = false)
+      shim.waitUntilEmpty(sc)
+      assert(sites.isEmpty, s"construction-pure run submitted jobs: $sites")
+
+      val cachedBefore = sc.getPersistentRDDs.keySet
+      val (out, _) = CurateMain.run(spark, corpus, Some(benchmark), CurateMain.Args())
+      shim.waitUntilEmpty(sc)
+      assert(sc.getPersistentRDDs.keySet.diff(cachedBefore).size == 1)
+      val distinctSites = sites.toArray(Array.empty[String]).toSet
+      assert(distinctSites.size == 1 && distinctSites.head.startsWith("count at CurateMain"),
+        s"jobs came from: $distinctSites")
+      out.unpersist()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("stats: a gate that empties the chain still reports every gate's count") {
+    // three-word docs: the quality gate keeps none of them, so adaptive
+    // execution prunes the other gates' subtrees from the output's plan
+    val (corpus, benchmark) = planted
+    val short = corpus.select(col("doc_id"),
+      concat_ws(" ", slice(split(col("text"), " "), 1, 3)).as("text"))
+    val (out, stats) = CurateMain.run(spark, short, Some(benchmark), CurateMain.Args())
+    assert(stats.keptQuality == 0 && stats.outputDocs == 0)
+    assert(stats == directStats(short, benchmark, CurateMain.Args()))
+    out.unpersist()
   }
 }

@@ -113,7 +113,7 @@ class PlanSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       SparkEntry.queries.foreach { case (_, fn) => fn(spark, sfDir) }
-      Thread.sleep(2000) // listener bus delivery is async
+      org.apache.spark.sql.graft.shim.waitUntilEmpty(spark.sparkContext)
       assert(jobs.get() <= 1, s"${jobs.get()} Spark jobs ran during query construction")
     } finally spark.sparkContext.removeSparkListener(listener)
   }

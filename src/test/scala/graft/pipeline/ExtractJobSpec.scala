@@ -393,6 +393,24 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(stamped == Set(0, 1, 2, 3, 4, 5, 6), s"unexpected lineage buckets: $stamped")
   }
 
+  test("hostile nesting: 10^5-deep <div> and 10^5-deep <table><tr><td> pages each yield one non-error row") {
+    import spark.implicits._
+    val depth = 100000
+    val hostile = Seq(
+      "https://hostile.example.org/deep-div" ->
+        ("<html><body>" + "<div>" * depth + "bottom text" + "</div>" * depth + "</body></html>"),
+      "https://hostile.example.org/deep-table" ->
+        ("<html><body>" + "<table><tr><td>" * depth + "bottom cell" +
+          "</td></tr></table>" * depth + "</body></html>"))
+    val pages = hostile.map { case (url, html) =>
+      Page(url, new java.sql.Timestamp(0L), html.getBytes("UTF-8"), "", "en")
+    }.toDS()
+    val rows = ExtractJob.extract(spark, pages, ExtractJob.Config(buckets = 2))
+      .select("url", "status").as[(String, String)].collect()
+    assert(rows.map(_._1).sorted.toSeq == hostile.map(_._1).sorted)
+    rows.foreach { case (url, status) => assert(!status.startsWith("error:"), s"$url: $status") }
+  }
+
   test("SparkEntry.entry smoke: rows > 0") {
     assert(graft.SparkEntry.entry(spark).count() == 500)
   }
