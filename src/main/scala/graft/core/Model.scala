@@ -212,9 +212,6 @@ final case class TableData(fragments: List[Fragment], rowsForm: Boolean = false)
 }
 
 object TableData {
-  def ofRows(rows: List[RowData], page: Int): TableData =
-    TableData(List(Fragment(rows, page)), rowsForm = true)
-
   def fromJson(v: JVal): TableData = v match {
     case o: JObj =>
       o.get("table_fragments") match {

@@ -2,7 +2,6 @@ package graft.merge
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.core._
-import graft.pipeline.{Convert, STable}
 
 /** One extraction run's output for one document (url). The payload is the
   * raw extraction JSON (flat serializer — see ExtractedPage's scale note).

@@ -10,6 +10,10 @@ import graft.core._
   */
 object MergePipeline {
 
+  /** Defaults are the tablemerge CLI defaults: --filter-title-rows on,
+    * FilterEmptyRows always appended last (__main__.py:675-688),
+    * drop-empty-columns/tables postprocessors on.
+    */
   final case class Settings(
       pretransformers: List[FragmentTransformer] = List(FilterTitleRowsTransformer, FilterEmptyRowsTransformer),
       tablesFileTransformer: TablesFileTransformer = NullTablesFileTransformer,
@@ -21,12 +25,6 @@ object MergePipeline {
       postprocessors: List[PostProcessor] = PostProcessors.build(None))
 
   object Settings {
-    /** tablemerge CLI defaults: --filter-title-rows on, FilterEmptyRows
-      * always appended last (__main__.py:675-688), drop-empty-columns/tables
-      * postprocessors on.
-      */
-    def default: Settings = Settings()
-
     /** Assemble like the reference CLI (__main__.py:113-143,675-688). */
     def assemble(
         fixReversedColumnValues: Boolean = false,

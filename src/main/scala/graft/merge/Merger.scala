@@ -135,9 +135,6 @@ object Merger {
   implicit val clusterKeyOrdering: Ordering[FragmentClusterKey] =
     Ordering.by(k => (k.page, k.position))
 
-  /** transliterate_value — tablesfile_merger.py:36-46 */
-  def transliterateCell(c: Cell): Cell = c.transliterated
-
   /** same_row — tablesfile_merger.py:49-55: normalized + transliterated
     * column maps compared as python dicts (ORDER-INSENSITIVE).
     */

@@ -332,18 +332,6 @@ object Similarity {
     ivfTopKWith(spark, queries, corpus, k, cents, nProbe)
   }
 
-  /** ivfTopK with the classic √n centroid sizing derived from one cheap
-    * corpus count() (ids+scan only — column-pruned). Use when the corpus
-    * size isn't known up front; pass numCentroids explicitly to avoid the
-    * extra job.
-    */
-  def ivfTopKAuto(spark: SparkSession, queries: DataFrame, corpus: DataFrame,
-      k: Int, nProbe: Int = 4): DataFrame = {
-    val n = corpus.select(col("vec_id")).count()
-    val numCentroids = math.max(1, math.ceil(math.sqrt(n.toDouble)).toInt)
-    ivfTopK(spark, queries, corpus, k, numCentroids, nProbe)
-  }
-
   /** Deterministic pseudo-random hyperplane matrix for sign-LSH, cached per
     * (planes, dim) per JVM. The plane components are CONSTANTS of (p, j) —
     * round 3 re-derived them per row per array element inside HOF lambdas

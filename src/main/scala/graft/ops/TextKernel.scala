@@ -32,8 +32,13 @@ object TextKernel {
   /** Whitespace words of `s`, empties dropped, case kept. */
   def words(s: String): Array[String] = s.split("\\s+").filter(_.nonEmpty)
 
-  /** ROOT-lowercased [[words]] — the dedup/fingerprint/vocab token array. */
-  def lowerWords(s: String): Array[String] = words(s.toLowerCase(java.util.Locale.ROOT))
+  /** ROOT-lowercased [[words]] of the space-trimmed text — the
+    * dedup/fingerprint/vocab token array. Trimmed first, as in
+    * [[lowerSplitCol]]: the JDK's final-sigma rule can read an edge space
+    * as context (" 𝔸Σ" lowercases to " 𝔸σ", "𝔸Σ" to "𝔸ς").
+    */
+  def lowerWords(s: String): Array[String] =
+    words(TextAnalysis.sqlTrim(s).toLowerCase(java.util.Locale.ROOT))
 
   /** The raw lowercase split, empties kept — for plans that drop empty
     * tokens after an explode, or match tokens against a set without "".

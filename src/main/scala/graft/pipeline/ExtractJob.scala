@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.CollectionAccumulator
 import graft.html.{ExtractSettings, HtmlExtractor}
 
 /** The flagship extraction pipeline (north rule):
@@ -18,8 +19,13 @@ import graft.html.{ExtractSettings, HtmlExtractor}
   *    `pmod(xxhash64(url), buckets)` is a pure column expression, so row
   *    placement is deterministic and independent of input split layout
   *    (AQE/skew-join never reshapes it; per-row output stays byte-stable).
-  *  - Extraction itself is narrow and codegen-adjacent: one typed
-  *    mapPartitions over Dataset[Page]; no intermediate materialization.
+  *  - Extraction itself is narrow and codegen-adjacent: ONE private stage,
+  *    [[extractStage]] (by-name page projection → bucket id → optional
+  *    sidecar mapping → one typed mapPartitions over [[extractPage]]), with
+  *    no intermediate materialization. It is the only code that turns pages
+  *    into [[ExtractedPage]] rows; its callers are [[extract]],
+  *    [[extractMappedJoin]], [[run]] and, through `extract`,
+  *    `graft.streaming.StreamingExtract.fileStreamWriter`.
   *  - Mega-page skew: url hashing spreads hosts uniformly; a single giant
   *    page is row-atomic by nature, so the lever is bucket count — size
   *    buckets so the p99 bucket fits an executor core's budget.
@@ -86,89 +92,69 @@ object ExtractJob {
     if (i >= 0 && i < url.length - 1) url.substring(i + 1) else url
   }
 
-  /** Transform-only form (no sinks) — used by SparkEntry queries and the
-    * bench. Deliberately NARROW: the bucket id is computed as a column but
-    * the raw html payload is never shuffled (at 100 TB, repartitioning the
-    * page bytes is the single worst move available — extraction runs on the
-    * scan tasks and only the much smaller extraction output ever shuffles).
+  /** Transform-only form (no sinks) — used by SparkEntry queries, the
+    * bench and the streaming file job. Deliberately NARROW: the bucket id is
+    * computed as a column but the raw html payload is never shuffled (at
+    * 100 TB, repartitioning the page bytes is the single worst move
+    * available — extraction runs on the scan tasks and only the much
+    * smaller extraction output ever shuffles).
     */
-  def extract(spark: SparkSession, pagesDs: Dataset[Page], cfg: Config = Config()): Dataset[ExtractedPage] = {
-    import spark.implicits._
-    val withBucket = pagesDs
-      .withColumn("bucket", bucketOf(col("url"), cfg.buckets))
-      .as[(String, java.sql.Timestamp, Array[Byte], String, String, Int)]
-    withBucket.mapPartitions { it =>
-      it.map { case (url, ts, html, text, lang, bucket) =>
-        extractPage(Page(url, ts, html, text, lang), bucket, cfg)
-      }
-    }
-  }
+  def extract(spark: SparkSession, pagesDs: Dataset[Page], cfg: Config = Config()): Dataset[ExtractedPage] =
+    extractStage(spark, pagesDs.toDF(), cfg)
 
-  /** Hybrid-mode extraction (J6/S6 — readers/hybrid.py:68-108): a SMALL
-    * url→mapping sidecar table drives which pages/columns are read. The
-    * mapping map is broadcast (classic broadcast hash join of a dimension
-    * into a narrow map stage — the 100 TB page table never shuffles).
-    *
-    * TEST/DEMO ONLY at scale: this variant ships a DRIVER-BUILT
-    * `Map[String, TablesMapping]`, so building the argument is O(sidecar)
-    * on the driver. For corpus-scale sidecars use [[extractMappedJoin]],
-    * which broadcast-joins the sidecar as a DataFrame with no driver-side
-    * collect anywhere — it is what the registered `extract_mapped` query
-    * and the bench run.
-    */
-  def extractMapped(
-      spark: SparkSession,
-      pagesDs: Dataset[Page],
-      mappings: Map[String, graft.html.TablesMapping],
-      cfg: Config = Config()): Dataset[ExtractedPage] = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(mappings)
-    val withBucket = pagesDs
-      .withColumn("bucket", bucketOf(col("url"), cfg.buckets))
-      .as[(String, java.sql.Timestamp, Array[Byte], String, String, Int)]
-    withBucket.mapPartitions { it =>
-      val m = bc.value
-      it.map { case (url, ts, html, text, lang, bucket) =>
-        val pageCfg = m.get(url) match {
-          case Some(tm) => cfg.copy(settings = cfg.settings.copy(mapping = Some(tm)))
-          case None => cfg
-        }
-        extractPage(Page(url, ts, html, text, lang), bucket, pageCfg)
-      }
-    }
-  }
-
-  /** Hybrid-mode extraction at scale: the url→mapping sidecar arrives as a
-    * DataFrame `(url, mapping_json)` BROADCAST-joined into the page scan —
-    * no driver-side collect anywhere (round 1 collected ~1/6 of all doc ids
-    * into a Map, linear in corpus size). Mapping JSON parses once per
-    * distinct mapping per task (tiny cache), matching the reference's
-    * small `.mapping.json` sidecar contract (readers/hybrid.py:77-107).
+  /** Hybrid-mode extraction (J6/S6 — readers/hybrid.py:68-108): the
+    * url→mapping sidecar arrives as a DataFrame `(url, mapping_json)`
+    * BROADCAST-joined into the page scan — no driver-side collect anywhere
+    * (the 100 TB page table never shuffles). Mapping JSON parses once per
+    * distinct mapping per task, matching the reference's small
+    * `.mapping.json` sidecar contract (readers/hybrid.py:77-107).
     */
   def extractMappedJoin(
       spark: SparkSession,
       pagesDs: Dataset[Page],
       sidecar: DataFrame,
-      cfg: Config = Config()): Dataset[ExtractedPage] = {
+      cfg: Config = Config()): Dataset[ExtractedPage] =
+    extractStage(spark, pagesDs.toDF(), cfg, sidecar = Some(sidecar))
+
+  /** The one extraction stage every caller runs: projects the page columns
+    * BY NAME (any column order, extra columns dropped), adds the bucket id
+    * and the optional sidecar `mapping_json` (broadcast left join, null
+    * without a sidecar), decodes once and applies [[extractPage]] in one
+    * narrow mapPartitions. `written` records each bucket id a task emits,
+    * once per task.
+    */
+  private def extractStage(
+      spark: SparkSession,
+      pages: DataFrame,
+      cfg: Config,
+      sidecar: Option[DataFrame] = None,
+      written: Option[CollectionAccumulator[Int]] = None): Dataset[ExtractedPage] = {
     import spark.implicits._
-    val withBucket = pagesDs.withColumn("bucket", bucketOf(col("url"), cfg.buckets))
-    val joined = withBucket
-      .join(broadcast(sidecar.select(col("url").as("m_url"), col("mapping_json"))),
-        col("url") === col("m_url"), "left")
+    val byName = pages.select(col("url"), col("warc_ts"), col("html"), col("text"), col("lang"),
+      bucketOf(col("url"), cfg.buckets).as("bucket"))
+    val withMapping = sidecar match {
+      case Some(sc) =>
+        byName.join(broadcast(sc.select(col("url").as("m_url"), col("mapping_json"))),
+          col("url") === col("m_url"), "left")
+      case None => byName.withColumn("mapping_json", lit(null).cast("string"))
+    }
+    withMapping
       .select(col("url"), col("warc_ts"), col("html"), col("text"), col("lang"),
         col("bucket"), col("mapping_json"))
       .as[(String, java.sql.Timestamp, Array[Byte], String, String, Int, Option[String])]
-    joined.mapPartitions { it =>
-      val cache = scala.collection.mutable.HashMap.empty[String, graft.html.TablesMapping]
-      it.map { case (url, ts, html, text, lang, bucket, mj) =>
-        val pageCfg = mj match {
-          case Some(j) => cfg.copy(settings = cfg.settings.copy(mapping =
-            Some(cache.getOrElseUpdate(j, graft.html.TablesMapping.fromJsonString(j)))))
-          case None => cfg
+      .mapPartitions { it =>
+        val mapped = scala.collection.mutable.HashMap.empty[String, Config]
+        val seen = new java.util.HashSet[Int]()
+        it.map { case (url, ts, html, text, lang, bucket, mj) =>
+          if (seen.add(bucket)) written.foreach(_.add(bucket))
+          val pageCfg = mj match {
+            case Some(j) => mapped.getOrElseUpdate(j, cfg.copy(settings =
+              cfg.settings.copy(mapping = Some(graft.html.TablesMapping.fromJsonString(j)))))
+            case None => cfg
+          }
+          extractPage(Page(url, ts, html, text, lang), bucket, pageCfg)
         }
-        extractPage(Page(url, ts, html, text, lang), bucket, pageCfg)
       }
-    }
   }
 
   /** Full job with output + lineage + resume. Returns run stats.
@@ -231,17 +217,11 @@ object ExtractJob {
       case None => Set.empty
     }
 
-    val withBucket = pagesDs.withColumn("bucket", bucketOf(col("url"), cfg.buckets))
     val pending = lineageOld match {
       case Some(df) if completed.nonEmpty =>
-        withBucket
-          .join(broadcast(df.select(col("bucket").cast("int").as("bucket"))),
-            Seq("bucket"), "left_anti")
-          // pin the column order the typed mapPartitions below depends on
-          // (a using-column join may move the key column)
-          .select(col("url"), col("warc_ts"), col("html"), col("text"),
-            col("lang"), col("bucket"))
-      case _ => withBucket
+        val done = broadcast(df.select(col("bucket").cast("int").as("done")))
+        pagesDs.toDF().join(done, bucketOf(pagesDs("url"), cfg.buckets) === done("done"), "left_anti")
+      case _ => pagesDs.toDF()
     }
 
     // Which buckets this run actually writes — the lineage scan below must
@@ -255,15 +235,7 @@ object ExtractJob {
     // Extraction stays on the scan tasks (narrow); ONLY the extracted output
     // (no html) shuffles into its bucket before the partitioned write — one
     // file per bucket, deterministic layout, cheap resume overwrites.
-    val extracted = pending
-      .as[(String, java.sql.Timestamp, Array[Byte], String, String, Int)]
-      .mapPartitions { it =>
-        val seen = new java.util.HashSet[Int]()
-        it.map { case (url, ts, html, text, lang, bucket) =>
-          if (seen.add(bucket)) writtenAcc.add(bucket)
-          extractPage(Page(url, ts, html, text, lang), bucket, cfg)
-        }
-      }
+    val extracted = extractStage(spark, pending, cfg, written = Some(writtenAcc))
       .repartition(cfg.buckets, col("bucket"))
 
     // dynamic partition overwrite: only the buckets present in this run are

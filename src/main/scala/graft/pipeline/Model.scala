@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import graft.core._
-import graft.html.{Extracted, ExtractedTable, TableSpan}
+import graft.html.Extracted
 
 /** Input row contract (BASELINE.json input_hint): one Common-Crawl-style
   * web page.
@@ -13,23 +12,6 @@ final case class Page(
     text: String,
     lang: String)
 
-// ---------------------------------------------------------------------
-// Spark-facing nested table structure (FIXTURES.md §2): the relational
-// rendering of the TableDoc tree. Columns stay an ORDERED ARRAY of
-// (name, value|values) structs — never a MapType — so column order is
-// byte-stable under any partitioning.
-// ---------------------------------------------------------------------
-
-final case class SVal(value: String, agreement_level: Int)
-final case class SCol(name: String, value: Option[String], values: Option[Seq[SVal]])
-final case class SRow(
-    agreement_level_ : Option[Int],
-    sources_ : Option[Seq[String]],
-    row_ : Option[Int],
-    columns: Seq[SCol])
-final case class SFrag(page: Int, title: Option[String], rows: Seq[SRow])
-final case class STable(table_fragments: Seq[SFrag])
-
 final case class SpanRow(page: Int, start: Int, end: Int, kind: String)
 
 /** One extraction output row per url (north rule: extracted main text +
@@ -37,11 +19,11 @@ final case class SpanRow(page: Int, start: Int, end: Int, kind: String)
   *
   * Deliberately FLAT: tables travel as the byte-stable raw JSON string, not
   * as a nested struct column. Measured: the Catalyst-generated serializer
-  * for a 4-level nested Seq[STable] exceeds HotSpot's JIT-able method size,
-  * leaving tasks interpreted for 50-100x slowdowns; a string + scalars
-  * serializer compiles instantly. Relational consumers re-project the
-  * nested form on demand (from_json with `ExtractedPage.tablesJsonSchema`,
-  * or graft.core.TableDoc.fromJsonString for order-exact work).
+  * for a 4-level nested table struct exceeds HotSpot's JIT-able method
+  * size, leaving tasks interpreted for 50-100x slowdowns; a string +
+  * scalars serializer compiles instantly. Relational consumers parse the
+  * JSON on demand (graft.core.TableDoc.fromJsonString for order-exact
+  * work).
   */
 final case class ExtractedPage(
     url: String,
@@ -55,18 +37,6 @@ final case class ExtractedPage(
     citation: Option[String],
     status: String,
     html_bytes: Long)
-
-object ExtractedPage {
-  /** from_json schema for tables_json: rows as map<string,string> (cell
-    * values at extraction are always scalar strings; column ORDER is only
-    * guaranteed by the JSON/TableDoc path, not MapType).
-    */
-  val tablesJsonSchema: org.apache.spark.sql.types.DataType =
-    org.apache.spark.sql.types.DataType.fromDDL(
-      "struct<tables: array<struct<table_fragments: array<struct<" +
-        "rows: array<map<string,string>>, page: int, title: string>>>>, " +
-        "citation: string, metadata: struct<filename: string>>")
-}
 
 /** Per-bucket lineage/metrics row (north rule: partition id, url range,
   * rows, bytes, extractor version) — the resume anti-join key source.
@@ -82,45 +52,6 @@ final case class LineageRow(
     extractor_version: String)
 
 object Convert {
-  def cellToSCol(name: String, c: Cell): SCol = c match {
-    case Cell.Null => SCol(name, None, None)
-    case Cell.Str(s) => SCol(name, Some(s), None)
-    case Cell.Multi(vs) => SCol(name, None, Some(vs.map(v => SVal(v.value, v.agreementLevel))))
-  }
-
-  def sColToCell(c: SCol): Cell = (c.value, c.values) match {
-    case (Some(s), _) => Cell.Str(s)
-    case (None, Some(vs)) => Cell.Multi(vs.toList.map(v => ValueWithAgreement(v.value, v.agreement_level)))
-    case (None, None) => Cell.Null
-  }
-
-  def rowToSRow(r: RowData): SRow =
-    SRow(r.agreementLevel, r.sources.map(_.toSeq), r.rowIdx,
-      r.columns.map { case (k, c) => cellToSCol(k, c) })
-
-  def sRowToRow(r: SRow): RowData =
-    RowData(r.columns.toVector.map(c => (c.name, sColToCell(c))),
-      r.agreement_level_, r.sources_.map(_.toList), r.row_)
-
-  def fragToSFrag(f: Fragment, title: Option[String]): SFrag =
-    SFrag(f.page, title, f.rows.map(rowToSRow))
-
-  def sFragToFrag(f: SFrag): Fragment =
-    Fragment(f.rows.toList.map(sRowToRow), f.page)
-
-  def extractedTables(ex: Extracted): Seq[STable] =
-    ex.tables.map(t => STable(Seq(fragToSFrag(t.fragment, t.title))))
-
-  def tableDocToSTables(doc: TableDoc): Seq[STable] =
-    doc.tables.map(t => STable(t.fragments.map(f => fragToSFrag(f, None))))
-
-  def sTablesToTableDoc(tables: Seq[STable], citation: Option[String], uuid: Option[String]): TableDoc =
-    TableDoc(
-      tables.toList.map(t => TableData(t.table_fragments.toList.map(sFragToFrag))),
-      citation.map(Cell.Str(_)).getOrElse(Cell.Null),
-      metadata = None,
-      uuid = uuid)
-
   def spans(ex: Extracted): Seq[SpanRow] =
     ex.spans.map(s => SpanRow(s.page, s.start, s.end, s.kind))
 }

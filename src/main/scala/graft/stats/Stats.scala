@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.merge.MergedDoc
-import graft.pipeline.Convert
 
 /** Per-document stats row — reference parity with PaperStats
   * (/root/reference/src/tablestats/stats.py:8-33,138-193).

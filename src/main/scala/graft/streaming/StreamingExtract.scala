@@ -10,24 +10,12 @@ import graft.pipeline.{ExtractJob, ExtractedPage, Page}
   *
   * The reference is strictly batch (SURVEY.md §2.10) and the north rule
   * keeps the batch-resumable shape; this module exists because the engine
-  * targets continuous web-crawl ingestion at scale: the SAME pure
-  * per-page function (`ExtractJob.extractPage`) runs under a streaming
-  * source with checkpointed exactly-once file output — no logic forks
+  * targets continuous web-crawl ingestion at scale: the stream runs
+  * `ExtractJob.extract` itself (a streaming Dataset[Page] takes the same
+  * operators) with checkpointed exactly-once file output — no logic forks
   * between batch and streaming.
   */
 object StreamingExtract {
-
-  /** Map a streaming Dataset[Page] through the fused extraction. */
-  def extractStream(spark: SparkSession, pages: Dataset[Page], buckets: Int): Dataset[ExtractedPage] = {
-    import spark.implicits._
-    val cfg = ExtractJob.Config(buckets = buckets)
-    pages
-      .withColumn("bucket", ExtractJob.bucketOf(col("url"), buckets))
-      .as[(String, java.sql.Timestamp, Array[Byte], String, String, Int)]
-      .mapPartitions(_.map { case (url, ts, html, text, lang, bucket) =>
-        ExtractJob.extractPage(Page(url, ts, html, text, lang), bucket, cfg)
-      })
-  }
 
   /** File-source streaming job: watch `inputDir` for page parquet files,
     * extract, write parquet with a checkpoint (restart-safe exactly-once).
@@ -43,7 +31,7 @@ object StreamingExtract {
       .schema(org.apache.spark.sql.Encoders.product[Page].schema)
       .parquet(inputDir)
       .as[Page]
-    extractStream(spark, pages, buckets)
+    ExtractJob.extract(spark, pages, ExtractJob.Config(buckets = buckets))
       .writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)

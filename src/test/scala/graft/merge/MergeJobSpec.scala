@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
 import graft.core._
 import graft.pages.SyntheticPages
-import graft.pipeline.{Convert, ExtractJob}
+import graft.pipeline.ExtractJob
 
 class MergeJobSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark

@@ -411,6 +411,80 @@ class ExtractJobSpec extends AnyFunSuite {
     rows.foreach { case (url, status) => assert(!status.startsWith("error:"), s"$url: $status") }
   }
 
+  private def committedRows(dir: String): Seq[ExtractedPage] = {
+    import spark.implicits._
+    ExtractJob.readOutput(spark, dir).as[ExtractedPage].collect().sortBy(_.url).toSeq
+  }
+
+  test("page columns are read by name: reordered or extra input columns give the canonical rows (extract and run, fresh and resume)") {
+    import spark.implicits._
+    val cfg = ExtractJob.Config(buckets = 8)
+    val src = java.nio.file.Files.createTempDirectory("graft-by-name").toString + "/pages"
+    SyntheticPages.pages(spark, sfDir).write.parquet(src)
+    val df = spark.read.parquet(src)
+    val canonical = df.select("url", "warc_ts", "html", "text", "lang").as[Page]
+    val variants = Seq(
+      "lang before text" -> df.select("url", "warc_ts", "html", "lang", "text").as[Page],
+      "extra column" -> df.select(col("url"), lit("extra").as("extra"), col("warc_ts"),
+        col("html"), col("text"), col("lang")).as[Page])
+
+    val expected = ExtractJob.extract(spark, canonical, cfg).collect().sortBy(_.url).toSeq
+    assert(expected.length == 500)
+    assert(expected.exists(r => r.lang != ""), "lang carries data the test can check")
+    val expectedDir = java.nio.file.Files.createTempDirectory("graft-by-name-canon").toString
+    ExtractJob.run(spark, canonical, expectedDir, cfg)
+    assert(committedRows(expectedDir) == expected)
+
+    variants.foreach { case (name, pages) =>
+      assert(ExtractJob.extract(spark, pages, cfg).collect().sortBy(_.url).toSeq == expected,
+        s"extract, $name")
+
+      val fresh = java.nio.file.Files.createTempDirectory("graft-by-name-fresh").toString
+      assert(ExtractJob.run(spark, pages, fresh, cfg).pagesProcessed == 500)
+      assert(committedRows(fresh) == expected, s"fresh run, $name")
+
+      // resume: buckets 0-5 complete from a canonical run, 6-7 pending
+      val resume = java.nio.file.Files.createTempDirectory("graft-by-name-resume").toString
+      ExtractJob.run(spark, canonical, resume, cfg)
+      for (b <- 6 to 7; root <- Seq("extracted", "_lineage"))
+        rmrf(new java.io.File(s"$resume/$root/bucket=$b"))
+      assert(ExtractJob.run(spark, pages, resume, cfg).bucketsSkipped == 6)
+      assert(committedRows(resume) == expected, s"resume run, $name")
+    }
+  }
+
+  test("hybrid extraction: unmapped urls equal extract, mapped urls equal extractPage with the mapping, empty sidecar equals extract") {
+    import spark.implicits._
+    import graft.html.{ColumnMapping, TableMapping, TablesMapping}
+    val cfg = ExtractJob.Config(buckets = 8)
+    val pages = SyntheticPages.pages(spark, sfDir).localCheckpoint()
+    val mapping = TablesMapping(
+      tables = List(TableMapping("Mapped species", "none", 1, 1,
+        List(ColumnMapping(1, "Scientific Name"), ColumnMapping(0, "Common")))),
+      citation = "Mapped Atlas (2031)")
+    val urls = pages.select("url").as[String].collect().sorted
+    val mappedUrls = urls.zipWithIndex.collect { case (u, i) if i % 3 == 0 => u }.toSet
+    val sidecar = mappedUrls.toSeq.map(u => (u, TablesMapping.toJsonString(mapping)))
+      .toDF("url", "mapping_json")
+
+    val plain = ExtractJob.extract(spark, pages, cfg).collect().map(r => r.url -> r).toMap
+    val hybrid = ExtractJob.extractMappedJoin(spark, pages, sidecar, cfg).collect()
+    assert(hybrid.map(_.url).sorted.toSeq == urls.toSeq)
+
+    val byUrl = pages.collect().map(p => p.url -> p).toMap
+    val mappedCfg = cfg.copy(settings = cfg.settings.copy(mapping = Some(mapping)))
+    hybrid.foreach { r =>
+      if (mappedUrls(r.url)) {
+        assert(r == ExtractJob.extractPage(byUrl(r.url), plain(r.url).bucket, mappedCfg), r.url)
+        assert(r.citation.contains("Mapped Atlas (2031)"), r.url)
+      } else assert(r == plain(r.url), r.url)
+    }
+
+    val none = sidecar.limit(0)
+    assert(ExtractJob.extractMappedJoin(spark, pages, none, cfg).collect().sortBy(_.url).toSeq ==
+      plain.values.toSeq.sortBy(_.url))
+  }
+
   test("SparkEntry.entry smoke: rows > 0") {
     assert(graft.SparkEntry.entry(spark).count() == 500)
   }

@@ -231,7 +231,7 @@ class WarcSourceSpec extends AnyFunSuite {
       .select(col("url"), col("warc_ts"), col("html"))
       .as[(String, java.sql.Timestamp, Array[Byte])]
       .map { case (u, ts, html) => graft.pipeline.Page(u, ts, html, "", "") }
-    val extracted = graft.streaming.StreamingExtract.extractStream(spark, pages, buckets = 4)
+    val extracted = graft.pipeline.ExtractJob.extract(spark, pages, graft.pipeline.ExtractJob.Config(buckets = 4))
     val q = extracted.toDF()
       .select(col("url"), col("n_tables"), col("n_table_rows"))
       .writeStream.format("memory").queryName("warc_sx")
