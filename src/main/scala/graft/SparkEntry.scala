@@ -132,7 +132,7 @@ object Queries {
       } yield (e.url, ti, fi, f.page, ri, name, cell match {
         case Cell.Null => null
         case Cell.Str(v) => v
-        case m: Cell.Multi => Cell.toJson(m).render
+        case m: Cell.Multi => Cell.json(m)
       })
     }.toDF("url", "table_idx", "frag_idx", "page", "row_idx", "col_name", "value")
   }

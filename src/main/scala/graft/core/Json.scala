@@ -66,27 +66,36 @@ object JVal {
     sb.toString
   }
 
-  /** CPython json string escaping with ensure_ascii=False. */
+  /** CPython json string escaping with ensure_ascii=False. A string with
+    * nothing to escape, the common case, is appended whole.
+    */
   def writeString(sb: java.lang.StringBuilder, s: String): Unit = {
     sb.append('"')
     var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      c match {
-        case '"' => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\t' => sb.append("\\t")
-        case '\b' => sb.append("\\b")
-        case '\f' => sb.append("\\f")
-        case _ if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-        case _ => sb.append(c)
+    while (i < s.length && !needsEscape(s.charAt(i))) i += 1
+    if (i == s.length) sb.append(s)
+    else {
+      sb.append(s, 0, i)
+      while (i < s.length) {
+        val c = s.charAt(i)
+        c match {
+          case '"' => sb.append("\\\"")
+          case '\\' => sb.append("\\\\")
+          case '\n' => sb.append("\\n")
+          case '\r' => sb.append("\\r")
+          case '\t' => sb.append("\\t")
+          case '\b' => sb.append("\\b")
+          case '\f' => sb.append("\\f")
+          case _ if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
+          case _ => sb.append(c)
+        }
+        i += 1
       }
-      i += 1
     }
     sb.append('"')
   }
+
+  @inline private def needsEscape(c: Char): Boolean = c < 0x20 || c == '"' || c == '\\'
 
   // -------------------------------------------------------------------
   // Parser (recursive descent; enough for .tables.json documents)
@@ -95,12 +104,16 @@ object JVal {
   def parse(input: String): JVal = {
     val p = new Parser(input)
     val v = p.parseValue()
-    p.skipWs()
-    require(p.eof, s"trailing content at ${p.pos}")
+    p.end()
     v
   }
 
-  private final class Parser(s: String) {
+  /** A cursor over one JSON text. [[parseValue]] builds a tree; the
+    * `openObj`/`key`/`nextField` and `openArr`/`nextItem` steps let a reader
+    * walk the same grammar straight into its own model (TableDoc's codec).
+    * Both accept exactly the same texts.
+    */
+  private[core] final class Parser(s: String) {
     var pos = 0
     def eof: Boolean = pos >= s.length
     def skipWs(): Unit = while (!eof && (s.charAt(pos) == ' ' || s.charAt(pos) == '\n' || s.charAt(pos) == '\t' || s.charAt(pos) == '\r')) pos += 1
@@ -110,18 +123,27 @@ object JVal {
       pos += 1
     }
 
-    def parseValue(): JVal = {
+    /** Fails unless only whitespace is left. */
+    def end(): Unit = {
+      skipWs()
+      require(eof, s"trailing content at $pos")
+    }
+
+    /** The first char of the next value, after whitespace. */
+    def peek(): Char = {
       skipWs()
       if (eof) fail("unexpected end")
-      s.charAt(pos) match {
-        case '{' => parseObj()
-        case '[' => parseArr()
-        case '"' => JStr(parseString())
-        case 't' => literal("true"); JBool(true)
-        case 'f' => literal("false"); JBool(false)
-        case 'n' => literal("null"); JNull
-        case _ => parseNum()
-      }
+      s.charAt(pos)
+    }
+
+    def parseValue(): JVal = peek() match {
+      case '{' => parseObj()
+      case '[' => parseArr()
+      case '"' => JStr(parseString())
+      case 't' => literal("true"); JBool(true)
+      case 'f' => literal("false"); JBool(false)
+      case 'n' => parseNull(); JNull
+      case _ => parseNum()
     }
 
     private def literal(lit: String): Unit = {
@@ -129,44 +151,83 @@ object JVal {
       pos += lit.length
     }
 
-    private def parseObj(): JObj = {
-      expect('{')
-      val b = Vector.newBuilder[(String, JVal)]
+    def parseNull(): Unit = literal("null")
+
+    /** Consumes `{`; false when the object is empty (its `}` consumed too). */
+    def openObj(): Boolean = {
       skipWs()
-      if (!eof && s.charAt(pos) == '}') { pos += 1; return JObj(b.result()) }
-      var done = false
-      while (!done) {
-        skipWs()
-        val k = parseString()
-        skipWs()
-        expect(':')
-        val v = parseValue()
-        b += ((k, v))
-        skipWs()
-        if (!eof && s.charAt(pos) == ',') pos += 1
-        else { expect('}'); done = true }
+      expect('{')
+      skipWs()
+      if (!eof && s.charAt(pos) == '}') { pos += 1; false } else true
+    }
+
+    /** The next field's key, with its `:` consumed. */
+    def key(): String = {
+      skipWs()
+      val k = parseString()
+      skipWs()
+      expect(':')
+      k
+    }
+
+    /** After a field's value: true when another field follows. */
+    def nextField(): Boolean = {
+      skipWs()
+      if (!eof && s.charAt(pos) == ',') { pos += 1; true }
+      else { expect('}'); false }
+    }
+
+    /** Consumes `[`; false when the array is empty (its `]` consumed too). */
+    def openArr(): Boolean = {
+      skipWs()
+      expect('[')
+      skipWs()
+      if (!eof && s.charAt(pos) == ']') { pos += 1; false } else true
+    }
+
+    /** After an item: true when another item follows. */
+    def nextItem(): Boolean = {
+      skipWs()
+      if (!eof && s.charAt(pos) == ',') { pos += 1; true }
+      else { expect(']'); false }
+    }
+
+    private def parseObj(): JObj = {
+      val b = Vector.newBuilder[(String, JVal)]
+      if (openObj()) {
+        var more = true
+        while (more) {
+          val k = key()
+          b += ((k, parseValue()))
+          more = nextField()
+        }
       }
       JObj(b.result())
     }
 
     private def parseArr(): JArr = {
-      expect('[')
       val b = Vector.newBuilder[JVal]
-      skipWs()
-      if (!eof && s.charAt(pos) == ']') { pos += 1; return JArr(b.result()) }
-      var done = false
-      while (!done) {
-        b += parseValue()
-        skipWs()
-        if (!eof && s.charAt(pos) == ',') pos += 1
-        else { expect(']'); done = true }
+      if (openArr()) {
+        var more = true
+        while (more) {
+          b += parseValue()
+          more = nextItem()
+        }
       }
       JArr(b.result())
     }
 
-    private def parseString(): String = {
+    /** A string literal at the cursor. One without escapes is a substring
+      * of the input.
+      */
+    def parseString(): String = {
       expect('"')
-      val sb = new java.lang.StringBuilder
+      val start = pos
+      while (!eof && s.charAt(pos) != '"' && s.charAt(pos) != '\\') pos += 1
+      if (eof) fail("unterminated string")
+      if (s.charAt(pos) == '"') { pos += 1; return s.substring(start, pos - 1) }
+      val sb = new java.lang.StringBuilder(pos - start + 16)
+      sb.append(s, start, pos)
       while (true) {
         if (eof) fail("unterminated string")
         val c = s.charAt(pos)
@@ -183,9 +244,7 @@ object JVal {
             case 'r' => sb.append('\r'); pos += 1
             case 'b' => sb.append('\b'); pos += 1
             case 'f' => sb.append('\f'); pos += 1
-            case 'u' =>
-              sb.append(Integer.parseInt(s.substring(pos + 1, pos + 5), 16).toChar)
-              pos += 5
+            case 'u' => sb.append(hex4(pos + 1)); pos += 5
             case other => fail(s"bad escape \\$other")
           }
         } else { sb.append(c); pos += 1 }
@@ -193,12 +252,36 @@ object JVal {
       throw new IllegalStateException("unreachable")
     }
 
-    private def parseNum(): JNum = {
+    /** The char named by exactly four hex digits at `at`, as Python's json
+      * requires (no sign, no short or truncated escape).
+      */
+    private def hex4(at: Int): Char = {
+      if (at + 4 > s.length) fail("truncated \\u escape")
+      var v = 0
+      var i = at
+      while (i < at + 4) {
+        val c = s.charAt(i)
+        val d =
+          if (c >= '0' && c <= '9') c - '0'
+          else if (c >= 'a' && c <= 'f') c - 'a' + 10
+          else if (c >= 'A' && c <= 'F') c - 'A' + 10
+          else fail("bad \\u escape")
+        v = v * 16 + d
+        i += 1
+      }
+      v.toChar
+    }
+
+    /** A number's literal text. */
+    def parseNumRaw(): String = {
+      skipWs()
       val start = pos
       if (!eof && (s.charAt(pos) == '-' || s.charAt(pos) == '+')) pos += 1
       while (!eof && (s.charAt(pos).isDigit || s.charAt(pos) == '.' || s.charAt(pos) == 'e' || s.charAt(pos) == 'E' || s.charAt(pos) == '-' || s.charAt(pos) == '+')) pos += 1
       if (pos == start) fail("expected number")
-      JNum(s.substring(start, pos))
+      s.substring(start, pos)
     }
+
+    private def parseNum(): JNum = JNum(parseNumRaw())
   }
 }

@@ -209,9 +209,41 @@ object Text {
   /** column_values.py:4-11 */
   val NoDataExpressions: Set[String] = Set("no data", "none", "not identified")
 
-  def normalizeColumnValue(value: String): String = {
-    val normalized = pyLower(normalizeStr(value))
-    if (NoDataExpressions.contains(normalized)) "" else normalized
+  /** column_values.py:4-11. A value the chain would return unchanged is
+    * returned itself without running it (see [[isColumnValueFixedPoint]]).
+    * The chain is NOT idempotent (`"(ci(cid:1)d:200)"` → `"(cid:200)"` →
+    * `"è"`), so a caller may never skip normalizing a normalized value;
+    * only this per-string proof skips work.
+    */
+  def normalizeColumnValue(value: String): String =
+    if (isColumnValueFixedPoint(value)) value
+    else {
+      val normalized = pyLower(normalizeStr(value))
+      if (NoDataExpressions.contains(normalized)) "" else normalized
+    }
+
+  /** True only when every step of [[normalizeColumnValue]] is the identity
+    * on `s`: all chars in U+0020–U+007E or U+00A1–U+02FF (already NFC, no
+    * nonprintable, no dash variant, no whitespace but ' ', nothing that
+    * lowercases), no leading, trailing or doubled space, no `(cid:`, and
+    * not a no-data phrase.
+    */
+  private def isColumnValueFixedPoint(s: String): Boolean = {
+    var prevSpace = true
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == ' ') {
+        if (prevSpace) return false
+        prevSpace = true
+      } else {
+        if (c < 0x20 || (c >= 'A' && c <= 'Z') || (c > 0x7e && c < 0xa1) || c > 0x2ff) return false
+        if (c >= 0xa1 && Character.toLowerCase(c) != c) return false
+        prevSpace = false
+      }
+      i += 1
+    }
+    !(prevSpace && s.nonEmpty) && !s.contains("(cid:") && !NoDataExpressions.contains(s)
   }
 
   // ---------------------------------------------------------------------

@@ -25,20 +25,20 @@ object Validator {
 
   final case class ValidationResult(name: String, status: String, error: Option[String])
 
-  /** validate_file — malformed JSON vs schema-invalid are distinct errors.
-    * Catches ALL non-fatal throwables: a validator that crashes the job on
-    * a pathological document (e.g. a truncated \\uXXXX escape makes the
-    * parser index past end-of-string) defeats its purpose at corpus scale.
+  /** validate_file — malformed JSON vs schema-invalid are distinct errors:
+    * the text must parse as JSON, then read as a TableDoc. Catches ALL
+    * non-fatal throwables: a validator that crashes the job on a
+    * pathological document defeats its purpose at corpus scale.
     */
   def validateDoc(name: String, json: String): ValidationResult = {
     import scala.util.control.NonFatal
-    val parsed =
-      try Right(JVal.parse(json))
-      catch { case NonFatal(e) => Left(String.valueOf(e.getMessage)) }
-    parsed match {
-      case Left(msg) => ValidationResult(name, MalformedJson, Some(msg))
-      case Right(v) =>
-        try { TableDoc.fromJson(v); ValidationResult(name, Valid, None) }
+    val malformed =
+      try { JVal.parse(json); None }
+      catch { case NonFatal(e) => Some(String.valueOf(e.getMessage)) }
+    malformed match {
+      case Some(msg) => ValidationResult(name, MalformedJson, Some(msg))
+      case None =>
+        try { TableDoc.fromJsonString(json); ValidationResult(name, Valid, None) }
         catch { case NonFatal(e) => ValidationResult(name, Invalid, Some(String.valueOf(e.getMessage))) }
     }
   }

@@ -628,8 +628,7 @@ object HtmlExtractor {
     // streaming writer — byte-identical to rendering the equivalent JVal
     // tree (JObj/JArr node + Vector construction per cell measured at ~1/3
     // of per-page extraction cost; the hot path writes straight into one
-    // StringBuilder, falling back to the tree only for Multi cells, which
-    // raw extraction never emits)
+    // StringBuilder)
     val sb = new java.lang.StringBuilder(256 + ex.tables.size * 256)
     sb.append("{\"tables\": [")
     var ti = 0
@@ -645,11 +644,7 @@ object HtmlExtractor {
           if (ci > 0) sb.append(", ")
           JVal.writeString(sb, k)
           sb.append(": ")
-          c match {
-            case Cell.Null => sb.append("null")
-            case Cell.Str(v) => JVal.writeString(sb, v)
-            case m: Cell.Multi => JVal.write(sb, Cell.toJson(m))
-          }
+          Cell.writeJson(sb, c)
           ci += 1
         }
         sb.append('}')

@@ -202,7 +202,7 @@ object MergeJob {
               n -> (c match {
                 case Cell.Null => null
                 case Cell.Str(v) => v
-                case mc: Cell.Multi => Cell.toJson(mc).render
+                case mc: Cell.Multi => Cell.json(mc)
               })
             }.toMap)
         })

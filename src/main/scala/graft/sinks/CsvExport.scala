@@ -27,7 +27,7 @@ object CsvExport {
   private def cellText(c: Cell): String = c match {
     case Cell.Null => ""
     case Cell.Str(s) => s
-    case m: Cell.Multi => Cell.toJson(m).render // value-with-agreement cells keep their JSON form
+    case m: Cell.Multi => Cell.json(m) // value-with-agreement cells keep their JSON form
   }
 
   /** The CSV text for one table of a doc (header + data rows + $page). */

@@ -64,6 +64,63 @@ class NormalizerPropertiesSpec extends AnyFunSuite {
     assert(Text.normalizeStr(once) == "\u00e1")
   }
 
+  /** normalizeColumnValue's full chain, without its fixed-point fast path. */
+  private def columnValueChain(s: String): String = {
+    val n = Text.pyLower(Text.normalizeStr(s))
+    if (Text.NoDataExpressions.contains(n)) "" else n
+  }
+
+  // U+0000–U+031F (the fast path's range edges, controls, combining marks)
+  // plus the chars and phrases each step of the chain acts on. Half the
+  // strings are short and lowercased, so most of them sit at the edge of
+  // the fast path's image rather than far outside it.
+  private val columnValueString: Gen[String] = {
+    val specials = Gen.oneOf("\u0130", "\u03a3", "\u0301", "\u00a0", "\u2013", "(cid:", "(cid:200)", ")",
+      "no data", "None", "NOT IDENTIFIED", "none ")
+    val raw = Gen.listOf(Gen.frequency(
+      12 -> Gen.choose('\u0000', '\u031f').map(_.toString),
+      6 -> Gen.oneOf(" ", "a", "z", "A", "0"),
+      3 -> specials)).map(_.mkString)
+    val nearImage = Gen.choose(0, 10).flatMap(Gen.listOfN(_, Gen.frequency(
+      10 -> Gen.choose('\u0020', '\u031f').map(c => Character.toLowerCase(c).toString),
+      4 -> Gen.oneOf(" ", "a", "e", "o", "c"),
+      2 -> Gen.choose('\u0300', '\u031f').map(_.toString),
+      1 -> specials))).map(_.mkString)
+    Gen.oneOf(raw, nearImage)
+  }
+
+  test("normalize_column_value: the fast path equals the full chain, also on its own output") {
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(3000),
+      Prop.forAll(columnValueString) { s =>
+        val n = Text.normalizeColumnValue(s)
+        n == columnValueChain(s) && Text.normalizeColumnValue(n) == columnValueChain(n)
+      })
+    assert(res.passed, res.status.toString)
+    // a value in the chain's image is returned itself
+    val plain = "ünïcode über 12 (cid 3)"
+    assert(Text.normalizeColumnValue(plain) eq plain)
+    // the chain is not idempotent, and a second pass must not be skipped
+    assert(Text.normalizeColumnValue("(ci(cid:1)d:200)") == "(cid:200)")
+    assert(Text.normalizeColumnValue("(cid:200)") == "\u00e8")
+    val once = Cell.Str("(ci(cid:1)d:200)").normalized
+    assert(once == Cell.Str("(cid:200)") && once.normalized == Cell.Str("\u00e8"))
+  }
+
+  test("Cell.normalized and RowData.normalize return the same instance when nothing changes") {
+    check(Prop.forAll(columnValueString, columnValueString) { (a, b) =>
+      // normalized values the chain leaves as they are
+      val cells = List(a, b).map(s => Cell.Str(Text.normalizeColumnValue(s)): Cell)
+        .filter(c => c.normalized == c)
+      val multi = Cell.Multi(cells.collect { case Cell.Str(v) => ValueWithAgreement(v, 2) })
+      val row = RowData(Vector("a" -> Cell.Null, "m" -> multi) ++ cells.map("s" -> _), agreementLevel = Some(3))
+      cells.forall(c => c.normalized eq c) && (multi.normalized eq multi) &&
+        (row.normalize() eq row) && (row.normalize(rowAgreement = true) eq row)
+    })
+    val raw = RowData(Vector("a" -> Cell.Str("X")))
+    assert(raw.normalize() ne raw)
+    assert(raw.normalize(rowAgreement = true).agreementLevel.contains(1))
+  }
+
   test("semantic classification == python float-parse failure") {
     // NOT s.trim: Java trim strips U+0001..U+001F, which Python float()
     // does not treat as whitespace — "\\u0001 7" (control+digit) is semantic (float() raises)

@@ -28,6 +28,21 @@ class ValidatorSpec extends AnyFunSuite {
     assert(Validator.validateDoc("b.tables.json", "\"\\").status == Validator.MalformedJson)
   }
 
+  test("a \\u escape takes exactly four hex digits, as Python's json does") {
+    // the parser used to read a sign ("a\u-001b" gave U+FFFF, "\u+04A" gave
+    // "J") and to index past the end on a truncated escape
+    for (esc <- Seq("a\\u-001b", "\\u+04A", "\\u12")) {
+      val r = Validator.validateDoc("u.tables.json", s"""{"tables": [], "citation": "$esc"}""")
+      assert(r.status == Validator.MalformedJson, esc)
+      assert(r.error.exists(_.startsWith("JSON parse error at")), s"$esc: ${r.error}")
+    }
+    val truncated = Validator.validateDoc("u.tables.json", "{\"tables\": [], \"citation\": \"\\u12")
+    assert(truncated.error.exists(_.startsWith("JSON parse error at")), truncated.error)
+    val ok = "{\"tables\": [], \"citation\": \"\\u00e9\\u00C9\"}"
+    assert(Validator.validateDoc("u.tables.json", ok).status == Validator.Valid)
+    assert(TableDoc.fromJsonString(ok).citation == Cell.Str("\u00e9\u00c9"))
+  }
+
   test("report skips the metadata/settings files (reference skip list)") {
     import spark.implicits._
     val files = Seq(

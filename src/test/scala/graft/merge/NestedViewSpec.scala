@@ -60,7 +60,7 @@ class NestedViewSpec extends AnyFunSuite {
       } yield (m.doc_id, ti, ri, name) -> (cell match {
         case Cell.Null => null
         case Cell.Str(v) => v
-        case mc: Cell.Multi => Cell.toJson(mc).render
+        case mc: Cell.Multi => Cell.json(mc)
       })
     }.toMap
     assert(viaView == direct)
