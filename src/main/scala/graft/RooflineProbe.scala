@@ -53,7 +53,8 @@ object RooflineProbe {
     val blackhole = new AtomicLong(0)
 
     // GRAFT_ROOFLINE_MODE=decompose: per-stage allocation breakdown of the
-    // page unit (render / +utf8 encode / extractBytes / full extractPage)
+    // page unit (render / +utf8 encode / utf8 decode / byte tokenize /
+    // extractBytes / full extractPage)
     // — the map of where the 'alloc_bytes_per_page' budget actually goes.
     if (sys.env.get("GRAFT_ROOFLINE_MODE").contains("decompose")) {
       val tmxD = java.lang.management.ManagementFactory.getThreadMXBean
@@ -81,21 +82,20 @@ object RooflineProbe {
       val pre = docs.map { case (id, text, lang) =>
         graft.pages.SyntheticPages.renderPage(id, text, lang).getBytes(UTF_8) }
       def decode(i: Int) = new String(pre(i), UTF_8).length.toLong
-      val noop = new graft.html.HtmlTokenizer.TokSink {
+      val noop = new graft.html.HtmlTokenizer.ByteTokSink {
         def startTag(name: String, attrs: List[(String, String)], selfClosing: Boolean, pos: Int, endPos: Int): Unit = ()
         def endTag(name: String, pos: Int, endPos: Int): Unit = ()
-        def text(src: String, start: Int, end: Int, pos: Int): Unit = ()
+        def text(src: Array[Byte], startB: Int, endB: Int, pos: Int): Unit = ()
       }
-      def decodeTok(i: Int) = {
-        val s = new String(pre(i), UTF_8)
-        graft.html.HtmlTokenizer.tokenizeInto(s, noop)
-        s.length.toLong
+      def tokenize(i: Int) = {
+        graft.html.HtmlTokenizer.tokenizeBytesInto(pre(i), noop)
+        pre(i).length.toLong
       }
       def exOnly(i: Int) = graft.html.HtmlExtractor.extractBytes(pre(i)).tables.size.toLong
       stage("render", render)(render)
       stage("render+encode", renderEnc)(renderEnc)
       stage("utf8-decode", decode)(decode)
-      stage("decode+tokenize", decodeTok)(decodeTok)
+      stage("tokenize", tokenize)(tokenize)
       stage("extractBytes", exOnly)(exOnly)
       stage("extractPage", pageUnit)(pageUnit)
       return

@@ -272,14 +272,32 @@ object JVal {
       v.toChar
     }
 
-    /** A number's literal text. */
+    /** A number's literal text, in JSON's grammar (as Python's json reads
+      * it): `-?(0|[1-9][0-9]*)(\.[0-9]+)?([eE][+-]?[0-9]+)?`, ASCII digits
+      * only. A leading zero ends the integer part, so `007` leaves `07` as
+      * trailing content.
+      */
     def parseNumRaw(): String = {
       skipWs()
       val start = pos
-      if (!eof && (s.charAt(pos) == '-' || s.charAt(pos) == '+')) pos += 1
-      while (!eof && (s.charAt(pos).isDigit || s.charAt(pos) == '.' || s.charAt(pos) == 'e' || s.charAt(pos) == 'E' || s.charAt(pos) == '-' || s.charAt(pos) == '+')) pos += 1
-      if (pos == start) fail("expected number")
+      if (at('-')) pos += 1
+      if (at('0')) pos += 1 else digits()
+      if (at('.')) { pos += 1; digits() }
+      if (at('e') || at('E')) {
+        pos += 1
+        if (at('+') || at('-')) pos += 1
+        digits()
+      }
       s.substring(start, pos)
+    }
+
+    private def at(c: Char): Boolean = !eof && s.charAt(pos) == c
+
+    /** One or more ASCII digits. */
+    private def digits(): Unit = {
+      def digit = !eof && s.charAt(pos) >= '0' && s.charAt(pos) <= '9'
+      if (!digit) fail("expected digit")
+      while (digit) pos += 1
     }
 
     private def parseNum(): JNum = JNum(parseNumRaw())

@@ -1,7 +1,6 @@
 package graft.html
 
 import graft.core._
-import graft.html.HtmlTokenizer._
 
 /** Column mapping sidecar — the HTML analog of the reference's hybrid-mode
   * TablesMapping (/root/reference/src/paper2table/mapping.py:7-54).
@@ -116,8 +115,9 @@ object PageRange {
   *    relative to the reference (the north rule adds main-content
   *    extraction; PDFs had no boilerplate concept).
   *
-  * Everything is a pure function String => Extracted: deterministic,
-  * partition-independent, safe to fuse into one mapPartitions stage.
+  * Everything is a pure function of the page bytes (Array[Byte] =>
+  * Extracted): deterministic, partition-independent, safe to fuse into one
+  * mapPartitions stage.
   */
 object HtmlExtractor {
 
@@ -150,8 +150,8 @@ object HtmlExtractor {
     * ([[HtmlTokenizer.tokenizeBytesInto]]) walks the markup as bytes and
     * only the text runs that survive (cells, main-text blocks, <pre>)
     * pay UTF-8 decode; skipped subtrees, boilerplate containers, tags and
-    * dropped attributes stay bytes. Positions (spans, page ranges) remain
-    * CHAR offsets, byte-identical to the decoded-string scan.
+    * dropped attributes stay bytes. Positions (spans, page ranges) are
+    * CHAR (UTF-16) offsets into the decoded document.
     */
   def extractBytes(html: Array[Byte], settings: ExtractSettings = ExtractSettings()): Extracted = {
     val scan = scanDocument(html)
@@ -206,13 +206,12 @@ object HtmlExtractor {
       * the originating cell's text replicated (self-contained rows for the
       * downstream merge layer).
       */
-    def build(end: Int): (RawTable, Boolean) = {
+    def build(end: Int): RawTable = {
       endRow()
       val cellRows = rows.result()
       val grid = scala.collection.mutable.ArrayBuffer.empty[scala.collection.mutable.ArrayBuffer[(String, Boolean)]]
       // pending(col) = (text, isTh, remainingRows)
       val pending = scala.collection.mutable.Map.empty[Int, (String, Boolean, Int)]
-      var r = 0
       cellRows.foreach { row =>
         val out = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
         var col = 0
@@ -238,7 +237,6 @@ object HtmlExtractor {
           fillPending()
         }
         grid += out
-        r += 1
       }
       val width = if (grid.isEmpty) 0 else grid.map(_.length).max
       val rect = grid.toVector.map { row =>
@@ -246,7 +244,7 @@ object HtmlExtractor {
       }
       val firstRowAllTh = grid.nonEmpty && grid.head.nonEmpty && grid.head.forall(_._2)
       val header = if (firstRowAllTh) Some(rect.head) else None
-      (RawTable(page, if (firstRowAllTh) rect.tail else rect, header, start, end, "markup"), firstRowAllTh)
+      RawTable(page, if (firstRowAllTh) rect.tail else rect, header, start, end, "markup")
     }
   }
 
@@ -268,12 +266,8 @@ object HtmlExtractor {
 
   /** NFKC-normalize + newline→space + whitespace collapse, mirroring the
     * reference's per-cell treatment (pdfplumber unicode_norm="NFKC" at open,
-    * readers/document.py:179-183 newline strip).
-    */
-  private def cellText(raw: String): String =
-    Text.collapseWhitespace(nfkc(raw))
-
-  /** `collapseWhitespace(nfkc(sb.toString))` without materializing the
+    * readers/document.py:179-183 newline strip):
+    * `collapseWhitespace(nfkc(sb.toString))` without materializing the
     * raw string when the builder is pure ASCII (every ASCII char is an
     * NFKC fixed point, so the collapse runs straight off the builder —
     * byte-identical: Text.collapseWhitespaceOf shares the pyIsSpace
@@ -361,15 +355,14 @@ object HtmlExtractor {
       def endTag(name: String, pos: Int, endPos: Int): Unit = {
         if (SkipSubtrees.contains(name)) { if (skipDepth > 0) skipDepth -= 1 }
         else if (name == "pre" && preBuilder != null) {
-          val preText = decodePre(preBuilder.toString)
-          preTableFromText(preText, pageNum, preStart, endPos).foreach(preOf(pageNum) += _)
+          preTableFromText(preBuilder.toString, pageNum, preStart, endPos).foreach(preOf(pageNum) += _)
           preBuilder = null
         } else if (skipDepth == 0 && preBuilder == null) {
           if (BoilerContainers.contains(name)) { flushBlock(); if (boilerDepth > 0) boilerDepth -= 1 }
           name match {
             case "table" if tableStack.nonEmpty =>
               val tb = tableStack.pop()
-              val (raw, _) = tb.build(endPos)
+              val raw = tb.build(endPos)
               if (raw.grid.nonEmpty || raw.headerFromTh.nonEmpty) markupOf(tb.page) += raw
             case "tr" if tableStack.nonEmpty => tableStack.top.endRow()
             case "td" | "th" if tableStack.nonEmpty => tableStack.top.endCell()
@@ -413,7 +406,7 @@ object HtmlExtractor {
       val endChar = HtmlTokenizer.charLength(html)
       while (tableStack.nonEmpty) {
         val tb = tableStack.pop()
-        val (raw, _) = tb.build(endChar)
+        val raw = tb.build(endChar)
         if (raw.grid.nonEmpty || raw.headerFromTh.nonEmpty) markupOf(tb.page) += raw
       }
     }
@@ -426,8 +419,6 @@ object HtmlExtractor {
         preByPage.get(p).map(_.toVector).getOrElse(Vector.empty))
     })
   }
-
-  private def decodePre(s: String): String = s // text tokens are already entity-decoded
 
   // -------------------------------------------------------------------
   // Whitespace-aligned <pre> grid detection ("text" strategy analog)

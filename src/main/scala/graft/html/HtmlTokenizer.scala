@@ -1,68 +1,18 @@
 package graft.html
 
-/** Byte-stream HTML tokenizer: a single forward scan producing start/end
-  * tags, text, and skipping comments, doctypes, CDATA and raw-text element
-  * content (script/style). No DOM library — this is the performance-critical
-  * inner loop of the extraction stage (north rule: "byte-stream tokenizes
-  * HTML, builds a lightweight DOM").
+/** Byte-stream HTML tokenizer: a single forward scan over the raw UTF-8
+  * page bytes producing start/end tags and text, and skipping comments,
+  * doctypes, CDATA and raw-text element content (script/style). No DOM
+  * library — this is the performance-critical inner loop of the extraction
+  * stage (north rule: "byte-stream tokenizes HTML, builds a lightweight
+  * DOM").
   *
   * Decodes a small, fixed entity set (named subset + numeric) — enough for
-  * web-table content; unknown entities pass through literally.
+  * web-table content; unknown entities pass through literally. Text runs
+  * and the retained attribute values go through the one decoder,
+  * [[appendRangeTo]], which fuses UTF-8 decode with entity decode.
   */
 object HtmlTokenizer {
-
-  sealed trait Tok { def pos: Int }
-  final case class StartTag(name: String, attrs: List[(String, String)], selfClosing: Boolean, pos: Int, endPos: Int) extends Tok
-  final case class EndTag(name: String, pos: Int, endPos: Int) extends Tok
-
-  /** A text run as a RANGE over the source string — the decoded text is
-    * materialized lazily ([[text]]) or streamed straight into a builder
-    * ([[appendTo]], the hot path: entity-free runs append as a char range
-    * with no per-run substring, which was the tokenizer's largest
-    * allocation class).
-    */
-  final case class TextTok(src: String, start: Int, endIdx: Int, pos: Int) extends Tok {
-    /** Entity-decoded text (allocates; prefer [[appendTo]] on hot paths). */
-    def text: String = rangeText(src, start, endIdx)
-
-    /** Append the entity-decoded run to `sb` without intermediate strings. */
-    def appendTo(sb: java.lang.StringBuilder): Unit =
-      appendRangeTo(sb, src, start, endIdx)
-  }
-
-  /** Entity-decoded text of html[start, end) (static form of
-    * [[TextTok.text]] for [[TokSink.text]] consumers).
-    */
-  def rangeText(src: String, start: Int, end: Int): String =
-    if (indexOfIn(src, '&', start, end) < 0) src.substring(start, end)
-    else {
-      val sb = new java.lang.StringBuilder(end - start)
-      decodeEntitiesInto(sb, src, start, end)
-      sb.toString
-    }
-
-  /** Append the entity-decoded run html[start, end) to `sb` without
-    * intermediate strings (static form of [[TextTok.appendTo]]).
-    */
-  def appendRangeTo(sb: java.lang.StringBuilder, src: String, start: Int, end: Int): Unit = {
-    val amp = indexOfIn(src, '&', start, end)
-    if (amp < 0) { sb.append(src, start, end); () }
-    else decodeEntitiesInto(sb, src, start, end)
-  }
-
-  /** Streaming consumer of the token scan — the allocation-free hot path:
-    * [[tokenizeInto]] drives a sink with NO per-token object (the
-    * Iterator[Tok] form allocates a case-class instance per tag/text run,
-    * ~150 objects per typical page; the extraction stage consumes tokens
-    * exactly once in order, so the iterator indirection bought nothing).
-    * Text runs arrive as (src, start, end) ranges with entities NOT yet
-    * decoded — use [[appendRangeTo]]/[[rangeText]].
-    */
-  trait TokSink {
-    def startTag(name: String, attrs: List[(String, String)], selfClosing: Boolean, pos: Int, endPos: Int): Unit
-    def endTag(name: String, pos: Int, endPos: Int): Unit
-    def text(src: String, start: Int, end: Int, pos: Int): Unit
-  }
 
   private val RawTextTags = Set("script", "style")
 
@@ -75,7 +25,7 @@ object HtmlTokenizer {
     */
   private val RetainedAttrs = Array("data-page", "rowspan", "colspan")
 
-  private val NamedEntities: Map[String, String] = Map(
+  private[html] val NamedEntities: Map[String, String] = Map(
     "amp" -> "&", "lt" -> "<", "gt" -> ">", "quot" -> "\"", "apos" -> "'",
     "nbsp" -> " ", "copy" -> "©", "reg" -> "®",
     "mdash" -> "—", "ndash" -> "–", "hellip" -> "…",
@@ -87,11 +37,11 @@ object HtmlTokenizer {
     "uuml" -> "ü", "ouml" -> "ö", "auml" -> "ä", "szlig" -> "ß"
   )
 
-  /** Common tag/attribute names grouped by length: `internedName` matches a
-    * source region against these case-insensitively WITHOUT allocating —
-    * the `substring().toLowerCase` pair per tag/attr was a measurable slice
-    * of the tokenizer's allocation rate; unknown names still fall back to
-    * the allocating path, so behavior is unchanged.
+  /** Common tag/attribute names grouped by length: [[internedNameBytes]]
+    * matches a source region against these case-insensitively WITHOUT
+    * allocating — the decode-and-lowercase pair per tag was a measurable
+    * slice of the tokenizer's allocation rate; unknown names still fall
+    * back to the allocating path, so behavior is unchanged.
     */
   private val InternedNames: Array[Array[String]] = {
     val names = Seq(
@@ -110,263 +60,17 @@ object HtmlTokenizer {
     Array.tabulate(byLen.keys.max + 1)(l => byLen.getOrElse(l, Nil).toArray)
   }
 
-  /** The lowercase name for html[start, end), reusing an interned constant
-    * when the region matches one (ASCII case-insensitive); allocates only
-    * for unknown names. The fast path bails on any non-ASCII char: per-char
-    * Character.toLowerCase diverges from String.toLowerCase exactly when a
-    * char's string lowercase is multi-char (e.g. U+0130 'İ' → "i̇"), so
-    * restricting interning to ASCII keeps exotic tag/attr names
-    * byte-identical to the allocating path.
-    */
-  private def internedName(html: String, start: Int, end: Int): String = {
-    val len = end - start
-    if (len > 0 && len < InternedNames.length) {
-      val cands = InternedNames(len)
-      var k = 0
-      while (k < cands.length) {
-        val t = cands(k)
-        var j = 0
-        var ok = true
-        while (ok && j < len) {
-          val c = html.charAt(start + j)
-          if (c >= 0x80 || lowerAscii(c) != t.charAt(j)) ok = false
-          j += 1
-        }
-        if (ok) return t
-        k += 1
-      }
-      // any non-ASCII char also disqualifies names that matched no
-      // candidate prefix-wise; the substring path below handles them
-    }
-    // Locale.ROOT: default-locale toLowerCase would fold "DIV" to "dıv"
-    // under tr_TR and break every tag-name comparison downstream.
-    html.substring(start, end).toLowerCase(java.util.Locale.ROOT)
-  }
-
   private def lowerAscii(c: Char): Char =
     if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
 
-  /** ASCII-case-insensitive indexOf for lowercase-ASCII needles. Folding is
-    * deliberately ASCII-only (HTML5 treats raw-text close tags as ASCII
-    * case-insensitive, so `</scrİpt>` must NOT close a `<script>`): this is
-    * both spec behavior and what keeps the string and byte scanners
-    * emission-identical — Character.toLowerCase would additionally map
-    * U+0130/U+212A into ASCII, which [[indexOfIgnoreCaseAscii]] (bytes)
-    * never does.
-    */
-  private def indexOfIgnoreCase(hay: String, needle: String, from: Int): Int = {
-    val n = needle.length
-    val limit = hay.length - n
-    var i = math.max(from, 0)
-    while (i <= limit) {
-      var j = 0
-      var ok = true
-      while (ok && j < n) {
-        val a = lowerAscii(hay.charAt(i + j))
-        if (a != needle.charAt(j)) ok = false
-        j += 1
-      }
-      if (ok) return i
-      i += 1
-    }
-    -1
-  }
-
-  /** Decode character references in a text slice. */
-  def decodeEntities(s: String): String = {
-    if (s.indexOf('&') < 0) return s
-    val sb = new java.lang.StringBuilder(s.length)
-    decodeEntitiesInto(sb, s, 0, s.length)
-    sb.toString
-  }
-
-  /** First index of `c` in s[from, to), or -1 — a bounded indexOf. */
-  private[html] def indexOfIn(s: String, c: Char, from: Int, to: Int): Int = {
-    var i = from
-    while (i < to) {
-      if (s.charAt(i) == c) return i
-      i += 1
-    }
-    -1
-  }
-
-  /** Range form of [[decodeEntities]]: decode s[from, to) into `sb`
-    * without materializing the slice; entity-free stretches append as
-    * bulk char ranges. Entity handling is byte-identical to the string
-    * form (an entity's `;` must fall INSIDE the range, as it had to fall
-    * inside the substring before).
-    */
-  private[html] def decodeEntitiesInto(sb: java.lang.StringBuilder, s: String, from: Int, to: Int): Unit = {
-    var i = from
-    while (i < to) {
-      val amp = indexOfIn(s, '&', i, to)
-      if (amp < 0) { sb.append(s, i, to); return }
-      if (amp > i) sb.append(s, i, amp)
-      i = amp
-      val semi = indexOfIn(s, ';', i + 1, to)
-      if (semi > i && semi - i <= 10) {
-        val body = s.substring(i + 1, semi)
-        if (body.startsWith("#x") || body.startsWith("#X")) {
-          try {
-            val cp = Integer.parseInt(body.substring(2), 16)
-            sb.appendCodePoint(cp); i = semi + 1
-          } catch { case _: Exception => sb.append('&'); i += 1 }
-        } else if (body.startsWith("#")) {
-          try {
-            val cp = Integer.parseInt(body.substring(1))
-            sb.appendCodePoint(cp); i = semi + 1
-          } catch { case _: Exception => sb.append('&'); i += 1 }
-        } else NamedEntities.get(body) match {
-          case Some(rep) => sb.append(rep); i = semi + 1
-          case None => sb.append('&'); i += 1
-        }
-      } else { sb.append('&'); i += 1 }
-    }
-  }
-
-  /** Tokenize a decoded HTML string into a buffered token sequence — the
-    * convenience/test surface over [[tokenizeInto]]. The extraction hot
-    * path drives a [[TokSink]] directly and allocates no Tok objects.
-    * TextTok carries an UNDECODED range (entities decode lazily via
-    * `text`/`appendTo`).
-    */
-  def tokenize(html: String): Iterator[Tok] = {
-    val buf = Vector.newBuilder[Tok]
-    tokenizeInto(html, new TokSink {
-      def startTag(name: String, attrs: List[(String, String)], selfClosing: Boolean, pos: Int, endPos: Int): Unit = {
-        buf += StartTag(name, attrs, selfClosing, pos, endPos); ()
-      }
-      def endTag(name: String, pos: Int, endPos: Int): Unit = { buf += EndTag(name, pos, endPos); () }
-      def text(src: String, start: Int, end: Int, pos: Int): Unit = { buf += TextTok(src, start, end, pos); () }
-    })
-    buf.result().iterator
-  }
-
-  /** Single forward scan driving `sink` — same scanner, same emission
-    * order and positions as the Iterator form (which is implemented on
-    * top of this), with zero per-token allocation.
-    */
-  def tokenizeInto(html: String, sink: TokSink): Unit = {
-    var i = 0
-    var pendingRawEnd: String = null // inside <script>/<style>: skip to this end tag
-
-    def parseStartTag(start: Int): Unit = {
-      var j = start + 1
-      val nameStart = j
-      while (j < html.length && isNameChar(html.charAt(j))) j += 1
-      if (j == nameStart) { // '<' followed by junk: empty self-closing tag
-        sink.startTag("", Nil, selfClosing = true, start, start + 1)
-        i = start + 1
-        return
-      }
-      val name = internedName(html, nameStart, j)
-      // built reversed via ::, reversed once at the end — no builder
-      // allocation on the (overwhelmingly common) attribute-free tag
-      var attrs: List[(String, String)] = Nil
-      var selfClosing = false
-      var done = false
-      while (!done && j < html.length) {
-        while (j < html.length && Character.isWhitespace(html.charAt(j))) j += 1
-        if (j >= html.length) done = true
-        else html.charAt(j) match {
-          case '>' => j += 1; done = true
-          case '/' =>
-            if (j + 1 < html.length && html.charAt(j + 1) == '>') { selfClosing = true; j += 2; done = true }
-            else j += 1
-          case _ =>
-            val aStart = j
-            while (j < html.length && !Character.isWhitespace(html.charAt(j)) &&
-              html.charAt(j) != '=' && html.charAt(j) != '>' && html.charAt(j) != '/') j += 1
-            // prune at the scan: only RetainedAttrs are ever consumed
-            // downstream, so other attributes are SCANNED (quote handling
-            // must stay exact) but their name/value never materialize
-            val aName = retainedAttr(html, aStart, j)
-            while (j < html.length && Character.isWhitespace(html.charAt(j))) j += 1
-            var aVal = ""
-            if (j < html.length && html.charAt(j) == '=') {
-              j += 1
-              while (j < html.length && Character.isWhitespace(html.charAt(j))) j += 1
-              if (j < html.length && (html.charAt(j) == '"' || html.charAt(j) == '\'')) {
-                val q = html.charAt(j)
-                val vStart = j + 1
-                val vEnd = html.indexOf(q, vStart)
-                if (vEnd < 0) { if (aName != null) aVal = html.substring(vStart); j = html.length }
-                else { if (aName != null) aVal = html.substring(vStart, vEnd); j = vEnd + 1 }
-              } else {
-                val vStart = j
-                while (j < html.length && !Character.isWhitespace(html.charAt(j)) && html.charAt(j) != '>') j += 1
-                if (aName != null) aVal = html.substring(vStart, j)
-              }
-            }
-            if (aName != null) attrs = (aName, decodeEntities(aVal)) :: attrs
-        }
-      }
-      sink.startTag(name, attrs.reverse, selfClosing, start, j)
-      i = j
-      if (!selfClosing && RawTextTags.contains(name)) pendingRawEnd = "</" + name
-    }
-
-    while (i < html.length) {
-      if (pendingRawEnd != null) {
-        val close = indexOfIgnoreCase(html, pendingRawEnd, i)
-        val endName = pendingRawEnd.substring(2)
-        if (close < 0) { i = html.length; pendingRawEnd = null }
-        else {
-          val gt = html.indexOf('>', close)
-          i = if (gt < 0) html.length else gt + 1
-          sink.endTag(endName, close, i)
-          pendingRawEnd = null
-        }
-      } else {
-        val lt = html.indexOf('<', i)
-        if (lt < 0) {
-          if (i < html.length) sink.text(html, i, html.length, i)
-          i = html.length
-        } else if (lt > i) {
-          sink.text(html, i, lt, i)
-          i = lt
-        } else {
-          // at a '<'
-          if (html.startsWith("<!--", i)) {
-            val close = html.indexOf("-->", i + 4)
-            i = if (close < 0) html.length else close + 3
-          } else if (html.startsWith("<![CDATA[", i)) {
-            val close = html.indexOf("]]>", i + 9)
-            i = if (close < 0) html.length else close + 3
-          } else if (i + 1 < html.length && (html.charAt(i + 1) == '!' || html.charAt(i + 1) == '?')) {
-            val gt = html.indexOf('>', i)
-            i = if (gt < 0) html.length else gt + 1
-          } else if (i + 1 < html.length && html.charAt(i + 1) == '/') {
-            val gt = html.indexOf('>', i)
-            if (gt < 0) { i = html.length }
-            else {
-              var ns = i + 2
-              var ne = gt
-              while (ns < ne && html.charAt(ns) <= ' ') ns += 1 // String.trim semantics
-              while (ne > ns && html.charAt(ne - 1) <= ' ') ne -= 1
-              sink.endTag(internedName(html, ns, ne), i, gt + 1)
-              i = gt + 1
-            }
-          } else parseStartTag(lt)
-        }
-      }
-    }
-  }
-
-  // -------------------------------------------------------------------
-  // Byte-level scan: tokenize the RAW UTF-8 page bytes, decoding only
-  // the text that downstream keeps
-  // -------------------------------------------------------------------
-
-  /** Streaming consumer of the BYTE-level token scan. Identical contract
-    * to [[TokSink]], except text runs arrive as ranges over the raw UTF-8
-    * byte array (entities not yet decoded) — consume them with the byte
-    * overloads of [[appendRangeTo]]/[[rangeText]], which fuse UTF-8 decode
-    * with entity decode. `pos`/`endPos` are CHAR offsets (UTF-16 code
-    * units) of the would-be decoded document, byte-identical to the String
-    * scanner's positions on valid UTF-8 — so spans and page-range
-    * arithmetic don't change when the input skips the full-document
-    * decode.
+  /** Streaming consumer of the token scan: no per-token object. Tag names
+    * are lowercase; `attrs` holds only the retained attributes, values
+    * already decoded. Text runs arrive as ranges over the raw UTF-8 byte
+    * array (entities not yet decoded) — consume them with
+    * [[appendRangeTo]]/[[rangeText]], which fuse UTF-8 decode with entity
+    * decode. `pos`/`endPos` are CHAR offsets (UTF-16 code units) of the
+    * would-be decoded document, so spans and page-range arithmetic don't
+    * depend on the input skipping the full-document decode.
     */
   trait ByteTokSink {
     def startTag(name: String, attrs: List[(String, String)], selfClosing: Boolean, pos: Int, endPos: Int): Unit
@@ -409,9 +113,8 @@ object HtmlTokenizer {
     }
   }
 
-  /** Entity-decoded text of src[from, to) — byte-array form of
-    * [[rangeText]]; UTF-8 decode fused with entity decode, so only this
-    * range ever materializes as chars.
+  /** Entity-decoded text of src[from, to): UTF-8 decode fused with entity
+    * decode, so only this range ever materializes as chars.
     */
   def rangeText(src: Array[Byte], from: Int, to: Int): String = {
     val sb = new java.lang.StringBuilder(to - from)
@@ -420,20 +123,20 @@ object HtmlTokenizer {
   }
 
   /** Append the entity- and UTF-8-decoded run src[from, to) to `sb` with
-    * no intermediate strings — the byte-scan hot path. Semantics mirror
-    * [[decodeEntitiesInto]] exactly on valid UTF-8 (an entity's `;` must
-    * fall inside the range; bad numeric refs fall through as literal '&').
+    * no intermediate strings — the one entity decoder, for text runs and
+    * attribute values alike. A reference is `&name;`, `&#N;` or `&#xH;`
+    * whose `;` falls inside the range at most 10 chars after the `&`;
+    * unknown names and bad numeric refs fall through as a literal '&'.
     */
   def appendRangeTo(sb: java.lang.StringBuilder, src: Array[Byte], from: Int, to: Int): Unit = {
     var i = from
     while (i < to) {
       val b = src(i) & 0xFF
       if (b == '&') {
-        // The string path's window is 10 CHARS ('&' to ';' inclusive of
-        // neither, semi - amp <= 10 UTF-16 units). 9 body units occupy at
-        // most 27 bytes, so a byte-window of 30 is sufficient; the char
-        // condition is then re-checked on the decoded body so multi-byte
-        // bodies gate identically to the string scanner.
+        // The window is 10 CHARS ('&' to ';', semi - amp <= 10 UTF-16
+        // units). 9 body units occupy at most 27 bytes, so a byte-window
+        // of 30 is sufficient; the char condition is then re-checked on
+        // the decoded body so multi-byte bodies gate by chars too.
         val semi = indexOfByteIn(src, ';', i + 1, math.min(to, i + 31))
         val body: String =
           if (semi < 0) null
@@ -442,9 +145,8 @@ object HtmlTokenizer {
             if (ascii != null) { if (semi - i <= 10) ascii else null }
             else {
               // rare: non-ASCII bytes in an entity body — decode and
-              // apply the same numeric/named rules the string path does
-              // (Integer.parseInt accepts any Unicode digit, so
-              // `&#١٢٣;` must decode here exactly as it does there)
+              // apply the same numeric/named rules (Integer.parseInt
+              // accepts any Unicode digit, so `&#١٢٣;` decodes to '{')
               val s = new String(src, i + 1, semi - i - 1,
                 java.nio.charset.StandardCharsets.UTF_8)
               if (s.length + 1 <= 10) s else null
@@ -571,34 +273,17 @@ object HtmlTokenizer {
     -1
   }
 
-  private def internedNameBytes(src: Array[Byte], start: Int, end: Int): String = {
-    val len = end - start
-    if (len > 0 && len < InternedNames.length) {
-      val cands = InternedNames(len)
-      var k = 0
-      while (k < cands.length) {
-        val t = cands(k)
-        var j = 0
-        var ok = true
-        while (ok && j < len) {
-          val b = src(start + j) & 0xFF
-          if (b >= 0x80 || lowerAscii(b.toChar) != t.charAt(j)) ok = false
-          j += 1
-        }
-        if (ok) return t
-        k += 1
-      }
-    }
-    // Locale.ROOT for the same reason as internedName's fallback.
-    new String(src, start, end - start, java.nio.charset.StandardCharsets.UTF_8)
-      .toLowerCase(java.util.Locale.ROOT)
-  }
-
-  private def retainedAttrBytes(src: Array[Byte], start: Int, end: Int): String = {
+  /** The candidate equal to src[start, end) under ASCII case folding, or
+    * null; allocation-free either way. Any non-ASCII byte fails the match:
+    * per-char Character.toLowerCase diverges from String.toLowerCase
+    * exactly when a char's lowercase is multi-char (U+0130 'İ' → "i̇"), so
+    * exotic names never alias an ASCII candidate.
+    */
+  private def matchAscii(src: Array[Byte], start: Int, end: Int, cands: Array[String]): String = {
     val len = end - start
     var k = 0
-    while (k < RetainedAttrs.length) {
-      val t = RetainedAttrs(k)
+    while (k < cands.length) {
+      val t = cands(k)
       if (t.length == len) {
         var j = 0
         var ok = true
@@ -614,15 +299,25 @@ object HtmlTokenizer {
     null
   }
 
-  /** Single forward scan over the RAW UTF-8 bytes driving `sink` — same
-    * scanner structure, emission order and CHAR positions as
-    * [[tokenizeInto]] on the decoded string (HtmlTokenizerBytesSpec pins
-    * the equivalence property), but the document is never decoded as a
-    * whole: markup, skipped subtrees and dropped attributes stay bytes,
-    * and only the text ranges the sink keeps pay UTF-8 decode. Non-ASCII
-    * sequences inside tags are evaluated per code point (so exotic
-    * Unicode whitespace separates attributes exactly as it does in the
-    * char scanner).
+  /** The lowercase name for src[start, end), reusing an interned constant
+    * when the region matches one; allocates only for unknown names.
+    */
+  private def internedNameBytes(src: Array[Byte], start: Int, end: Int): String = {
+    val len = end - start
+    val interned = if (len < InternedNames.length) matchAscii(src, start, end, InternedNames(len)) else null
+    if (interned != null) interned
+    // Locale.ROOT: default-locale toLowerCase would fold "DIV" to "dıv"
+    // under tr_TR and break every tag-name comparison downstream.
+    else new String(src, start, len, java.nio.charset.StandardCharsets.UTF_8).toLowerCase(java.util.Locale.ROOT)
+  }
+
+  /** Single forward scan over the RAW UTF-8 bytes driving `sink`. The
+    * document is never decoded as a whole: markup, skipped subtrees and
+    * dropped attributes stay bytes, and only the text ranges the sink
+    * keeps pay UTF-8 decode. Non-ASCII sequences inside tags are evaluated
+    * per code point, so exotic Unicode whitespace separates attributes.
+    * HtmlTokenizerBytesSpec checks the events against a plain scanner over
+    * the decoded string.
     */
   def tokenizeBytesInto(html: Array[Byte], sink: ByteTokSink): Unit = {
     val n = html.length
@@ -652,7 +347,7 @@ object HtmlTokenizer {
     }
 
     // whitespace test at byte index j (ASCII fast path; non-ASCII decodes
-    // the code point so Unicode whitespace matches the char scanner);
+    // the code point so Unicode whitespace counts too);
     // returns the byte length to skip if whitespace, else 0
     def wsLenAt(j: Int): Int = {
       val b = html(j) & 0xFF
@@ -693,25 +388,28 @@ object HtmlTokenizer {
             val aStart = j
             while (j < n && wsLenAt(j) == 0 && html(j) != '=' && html(j) != '>' && html(j) != '/')
               j += seqLenAt(j)
-            val aName = retainedAttrBytes(html, aStart, j)
+            // prune at the scan: only RetainedAttrs are ever consumed
+            // downstream, so other attributes are SCANNED (quote handling
+            // must stay exact) but their name/value never materialize
+            val aName = matchAscii(html, aStart, j, RetainedAttrs)
             while (j < n && { w = wsLenAt(j); w > 0 }) j += w
-            var aVal = ""
+            var vStart = j
+            var vEnd = j
             if (j < n && html(j) == '=') {
               j += 1
               while (j < n && { w = wsLenAt(j); w > 0 }) j += w
               if (j < n && (html(j) == '"' || html(j) == '\'')) {
                 val q = (html(j) & 0xFF).toChar
-                val vStart = j + 1
-                val vEnd = indexOfByteIn(html, q, vStart, n)
-                if (vEnd < 0) { if (aName != null) aVal = rangeRaw(html, vStart, n); j = n }
-                else { if (aName != null) aVal = rangeRaw(html, vStart, vEnd); j = vEnd + 1 }
+                vStart = j + 1
+                vEnd = indexOfByteIn(html, q, vStart, n)
+                if (vEnd < 0) { vEnd = n; j = n } else j = vEnd + 1
               } else {
-                val vStart = j
+                vStart = j
                 while (j < n && wsLenAt(j) == 0 && html(j) != '>') j += seqLenAt(j)
-                if (aName != null) aVal = rangeRaw(html, vStart, j)
+                vEnd = j
               }
             }
-            if (aName != null) attrs = (aName, decodeEntities(aVal)) :: attrs
+            if (aName != null) attrs = (aName, rangeText(html, vStart, vEnd)) :: attrs
         }
       }
       sink.startTag(name, attrs.reverse, selfClosing, charPos(start), charPos(j))
@@ -766,42 +464,8 @@ object HtmlTokenizer {
     }
   }
 
-  /** Raw (pre-entity-decode) UTF-8 string of src[from, to) — the byte
-    * analog of String#substring for attribute values (entity decode
-    * happens in the caller, mirroring the char scanner).
-    */
-  private def rangeRaw(src: Array[Byte], from: Int, to: Int): String =
-    new String(src, from, to - from, java.nio.charset.StandardCharsets.UTF_8)
-
   @inline private def isNameCharB(b: Byte): Boolean = {
     val c = b & 0xFF
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') || c == '-' || c == '_' || c == ':'
   }
-
-  /** The interned attribute name iff html[start, end) ASCII-case-
-    * insensitively matches one the extractor consumes; null otherwise
-    * (allocation-free either way).
-    */
-  private def retainedAttr(html: String, start: Int, end: Int): String = {
-    val len = end - start
-    var k = 0
-    while (k < RetainedAttrs.length) {
-      val t = RetainedAttrs(k)
-      if (t.length == len) {
-        var j = 0
-        var ok = true
-        while (ok && j < len) {
-          val c = html.charAt(start + j)
-          if (c >= 0x80 || lowerAscii(c) != t.charAt(j)) ok = false
-          j += 1
-        }
-        if (ok) return t
-      }
-      k += 1
-    }
-    null
-  }
-
-  @inline private def isNameChar(c: Char): Boolean =
-    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') || c == '-' || c == '_' || c == ':'
 }

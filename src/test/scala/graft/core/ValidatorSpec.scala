@@ -43,6 +43,26 @@ class ValidatorSpec extends AnyFunSuite {
     assert(TableDoc.fromJsonString(ok).citation == Cell.Str("\u00e9\u00c9"))
   }
 
+  test("numbers follow Python's json grammar on every generated string") {
+    // a laxer grammar makes tablevalidate say VALID or INVALID where the
+    // reference says MALFORMED JSON; verdicts are Python's, recorded by
+    // tools/gen_json_number_verdicts.py
+    for (s <- Seq("+4", "007", "1-2", "\u0661", "1.", ".5", "-", "[1,+2]"))
+      assert(scala.util.Try(JVal.parse(s)).isFailure, s)
+    val in = getClass.getResourceAsStream("/graft/golden/json_numbers.tsv")
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector finally in.close()
+    assert(lines.size > 2000)
+    val wrong = lines.flatMap { line =>
+      val Array(alone, inDoc, text) = line.split("\t", 3)
+      val parses = scala.util.Try(JVal.parse(text)).isSuccess
+      val doc = s"""{"tables": [{"rows": [], "page": $text}], "citation": null}"""
+      val docParses = Validator.validateDoc("n.tables.json", doc).status != Validator.MalformedJson
+      if (parses == (alone == "1") && docParses == (inDoc == "1")) None
+      else Some(s"[$text]: python $alone/$inDoc, parser $parses/$docParses")
+    }
+    assert(wrong.isEmpty, wrong.take(20).mkString("\n"))
+  }
+
   test("report skips the metadata/settings files (reference skip list)") {
     import spark.implicits._
     val files = Seq(

@@ -86,12 +86,36 @@ class HtmlExtractorEdgeSpec extends AnyFunSuite {
     // </İ> must tokenize as String.toLowerCase("İ") = "i̇" (2 chars),
     // NOT as the interned "i" tag — per-char Character.toLowerCase would
     // collapse it to "i" (the divergence the ASCII-only fast path
-    // prevents). Start tags can't reach this (isNameChar is ASCII-only);
+    // prevents). Start tags can't reach this (isNameCharB is ASCII-only);
     // end-tag names are taken verbatim from the source region.
-    val toks = HtmlTokenizer.tokenize("x</İ>y").toList
-    val end = toks.collectFirst { case e: HtmlTokenizer.EndTag => e.name }.get
+    val ends = List.newBuilder[String]
+    HtmlTokenizer.tokenizeBytesInto("x</İ>y".getBytes("UTF-8"), new HtmlTokenizer.ByteTokSink {
+      def startTag(name: String, attrs: List[(String, String)], selfClosing: Boolean, pos: Int, endPos: Int): Unit = ()
+      def endTag(name: String, pos: Int, endPos: Int): Unit = { ends += name; () }
+      def text(src: Array[Byte], startB: Int, endB: Int, pos: Int): Unit = ()
+    })
+    val end = ends.result().head
     assert(end == "İ".toLowerCase)
     assert(end == "i̇" && end != "i")
+  }
+
+  test("character references in colspan and data-page values are decoded") {
+    val span = HtmlExtractor.extract("""<table><tr><td colspan="&#50;">a</td></tr></table>""")
+    assert(cells(span) == List(Vector("0" -> Cell.Str("a"), "1" -> Cell.Str("a"))))
+    val page = HtmlExtractor.extract("""<div data-page="&#51;"><table><tr><td>v</td></tr></table></div>""")
+    assert(page.tables.map(_.fragment.page) == List(3))
+  }
+
+  test("a truncated UTF-8 sequence in colspan or data-page is ignored") {
+    val bad = new String(Array[Byte](0xE2.toByte, 0x82.toByte), "ISO-8859-1")
+    def bytes(s: String) = s.getBytes("ISO-8859-1") // one byte per char: keeps the raw 0xE2 0x82
+    val span = HtmlExtractor.extractBytes(bytes(s"""<table><tr><td colspan="$bad">a</td><td>b</td></tr></table>"""))
+    assert(cells(span) == List(Vector("0" -> Cell.Str("a"), "1" -> Cell.Str("b"))))
+    val page = HtmlExtractor.extractBytes(bytes(
+      s"""<div data-page="2"><table><tr><td>v</td></tr></table></div>""" +
+        s"""<div data-page="$bad"><table><tr><td>w</td></tr></table></div>"""))
+    assert(page.status == "ok")
+    assert(page.tables.map(_.fragment.page) == List(2, 2))
   }
 
   test("invalid UTF-8 bytes never crash extraction (status stays ok)") {

@@ -3,16 +3,17 @@ package graft.html
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-/** The byte-level scanner must emit the SAME event stream as the string
-  * scanner on the UTF-8 encoding: same tags, same attrs, same decoded text,
-  * and — critically for spans — the same CHAR (UTF-16) positions, even when
-  * multi-byte sequences shift byte offsets away from char offsets.
+/** The byte-level scanner must emit the SAME event stream as the plain
+  * reference scanner ([[StringScanner]]) run over the decoded document:
+  * same tags, same attrs, same decoded text, and — critically for spans —
+  * the same CHAR (UTF-16) positions, even when multi-byte sequences shift
+  * byte offsets away from char offsets.
   *
   * Generator notes: inputs are valid UTF-8 (the byte scanner's documented
   * domain). Raw-text close-tag matching is ASCII-case-insensitive on BOTH
-  * paths (HTML5 semantics), so chars whose Character.toLowerCase maps INTO
-  * ASCII (U+0130, U+017F, U+212A) never close a raw-text element on either
-  * path — pinned by the dedicated test below.
+  * scanners (HTML5 semantics), so chars whose Character.toLowerCase maps
+  * INTO ASCII (U+0130, U+017F, U+212A) never close a raw-text element —
+  * pinned by the dedicated test below.
   */
 class HtmlTokenizerBytesSpec extends AnyFunSuite {
 
@@ -21,24 +22,7 @@ class HtmlTokenizerBytesSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
-  private sealed trait Ev
-  private final case class STag(name: String, attrs: List[(String, String)], sc: Boolean, pos: Int, end: Int) extends Ev
-  private final case class ETag(name: String, pos: Int, end: Int) extends Ev
-  private final case class Txt(text: String, pos: Int) extends Ev
-
-  private def stringEvents(html: String): Vector[Ev] = {
-    val buf = Vector.newBuilder[Ev]
-    HtmlTokenizer.tokenizeInto(html, new HtmlTokenizer.TokSink {
-      def startTag(name: String, attrs: List[(String, String)], selfClosing: Boolean, pos: Int, endPos: Int): Unit = {
-        buf += STag(name, attrs, selfClosing, pos, endPos); ()
-      }
-      def endTag(name: String, pos: Int, endPos: Int): Unit = { buf += ETag(name, pos, endPos); () }
-      def text(src: String, start: Int, end: Int, pos: Int): Unit = {
-        buf += Txt(HtmlTokenizer.rangeText(src, start, end), pos); ()
-      }
-    })
-    buf.result()
-  }
+  import StringScanner.{ETag, Ev, STag, Txt}
 
   private def byteEvents(html: String): Vector[Ev] = {
     val bytes = html.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -56,7 +40,7 @@ class HtmlTokenizerBytesSpec extends AnyFunSuite {
   }
 
   private def assertEquivalent(html: String): Unit = {
-    val a = stringEvents(html)
+    val a = StringScanner.events(html)
     val b = byteEvents(html)
     assert(a == b, s"event streams diverge for: ${html.take(300)}")
   }
@@ -105,7 +89,7 @@ class HtmlTokenizerBytesSpec extends AnyFunSuite {
   private val doc: Gen[String] = Gen.listOf(piece).map(_.mkString)
 
   test("byte scan == string scan: events, attrs, decoded text, char positions (property)") {
-    check(Prop.forAll(doc) { html => stringEvents(html) == byteEvents(html) })
+    check(Prop.forAll(doc) { html => StringScanner.events(html) == byteEvents(html) })
   }
 
   test("byte scan == string scan on the fixture corpus pages") {
@@ -156,7 +140,7 @@ class HtmlTokenizerBytesSpec extends AnyFunSuite {
         "<style>x</ſtyle>y</STYLE>z", // U+017F 'ſ' long s
         "<script>k</scrıpt></SCRIPT>")) { // U+0131 dotless ı never folds to i
       assertEquivalent(html)
-      val evs = stringEvents(html)
+      val evs = StringScanner.events(html)
       assert(evs.count { case ETag("script", _, _) | ETag("style", _, _) => true; case _ => false } == 1,
         s"exactly one real close tag expected in: $html — got $evs")
     }
