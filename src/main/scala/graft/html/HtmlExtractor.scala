@@ -128,6 +128,11 @@ object HtmlExtractor {
     "pre", "blockquote", "dl", "dt", "dd", "figure", "figcaption", "form",
     "fieldset", "hr", "address", "body", "html", "title", "head")
   private val HeadingTags = Set("h1", "h2", "h3", "h4", "h5", "h6")
+  /** Span limits of the WHATWG table processing model: a larger `colspan`
+    * counts as 1000 and a larger `rowspan` as 65534, so one cell cannot
+    * make the grid builder loop billions of times. */
+  private val MaxColspan = 1000
+  private val MaxRowspan = 65534
   private val SkipSubtrees = Set("noscript", "template", "svg", "iframe", "select", "option", "button", "head", "title")
 
   /** Boilerplate keep-rule for a text block. Documented constants — goldens
@@ -340,8 +345,10 @@ object HtmlExtractor {
               tableStack.push(new TableBuilder(pageNum, pos))
             case "tr" if tableStack.nonEmpty => tableStack.top.startRow()
             case "td" | "th" if tableStack.nonEmpty =>
-              val rowspan = attrs.collectFirst { case ("rowspan", v) => v.trim }.flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(1)
-              val colspan = attrs.collectFirst { case ("colspan", v) => v.trim }.flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(1)
+              val rowspan = attrs.collectFirst { case ("rowspan", v) => v.trim }.flatMap(v => scala.util.Try(v.toInt).toOption)
+                .fold(1)(math.min(_, MaxRowspan))
+              val colspan = attrs.collectFirst { case ("colspan", v) => v.trim }.flatMap(v => scala.util.Try(v.toInt).toOption)
+                .fold(1)(math.min(_, MaxColspan))
               tableStack.top.startCell(name == "th", rowspan, colspan)
             case "a" => linkDepth += 1
             case h if HeadingTags.contains(h) =>

@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.CollectionAccumulator
 import graft.html.{ExtractSettings, HtmlExtractor}
 
 /** The flagship extraction pipeline (north rule):
@@ -10,7 +10,8 @@ import graft.html.{ExtractSettings, HtmlExtractor}
   *   pages table → [resume anti-filter on completed buckets]
   *               → deterministic url-hash bucketing (explicit repartition)
   *               → ONE fused mapPartitions stage
-  *                   (tokenize → DOM-lite → boilerplate score → table grids)
+  *                   (tokenize → DOM-lite → boilerplate score → table grids,
+  *                    and in `run` the per-bucket lineage fold)
   *               → output parquet partitioned by bucket
   *               → per-bucket lineage/metrics table (commit point)
   *
@@ -29,6 +30,10 @@ import graft.html.{ExtractSettings, HtmlExtractor}
   *  - Mega-page skew: url hashing spreads hosts uniformly; a single giant
   *    page is row-atomic by nature, so the lever is bucket count — size
   *    buckets so the p99 bucket fits an executor core's budget.
+  *  - Lineage: the per-bucket figures (rows, tables, html bytes, errors,
+  *    url range) are folded inside that same stage into a
+  *    [[LineageAccumulator]], which counts each scan partition once under
+  *    task retry and speculation; the committed output is never read back.
   *  - Resume: lineage is written AFTER the output parquet commit; a killed
   *    run leaves missing/uncommitted lineage rows and dynamic partition
   *    overwrite re-extracts exactly those buckets (anti-join on lineage).
@@ -39,8 +44,9 @@ object ExtractJob {
     * bucket whose stamp differs. MUST be bumped whenever a change can alter
     * extraction output bytes — 0.2.0: byte-level tokenizer (malformed-UTF-8
     * replacement differs from the old JDK-decoder path) + ASCII-only
-    * raw-text close-tag folding. */
-  val ExtractorVersion = "graft-extract-0.2.0"
+    * raw-text close-tag folding; 0.3.0: `colspan` clamped to 1000 and
+    * `rowspan` to 65534. */
+  val ExtractorVersion = "graft-extract-0.3.0"
 
   final case class Config(
       buckets: Int = 32,
@@ -55,10 +61,10 @@ object ExtractJob {
         * to change extraction bytes. */
       acceptStaleVersions: Boolean = false)
 
-  /** `pagesProcessed` is derived from the COMMITTED output (sum of this
-    * run's lineage `rows_out`), not from an accumulator — map-stage
-    * accumulators double-count under task retry/speculation, so this is the
-    * number a reader of the output will actually see, exactly-once. */
+  /** `pagesProcessed` is the sum of this run's lineage `rows_out`: the rows
+    * the extraction stage emitted into the committed write, each counted
+    * once however many attempts of its task ran (see
+    * [[LineageAccumulator]]). */
   final case class RunStats(pagesProcessed: Long, bucketsSkipped: Int, bucketsPlanned: Int)
 
   def bucketOf(urlCol: org.apache.spark.sql.Column, buckets: Int): org.apache.spark.sql.Column =
@@ -120,15 +126,15 @@ object ExtractJob {
     * BY NAME (any column order, extra columns dropped), adds the bucket id
     * and the optional sidecar `mapping_json` (broadcast left join, null
     * without a sidecar), decodes once and applies [[extractPage]] in one
-    * narrow mapPartitions. `written` records each bucket id a task emits,
-    * once per task.
+    * narrow mapPartitions. With `lineage`, each task also folds the rows it
+    * emits into per-bucket figures and adds them under its partition id.
     */
   private def extractStage(
       spark: SparkSession,
       pages: DataFrame,
       cfg: Config,
       sidecar: Option[DataFrame] = None,
-      written: Option[CollectionAccumulator[Int]] = None): Dataset[ExtractedPage] = {
+      lineage: Option[LineageAccumulator] = None): Dataset[ExtractedPage] = {
     import spark.implicits._
     val byName = pages.select(col("url"), col("warc_ts"), col("html"), col("text"), col("lang"),
       bucketOf(col("url"), cfg.buckets).as("bucket"))
@@ -144,15 +150,17 @@ object ExtractJob {
       .as[(String, java.sql.Timestamp, Array[Byte], String, String, Int, Option[String])]
       .mapPartitions { it =>
         val mapped = scala.collection.mutable.HashMap.empty[String, Config]
-        val seen = new java.util.HashSet[Int]()
-        it.map { case (url, ts, html, text, lang, bucket, mj) =>
-          if (seen.add(bucket)) written.foreach(_.add(bucket))
+        val rows = it.map { case (url, ts, html, text, lang, bucket, mj) =>
           val pageCfg = mj match {
             case Some(j) => mapped.getOrElseUpdate(j, cfg.copy(settings =
               cfg.settings.copy(mapping = Some(graft.html.TablesMapping.fromJsonString(j)))))
             case None => cfg
           }
           extractPage(Page(url, ts, html, text, lang), bucket, pageCfg)
+        }
+        lineage match {
+          case Some(acc) => LineageAccumulator.folding(rows, acc, TaskContext.getPartitionId())
+          case None => rows
         }
       }
   }
@@ -164,21 +172,22 @@ object ExtractJob {
     *    lineage table (one tiny row per completed bucket) — no literal
     *    `isin` list baked into the plan, no driver round-trip on the
     *    filter path;
-    *  - this run's lineage rows are aggregated from ONLY the partition
-    *    directories this run actually WROTE — tracked by a bounded
-    *    set-accumulator in the extraction stage, so a bucket dir left on
-    *    disk by an older run but absent from this run's input is neither
-    *    scanned nor re-stamped (its lineage row, current or stale, is
-    *    carried over verbatim). Completed buckets' parquet files are never
-    *    opened, which `ExtractJobSpec`'s corruption gate proves;
+    *  - this run's lineage rows come from the [[LineageAccumulator]] the
+    *    extraction stage fills as it emits rows: the committed output is
+    *    never listed, scanned or aggregated. The accumulator's buckets are
+    *    exactly the buckets this run wrote, so a bucket dir left on disk by
+    *    an older run but absent from this run's input is never re-stamped
+    *    (its lineage row, current or stale, is carried over verbatim), and
+    *    completed buckets' parquet files are never opened, which
+    *    `ExtractJobSpec`'s corruption gate proves;
     *  - the lineage table itself is partitioned by bucket and written with
     *    dynamic partition overwrite, so completed buckets' lineage rows are
-    *    carried over untouched instead of being recomputed and rewritten.
+    *    carried over untouched instead of being recomputed and rewritten
+    *    (rows written before `errors_out` existed keep their old columns).
     *
-    * The only driver-side state is two bucket-id sets (completed, written
-    * this run) — O(buckets) ints, bounded by `cfg.buckets` regardless of
-    * corpus size — used solely to pick this run's partition dirs for the
-    * lineage scan.
+    * The only driver-side state is the completed bucket-id set and the
+    * accumulator's figures — O(buckets) ints and O(tasks × buckets) small
+    * records, independent of corpus size.
     *
     * Resume is extractor-version-aware: a bucket is skipped only when its
     * lineage row carries the CURRENT [[ExtractorVersion]] (this is what the
@@ -224,18 +233,15 @@ object ExtractJob {
       case _ => pagesDs.toDF()
     }
 
-    // Which buckets this run actually writes — the lineage scan below must
-    // cover exactly these dirs, not every bucket dir on disk (dirs from
-    // older runs whose pages are absent from this input must keep their
-    // existing lineage rows, stale version and all). Bounded: each task
-    // contributes each bucket id at most once, so the driver-side value is
-    // O(tasks × buckets) ids worst case and O(buckets) distinct.
-    val writtenAcc = spark.sparkContext.collectionAccumulator[Int]("graft.bucketsWritten")
+    // This run's per-bucket lineage figures, folded by the extraction tasks
+    // themselves; its buckets are the buckets this run writes.
+    val lineageAcc = new LineageAccumulator
+    spark.sparkContext.register(lineageAcc, "graft.lineage")
 
     // Extraction stays on the scan tasks (narrow); ONLY the extracted output
     // (no html) shuffles into its bucket before the partitioned write — one
     // file per bucket, deterministic layout, cheap resume overwrites.
-    val extracted = extractStage(spark, pending, cfg, written = Some(writtenAcc))
+    val extracted = extractStage(spark, pending, cfg, lineage = Some(lineageAcc))
       .repartition(cfg.buckets, col("bucket"))
 
     // dynamic partition overwrite: only the buckets present in this run are
@@ -251,47 +257,12 @@ object ExtractJob {
         .partitionBy("bucket")
         .parquet(outputPath)
 
-      // Lineage for THIS RUN only, read back from the committed output so
-      // the lineage reflects exactly what a reader will see (commit point).
-      // Only the partition dirs this run WROTE (accumulator-tracked) are
-      // listed and scanned — never completed buckets, and never leftover
-      // dirs from older runs whose pages were absent from this input (those
-      // keep their existing lineage rows and version stamps).
-      val writtenBuckets: Set[Int] = {
-        val it = writtenAcc.value.iterator()
-        val s = Set.newBuilder[Int]
-        while (it.hasNext) s += it.next()
-        s.result()
-      }
-      val runDirs = bucketPartitionDirs(spark, outputPath)
-        .filter { case (b, _) => writtenBuckets(b) }
-      if (runDirs.nonEmpty) {
-        // Collected to the driver before the write: O(written buckets)
-        // rows, bounded by cfg.buckets — the same bound as `completed`.
-        // This both (a) makes RunStats.pagesProcessed exactly-once (the
-        // committed row count, immune to task-retry double-counting) and
-        // (b) writes the lineage from one tiny task instead of a shuffle.
-        val newLineage: Array[LineageRow] = spark.read
-          .option("basePath", outputPath)
-          .parquet(runDirs.map(_._2): _*)
-          .groupBy(col("bucket"))
-          .agg(
-            countDistinct(col("url")).as("urls"),
-            count(lit(1)).as("rows_out"),
-            sum(col("n_tables")).cast("long").as("tables_out"),
-            sum(col("html_bytes")).as("html_bytes"),
-            min(col("url")).as("url_min"),
-            max(col("url")).as("url_max"))
-          .withColumn("extractor_version", lit(ExtractorVersion))
-          .select(col("urls"), col("rows_out"), col("tables_out"),
-            col("html_bytes"), col("url_min"), col("url_max"),
-            col("extractor_version"), col("bucket").cast("int").as("bucket"))
-          // typed gate: the encoder (by-name) is the schema check on the
-          // lineage table — column drift fails here, not at resume time
-          .as[LineageRow]
-          .collect()
+      // Lineage for THIS RUN only, written after the output commit (the
+      // commit point): O(written buckets) rows from one tiny task.
+      val newLineage = lineageAcc.lineageRows(ExtractorVersion)
+      if (newLineage.nonEmpty) {
         pagesWritten = newLineage.iterator.map(_.rows_out).sum
-        spark.createDataset(newLineage.toIndexedSeq)
+        spark.createDataset(newLineage)
           .coalesce(1)
           .write
           .mode("overwrite")
@@ -316,7 +287,8 @@ object ExtractJob {
     * exist, rewrite the table partitioned by bucket (O(buckets) rows) into
     * a sibling temp dir and swap it in. If bucket=N dirs ALSO already exist
     * (a run of the new code against an unmigrated dir), the partitioned
-    * rows are the newer write and win per bucket.
+    * rows are the newer write and win per bucket. Both sides pass the typed
+    * [[LineageRow]] gate in [[asLineageRows]].
     *
     * The swap is crash-safe: write `<p>.migrating` fully, rename the
     * original aside to `<p>.premigrate`, rename the new table into place,
@@ -334,23 +306,20 @@ object ExtractJob {
     val rootFiles = entries.filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
     if (rootFiles.isEmpty) return
     val partDirs = entries.filter(st => st.isDirectory && st.getPath.getName.startsWith("bucket="))
-    val flat = spark.read
-      .parquet(rootFiles.map(_.getPath.toString).toIndexedSeq: _*)
-      .withColumn("bucket", col("bucket").cast("int"))
+    val flat = asLineageRows(spark.read.option("mergeSchema", "true")
+      .parquet(rootFiles.map(_.getPath.toString).toIndexedSeq: _*))
     val merged =
       if (partDirs.isEmpty) flat
       else {
-        val parted = spark.read.option("basePath", lineagePath)
-          .parquet(partDirs.map(_.getPath.toString).toIndexedSeq: _*)
-          .withColumn("bucket", col("bucket").cast("int"))
+        val parted = asLineageRows(spark.read.option("basePath", lineagePath).option("mergeSchema", "true")
+          .parquet(partDirs.map(_.getPath.toString).toIndexedSeq: _*))
         flat.join(parted.select("bucket").distinct(), Seq("bucket"), "left_anti")
-          .unionByName(parted)
+          .unionByName(parted.toDF())
       }
     val tmp = new org.apache.hadoop.fs.Path(lineagePath + MigratingSuffix)
     val old = new org.apache.hadoop.fs.Path(lineagePath + PremigrateSuffix)
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    import spark.implicits._
-    merged.as[LineageRow].write.mode("overwrite").partitionBy("bucket").parquet(tmp.toString)
+    merged.write.mode("overwrite").partitionBy("bucket").parquet(tmp.toString)
     // Completeness marker for [[recoverInterruptedMigration]], written by
     // hand: whether the committer leaves a root _SUCCESS depends on session
     // conf (dynamic partitionOverwriteMode suppresses it), and a missing
@@ -363,6 +332,19 @@ object ExtractJob {
     if (!fs.rename(tmp, p))
       throw new java.io.IOException(s"lineage migration rename failed: $tmp -> $p")
     fs.delete(old, true)
+  }
+
+  /** A lineage table's rows in the current [[LineageRow]] schema — the
+    * typed gate: a missing column other than `errors_out` fails here. Rows
+    * written before `errors_out` existed read as 0 errors; columns the
+    * schema no longer has (`urls`) are dropped. */
+  private def asLineageRows(df: DataFrame): Dataset[LineageRow] = {
+    val encoder = Encoders.product[LineageRow]
+    val withErrors =
+      if (df.columns.contains("errors_out")) df.withColumn("errors_out", coalesce(col("errors_out"), lit(0L)))
+      else df.withColumn("errors_out", lit(0L))
+    withErrors.select(encoder.schema.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+      .as(encoder)
   }
 
   private[pipeline] val MigratingSuffix = ".migrating"
@@ -406,19 +388,6 @@ object ExtractJob {
     } else {
       fs.delete(tmp, true) // incomplete tmp and no original to restore
       ()
-    }
-  }
-
-  /** List `bucket=N` partition directories under `path` — an O(buckets)
-    * filesystem listing, independent of data volume.
-    */
-  private def bucketPartitionDirs(spark: SparkSession, path: String): Seq[(Int, String)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toIndexedSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("bucket=") =>
-        (st.getPath.getName.stripPrefix("bucket=").toInt, st.getPath.toString)
     }
   }
 

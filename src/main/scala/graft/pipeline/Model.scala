@@ -40,13 +40,14 @@ final case class ExtractedPage(
 
 /** Per-bucket lineage/metrics row (north rule: partition id, url range,
   * rows, bytes, extractor version) — the resume anti-join key source.
+  * `errors_out` counts the rows whose `status` starts with `error:`.
   */
 final case class LineageRow(
     bucket: Int,
-    urls: Long,
     rows_out: Long,
     tables_out: Long,
     html_bytes: Long,
+    errors_out: Long,
     url_min: String,
     url_max: String,
     extractor_version: String)

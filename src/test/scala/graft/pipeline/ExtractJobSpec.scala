@@ -73,6 +73,11 @@ class ExtractJobSpec extends AnyFunSuite {
     val lineage = spark.read.parquet(s"$dir/_lineage")
     assert(lineage.count() == 8)
     assert(lineage.select("extractor_version").distinct().collect().head.getString(0) == ExtractJob.ExtractorVersion)
+    // the folded lineage equals the read-back aggregate of the committed output
+    val allBuckets = (0 until 8).toSet
+    assert(ReadBackLineage.written(spark, dir, allBuckets) == ReadBackLineage.rows(spark, dir, allBuckets),
+      "fresh-run lineage")
+    val carried = ReadBackLineage.written(spark, dir, (0 to 5).toSet)
 
     // simulate a kill after 6 of 8 buckets committed: drop 2 buckets'
     // lineage partitions + their output partitions (the lineage table is
@@ -97,6 +102,9 @@ class ExtractJobSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).sortBy(_._1)
     assert(resumedOut.length == fullOut.length)
     assert(resumedOut.sameElements(fullOut), "resumed output identical to uninterrupted run")
+    assert(ReadBackLineage.written(spark, dir, Set(6, 7)) == ReadBackLineage.rows(spark, dir, Set(6, 7)),
+      "resumed-run lineage")
+    assert(ReadBackLineage.written(spark, dir, (0 to 5).toSet) == carried, "completed buckets' lineage carried over")
   }
 
   test("resume re-extracts buckets whose lineage carries a stale extractor version") {
@@ -391,6 +399,64 @@ class ExtractJobSpec extends AnyFunSuite {
     val after = spark.read.parquet(s"$dir/_lineage")
     val stamped = after.select(col("bucket").cast("int")).as[Int].collect().toSet
     assert(stamped == Set(0, 1, 2, 3, 4, 5, 6), s"unexpected lineage buckets: $stamped")
+    assert(ReadBackLineage.written(spark, dir, Set(6)) == ReadBackLineage.rows(spark, dir, Set(6)),
+      "leftover-dir run lineage")
+  }
+
+  test("resume over a lineage table in the older schema (urls, no errors_out), partitioned and flat") {
+    import spark.implicits._
+    val cfg = ExtractJob.Config(buckets = 8)
+    val pages = SyntheticPages.pages(spark, sfDir)
+    val expected = ExtractJob.extract(spark, pages, cfg).collect().sortBy(_.url).toSeq
+    // what the older code wrote per bucket: `urls` and no `errors_out`
+    def olderSchema(dir: String) = spark.read.parquet(s"$dir/_lineage")
+      .withColumn("bucket", col("bucket").cast("int"))
+      .select(col("rows_out").as("urls"), col("rows_out"), col("tables_out"), col("html_bytes"),
+        col("url_min"), col("url_max"), col("extractor_version"), col("bucket"))
+      .localCheckpoint()
+
+    // partitioned layout, buckets 6-7 killed: carried rows stay as written
+    val parted = java.nio.file.Files.createTempDirectory("graft-older-parted").toString
+    ExtractJob.run(spark, pages, parted, cfg)
+    val old = olderSchema(parted)
+    rmrf(new java.io.File(s"$parted/_lineage"))
+    old.filter(col("bucket") < 6).write.partitionBy("bucket").parquet(s"$parted/_lineage")
+    rmrf(new java.io.File(s"$parted/extracted/bucket=6"))
+    rmrf(new java.io.File(s"$parted/extracted/bucket=7"))
+    assert(ExtractJob.run(spark, pages, parted, cfg).bucketsSkipped == 6)
+    assert(committedRows(parted) == expected)
+    val merged = spark.read.option("mergeSchema", "true").parquet(s"$parted/_lineage")
+      .withColumn("bucket", col("bucket").cast("int"))
+    val errorsByBucket = merged.select("bucket", "errors_out").as[(Int, Option[Long])].collect().toMap
+    assert(errorsByBucket.keySet == (0 until 8).toSet)
+    for (b <- 0 to 5) assert(errorsByBucket(b).isEmpty, s"carried bucket $b rewritten")
+    assert(ReadBackLineage.written(spark, parted, Set(6, 7)) == ReadBackLineage.rows(spark, parted, Set(6, 7)))
+
+    // flat layout, bucket 7 killed: migration reads a missing errors_out as 0
+    val flat = java.nio.file.Files.createTempDirectory("graft-older-flat").toString
+    ExtractJob.run(spark, pages, flat, cfg)
+    val oldFlat = olderSchema(flat)
+    rmrf(new java.io.File(s"$flat/_lineage"))
+    oldFlat.filter(col("bucket") =!= 7).write.parquet(s"$flat/_lineage")
+    rmrf(new java.io.File(s"$flat/extracted/bucket=7"))
+    assert(ExtractJob.run(spark, pages, flat, cfg).bucketsSkipped == 7)
+    assert(committedRows(flat) == expected)
+    val migrated = ReadBackLineage.written(spark, flat, (0 until 8).toSet)
+    assert(migrated.map(_.bucket) == (0 until 8))
+    assert(migrated.forall(_.errors_out == 0L))
+    assert(migrated == ReadBackLineage.rows(spark, flat, (0 until 8).toSet))
+    assert(!spark.read.parquet(s"$flat/_lineage").columns.contains("urls"), "migrated rows pass the typed gate")
+  }
+
+  test("a colspan of 2,000,000,000 is clamped: the page yields one ok row") {
+    import spark.implicits._
+    val html = """<table><tr><td colspan="2000000000">x</td></tr></table>"""
+    val pages = Seq(Page("https://hostile.example.org/colspan", new java.sql.Timestamp(0L),
+      html.getBytes("UTF-8"), "", "en")).toDS()
+    val rows = ExtractJob.extract(spark, pages, ExtractJob.Config(buckets = 2)).collect()
+    assert(rows.length == 1)
+    assert(rows.head.status == "ok")
+    assert(rows.head.n_tables == 1 && rows.head.n_table_rows == 1)
   }
 
   test("hostile nesting: 10^5-deep <div> and 10^5-deep <table><tr><td> pages each yield one non-error row") {
