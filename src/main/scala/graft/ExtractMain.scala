@@ -13,7 +13,6 @@ import graft.pipeline.{ExtractJob, Page}
   *   --out    /data/extracted_run    # output root (extracted/ + _lineage/)
   *   [--buckets 4096]                # url-hash partitions (size so p99 fits a core)
   *   [--no-resume]                   # ignore existing lineage, redo everything
-  *   [--accept-stale-versions]       # skip buckets extracted by older versions
   *   [--synthetic /root/testdata/sfX[:factor]]  # sandbox demo input instead of --input
   * }}}
   *
@@ -34,8 +33,7 @@ object ExtractMain {
       synthetic: Option[String] = None,
       out: Option[String] = None,
       buckets: Int = 4096,
-      resume: Boolean = true,
-      acceptStaleVersions: Boolean = false)
+      resume: Boolean = true)
 
   private val valueFlags = Set("--input", "--synthetic", "--out", "--buckets")
 
@@ -47,7 +45,6 @@ object ExtractMain {
     case "--buckets" :: v :: rest =>
       parse(rest, acc.copy(buckets = graft.core.Cli.positiveInt("--buckets", v)))
     case "--no-resume" :: rest => parse(rest, acc.copy(resume = false))
-    case "--accept-stale-versions" :: rest => parse(rest, acc.copy(acceptStaleVersions = true))
     case flag :: Nil if valueFlags(flag) =>
       throw new IllegalArgumentException(s"$flag requires a value")
     case other :: _ => throw new IllegalArgumentException(s"unknown arg: $other")
@@ -103,10 +100,7 @@ object ExtractMain {
           }
       }
 
-    val cfg = ExtractJob.Config(
-      buckets = args.buckets,
-      resume = args.resume,
-      acceptStaleVersions = args.acceptStaleVersions)
+    val cfg = ExtractJob.Config(buckets = args.buckets, resume = args.resume)
     val t0 = System.nanoTime()
     val stats = ExtractJob.run(spark, pages, out, cfg)
     // one machine-readable line, last on stdout (logs go to stderr)

@@ -24,20 +24,18 @@ import org.apache.spark.sql.functions.col
   * sides of the repeated-line strip) land on IDENTICAL repartition
   * subtrees, which exchange reuse collapses into one physical scan.
   *
-  * The threshold is one session conf, `spark.graft.spreadMaxBytesPerCore`
-  * (default 8 MB/core): inputs estimated under `cores × threshold` bytes
-  * repartition; the one-off shuffle of ≤ 8 MB/core of text costs far less
-  * than leaving the cluster idle through a CPU-bound pass. Reading plan
+  * The threshold is a constant 8 MB/core (`MaxBytesPerCore`): inputs
+  * estimated under `cores × 8 MB` bytes repartition; the one-off shuffle
+  * of ≤ 8 MB/core of text costs far less than leaving the cluster idle
+  * through a CPU-bound pass. Reading plan
   * statistics runs no Spark jobs, keeping query construction lazy.
   */
 object Spread {
 
-  private def maxBytes(df: DataFrame): BigInt = {
-    val spark = df.sparkSession
-    val perCore = spark.conf.getOption("spark.graft.spreadMaxBytesPerCore")
-      .map(_.toLong).getOrElse(8L * 1024 * 1024)
-    BigInt(spark.sparkContext.defaultParallelism) * perCore
-  }
+  private val MaxBytesPerCore = 8L * 1024 * 1024
+
+  private def maxBytes(df: DataFrame): BigInt =
+    BigInt(df.sparkSession.sparkContext.defaultParallelism) * MaxBytesPerCore
 
   /** True when the plan is a narrow chain over source scans (projections,
     * filters, unions, generators) — the only shape whose parallelism is set

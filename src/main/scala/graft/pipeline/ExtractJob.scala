@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.html.{ExtractSettings, HtmlExtractor}
 
@@ -37,6 +37,8 @@ import graft.html.{ExtractSettings, HtmlExtractor}
   *  - Resume: lineage is written AFTER the output parquet commit; a killed
   *    run leaves missing/uncommitted lineage rows and dynamic partition
   *    overwrite re-extracts exactly those buckets (anti-join on lineage).
+  *    One rule, one layout: a bucket is done only if a `_lineage/bucket=N`
+  *    row carries the current [[ExtractorVersion]].
   */
 object ExtractJob {
 
@@ -48,18 +50,12 @@ object ExtractJob {
     * `rowspan` to 65534. */
   val ExtractorVersion = "graft-extract-0.3.0"
 
+  /** `resume` skips every bucket whose lineage row carries the current
+    * [[ExtractorVersion]]; `false` re-extracts everything. */
   final case class Config(
       buckets: Int = 32,
       resume: Boolean = true,
-      settings: ExtractSettings = ExtractSettings(),
-      /** Resume policy for buckets whose lineage was written by a DIFFERENT
-        * extractor version. Default false: stale buckets are re-extracted so
-        * a finished corpus is uniformly at [[ExtractorVersion]] (the
-        * north rule's byte-identical-per-url contract is per-version — a
-        * silent old/new mix would break it unreproducibly). Set true to
-        * accept mixed-version output, e.g. when a version bump is known not
-        * to change extraction bytes. */
-      acceptStaleVersions: Boolean = false)
+      settings: ExtractSettings = ExtractSettings())
 
   /** `pagesProcessed` is the sum of this run's lineage `rows_out`: the rows
     * the extraction stage emitted into the committed write, each counted
@@ -70,8 +66,11 @@ object ExtractJob {
   def bucketOf(urlCol: org.apache.spark.sql.Column, buckets: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(urlCol), lit(buckets.toLong)).cast("int")
 
-  /** Pure per-page extraction — the unit the fused stage applies. */
+  /** Pure per-page extraction — the unit the fused stage applies. A page the
+    * extractor throws on (a null `html` among them) yields one `error:*`
+    * row; a null `html` counts as 0 bytes. */
   def extractPage(p: Page, bucket: Int, cfg: Config): ExtractedPage = {
+    val htmlBytes = if (p.html == null) 0L else p.html.length.toLong
     try {
       val ex = HtmlExtractor.extractBytes(p.html, cfg.settings)
       ExtractedPage(
@@ -85,11 +84,11 @@ object ExtractJob {
         spans = Convert.spans(ex),
         citation = ex.citation,
         status = ex.status,
-        html_bytes = p.html.length.toLong)
+        html_bytes = htmlBytes)
     } catch {
       case e: Exception =>
         ExtractedPage(p.url, bucket, p.lang, "", 0, 0, "", Seq.empty, None,
-          s"error:${e.getClass.getSimpleName}", p.html.length.toLong)
+          s"error:${e.getClass.getSimpleName}", htmlBytes)
     }
   }
 
@@ -190,37 +189,29 @@ object ExtractJob {
     * records, independent of corpus size.
     *
     * Resume is extractor-version-aware: a bucket is skipped only when its
-    * lineage row carries the CURRENT [[ExtractorVersion]] (this is what the
-    * version column in the lineage schema is for — `BASELINE.json`'s
-    * `(partition id, url range, rows, bytes, extractor version)`). After an
-    * extractor upgrade, a resume run re-extracts exactly the stale buckets,
-    * converging the corpus to one version; `cfg.acceptStaleVersions` opts
-    * out when mixed versions are acceptable.
+    * `_lineage/bucket=N` row carries the CURRENT [[ExtractorVersion]] (this
+    * is what the version column in the lineage schema is for —
+    * `BASELINE.json`'s `(partition id, url range, rows, bytes, extractor
+    * version)`). After an extractor upgrade, a resume run re-extracts
+    * exactly the stale buckets, converging the corpus to one version, so a
+    * resumed corpus has the bytes of a fresh run. The lineage table is
+    * listed once first (see [[dropFlatLineage]]): root-level files of the
+    * 0.1.0 flat layout are deleted, and a table with no `bucket=N` dir
+    * counts as absent.
     */
   def run(spark: SparkSession, pagesDs: Dataset[Page], outDir: String, cfg: Config = Config()): RunStats = {
     import spark.implicits._
     val lineagePath = s"$outDir/_lineage"
     val outputPath = s"$outDir/extracted"
 
-    // Heal any layout work a killed run left behind, resume or not: an
-    // interrupted atomic swap is rolled forward/back first, then a
-    // pre-O(pending) FLAT layout is migrated — also on --no-resume runs,
-    // where this run's partitioned lineage write would otherwise land NEXT
-    // TO the old root-level files (a mixed layout partition discovery
-    // rejects for every later reader).
-    recoverInterruptedMigration(spark, lineagePath)
-    if (pathExists(spark, lineagePath)) migrateFlatLineage(spark, lineagePath)
-
     // A lineage row marks a bucket skippable only if its extractor version
-    // is current (or the caller opted into mixed versions) — a stale row's
-    // bucket is re-extracted and its lineage dynamically overwritten.
+    // is current — a stale row's bucket is re-extracted and its lineage
+    // dynamically overwritten.
+    val hasLineage = dropFlatLineage(spark, lineagePath)
     val lineageOld: Option[DataFrame] =
-      if (cfg.resume && pathExists(spark, lineagePath)) {
-        val all = spark.read.parquet(lineagePath)
-        Some(
-          if (cfg.acceptStaleVersions) all
-          else all.filter(col("extractor_version") === lit(ExtractorVersion)))
-      } else None
+      if (cfg.resume && hasLineage)
+        Some(spark.read.parquet(lineagePath).filter(col("extractor_version") === lit(ExtractorVersion)))
+      else None
     val completed: Set[Int] = lineageOld match {
       case Some(df) => df.select(col("bucket").cast("int")).as[Int].collect().toSet
       case None => Set.empty
@@ -279,124 +270,26 @@ object ExtractJob {
     RunStats(pagesWritten, completed.size, cfg.buckets)
   }
 
-  /** One-time upgrade of a lineage table written by the pre-O(pending)
-    * code, which stored it FLAT (whole-table overwrite, `bucket` as a data
-    * column at the directory root). Writing this run's partitioned
-    * carry-over next to those root-level files would leave a mixed layout
-    * Spark's partition discovery rejects — so if root-level data files
-    * exist, rewrite the table partitioned by bucket (O(buckets) rows) into
-    * a sibling temp dir and swap it in. If bucket=N dirs ALSO already exist
-    * (a run of the new code against an unmigrated dir), the partitioned
-    * rows are the newer write and win per bucket. Both sides pass the typed
-    * [[LineageRow]] gate in [[asLineageRows]].
-    *
-    * The swap is crash-safe: write `<p>.migrating` fully, rename the
-    * original aside to `<p>.premigrate`, rename the new table into place,
-    * then drop the original — at every kill point either the original or
-    * the complete migrated table is recoverable, and
-    * [[recoverInterruptedMigration]] (run unconditionally first) rolls the
-    * swap forward or back. A delete-before-rename would instead leave a
-    * WINDOW with no lineage dir at all, which a concurrent crash turns
-    * into a silent full-corpus re-extract on the next run.
+  /** Lists the lineage table once, on resume and `--no-resume` runs alike.
+    * Root-level parquet files are the flat layout only `graft-extract-0.1.0`
+    * wrote: every row in them is stale, so they are deleted rather than read
+    * (left in place, they would sit next to this run's `bucket=N` dirs, a
+    * mixed layout partition discovery rejects). A kill mid-delete leaves
+    * files the next run deletes. Returns whether a `bucket=N` dir exists: a
+    * table without one (absent, emptied, or holding only the
+    * `.spark-staging-*` dir of a lineage write killed before its commit)
+    * counts as absent.
     */
-  private def migrateFlatLineage(spark: SparkSession, lineagePath: String): Unit = {
+  private def dropFlatLineage(spark: SparkSession, lineagePath: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(lineagePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return false
     val entries = fs.listStatus(p)
-    val rootFiles = entries.filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    if (rootFiles.isEmpty) return
-    val partDirs = entries.filter(st => st.isDirectory && st.getPath.getName.startsWith("bucket="))
-    val flat = asLineageRows(spark.read.option("mergeSchema", "true")
-      .parquet(rootFiles.map(_.getPath.toString).toIndexedSeq: _*))
-    val merged =
-      if (partDirs.isEmpty) flat
-      else {
-        val parted = asLineageRows(spark.read.option("basePath", lineagePath).option("mergeSchema", "true")
-          .parquet(partDirs.map(_.getPath.toString).toIndexedSeq: _*))
-        flat.join(parted.select("bucket").distinct(), Seq("bucket"), "left_anti")
-          .unionByName(parted.toDF())
-      }
-    val tmp = new org.apache.hadoop.fs.Path(lineagePath + MigratingSuffix)
-    val old = new org.apache.hadoop.fs.Path(lineagePath + PremigrateSuffix)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(tmp.toString)
-    // Completeness marker for [[recoverInterruptedMigration]], written by
-    // hand: whether the committer leaves a root _SUCCESS depends on session
-    // conf (dynamic partitionOverwriteMode suppresses it), and a missing
-    // marker silently downgrades every interrupted swap to a roll-back +
-    // re-migration. Only reached when the write above returned, so the
-    // marker truthfully means "tmp is the complete table".
-    fs.createNewFile(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"lineage migration rename failed: $p -> $old")
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"lineage migration rename failed: $tmp -> $p")
-    fs.delete(old, true)
-  }
-
-  /** A lineage table's rows in the current [[LineageRow]] schema — the
-    * typed gate: a missing column other than `errors_out` fails here. Rows
-    * written before `errors_out` existed read as 0 errors; columns the
-    * schema no longer has (`urls`) are dropped. */
-  private def asLineageRows(df: DataFrame): Dataset[LineageRow] = {
-    val encoder = Encoders.product[LineageRow]
-    val withErrors =
-      if (df.columns.contains("errors_out")) df.withColumn("errors_out", coalesce(col("errors_out"), lit(0L)))
-      else df.withColumn("errors_out", lit(0L))
-    withErrors.select(encoder.schema.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-      .as(encoder)
-  }
-
-  private[pipeline] val MigratingSuffix = ".migrating"
-  private[pipeline] val PremigrateSuffix = ".premigrate"
-
-  /** Roll an interrupted [[migrateFlatLineage]] swap forward or back. Cheap
-    * no-op (two existence checks) unless a kill hit the swap window.
-    *
-    * Kill-point inventory, given the swap order (write tmp → rename p→old
-    * → rename tmp→p → delete old):
-    *  - during the tmp write: p untouched → drop the partial tmp; the
-    *    migration simply reruns;
-    *  - between the renames: p missing but tmp is the COMPLETE migrated
-    *    table (the p→old rename only runs after the tmp write returned) →
-    *    roll forward: tmp→p, drop old;
-    *  - after the second rename: p is authoritative → drop the leftovers;
-    *  - defensively, if p is missing and tmp is absent/incomplete but the
-    *    original survives at old → roll back: old→p.
-    */
-  private[pipeline] def recoverInterruptedMigration(spark: SparkSession, lineagePath: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(lineagePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(lineagePath + MigratingSuffix)
-    val old = new org.apache.hadoop.fs.Path(lineagePath + PremigrateSuffix)
-    val haveTmp = fs.exists(tmp)
-    val haveOld = fs.exists(old)
-    if (!haveTmp && !haveOld) return
-    if (fs.exists(p)) {
-      // p is authoritative: either the swap never started destructive work
-      // (partial tmp) or it fully completed (old not yet deleted)
-      if (haveTmp) fs.delete(tmp, true)
-      if (haveOld) fs.delete(old, true)
-    } else if (haveTmp && fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"lineage migration roll-forward failed: $tmp -> $p")
-      if (haveOld) fs.delete(old, true)
-    } else if (haveOld) {
-      if (haveTmp) fs.delete(tmp, true)
-      if (!fs.rename(old, p))
-        throw new java.io.IOException(s"lineage migration roll-back failed: $old -> $p")
-    } else {
-      fs.delete(tmp, true) // incomplete tmp and no original to restore
-      ()
-    }
+    entries.filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .foreach(st => fs.delete(st.getPath, false))
+    entries.exists(st => st.isDirectory && st.getPath.getName.startsWith("bucket="))
   }
 
   def readOutput(spark: SparkSession, outDir: String): DataFrame =
     spark.read.parquet(s"$outDir/extracted")
-
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p)
-  }
 }

@@ -9,16 +9,17 @@ class ExtractMainSpec extends AnyFunSuite {
   test("arg parsing: flags, defaults, unknowns") {
     val a = ExtractMain.parse(List(
       "--input", "/data/pages", "--out", "/data/run", "--buckets", "512",
-      "--no-resume", "--accept-stale-versions"))
+      "--no-resume"))
     assert(a.input.contains("/data/pages"))
     assert(a.out.contains("/data/run"))
     assert(a.buckets == 512)
     assert(!a.resume)
-    assert(a.acceptStaleVersions)
     val d = ExtractMain.parse(List("--out", "/x", "--synthetic", "/root/testdata/sf0.001:3"))
-    assert(d.buckets == 4096 && d.resume && !d.acceptStaleVersions)
+    assert(d.buckets == 4096 && d.resume)
     assert(d.synthetic.contains("/root/testdata/sf0.001:3"))
     assertThrows[IllegalArgumentException](ExtractMain.parse(List("--bogus")))
+    // resume has one policy: stale buckets are always re-extracted
+    assertThrows[IllegalArgumentException](ExtractMain.parse(List("--out", "/x", "--accept-stale-versions")))
   }
 
   test("arg parsing: --buckets rejects non-positive and non-numeric values") {

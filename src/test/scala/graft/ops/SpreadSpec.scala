@@ -26,17 +26,12 @@ class SpreadSpec extends AnyFunSuite {
     assert(!p.contains("REPARTITION_BY_COL"), p)
   }
 
-  test("spread is a no-op when the size threshold is zero") {
-    val prev = spark.conf.getOption("spark.graft.spreadMaxBytesPerCore")
-    spark.conf.set("spark.graft.spreadMaxBytesPerCore", "0")
-    try {
-      val p = Spread.spread(docs.select(col("doc_id"), col("text")))
-        .queryExecution.executedPlan.toString
-      assert(!p.contains("REPARTITION_BY_COL"), p)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.spreadMaxBytesPerCore", v)
-      case None => spark.conf.unset("spark.graft.spreadMaxBytesPerCore")
-    }
+  test("spread is a no-op when the scan estimate exceeds 8 MB per core") {
+    def spreads(rows: Long): Boolean = Spread.spread(spark.range(rows)
+      .select(col("id").as("doc_id"), col("id").cast("string").as("text")))
+      .queryExecution.executedPlan.toString.contains("REPARTITION_BY_COL")
+    assert(spreads(1000L), "a small range is spread")
+    assert(!spreads(1L << 40), "an 8 TB range estimate is not")
   }
 
   test("spread allows narrow generators over scans (the replicated-corpus shape)") {

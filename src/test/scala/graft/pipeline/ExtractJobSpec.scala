@@ -123,19 +123,13 @@ class ExtractJobSpec extends AnyFunSuite {
       df.write.parquet(path)
     }
     // age bucket 3: stamp its lineage with an older extractor version and
-    // tamper its output so re-extraction (or the lack of it) is observable
+    // tamper its output so re-extraction is observable
     rewriteDir(s"$dir/_lineage/bucket=3")(
       _.withColumn("extractor_version", lit("graft-extract-0.0.0")))
     rewriteDir(s"$dir/extracted/bucket=3")(
       _.withColumn("main_text", lit("TAMPERED")))
 
-    // opt-out accepts the stale bucket: nothing re-extracted, tamper survives
-    val accepted = ExtractJob.run(spark, pages, dir, cfg.copy(acceptStaleVersions = true))
-    assert(accepted.bucketsSkipped == 8)
-    assert(accepted.pagesProcessed == 0)
-    assert(ExtractJob.readOutput(spark, dir).filter(col("main_text") === "TAMPERED").count() > 0)
-
-    // default re-extracts exactly the stale bucket and converges the version
+    // resume re-extracts exactly the stale bucket and converges the version
     val expectedPending = pages.withColumn("bucket", ExtractJob.bucketOf(col("url"), 8))
       .filter(col("bucket") === 3).count()
     val resumed = ExtractJob.run(spark, pages, dir, cfg)
@@ -151,43 +145,21 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(resumedOut.sameElements(fullOut), "stale bucket re-extracted to current-version bytes")
   }
 
-  test("resume migrates a pre-O(pending) FLAT lineage layout before writing partitioned") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-extract-migrate").toString
+  test("resume over a 0.1.0 FLAT lineage table re-extracts every bucket and leaves only bucket=N dirs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-extract-flat").toString
     val cfg = ExtractJob.Config(buckets = 8)
     val pages = SyntheticPages.pages(spark, sfDir)
     ExtractJob.run(spark, pages, dir, cfg)
-    val fullOut = ExtractJob.readOutput(spark, dir)
-      .select("url", "main_text").collect()
-      .map(r => (r.getString(0), r.getString(1))).sortBy(_._1)
+    val fresh = committedRows(dir)
 
-    // rewrite the lineage in the OLD layout (whole-table overwrite, bucket
-    // as a data column at the root), minus bucket 7 (killed mid-run), and
-    // drop bucket 7's output — the exact on-disk state an upgraded binary
-    // inherits from a pre-round-6 run
-    val flat = spark.read.parquet(s"$dir/_lineage")
-      .withColumn("bucket", col("bucket").cast("int"))
-      .filter(col("bucket") =!= 7)
-      .localCheckpoint() // sever from the files about to be deleted
-    rmrf(new java.io.File(s"$dir/_lineage"))
-    flat.write.parquet(s"$dir/_lineage")
+    // the on-disk state a 0.1.0 run killed before bucket 7 committed leaves
+    writeV010FlatLineage(dir, col("bucket") =!= 7)
     rmrf(new java.io.File(s"$dir/extracted/bucket=7"))
 
     val resumed = ExtractJob.run(spark, pages, dir, cfg)
-    assert(resumed.bucketsSkipped == 7)
-
-    // the mixed flat+partitioned layout never forms: after the run the
-    // lineage dir is purely partitioned and loads cleanly
-    val rootNames = new java.io.File(s"$dir/_lineage").listFiles().map(_.getName)
-    assert(rootNames.count(_.startsWith("bucket=")) == 8)
-    assert(!rootNames.exists(_.endsWith(".parquet")), s"flat files remain: ${rootNames.mkString(",")}")
-    val lineage = spark.read.parquet(s"$dir/_lineage")
-    assert(lineage.count() == 8)
-
-    val resumedOut = ExtractJob.readOutput(spark, dir)
-      .select("url", "main_text").collect()
-      .map(r => (r.getString(0), r.getString(1))).sortBy(_._1)
-    assert(resumedOut.sameElements(fullOut), "output identical after migration + resume")
+    assert(resumed.bucketsSkipped == 0 && resumed.pagesProcessed == 500, "every 0.1.0 bucket is stale")
+    assert(committedRows(dir) == fresh)
+    assertLineageCurrent(dir)
   }
 
   test("resume is O(pending): completed-bucket output and lineage are never read or rewritten") {
@@ -222,12 +194,10 @@ class ExtractJobSpec extends AnyFunSuite {
     // ... except the lineage BUCKET IDS, which resume legitimately reads to
     // know what is complete. Partition ids live in dir names, but the row
     // payload comes from the files — so restore minimal valid lineage rows
-    // for 0-5 (fresh content, marker urls) to prove they are carried over
+    // for 0-5 (current version, marker urls) to prove they are carried over
     // verbatim, not recomputed from output.
     val marker = (0 to 5).map(b =>
-      (0L, 0L, 0L, 0L, s"marker-$b", s"marker-$b", "carried-over", b))
-      .toDF("urls", "rows_out", "tables_out", "html_bytes", "url_min",
-        "url_max", "extractor_version", "bucket")
+      LineageRow(b, 0L, 0L, 0L, 0L, s"marker-$b", s"marker-$b", ExtractJob.ExtractorVersion)).toDS()
     for (b <- 0 to 5) {
       val p = new java.io.File(s"$dir/_lineage/bucket=$b")
       p.listFiles().foreach(_.delete())
@@ -236,20 +206,17 @@ class ExtractJobSpec extends AnyFunSuite {
       // spark writes _SUCCESS inside the partition dir here; harmless
     }
 
-    // acceptStaleVersions: the marker rows carry a fake version on purpose,
-    // and this test is about resume COST, not the version policy (which has
-    // its own test above)
-    val resumed = ExtractJob.run(spark, pages, dir, cfg.copy(acceptStaleVersions = true))
+    val resumed = ExtractJob.run(spark, pages, dir, cfg)
     assert(resumed.bucketsSkipped == 6)
 
     // completed buckets' lineage rows survived untouched (carried over by
     // dynamic partition overwrite, not recomputed); pending rows are fresh
     val after = spark.read.parquet(s"$dir/_lineage")
     val byBucket = after.collect().map(r =>
-      r.getAs[Int]("bucket") -> r.getAs[String]("extractor_version")).toMap
+      r.getAs[Int]("bucket") -> r.getAs[String]("url_min")).toMap
     assert(byBucket.size == 8)
-    for (b <- 0 to 5) assert(byBucket(b) == "carried-over", s"lineage bucket $b was rewritten")
-    for (b <- 6 to 7) assert(byBucket(b) == ExtractJob.ExtractorVersion, s"lineage bucket $b not fresh")
+    for (b <- 0 to 5) assert(byBucket(b) == s"marker-$b", s"lineage bucket $b was rewritten")
+    for (b <- 6 to 7) assert(!byBucket(b).startsWith("marker-"), s"lineage bucket $b not fresh")
 
     // the pending buckets' output is genuinely re-extracted and readable
     val pendingOut = spark.read
@@ -260,107 +227,42 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(pendingOut.count() == expectedPending)
   }
 
-  test("interrupted migration: complete .migrating table rolls FORWARD") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-migrate-fwd").toString
+  test("--no-resume run drops a 0.1.0 FLAT lineage table (no mixed layout forms)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-flat-noresume").toString
     val cfg = ExtractJob.Config(buckets = 8)
     val pages = SyntheticPages.pages(spark, sfDir)
     ExtractJob.run(spark, pages, dir, cfg)
+    val fresh = committedRows(dir)
+    writeV010FlatLineage(dir, lit(true))
 
-    // simulate a kill between the two swap renames: the old FLAT original
-    // is parked at .premigrate (plant a marker version in it so we can tell
-    // which table won) and the COMPLETE migrated table — written the way
-    // migrateFlatLineage writes it, static overwrite + explicit _SUCCESS
-    // marker — sits at .migrating
-    val lineage = new java.io.File(s"$dir/_lineage")
-    val parked = new java.io.File(s"$dir/_lineage${ExtractJob.PremigrateSuffix}")
-    val tmp = new java.io.File(s"$dir/_lineage${ExtractJob.MigratingSuffix}")
-    val real = spark.read.parquet(lineage.toString)
-      .withColumn("bucket", col("bucket").cast("int")).localCheckpoint()
-    rmrf(lineage)
-    real.withColumn("extractor_version", lit("loser-version"))
-      .write.parquet(parked.toString) // flat, as the pre-migration layout was
-    real.write.partitionBy("bucket").parquet(tmp.toString)
-    assert(new java.io.File(tmp, "_SUCCESS").exists(),
-      "test setup must mirror the migration's completeness marker")
-
-    ExtractJob.recoverInterruptedMigration(spark, s"$dir/_lineage")
-    assert(lineage.exists() && !parked.exists() && !tmp.exists())
-    val versions = spark.read.parquet(s"$dir/_lineage")
-      .select("extractor_version").distinct().collect().map(_.getString(0)).toSeq
-    assert(versions == Seq(ExtractJob.ExtractorVersion), "migrated table won, not the parked original")
-
-    // and a subsequent resume run sees a healthy, fully-completed corpus
-    val resumed = ExtractJob.run(spark, pages, dir, cfg)
-    assert(resumed.bucketsSkipped == 8 && resumed.pagesProcessed == 0)
-  }
-
-  test("interrupted migration: incomplete .migrating table rolls BACK to the original") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-migrate-back").toString
-    val cfg = ExtractJob.Config(buckets = 8)
-    val pages = SyntheticPages.pages(spark, sfDir)
-    ExtractJob.run(spark, pages, dir, cfg)
-
-    // simulate a kill DURING the tmp write of a swap whose p→old rename
-    // somehow preceded completion (the defensive branch): original parked
-    // at .premigrate, .migrating exists but has no _SUCCESS
-    val lineage = new java.io.File(s"$dir/_lineage")
-    val parked = new java.io.File(s"$dir/_lineage${ExtractJob.PremigrateSuffix}")
-    val tmp = new java.io.File(s"$dir/_lineage${ExtractJob.MigratingSuffix}")
-    assert(lineage.renameTo(parked))
-    tmp.mkdirs()
-    java.nio.file.Files.write(new java.io.File(tmp, "part-garbage.parquet").toPath,
-      "partial write".getBytes("UTF-8"))
-
-    ExtractJob.recoverInterruptedMigration(spark, s"$dir/_lineage")
-    assert(lineage.exists() && !parked.exists() && !tmp.exists())
-    val resumed = ExtractJob.run(spark, pages, dir, cfg)
-    assert(resumed.bucketsSkipped == 8 && resumed.pagesProcessed == 0)
-  }
-
-  test("interrupted migration: leftovers next to an authoritative table are dropped") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-migrate-noop").toString
-    val cfg = ExtractJob.Config(buckets = 8)
-    val pages = SyntheticPages.pages(spark, sfDir)
-    ExtractJob.run(spark, pages, dir, cfg)
-
-    // a kill after the second rename but before the old copy was deleted:
-    // the real table is in place, both suffix dirs linger
-    val parked = new java.io.File(s"$dir/_lineage${ExtractJob.PremigrateSuffix}")
-    val tmp = new java.io.File(s"$dir/_lineage${ExtractJob.MigratingSuffix}")
-    parked.mkdirs(); tmp.mkdirs()
-    java.nio.file.Files.write(new java.io.File(parked, "old.parquet").toPath, Array[Byte](1))
-    java.nio.file.Files.write(new java.io.File(tmp, "new.parquet").toPath, Array[Byte](2))
-
-    val resumed = ExtractJob.run(spark, pages, dir, cfg) // recovery runs first
-    assert(!parked.exists() && !tmp.exists())
-    assert(resumed.bucketsSkipped == 8 && resumed.pagesProcessed == 0)
-  }
-
-  test("--no-resume run still migrates a FLAT lineage layout (no mixed layout forms)") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-migrate-noresume").toString
-    val cfg = ExtractJob.Config(buckets = 8)
-    val pages = SyntheticPages.pages(spark, sfDir)
-    ExtractJob.run(spark, pages, dir, cfg)
-
-    // rewrite the lineage in the OLD flat layout (bucket as a data column,
-    // files at the table root)
-    val flat = spark.read.parquet(s"$dir/_lineage")
-      .withColumn("bucket", col("bucket").cast("int"))
-      .localCheckpoint()
-    rmrf(new java.io.File(s"$dir/_lineage"))
-    flat.write.parquet(s"$dir/_lineage")
-
-    // a no-resume run ignores the lineage for SKIPPING but must still
-    // migrate the layout, or its partitioned write lands next to the old
-    // root-level files and every later reader rejects the mixed layout
+    // a no-resume run ignores the lineage for SKIPPING but must still drop
+    // the root-level files, or its partitioned write lands next to them and
+    // every later reader rejects the mixed layout
     val rerun = ExtractJob.run(spark, pages, dir, cfg.copy(resume = false))
     assert(rerun.pagesProcessed == 500 && rerun.bucketsSkipped == 0)
-    val rootNames = new java.io.File(s"$dir/_lineage").listFiles().map(_.getName)
-    assert(rootNames.count(_.startsWith("bucket=")) == 8)
-    assert(!rootNames.exists(_.endsWith(".parquet")), s"flat files remain: ${rootNames.mkString(",")}")
-    assert(spark.read.parquet(s"$dir/_lineage").count() == 8)
+    assert(committedRows(dir) == fresh)
+    assertLineageCurrent(dir)
+  }
+
+  test("resume after a kill during the first lineage write: a _lineage holding only .spark-staging counts as absent") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-lineage-staging").toString
+    val cfg = ExtractJob.Config(buckets = 8)
+    val pages = SyntheticPages.pages(spark, sfDir)
+    ExtractJob.run(spark, pages, dir, cfg)
+    val fresh = committedRows(dir)
+
+    // dynamic partition overwrite stages the lineage write under
+    // `_lineage/.spark-staging-<job>/`: a kill before its commit leaves that
+    // dir and no visible file
+    val lineage = new java.io.File(s"$dir/_lineage")
+    val staging = new java.io.File(lineage, ".spark-staging-x")
+    assert(staging.mkdir() && new java.io.File(lineage, "bucket=1").renameTo(new java.io.File(staging, "bucket=1")))
+    lineage.listFiles().filter(_.getName != staging.getName).foreach(rmrf)
+
+    val resumed = ExtractJob.run(spark, pages, dir, cfg)
+    assert(resumed.bucketsSkipped == 0 && resumed.pagesProcessed == 500)
+    assert(committedRows(dir) == fresh)
+    assertLineageCurrent(dir)
   }
 
   test("lineage stamps only buckets WRITTEN this run: a leftover output dir absent from the input is neither scanned nor re-stamped") {
@@ -432,20 +334,28 @@ class ExtractJobSpec extends AnyFunSuite {
     for (b <- 0 to 5) assert(errorsByBucket(b).isEmpty, s"carried bucket $b rewritten")
     assert(ReadBackLineage.written(spark, parted, Set(6, 7)) == ReadBackLineage.rows(spark, parted, Set(6, 7)))
 
-    // flat layout, bucket 7 killed: migration reads a missing errors_out as 0
+    // the 0.1.0 flat layout (the only code that wrote it was 0.1.0): every
+    // bucket is stale, re-extracted and stamped in the current schema
     val flat = java.nio.file.Files.createTempDirectory("graft-older-flat").toString
     ExtractJob.run(spark, pages, flat, cfg)
-    val oldFlat = olderSchema(flat)
-    rmrf(new java.io.File(s"$flat/_lineage"))
-    oldFlat.filter(col("bucket") =!= 7).write.parquet(s"$flat/_lineage")
+    writeV010FlatLineage(flat, col("bucket") =!= 7)
     rmrf(new java.io.File(s"$flat/extracted/bucket=7"))
-    assert(ExtractJob.run(spark, pages, flat, cfg).bucketsSkipped == 7)
+    assert(ExtractJob.run(spark, pages, flat, cfg).bucketsSkipped == 0)
     assert(committedRows(flat) == expected)
-    val migrated = ReadBackLineage.written(spark, flat, (0 until 8).toSet)
-    assert(migrated.map(_.bucket) == (0 until 8))
-    assert(migrated.forall(_.errors_out == 0L))
-    assert(migrated == ReadBackLineage.rows(spark, flat, (0 until 8).toSet))
-    assert(!spark.read.parquet(s"$flat/_lineage").columns.contains("urls"), "migrated rows pass the typed gate")
+    assertLineageCurrent(flat)
+    assert(ReadBackLineage.written(spark, flat, (0 until 8).toSet) == ReadBackLineage.rows(spark, flat, (0 until 8).toSet))
+    assert(!spark.read.parquet(s"$flat/_lineage").columns.contains("urls"), "no 0.1.0 row is read or kept")
+  }
+
+  test("a page with null html yields one error row: html_bytes 0, lineage errors_out 1") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-null-html").toString
+    val pages = Seq(Page("https://hostile.example.org/null-html", new java.sql.Timestamp(0L), null, "", "en")).toDS()
+    assert(ExtractJob.run(spark, pages, dir, ExtractJob.Config(buckets = 2)).pagesProcessed == 1)
+    val rows = committedRows(dir)
+    assert(rows.length == 1)
+    assert(rows.head.status.startsWith("error:") && rows.head.html_bytes == 0L, rows.head.status)
+    assert(spark.read.parquet(s"$dir/_lineage").select("errors_out").as[Long].collect().toSeq == Seq(1L))
   }
 
   test("a colspan of 2,000,000,000 is clamped: the page yields one ok row") {
@@ -480,6 +390,30 @@ class ExtractJobSpec extends AnyFunSuite {
   private def committedRows(dir: String): Seq[ExtractedPage] = {
     import spark.implicits._
     ExtractJob.readOutput(spark, dir).as[ExtractedPage].collect().sortBy(_.url).toSeq
+  }
+
+  /** Rewrites `dir`'s lineage as the only code that wrote the flat layout
+    * (`graft-extract-0.1.0`) did: one whole-table overwrite with `bucket` a
+    * data column at the root, `urls` and no `errors_out`. */
+  private def writeV010FlatLineage(dir: String, keep: org.apache.spark.sql.Column): Unit = {
+    val flat = spark.read.parquet(s"$dir/_lineage")
+      .select(col("bucket").cast("int").as("bucket"), col("rows_out").as("urls"), col("rows_out"),
+        col("tables_out"), col("html_bytes"), col("url_min"), col("url_max"),
+        lit("graft-extract-0.1.0").as("extractor_version"))
+      .filter(keep)
+      .localCheckpoint() // sever from the files about to be deleted
+    rmrf(new java.io.File(s"$dir/_lineage"))
+    flat.write.parquet(s"$dir/_lineage")
+  }
+
+  /** `dir`'s lineage holds only `bucket=0`..`bucket=7` dirs (besides hidden
+    * and `_` files), every row at the current version. */
+  private def assertLineageCurrent(dir: String): Unit = {
+    val names = new java.io.File(s"$dir/_lineage").listFiles().map(_.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted.toSeq
+    assert(names == (0 until 8).map(b => s"bucket=$b"), names.mkString(","))
+    assert(spark.read.parquet(s"$dir/_lineage").select("extractor_version").distinct().collect()
+      .map(_.getString(0)).toSeq == Seq(ExtractJob.ExtractorVersion))
   }
 
   test("page columns are read by name: reordered or extra input columns give the canonical rows (extract and run, fresh and resume)") {
