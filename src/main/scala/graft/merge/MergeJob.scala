@@ -56,7 +56,9 @@ final case class MergedFlatRow(
     n_sources: Int)
 
 /** Serializable merge configuration (the Spark-shippable form of
-  * MergePipeline.Settings — transformer instances are rebuilt per task).
+  * MergePipeline.Settings, whose stage instances are not serializable and
+  * are built per document group by `toSettings`). Defaults are the
+  * tablemerge CLI defaults.
   */
 final case class MergeConfig(
     filterTitleRows: Boolean = true,
@@ -84,32 +86,58 @@ final case class MergeConfig(
     dropEmptyColumns: Boolean = true,
     dropEmptyTables: Boolean = true) {
 
-  def toSettings: MergePipeline.Settings =
-    MergePipeline.Settings.assemble(
-      fixReversedColumnValues = fixReversedColumnValues,
-      filterTitleRows = filterTitleRows,
-      stripLeadingRowNumbers = stripLeadingRowNumbers,
-      normalizePunctuation = normalizePunctuation,
-      splitConjunctionColumns = splitConjunctionColumns,
-      semanticLanguage = semanticLanguage,
-      hints = hints,
-      hintsMode = hintsMode,
-      aliases = aliases,
-      useColumnNameSemantic = useColumnNameSemantic,
-      useJaccard = useJaccard,
-      useColumnValueSemantic = useColumnValueSemantic,
-      threshold = threshold,
-      schema = schemaStr.map(ColumnSchema.parse),
-      removeHeaderRows = removeHeaderRows,
-      transformTablesFile = transformTablesFile,
+  /** The pipeline stage this configuration selects, assembled like the
+    * reference CLI (__main__.py:113-143,675-688). A `transformTablesFile` or
+    * `hintsMode` value the pipeline does not recognise throws
+    * IllegalArgumentException naming the field and its accepted values.
+    */
+  def toSettings: MergePipeline.Settings = {
+    val tablesFile = transformTablesFile match {
+      case None => NullTablesFileTransformer
+      case Some("explode") => FragmentsExploder
+      case Some("compact-safe") => SafeConsecutiveFragmentsCompactor
+      case Some("compact-unsafe") => UnsafeConsecutiveFragmentsCompactor
+      case Some(other) => throw new IllegalArgumentException(
+        s"transformTablesFile: '$other' is not one of explode|compact-safe|compact-unsafe")
+    }
+    val safeHints = hintsMode match {
+      case None | Some("safe") => true
+      case Some("unsafe") => false
+      case Some(other) => throw new IllegalArgumentException(
+        s"hintsMode: '$other' is not one of safe|unsafe")
+    }
+    val schema = schemaStr.map(ColumnSchema.parse)
+
+    val pre = List.newBuilder[FragmentTransformer]
+    if (fixReversedColumnValues) pre += new FragmentValuesReverser(semanticLanguage)
+    if (filterTitleRows) pre += FilterTitleRowsTransformer
+    if (stripLeadingRowNumbers) pre += LeadingRowNumberTransformer
+    if (normalizePunctuation) pre += NormalizePunctuationTransformer
+    if (splitConjunctionColumns) pre += new SplitColumnTransformer(semanticLanguage)
+    pre += FilterEmptyRowsTransformer
+
+    val load = List.newBuilder[LoadTimeAnalyzer]
+    if (hintsMode.nonEmpty && hints.nonEmpty) load += new HintsLoadTimeAnalyzer(hints, safeHints)
+    if (aliases.nonEmpty) load += new AliasLoadTimeAnalyzer(aliases)
+    if (useColumnNameSemantic)
+      load += new ColumnNameSemanticLoadTimeAnalyzer(threshold, semanticLanguage, schema)
+
+    val mergeTime = List.newBuilder[MergeTimeAnalyzer]
+    if (useJaccard) mergeTime += new JaccardMergeTimeAnalyzer(threshold, schema)
+    if (useColumnValueSemantic)
+      mergeTime += new ColumnValueSemanticMergeTimeAnalyzer(threshold, semanticLanguage, schema)
+
+    MergePipeline.Settings(
+      pretransformers = pre.result(),
+      tablesFileTransformer = tablesFile,
+      loadAnalyzers = load.result(),
+      posttransformers = if (removeHeaderRows) List(new FilterHeaderRowsTransformer(hints)) else Nil,
+      mergeAnalyzers = mergeTime.result(),
       agreement = distinctReaders.map(new DistinctReadersAgreement(_)).getOrElse(SimpleCountAgreement),
-      filterSchemaColumns = filterSchemaColumns,
-      orderSchemaColumns = orderSchemaColumns,
-      coerceSchemaColumnTypes = coerceSchemaColumnTypes,
-      onlySemanticColumns = onlySemanticColumns,
-      dropEmptyColumns = dropEmptyColumns,
-      dropEmptyTables = dropEmptyTables
-    ).copy(columnAgreement = columnAgreement)
+      columnAgreement = columnAgreement,
+      postprocessors = PostProcessors.build(schema, filterSchemaColumns, orderSchemaColumns,
+        coerceSchemaColumnTypes, onlySemanticColumns, dropEmptyColumns, dropEmptyTables))
+  }
 }
 
 /** Distributed N-run merge (SURVEY.md §3.2 Spark equivalent): the ONLY wide
@@ -124,6 +152,7 @@ object MergeJob {
 
   def mergeRuns(spark: SparkSession, runs: Dataset[RunDoc], cfg: MergeConfig): Dataset[MergedDoc] = {
     import spark.implicits._
+    cfg.toSettings // a bad option value fails here, while the plan is built
     runs.groupByKey(_.doc_id).flatMapGroups { (docId: String, it: Iterator[RunDoc]) =>
       val settings = cfg.toSettings // rebuilt per group; cheap, task-local
       val sorted = it.toList.sortBy(_.run_idx)

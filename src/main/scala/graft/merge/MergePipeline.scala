@@ -12,7 +12,8 @@ object MergePipeline {
 
   /** Defaults are the tablemerge CLI defaults: --filter-title-rows on,
     * FilterEmptyRows always appended last (__main__.py:675-688),
-    * drop-empty-columns/tables postprocessors on.
+    * drop-empty-columns/tables postprocessors on. `MergeConfig.toSettings`
+    * builds one from a serializable configuration.
     */
   final case class Settings(
       pretransformers: List[FragmentTransformer] = List(FilterTitleRowsTransformer, FilterEmptyRowsTransformer),
@@ -23,76 +24,6 @@ object MergePipeline {
       agreement: Agreement = SimpleCountAgreement,
       columnAgreement: Boolean = false,
       postprocessors: List[PostProcessor] = PostProcessors.build(None))
-
-  object Settings {
-    /** Assemble like the reference CLI (__main__.py:113-143,675-688). */
-    def assemble(
-        fixReversedColumnValues: Boolean = false,
-        filterTitleRows: Boolean = true,
-        stripLeadingRowNumbers: Boolean = false,
-        normalizePunctuation: Boolean = false,
-        splitConjunctionColumns: Boolean = false,
-        semanticLanguage: String = "en",
-        hints: List[String] = Nil,
-        hintsMode: Option[String] = None, // safe | unsafe
-        aliases: Vector[(String, String)] = Vector.empty,
-        useColumnNameSemantic: Boolean = false,
-        useJaccard: Boolean = false,
-        useColumnValueSemantic: Boolean = false,
-        threshold: Double = 0.5,
-        schema: Option[ColumnSchema] = None,
-        removeHeaderRows: Boolean = false,
-        transformTablesFile: Option[String] = None, // explode | compact-safe | compact-unsafe
-        agreement: Agreement = SimpleCountAgreement,
-        filterSchemaColumns: Boolean = false,
-        orderSchemaColumns: Boolean = false,
-        coerceSchemaColumnTypes: Boolean = false,
-        onlySemanticColumns: Boolean = false,
-        dropEmptyColumns: Boolean = true,
-        dropEmptyTables: Boolean = true): Settings = {
-
-      val pre = List.newBuilder[FragmentTransformer]
-      if (fixReversedColumnValues) pre += new FragmentValuesReverser(semanticLanguage)
-      if (filterTitleRows) pre += FilterTitleRowsTransformer
-      if (stripLeadingRowNumbers) pre += LeadingRowNumberTransformer
-      if (normalizePunctuation) pre += NormalizePunctuationTransformer
-      if (splitConjunctionColumns) pre += new SplitColumnTransformer(semanticLanguage)
-      pre += FilterEmptyRowsTransformer
-
-      val load = List.newBuilder[LoadTimeAnalyzer]
-      if (hintsMode.nonEmpty && hints.nonEmpty)
-        load += new HintsLoadTimeAnalyzer(hints, safe = hintsMode.contains("safe"))
-      if (aliases.nonEmpty) load += new AliasLoadTimeAnalyzer(aliases)
-      if (useColumnNameSemantic)
-        load += new ColumnNameSemanticLoadTimeAnalyzer(threshold, semanticLanguage, schema)
-
-      val mergeA = List.newBuilder[MergeTimeAnalyzer]
-      if (useJaccard) mergeA += new JaccardMergeTimeAnalyzer(threshold, schema)
-      if (useColumnValueSemantic)
-        mergeA += new ColumnValueSemanticMergeTimeAnalyzer(threshold, semanticLanguage, schema)
-
-      val post = List.newBuilder[FragmentTransformer]
-      if (removeHeaderRows) post += new FilterHeaderRowsTransformer(hints)
-
-      val tft = transformTablesFile match {
-        case Some("explode") => FragmentsExploder
-        case Some("compact-safe") => SafeConsecutiveFragmentsCompactor
-        case Some("compact-unsafe") => UnsafeConsecutiveFragmentsCompactor
-        case _ => NullTablesFileTransformer
-      }
-
-      Settings(
-        pretransformers = pre.result(),
-        tablesFileTransformer = tft,
-        loadAnalyzers = load.result(),
-        posttransformers = post.result(),
-        mergeAnalyzers = mergeA.result(),
-        agreement = agreement,
-        postprocessors = PostProcessors.build(schema, filterSchemaColumns,
-          orderSchemaColumns, coerceSchemaColumnTypes, onlySemanticColumns,
-          dropEmptyColumns, dropEmptyTables))
-    }
-  }
 
   private def transformDoc(doc: TableDoc, transformers: List[FragmentTransformer]): TableDoc =
     if (transformers.isEmpty) doc

@@ -47,37 +47,39 @@ object MergeSettingsJson {
       case x: JObj => x
       case other => throw new IllegalArgumentException(s"bad settings $other")
     }
-    def bool(k: String, dflt: Boolean = false): Boolean =
+    // a missing key takes its value from the defaults, MergeConfig()
+    val d = MergeConfig()
+    def bool(k: String, dflt: Boolean): Boolean =
       o.get(k).collect { case JBool(v) => v }.getOrElse(dflt)
     def str(k: String): Option[String] = o.get(k).collect { case JStr(v) => v }
     MergeConfig(
-      filterTitleRows = bool("filter_title_rows", dflt = true),
-      stripLeadingRowNumbers = bool("strip_leading_row_numbers"),
-      normalizePunctuation = bool("normalize_punctuation"),
-      splitConjunctionColumns = bool("split_conjunction_columns"),
-      fixReversedColumnValues = bool("fix_reversed_column_values"),
-      semanticLanguage = str("semantic_language").getOrElse("en"),
-      hints = o.get("hints").collect { case JArr(a) => a.toList.collect { case JStr(x) => x } }.getOrElse(Nil),
-      hintsMode = str("hints_column_alignment"),
+      filterTitleRows = bool("filter_title_rows", d.filterTitleRows),
+      stripLeadingRowNumbers = bool("strip_leading_row_numbers", d.stripLeadingRowNumbers),
+      normalizePunctuation = bool("normalize_punctuation", d.normalizePunctuation),
+      splitConjunctionColumns = bool("split_conjunction_columns", d.splitConjunctionColumns),
+      fixReversedColumnValues = bool("fix_reversed_column_values", d.fixReversedColumnValues),
+      semanticLanguage = str("semantic_language").getOrElse(d.semanticLanguage),
+      hints = o.get("hints").collect { case JArr(a) => a.toList.collect { case JStr(x) => x } }.getOrElse(d.hints),
+      hintsMode = str("hints_column_alignment").orElse(d.hintsMode),
       aliases = o.get("column_aliases").collect {
         case m: JObj => m.fields.collect { case (k, JStr(v)) => (k, v) }
-      }.getOrElse(Vector.empty),
-      useColumnNameSemantic = bool("column_name_semantic_alignment"),
-      useJaccard = bool("jaccard_column_alignment"),
-      useColumnValueSemantic = bool("column_value_semantic_alignment"),
-      threshold = o.get("threshold").collect { case JNum(v) => v.toDouble }.getOrElse(0.5),
-      schemaStr = str("schema"),
-      removeHeaderRows = bool("remove_header_rows"),
-      transformTablesFile = str("transform_tablesfile"),
+      }.getOrElse(d.aliases),
+      useColumnNameSemantic = bool("column_name_semantic_alignment", d.useColumnNameSemantic),
+      useJaccard = bool("jaccard_column_alignment", d.useJaccard),
+      useColumnValueSemantic = bool("column_value_semantic_alignment", d.useColumnValueSemantic),
+      threshold = o.get("threshold").collect { case JNum(v) => v.toDouble }.getOrElse(d.threshold),
+      schemaStr = str("schema").orElse(d.schemaStr),
+      removeHeaderRows = bool("remove_header_rows", d.removeHeaderRows),
+      transformTablesFile = str("transform_tablesfile").orElse(d.transformTablesFile),
       distinctReaders = o.get("readers").collect {
         case m: JObj => m.fields.collect { case (k, JStr(v)) => (k, v) }.toMap
-      },
-      columnAgreement = bool("column_agreement"),
-      filterSchemaColumns = bool("filter_schema_columns"),
-      orderSchemaColumns = bool("order_schema_columns"),
-      coerceSchemaColumnTypes = bool("coerce_schema_column_types"),
-      onlySemanticColumns = bool("only_semantic_columns"),
-      dropEmptyColumns = bool("drop_empty_columns", dflt = true),
-      dropEmptyTables = bool("drop_empty_tables", dflt = true))
+      }.orElse(d.distinctReaders),
+      columnAgreement = bool("column_agreement", d.columnAgreement),
+      filterSchemaColumns = bool("filter_schema_columns", d.filterSchemaColumns),
+      orderSchemaColumns = bool("order_schema_columns", d.orderSchemaColumns),
+      coerceSchemaColumnTypes = bool("coerce_schema_column_types", d.coerceSchemaColumnTypes),
+      onlySemanticColumns = bool("only_semantic_columns", d.onlySemanticColumns),
+      dropEmptyColumns = bool("drop_empty_columns", d.dropEmptyColumns),
+      dropEmptyTables = bool("drop_empty_tables", d.dropEmptyTables))
   }
 }

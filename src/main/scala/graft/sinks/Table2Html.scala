@@ -8,9 +8,9 @@ import graft.core.JVal._
   * settings tables, per-paper sources, fragment tables with reserved-column
   * ordering (row_, agreement_level_, common, extra, readers_, sources_),
   * same-row_ per-column rowspan compaction (W4), agreement color classes,
-  * and the row_ palette. `HtmlReport` stays the engine's compact per-doc
-  * report; this module is the byte-level viewer contract the reference's
-  * table2html suite pins. Report sink only — never on a perf path.
+  * and the row_ palette. This is the engine's one HTML viewer, held to the
+  * byte-level contract the reference's table2html suite pins. Report sink
+  * only — never on a perf path.
   */
 object Table2Html {
 

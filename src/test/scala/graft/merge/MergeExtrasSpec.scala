@@ -3,7 +3,6 @@ package graft.merge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
 import graft.core._
-import graft.sinks.HtmlReport
 
 class MergeExtrasSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
@@ -50,32 +49,5 @@ class MergeExtrasSpec extends AnyFunSuite {
     assert(MergeSettingsJson.fromJson(json) == cfg)
     // defaults round-trip too
     assert(MergeSettingsJson.fromJson(MergeSettingsJson.toJson(MergeConfig())) == MergeConfig())
-  }
-
-  test("K5 HTML report: TOC, rowspan compaction, agreement classes") {
-    val doc = TableDoc(
-      tables = List(TableData(List(Fragment(List(
-        RowData(Vector("name" -> Cell.Str("Lantern Fox"), "status" -> Cell.Str("stable")),
-          agreementLevel = Some(2), rowIdx = Some(0)),
-        RowData(Vector("name" -> Cell.Str("Lantern Fox"), "status" -> Cell.Str("declining")),
-          agreementLevel = Some(1), rowIdx = Some(0)),
-        RowData(Vector("name" -> Cell.Str("Glass Frog"), "status" -> Cell.Str("stable")),
-          agreementLevel = Some(3), rowIdx = Some(1))
-      ), page = 4)))),
-      citation = Cell.Str("Atlas & <friends>"))
-    val html = HtmlReport.render("doc-1", doc)
-    assert(html.contains("""<a href="#table-0">Table 1</a>"""))
-    assert(html.contains("""<td rowspan="2">Lantern Fox</td>""")) // W4 compaction
-    assert(html.contains("agreement-2") && html.contains("agreement-3"))
-    assert(html.contains("Atlas &amp; &lt;friends&gt;")) // escaping
-    assert(html.contains("""data-page="4""""))
-    // the differing column is NOT compacted
-    assert(html.contains("<td>declining</td>"))
-  }
-
-  test("rowGroups splits on row_ change and null row_") {
-    def r(idx: Option[Int]) = RowData(Vector("a" -> (Cell.Str("x"): Cell)), rowIdx = idx)
-    val groups = HtmlReport.rowGroups(List(r(Some(0)), r(Some(0)), r(Some(1)), r(None), r(None)))
-    assert(groups.map(_.size) == List(2, 1, 1, 1)) // null row_ never groups
   }
 }

@@ -32,8 +32,7 @@ class MergeGoldenSpec extends AnyFunSuite {
     val readers: Map[String, String] = s.get("readers").collect {
       case o: JObj => o.fields.collect { case (k, JStr(v)) => (k, v) }.toMap
     }.getOrElse(Map.empty)
-    val schema = getStr(s, "schema").map(ColumnSchema.parse)
-    MergePipeline.Settings.assemble(
+    MergeConfig(
       filterTitleRows = getBool(s, "filter_title_rows", dflt = true),
       stripLeadingRowNumbers = getBool(s, "strip_leading_row_numbers"),
       normalizePunctuation = getBool(s, "normalize_punctuation"),
@@ -44,17 +43,17 @@ class MergeGoldenSpec extends AnyFunSuite {
       }.getOrElse(Vector.empty),
       useJaccard = getBool(s, "use_jaccard"),
       threshold = 0.5,
-      schema = schema,
+      schemaStr = getStr(s, "schema"),
       removeHeaderRows = getBool(s, "remove_header_rows"),
       transformTablesFile = getStr(s, "transform_tablesfile"),
-      agreement =
-        if (getStr(s, "agreement_method").contains("distinct-readers"))
-          new DistinctReadersAgreement(readers)
-        else SimpleCountAgreement,
+      distinctReaders =
+        if (getStr(s, "agreement_method").contains("distinct-readers")) Some(readers)
+        else None,
+      columnAgreement = getBool(s, "column_agreement"),
       filterSchemaColumns = getBool(s, "filter_columns"),
       orderSchemaColumns = getBool(s, "order_columns"),
       coerceSchemaColumnTypes = getBool(s, "coerce_types")
-    ).copy(columnAgreement = getBool(s, "column_agreement"))
+    ).toSettings
   }
 
   for (scenario <- scenarios) {

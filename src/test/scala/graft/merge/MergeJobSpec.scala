@@ -50,4 +50,13 @@ class MergeJobSpec extends AnyFunSuite {
       assert(m.n_tables == doc.tables.size)
     }
   }
+
+  test("a bad merge option value fails while the plan is built, before any job") {
+    import spark.implicits._
+    val runs = Seq(RunDoc("d1", "u1", 0, 0, """{"tables": []}""")).toDS()
+    val e = intercept[IllegalArgumentException] {
+      MergeJob.mergeRuns(spark, runs, MergeConfig(transformTablesFile = Some("safe-compact")))
+    }
+    assert(e.getMessage.contains("transformTablesFile"))
+  }
 }
