@@ -15,7 +15,10 @@ import graft.ops.{Curation, Decontaminate, DupSpans, LineDedup}
   *  3. duplicated-substring coverage gate ([[graft.ops.DupSpans]]) — docs
   *     over `--max-dup-permille` duplicated tokens dropped;
   *  4. benchmark decontamination ([[graft.ops.Decontaminate]]) when
-  *     `--benchmark` is given.
+  *     `--benchmark` is given — contaminated ids left-anti joined out.
+  *
+  * Every run builds this one chain; the flags below set thresholds inside
+  * it and never add or remove a gate.
   *
   * {{{
   * spark-submit --class graft.CurateMain graft.jar \
@@ -25,7 +28,6 @@ import graft.ops.{Curation, Decontaminate, DupSpans, LineDedup}
   *   [--gram-k 8]                   # n-gram size for span gate + decontam
   *   [--line-min-df 2]              # line df threshold for the strip
   *   [--max-dup-permille 500]       # span-coverage gate (dup_tokens/n_tokens)
-  *   [--skip-line-dedup] [--skip-span-gate]
   * }}}
   *
   * Scale shape: every gate runs on a SCALAR stream — the quality/dedup,
@@ -34,7 +36,7 @@ import graft.ops.{Curation, Decontaminate, DupSpans, LineDedup}
   * text joins the final keep set exactly once (left semi). The line strip
   * transforms text in place (its own digests shuffle, not the text), so
   * document text crosses the wire at most twice end to end regardless of
-  * how many gates are enabled. Per-stage counts in the final stats line
+  * how many gates there are. Per-stage counts in the final stats line
   * are observed as a side effect of one count of the output, which stays
   * persisted for the write (see [[run]]).
   *
@@ -43,9 +45,10 @@ import graft.ops.{Curation, Decontaminate, DupSpans, LineDedup}
   *
   * Exit code 0 and one final JSON line on stdout:
   * `{"input_docs":N,"after_line_strip":L,"kept_quality":Q,"kept_span_gate":S,"contaminated":C,"output_docs":O,"wall_sec":W}`
-  * — a skipped stage reports -1 (never conflated with a stage that ran and
-  * matched zero docs); null-text rows are dropped at intake and excluded
-  * from input_docs; rows with a null doc_id count in input_docs only.
+  * — `contaminated` is -1 when no `--benchmark` is given (never conflated
+  * with a decontamination that ran and matched zero docs); null-text rows
+  * are dropped at intake and excluded from input_docs; rows with a null
+  * doc_id count in input_docs only.
   */
 object CurateMain {
 
@@ -55,9 +58,7 @@ object CurateMain {
       benchmark: Option[String] = None,
       gramK: Int = 8,
       lineMinDf: Long = 2L,
-      maxDupPermille: Int = 500,
-      skipLineDedup: Boolean = false,
-      skipSpanGate: Boolean = false)
+      maxDupPermille: Int = 500)
 
   final case class Stats(
       inputDocs: Long,
@@ -87,8 +88,6 @@ object CurateMain {
       if (p > 1000) throw new IllegalArgumentException(
         s"--max-dup-permille is a fraction of 1000, got: $v")
       parse(rest, acc.copy(maxDupPermille = p))
-    case "--skip-line-dedup" :: rest => parse(rest, acc.copy(skipLineDedup = true))
-    case "--skip-span-gate" :: rest => parse(rest, acc.copy(skipSpanGate = true))
     case flag :: Nil if valueFlags(flag) =>
       throw new IllegalArgumentException(s"$flag requires a value")
     case other :: _ => throw new IllegalArgumentException(s"unknown arg: $other")
@@ -97,8 +96,8 @@ object CurateMain {
   /** The pipeline itself, IO-free for testability: returns the curated
     * (doc_id, text) frame plus per-stage counts. `benchmark` needs a
     * `text` column. Both modes build one plan; with `computeStats = false`
-    * the call is construction-pure — no Spark jobs, no persists, all stats
-    * -1 — so the chain can be registered as a lazily-built query (the
+    * the call is construction-pure — no Spark jobs, no persists, every
+    * stat -1 — so the chain can be registered as a lazily-built query (the
     * driver's oracle replay).
     *
     * STATS (computeStats = true): each gate count is a `Dataset.observe`
@@ -122,9 +121,9 @@ object CurateMain {
         (df.observe(o, count(lit(1)).as("n")),
           Some(() => o.get.get("n").fold(df.count())(_.asInstanceOf[Long])))
       }
-    // null text is dropped at intake (counted out of input_docs) so both
-    // the skip-line-dedup path (typed signal pass would NPE) and the strip
-    // path (posexplode drops the row silently) see the same corpus
+    // null text is dropped at intake and counted out of input_docs: the
+    // strip's posexplode would drop such a row silently, and the typed
+    // signal pass would NPE on it
     val (intake, inputN) = observed(
       docs.select(col("doc_id"), col("text")).filter(col("text").isNotNull))
     // The strip consumes `input` twice (line-digest side + rebuild join
@@ -151,37 +150,32 @@ object CurateMain {
     // collapses the consumers onto it, so the strip (and everything below
     // it, observations included) executes exactly once per action, at the
     // cost of one (doc_id, text) shuffle.
-    val (stripped, strippedN) =
-      if (args.skipLineDedup) (input, None)
-      else observed(LineDedup.stripRepeatedLines(input, args.lineMinDf)
-        .filter(col("text") =!= ""))
+    val (stripped, strippedN) = observed(
+      LineDedup.stripRepeatedLines(input, args.lineMinDf).filter(col("text") =!= ""))
     val lined = stripped.repartition(col("doc_id"))
     val (keepQuality, qualityN) = observed(Curation.curate(spark, lined).select(col("doc_id")))
-    val keepSpan =
-      if (args.skipSpanGate) None
-      else Some(observed(DupSpans.dupCoverage(spark, lined, args.gramK)
-        .filter(col("dup_tokens") * 1000 <= col("n_tokens") * args.maxDupPermille)
-        .select(col("doc_id"))))
+    val (keepSpan, spanN) = observed(DupSpans.dupCoverage(spark, lined, args.gramK)
+      .filter(col("dup_tokens") * 1000 <= col("n_tokens") * args.maxDupPermille)
+      .select(col("doc_id")))
     val dropContam = benchmark.map(b =>
       observed(Decontaminate.contaminationHits(spark, lined, b, args.gramK)
         .select(col("doc_id"))))
 
-    val keep = dropContam.foldLeft(
-      keepSpan.foldLeft(keepQuality)((k, s) => k.join(s._1, Seq("doc_id"))))(
-      (k, d) => k.join(d._1, Seq("doc_id"), "left_anti"))
+    val kept = keepQuality.join(keepSpan, Seq("doc_id"))
+    val keep = dropContam.fold(kept)(d => kept.join(d._1, Seq("doc_id"), "left_anti"))
     val out = lined.join(keep, Seq("doc_id"), "left_semi")
 
     if (!computeStats) (out, Stats(-1L, -1L, -1L, -1L, -1L, -1L))
     else {
       val cachedOut = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val outputDocs = cachedOut.count()
-      // -1 = stage skipped (vs a legitimate 0 from a stage that ran)
+      // -1 = no benchmark given (vs a legitimate 0 from a decontamination that ran)
       def n(stat: Option[() => Long]): Long = stat.fold(-1L)(_())
       (cachedOut, Stats(
         inputDocs = n(inputN),
         afterLineStrip = n(strippedN),
         keptQuality = n(qualityN),
-        keptSpanGate = n(keepSpan.flatMap(_._2)),
+        keptSpanGate = n(spanN),
         contaminated = n(dropContam.flatMap(_._2)),
         outputDocs = outputDocs))
     }

@@ -401,8 +401,10 @@ object Queries {
       val planted = concat(col("text"),
         lit(" it's v2.0 #"), col("doc_id").cast("string"),
         lit(", cost $"), (col("doc_id") % 97).cast("string"), lit(".50!"))
-      // Spread-guarded: the BPE-pattern regexp_extract_all is the CPU cost
-      graft.ops.Spread.spread(docs(s, dir).select(col("doc_id"), col("text")))
+      // no Spread guard: with one in front of the BPE-pattern
+      // regexp_extract_all, this graft.Bench leaf ran at 0.73x its
+      // unguarded speed
+      docs(s, dir).select(col("doc_id"), col("text"))
         .select(col("doc_id"),
           TextAnalysis.tokenCount(planted).as("n_tokens_ws"),
           TextAnalysis.bpeTokenCount(planted).as("n_tokens_bpe"))

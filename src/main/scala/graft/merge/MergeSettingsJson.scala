@@ -6,7 +6,8 @@ import graft.core.JVal._
 /** Settings export/import (K7 — the reference's settings.tablemerge.json
   * round-trip, src/tablemerge/settings.py:41-84): a MergeConfig serializes
   * to a stable JSON document and parses back, so a merge run's exact
-  * configuration can be persisted beside its output table.
+  * configuration can be persisted beside its output table. `fromJson`
+  * rejects a document whose option values the pipeline does not recognise.
   */
 object MergeSettingsJson {
 
@@ -52,7 +53,7 @@ object MergeSettingsJson {
     def bool(k: String, dflt: Boolean): Boolean =
       o.get(k).collect { case JBool(v) => v }.getOrElse(dflt)
     def str(k: String): Option[String] = o.get(k).collect { case JStr(v) => v }
-    MergeConfig(
+    val c = MergeConfig(
       filterTitleRows = bool("filter_title_rows", d.filterTitleRows),
       stripLeadingRowNumbers = bool("strip_leading_row_numbers", d.stripLeadingRowNumbers),
       normalizePunctuation = bool("normalize_punctuation", d.normalizePunctuation),
@@ -81,5 +82,10 @@ object MergeSettingsJson {
       onlySemanticColumns = bool("only_semantic_columns", d.onlySemanticColumns),
       dropEmptyColumns = bool("drop_empty_columns", d.dropEmptyColumns),
       dropEmptyTables = bool("drop_empty_tables", d.dropEmptyTables))
+    // building the stage rejects an unknown transform_tablesfile or
+    // hints_column_alignment value, so the accepted spellings live in
+    // toSettings alone and a bad document fails here, not at merge time
+    c.toSettings
+    c
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Md5
 
 /** End-to-end training-data curation pass — the composition the individual
   * ops exist for: quality gate → repetitiveness gate → exact dedup with a
@@ -20,9 +21,9 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  final case class Config(
-      /** keep docs with word-bigram repeat mass ≤ this (×1000 scale) */
-      maxDupBigramX1000: Long = 100)
+  /** keep docs with word-bigram repeat mass ≤ this (×1000 scale); the
+    * q_curation_pipeline oracle mirrors it as `<= 100` */
+  private val MaxDupBigramX1000 = 100L
 
   /** Per-doc curation signals, single pass. Semantics mirror the relational
     * ops exactly (oracle-checked via q_curation_pipeline):
@@ -56,10 +57,7 @@ object Curation {
         // can never drift from the standalone repetitionSignals op
         val (n, distinct, _) = TextAnalysis.bigramStats(TextKernel.lowerWords(text))
         val dupX = TextAnalysis.dupBigramX1000(n, distinct)
-        digest.reset()
-        val md5Hex = digest.digest(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          .map("%02x".format(_)).mkString
-        (id, md5Hex, nTokens, nChars, qualityOk, dupX)
+        (id, Md5.hex(digest, text), nTokens, nChars, qualityOk, dupX)
       }
     }.toDF("doc_id", "content_md5", "n_tokens", "n_chars", "quality_ok", "dup_bigram_x1000")
   }
@@ -68,9 +66,9 @@ object Curation {
     * (minimum doc_id) occurrence of each exact content hash. Returns
     * (doc_id, n_tokens, n_chars, dup_bigram_x1000) for the kept set.
     */
-  def curate(spark: SparkSession, docs: DataFrame, cfg: Config = Config()): DataFrame = {
+  def curate(spark: SparkSession, docs: DataFrame): DataFrame = {
     val survivors = signals(spark, docs)
-      .filter(col("quality_ok") && col("dup_bigram_x1000") <= cfg.maxDupBigramX1000)
+      .filter(col("quality_ok") && col("dup_bigram_x1000") <= MaxDupBigramX1000)
     // exact dedup among survivors: minimum doc_id per content hash wins,
     // as groupBy + min_by — one scan + one shuffle WITH map-side partial
     // aggregation, so a degenerate corpus where one content hash dominates

@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * of eval items vs billions of docs), so its distinct n-grams broadcast;
   * the corpus side stays narrow — tokenize → n-grams → explode happens on
   * the scan tasks — and only (doc_id, matched gram) pairs, i.e. the
-  * contaminated sliver, ever shuffle. Document text never shuffles, and
-  * the final strip is a broadcast anti-join on the contaminated-id set,
-  * so the corpus is never repartitioned.
+  * contaminated sliver, ever shuffle. Document text never shuffles. The
+  * strip itself is the consumer's left-anti join on the contaminated ids
+  * ([[graft.CurateMain]], q_span_decontam_chain).
   */
 object Decontaminate {
 
@@ -45,14 +45,4 @@ object Decontaminate {
       .join(broadcast(bench), Seq("gram"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_contaminated"))
   }
-
-  /** The corpus minus contaminated docs. The hit set is normally a sliver
-    * of the corpus → broadcast anti-join keeps the docs unshuffled; for a
-    * pathological benchmark contaminating a large corpus fraction, drop
-    * the hint and let the planner pick a shuffle join.
-    */
-  def decontaminate(spark: SparkSession, docs: DataFrame, benchmark: DataFrame, n: Int): DataFrame =
-    docs.join(
-      broadcast(contaminationHits(spark, docs, benchmark, n).select(col("doc_id"))),
-      Seq("doc_id"), "left_anti")
 }

@@ -75,11 +75,12 @@ object CsvExport {
     val bcDups = spark.sparkContext.broadcast(dupBases)
     val acc = spark.sparkContext.longAccumulator("graft.csvFiles")
     merged.foreachPartition { (it: Iterator[MergedDoc]) =>
+      val md = java.security.MessageDigest.getInstance("MD5")
       it.foreach { m =>
         val doc = TableDoc.fromJsonString(m.merged_json)
         val base0 = baseNameOf(m.doc_id)
         val base =
-          if (bcDups.value.contains(base0)) s"$base0-${md5Hex(m.doc_id).take(8)}"
+          if (bcDups.value.contains(base0)) s"$base0-${Md5.hex(md, m.doc_id).take(8)}"
           else base0
         doc.tables.indices.foreach { i =>
           val path = java.nio.file.Paths.get(outDir, s"${base}_$i.csv")
@@ -91,9 +92,4 @@ object CsvExport {
     }
     acc.value
   }
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
 }

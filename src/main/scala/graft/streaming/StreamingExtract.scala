@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
+import graft.core.Md5
 import graft.pipeline.{ExtractJob, ExtractedPage, Page}
 
 /** Structured-Streaming form of the extraction pipeline.
@@ -66,30 +67,13 @@ object StreamingExtract {
     * [[dedupStreamTtl]], which bounds state to the documents seen inside a
     * TTL window via event-time timeouts.
     */
-  /** Hot-path MD5 hex: digest reused per partition, no per-byte boxing —
-    * the keying function runs once per document of an infinite stream.
-    */
-  private def md5Hex(md: java.security.MessageDigest, text: String): String = {
-    md.reset()
-    val d = md.digest(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val hex = "0123456789abcdef"
-    val out = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = hex((d(i) >> 4) & 0xf)
-      out(2 * i + 1) = hex(d(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
   def dedupStream(spark: SparkSession, docs: Dataset[(Long, String)]): Dataset[(Long, String)] = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     docs
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { case (id, text) => (md5Hex(md, text), id, text) }
+        it.map { case (id, text) => (Md5.hex(md, text), id, text) }
       }
       .groupByKey(_._1)
       .flatMapGroupsWithState[Boolean, (Long, String)](
@@ -128,7 +112,7 @@ object StreamingExtract {
     docs
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { case (id, text, ts) => (md5Hex(md, text), id, text, ts) }
+        it.map { case (id, text, ts) => (Md5.hex(md, text), id, text, ts) }
       }
       .toDF("content_md5", "doc_id", "text", "ts")
       .withWatermark("ts", watermarkDelay) // after the hash map, so the event-time tag survives

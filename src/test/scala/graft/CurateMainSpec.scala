@@ -14,15 +14,18 @@ class CurateMainSpec extends AnyFunSuite {
   test("arg parsing: flags, defaults, validation") {
     val a = CurateMain.parse(List(
       "--input", "/d/docs", "--out", "/d/run", "--benchmark", "/d/eval",
-      "--gram-k", "6", "--line-min-df", "3", "--max-dup-permille", "300",
-      "--skip-span-gate"))
+      "--gram-k", "6", "--line-min-df", "3", "--max-dup-permille", "300"))
     assert(a.input.contains("/d/docs") && a.out.contains("/d/run"))
     assert(a.benchmark.contains("/d/eval"))
     assert(a.gramK == 6 && a.lineMinDf == 3L && a.maxDupPermille == 300)
-    assert(a.skipSpanGate && !a.skipLineDedup)
     val d = CurateMain.parse(List("--input", "/x", "--out", "/y"))
     assert(d.gramK == 8 && d.lineMinDf == 2L && d.maxDupPermille == 500)
     assertThrows[IllegalArgumentException](CurateMain.parse(List("--bogus")))
+    // every run builds the one chain: there is no switch to skip a gate
+    for (gone <- Seq("--skip-span-gate", "--skip-line-dedup")) {
+      val e = intercept[IllegalArgumentException](CurateMain.parse(List("--input", "/x", gone)))
+      assert(e.getMessage == s"unknown arg: $gone")
+    }
     assertThrows[IllegalArgumentException](
       CurateMain.parse(List("--line-min-df", "1"))) // would strip every line
     assertThrows[IllegalArgumentException](
@@ -37,7 +40,7 @@ class CurateMainSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("--buckets requires a value"))
   }
 
-  test("null-text rows are dropped at intake on BOTH paths, not NPE'd or silently forked") {
+  test("null-text rows are dropped at intake, not NPE'd") {
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
     val rows = java.util.Arrays.asList(
@@ -45,13 +48,10 @@ class CurateMainSpec extends AnyFunSuite {
       Row(2L, null),
       Row(3L, "other real words forming a second document"))
     val df = spark.createDataFrame(rows, schema)
-    val (outA, sA) = CurateMain.run(spark, df, None,
-      CurateMain.Args(skipLineDedup = true, skipSpanGate = true))
-    val (outB, sB) = CurateMain.run(spark, df, None,
-      CurateMain.Args(skipSpanGate = true))
-    assert(sA.inputDocs == 2 && sB.inputDocs == 2)
-    assert(outA.select("doc_id").collect().map(_.getLong(0)).toSet ==
-      outB.select("doc_id").collect().map(_.getLong(0)).toSet)
+    val (out, stats) = CurateMain.run(spark, df, None, CurateMain.Args())
+    assert(stats.inputDocs == 2)
+    assert(out.select("doc_id").collect().map(_.getLong(0)).toSet.subsetOf(Set(1L, 3L)))
+    out.unpersist()
   }
 
   /** The planted corpus of the "gates compose" test and its benchmark:
@@ -123,18 +123,19 @@ class CurateMainSpec extends AnyFunSuite {
     assert(stats.outputDocs <= stats.keptSpanGate)
   }
 
-  test("pipeline: skip flags bypass their stages; rerun is deterministic") {
+  test("pipeline: a no-benchmark rerun is deterministic") {
     val corpus = docs.select(col("doc_id"), col("text"))
-    val args = CurateMain.Args(skipLineDedup = true, skipSpanGate = true)
-    val (out1, s1) = CurateMain.run(spark, corpus, None, args)
-    // -1 = stage skipped (incl. decontamination with no --benchmark), so a
-    // consumer can tell "never ran" from "ran and matched zero"
-    assert(s1.afterLineStrip == -1L && s1.keptSpanGate == -1L && s1.contaminated == -1L)
-    // with no planted dups, quality+dedup is the only gate
-    assert(s1.outputDocs == s1.keptQuality)
-    val (out2, s2) = CurateMain.run(spark, corpus, None, args)
+    val (out1, s1) = CurateMain.run(spark, corpus, None, CurateMain.Args())
+    // -1 = no benchmark given, so a consumer can tell "never ran" from
+    // "ran and matched zero"; every other gate always runs
+    assert(s1.contaminated == -1L)
+    assert(Seq(s1.inputDocs, s1.afterLineStrip, s1.keptQuality, s1.keptSpanGate,
+      s1.outputDocs).forall(_ >= 0L), s1)
+    val (out2, s2) = CurateMain.run(spark, corpus, None, CurateMain.Args())
     assert(s1 == s2)
     assert(out1.orderBy("doc_id").collect().toSeq == out2.orderBy("doc_id").collect().toSeq)
+    out1.unpersist()
+    out2.unpersist()
   }
 
   test("stats: each observed count equals a direct count of the frame it taps; a null doc_id counts at intake only") {

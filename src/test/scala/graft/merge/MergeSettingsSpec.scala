@@ -147,14 +147,25 @@ class MergeSettingsSpec extends AnyFunSuite {
     assert(str(d, "transform_tablesfile") == "explode")
   }
 
-  test("to_dict tablesfile transformer: safe-compact") {
-    val d = toDict(MergeConfig(transformTablesFile = Some("safe-compact")))
-    assert(str(d, "transform_tablesfile") == "safe-compact")
+  test("to_dict tablesfile transformer: compact-safe") {
+    val c = MergeConfig(transformTablesFile = Some("compact-safe"))
+    assert(str(toDict(c), "transform_tablesfile") == "compact-safe")
+    assert(MergeSettingsJson.fromJson(MergeSettingsJson.toJson(c)) == c)
   }
 
-  test("to_dict tablesfile transformer: unsafe-compact") {
-    val d = toDict(MergeConfig(transformTablesFile = Some("unsafe-compact")))
-    assert(str(d, "transform_tablesfile") == "unsafe-compact")
+  test("to_dict tablesfile transformer: compact-unsafe") {
+    val c = MergeConfig(transformTablesFile = Some("compact-unsafe"))
+    assert(str(toDict(c), "transform_tablesfile") == "compact-unsafe")
+    assert(MergeSettingsJson.fromJson(MergeSettingsJson.toJson(c)) == c)
+  }
+
+  test("fromJson rejects option values the pipeline does not recognise") {
+    assertThrows[IllegalArgumentException](
+      MergeSettingsJson.fromJson("""{"transform_tablesfile": "safe-compact"}"""))
+    assertThrows[IllegalArgumentException](
+      MergeSettingsJson.fromJson("""{"hints_column_alignment": "sfae"}"""))
+    assert(MergeSettingsJson.fromJson("""{"transform_tablesfile": "compact-safe"}""")
+      .transformTablesFile.contains("compact-safe"))
   }
 
   test("to_dict analyzers") {
