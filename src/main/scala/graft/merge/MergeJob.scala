@@ -1,6 +1,8 @@
 package graft.merge
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.graft.shim
+import org.apache.spark.storage.StorageLevel
 import graft.core._
 
 /** One extraction run's output for one document (url). The payload is the
@@ -147,13 +149,54 @@ final case class MergeConfig(
   * (never html), and doc_id hashing distributes uniformly; skew would come
   * only from a single doc with a pathological table count, bounded upstream
   * by the extractor.
+  *
+  * One merge per merged Dataset: the paper's dataflow feeds one merge to
+  * several consumers (write, stats, CSV/HTML export), so `mergeRuns` caches
+  * its result the first time an action reads it, and that cache lives as
+  * long as the Dataset does (see `mergeRuns`).
   */
 object MergeJob {
 
+  /** Name of the cache behind every `mergeRuns` result: its RDD shows as
+    * `In-memory table MergeJob.mergeRuns` in the storage tab and in
+    * `SparkContext.getPersistentRDDs`.
+    */
+  val CacheName = "MergeJob.mergeRuns"
+
+  /** Merges the runs of each document. The returned Dataset merges ONCE,
+    * however many actions read it:
+    *  - lazy: calling this submits no Spark job. The first action builds a
+    *    `MEMORY_AND_DISK` columnar cache of the merged rows inside that
+    *    action's job group; every later action (and every plan derived from the
+    *    result) reads the cache instead of re-running the read, the parse,
+    *    the `groupByKey` shuffle, the merge kernel and the JSON render;
+    *  - lineage-safe: the cached RDD keeps its lineage, so an evicted or
+    *    lost block is recomputed;
+    *  - GC-scoped: the cache is not registered with the session
+    *    `CacheManager`; `ContextCleaner` frees it once the result and every
+    *    plan derived from it are unreachable and collected. `unpersist()` on
+    *    the result is therefore a no-op: a caller has nothing to release,
+    *    and cannot release it sooner than by dropping the result;
+    *  - not free for one reader: the first action builds the cache even if
+    *    nothing reads the result again, at the price of one more job and
+    *    of encoding the merged rows into columnar batches and decoding them
+    *    back. At corpus scale the cache also holds the whole merged output
+    *    on the executors, spilling to disk, until the result is dropped.
+    *
+    * Why not the simpler designs:
+    *  - `cache()`/`persist()` registers the plan in the session
+    *    `CacheManager` until someone unpersists it. A caller that never
+    *    calls `clearCache` (SparkEntry builds a fresh merge per query)
+    *    would leak one cache per call;
+    *  - `.rdd.persist` and `localCheckpoint(eager = false)` run the
+    *    exchange's map stage as soon as the RDD is taken, because adaptive
+    *    execution materializes query stages then: building the query would
+    *    run Spark jobs. `localCheckpoint` also drops the lineage.
+    */
   def mergeRuns(spark: SparkSession, runs: Dataset[RunDoc], cfg: MergeConfig): Dataset[MergedDoc] = {
     import spark.implicits._
     cfg.toSettings // a bad option value fails here, while the plan is built
-    runs.groupByKey(_.doc_id).flatMapGroups { (docId: String, it: Iterator[RunDoc]) =>
+    val merged = runs.groupByKey(_.doc_id).flatMapGroups { (docId: String, it: Iterator[RunDoc]) =>
       val settings = cfg.toSettings // rebuilt per group; cheap, task-local
       val sorted = it.toList.sortBy(_.run_idx)
       val docs = sorted.map { r =>
@@ -168,6 +211,7 @@ object MergeJob {
           merged_json = TableDoc.toJsonString(merged))
       }.iterator
     }
+    shim.cachedOnce(merged, StorageLevel.MEMORY_AND_DISK, CacheName)
   }
 
   /** Curation guard (F17 — tablemerge __main__.py:64-69,215-220): docs whose

@@ -1,18 +1,35 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Dataset, classic}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.storage.StorageLevel
 
-/** Column <-> Expression bridge. Spark 4 hides `Column.expr` behind
-  * `private[sql]` (Spark Connect split); third-party expression libraries
-  * conventionally expose it via a shim in the org.apache.spark.sql
-  * namespace. Only these two forwarders live here, plus the listener-bus
-  * drain below.
+/** Forwarders to Spark internals that Spark 4 keeps `private[sql]` or
+  * `private[spark]`; third-party libraries conventionally reach them via a
+  * shim in the org.apache.spark.sql namespace. Four live here: the
+  * Column <-> Expression bridge (Spark Connect split), the listener-bus
+  * drain, the analysis-time input type alias and the unregistered cache.
   */
 object shim {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** `ds` read through an `InMemoryRelation` over its own plan that is NOT
+    * registered with the session's `CacheManager` (the relation's
+    * constructor and `classic.Dataset`'s are internal). Nothing runs here:
+    * the first action builds the cache inside that action's job group, and
+    * later actions read it. The cached RDD, named `In-memory table <name>`,
+    * keeps its lineage and is freed by `ContextCleaner` once the returned
+    * Dataset and every plan built on it are unreachable; `unpersist()` on
+    * the result finds no `CacheManager` entry, so it is a no-op.
+    */
+  def cachedOnce[T](ds: Dataset[T], level: StorageLevel, name: String): Dataset[T] = {
+    val enc = ds.encoder
+    val rel = InMemoryRelation(level, ds.queryExecution, Some(name))
+    new classic.Dataset[T](ds.sparkSession.asInstanceOf[classic.SparkSession], rel, () => enc)
+  }
 
   /** Blocks until every event posted so far has reached every listener
     * (`LiveListenerBus.waitUntilEmpty` is `private[spark]`), so a listener

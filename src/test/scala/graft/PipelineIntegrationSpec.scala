@@ -45,7 +45,8 @@ class PipelineIntegrationSpec extends AnyFunSuite {
       val a = RunDoc(e.url, "run-extract", 0, 0, e.tables_json)
       Seq(a, MergeJob.perturbRun(a, "run-perturbed", 1))
     }
-    val merged = MergeJob.mergeRuns(spark, runs, MergeConfig()).cache()
+    // merges once: every action below reads the result's own cache
+    val merged = MergeJob.mergeRuns(spark, runs, MergeConfig())
     val mergedRows = merged.collect()
     // every doc with >=1 table survives the merge; the rest are dropped
     // by the all-empty guard (F18)
@@ -87,6 +88,6 @@ class PipelineIntegrationSpec extends AnyFunSuite {
       assert(TableDoc.toJsonString(doc) == m.merged_json)
     }
 
-    extracted.unpersist(); merged.unpersist(); perDoc.unpersist()
+    extracted.unpersist(); perDoc.unpersist()
   }
 }

@@ -1,10 +1,15 @@
 package graft.merge
 
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.sql.graft.shim
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
 import graft.core._
 import graft.pages.SyntheticPages
 import graft.pipeline.ExtractJob
+import graft.stats.Stats
 
 class MergeJobSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
@@ -58,5 +63,93 @@ class MergeJobSpec extends AnyFunSuite {
       MergeJob.mergeRuns(spark, runs, MergeConfig(transformTablesFile = Some("safe-compact")))
     }
     assert(e.getMessage.contains("transformTablesFile"))
+  }
+
+  private def cacheIds(): Set[Int] = spark.sparkContext.getPersistentRDDs.collect {
+    case (id, rdd) if rdd.name == s"In-memory table ${MergeJob.CacheName}" => id
+  }.toSet
+
+  /** Runs `action` with `listener` attached, after every earlier event has
+    * been delivered and before the listener is read. */
+  private def listening[A](listener: SparkListener)(action: => A): A = {
+    val sc = spark.sparkContext
+    shim.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try { val a = action; shim.waitUntilEmpty(sc); a }
+    finally sc.removeSparkListener(listener)
+  }
+
+  private def flatRows(merged: Dataset[MergedDoc]): Seq[MergedFlatRow] =
+    MergeJob.flattenMerged(spark, merged).collect().toSeq
+      .sortBy(r => (r.doc_id, r.table_idx, r.frag_idx, r.row_idx))
+
+  private def global(merged: Dataset[MergedDoc]): Row =
+    Stats.globalStats(Stats.perDocStats(spark, merged).toDF()).collect().head
+
+  test("one merge across two actions: the second reads the cache, not the merge shuffle") {
+    val rs = runs(4)
+    val merged = MergeJob.mergeRuns(spark, rs, MergeConfig())
+    /** Runs `action` and returns it with the shuffled records its tasks
+      * wrote and read. */
+    def shuffled[A](action: => A): (A, Long, Long) = {
+      val written = new AtomicLong(0L)
+      val read = new AtomicLong(0L)
+      val a = listening(new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+          written.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+          read.addAndGet(e.taskMetrics.shuffleReadMetrics.recordsRead); ()
+        }
+      })(action)
+      (a, written.get(), read.get())
+    }
+    // the first action shuffles every run into the merge; a second action
+    // that ran the merge again would read all of those back (and more), one
+    // that reads the cache reads at most the roll-up's partials
+    val (flat, firstWritten, _) = shuffled(flatRows(merged))
+    val (stats, _, secondRead) = shuffled(global(merged))
+    assert(firstWritten > 0)
+    assert(secondRead < firstWritten,
+      s"the second action read $secondRead shuffled records; the merge shuffled $firstWritten")
+
+    val fresh = MergeJob.mergeRuns(spark, rs, MergeConfig())
+    assert(flat.nonEmpty && flat == flatRows(fresh))
+    assert(stats == global(fresh))
+  }
+
+  /** Builds a merge, reads it once and returns its cache's RDD id: once this
+    * returns, nothing references the merged Dataset. */
+  private def mergeAndRead(rs: Dataset[RunDoc]): Int = {
+    val before = cacheIds()
+    assert(MergeJob.mergeRuns(spark, rs, MergeConfig()).count() > 0)
+    val added = cacheIds().diff(before)
+    assert(added.size == 1, s"new merge caches: $added")
+    added.head
+  }
+
+  test("mergeRuns is lazy, its cache keeps the lineage, and is freed once unreachable") {
+    val sc = spark.sparkContext
+    val rs = runs(4)
+    val jobs = new AtomicInteger(0)
+    val merged = listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    })(MergeJob.mergeRuns(spark, rs, MergeConfig()))
+    assert(jobs.get() == 0, s"${jobs.get()} Spark jobs ran while the merge was built")
+
+    val before = cacheIds()
+    val first = merged.collect().sortBy(_.doc_id).toSeq
+    val added = cacheIds().diff(before)
+    assert(added.size == 1, s"new merge caches: $added")
+    merged.unpersist(blocking = true) // not in the CacheManager: a no-op
+    assert(sc.getPersistentRDDs.contains(added.head))
+    sc.getPersistentRDDs(added.head).unpersist(blocking = true)
+    assert(merged.collect().sortBy(_.doc_id).toSeq == first)
+
+    val id = mergeAndRead(rs)
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.getPersistentRDDs.contains(id) && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    assert(!sc.getPersistentRDDs.contains(id), "the merge cache outlived its Dataset")
   }
 }
