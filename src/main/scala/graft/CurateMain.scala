@@ -71,7 +71,7 @@ object CurateMain {
   private val valueFlags = Set(
     "--input", "--out", "--benchmark", "--gram-k", "--line-min-df", "--max-dup-permille")
 
-  def parse(argv: List[String], acc: Args = Args()): Args = argv match {
+  def parse(argv: List[String], acc: Args = Args()): Args = Cli.checked(valueFlags, argv) match {
     case Nil => acc
     case "--input" :: v :: rest => parse(rest, acc.copy(input = Some(v)))
     case "--out" :: v :: rest => parse(rest, acc.copy(out = Some(v)))
@@ -88,8 +88,6 @@ object CurateMain {
       if (p > 1000) throw new IllegalArgumentException(
         s"--max-dup-permille is a fraction of 1000, got: $v")
       parse(rest, acc.copy(maxDupPermille = p))
-    case flag :: Nil if valueFlags(flag) =>
-      throw new IllegalArgumentException(s"$flag requires a value")
     case other :: _ => throw new IllegalArgumentException(s"unknown arg: $other")
   }
 

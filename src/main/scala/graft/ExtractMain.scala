@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.core.Cli
 import graft.pipeline.{ExtractJob, Page}
 
 /** spark-submit entrypoint for the flagship extraction job (north rule:
@@ -37,16 +38,14 @@ object ExtractMain {
 
   private val valueFlags = Set("--input", "--synthetic", "--out", "--buckets")
 
-  def parse(argv: List[String], acc: Args = Args()): Args = argv match {
+  def parse(argv: List[String], acc: Args = Args()): Args = Cli.checked(valueFlags, argv) match {
     case Nil => acc
     case "--input" :: v :: rest => parse(rest, acc.copy(input = Some(v)))
     case "--synthetic" :: v :: rest => parse(rest, acc.copy(synthetic = Some(v)))
     case "--out" :: v :: rest => parse(rest, acc.copy(out = Some(v)))
     case "--buckets" :: v :: rest =>
-      parse(rest, acc.copy(buckets = graft.core.Cli.positiveInt("--buckets", v)))
+      parse(rest, acc.copy(buckets = Cli.positiveInt("--buckets", v)))
     case "--no-resume" :: rest => parse(rest, acc.copy(resume = false))
-    case flag :: Nil if valueFlags(flag) =>
-      throw new IllegalArgumentException(s"$flag requires a value")
     case other :: _ => throw new IllegalArgumentException(s"unknown arg: $other")
   }
 
@@ -104,7 +103,7 @@ object ExtractMain {
     val t0 = System.nanoTime()
     val stats = ExtractJob.run(spark, pages, out, cfg)
     // one machine-readable line, last on stdout (logs go to stderr)
-    val wallStr = graft.core.Cli.jsonNum((System.nanoTime() - t0) / 1e9)
+    val wallStr = Cli.jsonNum((System.nanoTime() - t0) / 1e9)
     println(
       s"""{"pages_processed":${stats.pagesProcessed},"buckets_skipped":${stats.bucketsSkipped},"buckets_planned":${stats.bucketsPlanned},"wall_sec":$wallStr}""")
     spark.stop()

@@ -727,11 +727,10 @@ object Queries {
         .select(col("query_id"), col("neighbor_id"), col("rank"))
     }),
 
-    // the Lloyd-accumulation oracle surface: per-cell member counts + EXACT
-    // fixed-point component sums (floor(x*2^20 + 0.5) — long sums are
-    // associative, so distributed k-means refinement is deterministic and
-    // engine-recomputable; float averaging would be partial-sum-order-
-    // dependent). Same 32-centroid assignment as q_ann_ivf's oracle.
+    // per-cell member counts + EXACT fixed-point component sums
+    // (floor(x*2^20 + 0.5) — long sums are associative, so the per-cell
+    // sums are deterministic and engine-recomputable; float averaging
+    // would be partial-sum-order-dependent). Same 32-centroid assignment as q_ann_ivf's oracle.
     // Memoized: the centroid pick is a k-bounded collect ACTION (PlanSpec
     // jobs-gate pattern, like q_dup_clusters).
     "q_ivf_cell_stats" -> ((s, dir) =>

@@ -6,6 +6,17 @@ package graft.core
   */
 private[graft] object Cli {
 
+  /** `argv` itself, once its head is checked: a value flag (one of
+    * `valueFlags`) must be followed by a value, and a next token that is
+    * itself a flag is not one — `--out --no-resume` must not write to a
+    * directory named `--no-resume` with resume still on.
+    */
+  def checked(valueFlags: Set[String], argv: List[String]): List[String] = argv match {
+    case flag :: rest if valueFlags(flag) && rest.headOption.forall(_.startsWith("--")) =>
+      throw new IllegalArgumentException(s"$flag requires a value")
+    case _ => argv
+  }
+
   def positiveInt(flag: String, v: String): Int = {
     val n = try v.toInt catch {
       case _: NumberFormatException =>

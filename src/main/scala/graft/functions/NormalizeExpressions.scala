@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -154,21 +154,7 @@ object GraftFunctions {
   def normalizeColumnValue(s: String): String = Text.normalizeColumnValue(s)
   def transliterate(s: String): String = Text.transliterate(s)
 
-  // Column-API forms (Spark 4: Column<->Expression via the sql-package shim)
+  // Column-API form (Spark 4: Column<->Expression via the sql-package shim)
   import org.apache.spark.sql.graft.shim.{column, expression}
-  def normalize_str(c: Column): Column = column(NormalizeStr(expression(c)))
-  def normalize_column_name(c: Column): Column = column(NormalizeColumnName(expression(c)))
-  def normalize_column_value(c: Column): Column = column(NormalizeColumnValue(expression(c)))
-  def transliterate_col(c: Column): Column = column(Transliterate(expression(c)))
   def poly_hash(c: Column): Column = column(PolyHash(expression(c)))
-
-  /** Register all engine functions for SQL use. */
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_normalize_str", es => NormalizeStr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_normalize_column_name", es => NormalizeColumnName(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_normalize_column_value", es => NormalizeColumnValue(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_transliterate", es => Transliterate(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_poly_hash", es => PolyHash(es.head), "scala_udf")
-  }
 }

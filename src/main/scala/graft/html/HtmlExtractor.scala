@@ -168,12 +168,6 @@ object HtmlExtractor {
     }
   }
 
-  /** String convenience/test surface — same result as [[extractBytes]] on
-    * the UTF-8 encoding (the byte path is the implementation).
-    */
-  def extract(html: String, settings: ExtractSettings = ExtractSettings()): Extracted =
-    extractBytes(html.getBytes(java.nio.charset.StandardCharsets.UTF_8), settings)
-
   // -------------------------------------------------------------------
   // Pass 1: single forward scan -> blocks + raw tables per page
   // -------------------------------------------------------------------

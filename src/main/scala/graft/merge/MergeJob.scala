@@ -282,10 +282,6 @@ object MergeJob {
     }
   }
 
-  /** Register the nested view under `name` for spark.sql consumers. */
-  def registerNestedView(spark: SparkSession, merged: Dataset[MergedDoc], name: String): Unit =
-    nestedMergedTables(spark, merged).createOrReplaceTempView(name)
-
   /** Deterministic perturbation used to synthesize a "second reader" run
     * from an extraction: case/whitespace jitter that the merge normalizers
     * must fold back together (exercises same_row + agreement).

@@ -42,10 +42,6 @@ object MergeOps {
   private def mapFragments(doc: TableDoc)(f: Fragment => Fragment): TableDoc =
     doc.copy(tables = doc.tables.map(t => TableData(t.fragments.map(f))))
 
-  /** merge.py:59-71 */
-  def filterHeaderRows(doc: TableDoc, hints: List[String] = Nil): TableDoc =
-    mapFragments(doc)(fr => fr.copy(rows = fr.rows.filterNot(isHeaderRow(_, hints))))
-
   /** merge.py:74-103 */
   def dropEmptyColumns(doc: TableDoc): TableDoc =
     mapFragments(doc) { fr =>

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 import graft.ops.TextKernel.{FnvOffset, FnvPrime, avalanche, gramHash64}
 
 /** Deduplication operators for training-data pipelines: exact (hash
@@ -334,66 +335,25 @@ object Dedup {
       ledger.select(col("content_md5")), Seq("content_md5"), "left_anti")
   }
 
-  /** The ledger after accepting a batch: previous ledger ∪ the accepted
-    * batch's content hashes — completes the append-mode loop
-    * (accepted = incrementalExactDedup(batch, ledger);
-    *  ledger' = advanceLedger(ledger, accepted)). Pure union of 16-byte
-    * digests (dedup within the union is unnecessary: accepted hashes are
-    * anti-joined against the ledger by construction, so the two sides are
-    * disjoint — and within-batch winners are already one row per hash).
-    * Re-running the SAME batch against the advanced ledger accepts nothing
-    * (idempotence — the crash-retry safety a growing crawl needs); persist
-    * the result (e.g. parquet) between batches.
+  /** A Bloom filter over the ledger's digests, in one distributed pass
+    * (tree-aggregated per-partition filters; nothing but the
+    * ~`1.2 * expectedItems` bytes of bits reaches the driver). 1B digests
+    * at fpp 0.01 is ~1.2 GB — broadcastable; at 10B move to fpp 0.03 or
+    * shard the ledger.
     */
-  def advanceLedger(ledger: DataFrame, accepted: DataFrame): DataFrame =
-    ledger.select(col("content_md5"))
-      .union(accepted.select(col("content_md5")))
-
-  /** A ledger's Bloom filter plus the parameters it was sized with.
-    * The parameters travel with the filter because
-    * [[advanceLedgerBloom]] must build a COMPATIBLE filter over the
-    * accepted batch to merge in (Spark's `BloomFilter.mergeInPlace`
-    * requires identical bit size and hash count, both of which derive
-    * deterministically from `(expectedItems, fpp)`). Size `expectedItems`
-    * for the ledger's TARGET cardinality, not its current one — the
-    * filter is built once and advanced per batch, never rebuilt.
-    */
-  final case class LedgerBloom(
-      filter: org.apache.spark.util.sketch.BloomFilter,
-      expectedItems: Long,
-      fpp: Double)
-
-  /** One distributed pass over the ledger's digests (tree-aggregated
-    * per-partition filters; nothing but the ~`1.2 * expectedItems` bytes
-    * of bits reaches the driver). 1B digests at fpp 0.01 is ~1.2 GB —
-    * broadcastable; at 10B move to fpp 0.03 or shard the ledger.
-    */
-  def ledgerBloom(ledger: DataFrame, expectedItems: Long, fpp: Double = 0.01): LedgerBloom =
-    LedgerBloom(
-      ledger.stat.bloomFilter("content_md5", math.max(expectedItems, 1L), fpp),
-      math.max(expectedItems, 1L), fpp)
-
-  /** The filter after accepting a batch: digests of `accepted` folded in —
-    * O(batch) work on the executors (a compatible filter is tree-built
-    * over the accepted digests and OR-merged), never a rescan of the
-    * ledger. Mirrors [[advanceLedger]]; call both after each batch.
-    * NOTE: `mergeInPlace` mutates the receiving filter — callers must
-    * treat the input `lb` as consumed.
-    */
-  def advanceLedgerBloom(lb: LedgerBloom, accepted: DataFrame): LedgerBloom = {
-    val add = accepted.stat.bloomFilter("content_md5", lb.expectedItems, lb.fpp)
-    LedgerBloom(lb.filter.mergeInPlace(add), lb.expectedItems, lb.fpp)
-  }
+  def ledgerBloom(ledger: DataFrame, expectedItems: Long, fpp: Double = 0.01): BloomFilter =
+    ledger.stat.bloomFilter("content_md5", math.max(expectedItems, 1L), fpp)
 
   /** Bloom-pruned incremental exact dedup — bit-identical result to
     * [[incrementalExactDedup]], built for the append loop at corpus scale,
     * where the ledger dwarfs every batch and the batch is mostly new.
-    * The batch's within-batch winners split on `lb.filter` membership:
+    * The batch's within-batch winners split on membership in `lb`, a
+    * [[ledgerBloom]] over the same ledger:
     *
     *   - mightContain = false → DEFINITELY absent from the ledger (Bloom
     *     filters have no false negatives) → accepted with NO join at all;
-    *   - mightContain = true → true duplicate OR false positive (rate
-    *     `lb.fpp`) → verified by the exact ledger anti-join.
+    *   - mightContain = true → true duplicate OR false positive (at
+    *     the filter's fpp) → verified by the exact ledger anti-join.
     *
     * Only the ~(batch-dup-rate + fpp) candidate slice of the batch reaches
     * the shuffle, so the anti-join's batch side shrinks by ~100× for a
@@ -409,9 +369,9 @@ object Dedup {
     * that costs orders of magnitude more than the non-codegen call.
     */
   def incrementalExactDedupBloom(incoming: DataFrame, ledger: DataFrame,
-      lb: LedgerBloom): DataFrame = {
+      lb: BloomFilter): DataFrame = {
     val spark = incoming.sparkSession
-    val bc = spark.sparkContext.broadcast(lb.filter)
+    val bc = spark.sparkContext.broadcast(lb)
     // null-safe: a null digest (null text) is "definitely new", matching
     // the exact path where a null key never matches the anti-join
     val might = udf((h: String) => h != null && bc.value.mightContainString(h))

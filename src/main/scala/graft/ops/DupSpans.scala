@@ -25,29 +25,13 @@ import org.apache.spark.sql.functions._
   */
 object DupSpans {
 
-  /** One row per k-token window: (doc_id, pos, gram) with 0-based token
-    * position and the space-joined gram text, over
-    * [[TextKernel.lowerWords]]. Documents shorter than k tokens emit
-    * nothing — no k-window exists, so they can never carry a duplicated
-    * span.
-    */
-  def gramPositionRows(spark: SparkSession, docs: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, s"gram size must be positive, got $k")
-    import spark.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)].mapPartitions { it =>
-      it.flatMap { case (docId, text) =>
-        val toks = TextKernel.lowerWords(text)
-        if (toks.length < k) Iterator.empty
-        else (0 to toks.length - k).iterator.map(i =>
-          (docId, i, toks.slice(i, i + k).mkString(" ")))
-      }
-    }.toDF("doc_id", "pos", "gram")
-  }
-
-  /** Hot-path form of [[gramPositionRows]]: emits the 16-byte MD5 digest of
-    * each gram directly from the typed pass — value-identical to
-    * `unhex(md5(gram))` over [[gramPositionRows]] (MD5 runs over the same
-    * UTF-8 byte stream, fed token-by-token with the ' ' separator), but the
+  /** One row per k-token window over [[TextKernel.lowerWords]]: (doc_id,
+    * pos, g) with 0-based token position and the 16-byte MD5 digest of the
+    * space-joined gram text. Documents shorter than k tokens emit nothing —
+    * no k-window exists, so they can never carry a duplicated span. The
+    * digest comes straight from the typed pass — value-identical to
+    * `unhex(md5(gram))` over the gram string (MD5 runs over the same UTF-8
+    * byte stream, fed token-by-token with the ' ' separator), but the
     * gram STRING is never materialized into a row, and the per-gram
     * hex-encode + unhex round-trip of the Column md5 path disappears
     * (guide §1.2 step 2: per-task work, measured as the dominant narrow

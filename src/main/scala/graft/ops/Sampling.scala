@@ -29,26 +29,6 @@ object Sampling {
   def hashBucket(id: Column): Column =
     graft.functions.GraftFunctions.poly_hash(id.cast("string")) % Buckets
 
-  /** The split's OWN hash bucket: same polynomial, but over the salted
-    * string "<id>:split" — effectively independent of [[hashBucket]], so
-    * composing [[trainHoldoutSplit]] with [[stratifiedSample]] on the same
-    * id column is safe. (Both previously keyed low buckets of the SAME
-    * hash: after sampling a stratum at rate r, the holdout buckets
-    * survived sampling entirely, inflating the holdout fraction of the
-    * sampled corpus to cut/(r·Buckets) — 10% holdout after 0.5 sampling
-    * was actually 20%.)
-    *
-    * The salt must be a SUFFIX: a polynomial hash with a shared suffix is
-    * affine in the id's length class (h("p"+id) = h(id) + (h("p")−seed)·31^len),
-    * so a PREFIX salt only shifts the bucket interval — the holdout would
-    * still be a contiguous slice of the sample hash and composition stays
-    * skewed (measured 21.5% for a 10% split after 0.5 sampling). Appending
-    * instead gives h(id+"s") = h(id)·31^len(s) + c mod p, and the mod-p
-    * multiplication decorrelates the two buckets (measured 9.7%).
-    */
-  def splitBucket(id: Column): Column =
-    graft.functions.GraftFunctions.poly_hash(concat(id.cast("string"), lit(":split"))) % Buckets
-
   /** Keep rows whose bucket falls under their stratum's threshold.
     * `rates` maps stratum value -> keep fraction in [0, 1]; strata absent
     * from the map use `defaultRate`. Thresholds are fixed at plan time
@@ -67,19 +47,5 @@ object Sampling {
       case (acc, (k, r)) => when(stratumCol === k, lit(math.round(r * Buckets))).otherwise(acc)
     }
     df.filter(hashBucket(idCol) < thr)
-  }
-
-  /** Deterministic train/holdout split on an INDEPENDENT bucket hash
-    * ([[splitBucket]]): returns (train, holdout) with holdoutPermille/1000
-    * of ids held out — the leakage-safe eval-split primitive (membership is
-    * a pure function of the id, so a document can never migrate between
-    * splits as the corpus grows or repartitions, and the split composes
-    * safely with [[stratifiedSample]] on the same id).
-    */
-  def trainHoldoutSplit(df: DataFrame, idCol: Column, holdoutPermille: Int): (DataFrame, DataFrame) = {
-    require(holdoutPermille >= 0 && holdoutPermille <= 1000, "holdoutPermille in [0, 1000]")
-    val cut = holdoutPermille * (Buckets / 1000L)
-    val b = splitBucket(idCol)
-    (df.filter(b >= cut), df.filter(b < cut))
   }
 }

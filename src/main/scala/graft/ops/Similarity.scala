@@ -144,21 +144,17 @@ object Similarity {
     * Returns bruteForceTopK's schema.
     */
   def ivfTopK(spark: SparkSession, queries: DataFrame, corpus: DataFrame,
-      k: Int, numCentroids: Int = 256, nProbe: Int = 4): DataFrame =
-    ivfTopKWith(spark, queries, corpus, k, ivfCentroids(corpus, numCentroids), nProbe)
-
-  /** ivfTopK against an explicit centroid set (hash-picked or refined). */
-  def ivfTopKWith(spark: SparkSession, queries: DataFrame, corpus: DataFrame,
-      k: Int, cents: Array[(Long, Array[Float])], nProbe: Int): DataFrame = {
+      k: Int, numCentroids: Int = 256, nProbe: Int = 4): DataFrame = {
     import spark.implicits._
+    val cents = ivfCentroids(corpus, numCentroids)
     require(cents.nonEmpty, "empty corpus: no centroids")
     val bc = spark.sparkContext.broadcast(cents)
 
     // QUANTIZED ranking + cid tie-break, the same comparison as
     // nearestCellIdx — keeps the assignment identical across every IVF
-    // surface (cell stats, Lloyd refinement, top-k probing) and immune to
-    // the sub-ulp cross-engine normalization differences the oracle's own
-    // quantized ORDER BY absorbs
+    // surface (cell stats, top-k probing) and immune to the sub-ulp
+    // cross-engine normalization differences the oracle's own quantized
+    // ORDER BY absorbs
     def nearestCells(emb: Array[Float], n: Int): Array[Long] =
       bc.value
         .map { case (cid, cemb) =>
@@ -220,29 +216,6 @@ object Similarity {
     best
   }
 
-  /** Map-side-partial (count, component-sum vector) per cell: buffer is ONE
-    * long array per live cell per task — the k-bounded k-means shape.
-    */
-  final class CellStatsAggregator(dim: Int)
-      extends Aggregator[(Int, Array[Long]), (Long, Array[Long]), (Long, Array[Long])] {
-    def zero: (Long, Array[Long]) = (0L, new Array[Long](dim))
-    def reduce(b: (Long, Array[Long]), x: (Int, Array[Long])): (Long, Array[Long]) = {
-      val arr = b._2
-      var i = 0
-      while (i < dim) { arr(i) += x._2(i); i += 1 }
-      (b._1 + 1L, arr)
-    }
-    def merge(a: (Long, Array[Long]), b: (Long, Array[Long])): (Long, Array[Long]) = {
-      val arr = a._2
-      var i = 0
-      while (i < dim) { arr(i) += b._2(i); i += 1 }
-      (a._1 + b._1, arr)
-    }
-    def finish(r: (Long, Array[Long])): (Long, Array[Long]) = r
-    def bufferEncoder: Encoder[(Long, Array[Long])] = ExpressionEncoder[(Long, Array[Long])]()
-    def outputEncoder: Encoder[(Long, Array[Long])] = ExpressionEncoder[(Long, Array[Long])]()
-  }
-
   /** Quantize a float component to fixed point: floor(x * scale + 0.5) —
     * every step exact in IEEE double, so Spark and any other engine agree
     * bit-for-bit (the float-sum order-dependence that makes distributed
@@ -251,49 +224,12 @@ object Similarity {
   def quantize(x: Float, scale: Long = FixedPointScale): Long =
     math.floor(x.toDouble * scale + 0.5).toLong
 
-  /** One Lloyd refinement round with EXACT arithmetic: assign every corpus
-    * vector to its nearest centroid (cosine, ties by centroid id), then
-    * per-cell component means over fixed-point quantized values
-    * (floorDiv(Σq, n)). Distributed float averaging is order-dependent —
-    * partial-sum trees change the result run to run; quantizing to longs
-    * makes the accumulation associative, so refined centroids are
-    * IDENTICAL under any partitioning (and an independent engine can
-    * recompute the per-cell sums exactly — q_ivf_cell_stats). Empty cells
-    * keep their previous centroid. Broadcast in, k-bounded aggregate out;
-    * the corpus never shuffles (only (cell, partial sums) rows).
-    */
-  def refineCentroids(
-      spark: SparkSession,
-      corpus: DataFrame,
-      cents: Array[(Long, Array[Float])],
-      scale: Long = FixedPointScale): Array[(Long, Array[Float])] = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(cents)
-    val dim = cents.head._2.length
-    val stats = corpus.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val cs = bc.value
-        it.map { case (_, emb) =>
-          (nearestCellIdx(cs, emb), emb.map(quantize(_, scale)))
-        }
-      }
-      .groupByKey { case (cellIdx, _) => bc.value(cellIdx)._1 }
-      .agg(new CellStatsAggregator(dim).toColumn.name("st"))
-      .collect() // exactly |cells| <= numCentroids rows
-      .map { case (cid, (n, sums)) => cid -> (n, sums) }.toMap
-    cents.map { case (cid, old) =>
-      stats.get(cid) match {
-        case Some((n, sums)) =>
-          cid -> sums.map(s2 => (Math.floorDiv(s2, n).toDouble / scale).toFloat)
-        case None => cid -> old
-      }
-    }
-  }
-
-  /** Per-cell assignment statistics with exact fixed-point sums — the
-    * driver-visible oracle surface of the Lloyd accumulation: member
-    * counts plus Σq and Σ|q| over quantized components. Scalar-only rows
-    * into a partial-aggregated groupBy; the corpus never shuffles.
+  /** Per-cell assignment statistics with exact fixed-point sums: member
+    * counts plus Σq and Σ|q| over quantized components, under the same
+    * cell assignment as [[ivfTopK]]. Long sums are associative, so the
+    * result is identical under any partitioning and an independent engine
+    * recomputes it exactly (q_ivf_cell_stats). Scalar-only rows into a
+    * partial-aggregated groupBy; the corpus never shuffles.
     */
   def ivfCellStats(spark: SparkSession, corpus: DataFrame, numCentroids: Int,
       scale: Long = FixedPointScale): DataFrame = {
@@ -318,18 +254,6 @@ object Similarity {
       .agg(count(lit(1)).as("n_members"),
         sum(col("q_sum")).as("comp_sum"),
         sum(col("q_abs_sum")).as("comp_abs_sum"))
-  }
-
-  /** ivfTopK with `refineRounds` Lloyd rounds applied to the hash-picked
-    * init before probing — better-balanced cells at the same driver-state
-    * bound (the refinement shuffles only (cell, partial-sum) scalars).
-    */
-  def ivfTopKRefined(spark: SparkSession, queries: DataFrame, corpus: DataFrame,
-      k: Int, numCentroids: Int = 256, nProbe: Int = 4, refineRounds: Int = 1): DataFrame = {
-    var cents = ivfCentroids(corpus, numCentroids)
-    var r = 0
-    while (r < refineRounds) { cents = refineCentroids(spark, corpus, cents); r += 1 }
-    ivfTopKWith(spark, queries, corpus, k, cents, nProbe)
   }
 
   /** Deterministic pseudo-random hyperplane matrix for sign-LSH, cached per
@@ -397,10 +321,9 @@ object Similarity {
     * SIZE THE PLANES TO THE CORPUS: expected bucket size is n / 2^planes,
     * so the default 8 planes suits n ≲ 16k (bucket ≈ 64); at 1M vectors use
     * ~14+ planes or the cap starts discarding whole healthy buckets (recall
-    * loss, not graceful degradation) — [[cosineNearDupPairsAuto]] derives
-    * the plane count from a corpus count so the cliff can't be hit by
-    * default. The registered demo query runs at n ≤ 2.1k where buckets
-    * average single digits.
+    * loss, not graceful degradation): planes = ceil(log2(n / 64)) keeps
+    * the expected bucket at ~64. The registered demo query runs at
+    * n ≤ 2.1k where buckets average single digits.
     */
   def cosineNearDupPairs(corpus: DataFrame, threshold: Double, planes: Int = 8,
       maxBucket: Int = 64): DataFrame = {
@@ -414,21 +337,6 @@ object Similarity {
     pairs.withColumn("score", cosine(col("emb_a"), col("emb_b")))
       .filter(col("score") >= threshold)
       .select(col("a"), col("b"), col("score"))
-  }
-
-  /** cosineNearDupPairs with the plane count auto-sized from one cheap
-    * column-pruned count(): planes = clamp(ceil(log2(n / targetBucket)),
-    * 8, 62), so expected bucket size stays ≈ targetBucket at any corpus
-    * size and the fixed-8-planes recall cliff (healthy buckets outgrowing
-    * maxBucket once n ≫ 16k) can't be hit by default. Pass `planes`
-    * explicitly via [[cosineNearDupPairs]] to avoid the extra job.
-    */
-  def cosineNearDupPairsAuto(corpus: DataFrame, threshold: Double,
-      targetBucket: Int = 64, maxBucket: Int = 64): DataFrame = {
-    val n = corpus.select(col("vec_id")).count()
-    val needed = math.ceil(math.log(math.max(n, 1).toDouble / targetBucket) / math.log(2.0)).toInt
-    val planes = math.min(62, math.max(8, needed))
-    cosineNearDupPairs(corpus, threshold, planes, maxBucket)
   }
 
   private def pairStructs(members: Column): Column = {

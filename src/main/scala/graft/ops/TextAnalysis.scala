@@ -314,10 +314,6 @@ object TextAnalysis {
     }.toDF("doc_id", "n_fp", "fp_min", "fp_sum")
   }
 
-  /** The winnowing fingerprint set itself (sorted) — test/reference form. */
-  def winnowSet(text: String, k: Int = 3, w: Int = 4): scala.collection.SortedSet[Long] =
-    scala.collection.immutable.SortedSet.from(winnowDistinctSorted(text, k, w))
-
   /** Sorted distinct window minima. Hot path: gram hashes are folded
     * incrementally over the token array (no k-gram strings are ever
     * allocated — hashing "w1 w2 w3" char-by-char with the ' ' separator is

@@ -52,52 +52,23 @@ object StreamingExtract {
       .agg(count(lit(1)).as("pages"), sum(length(col("text"))).as("text_chars"))
   }
 
-  /** Streaming exact dedup with keyed state (flatMapGroupsWithState): the
-    * first document per content hash survives across the WHOLE stream —
-    * later micro-batches carrying an already-seen text emit nothing.
-    * Within one micro-batch the minimum doc id wins (deterministic under
-    * partition reordering). State per key is a single boolean; at crawl
-    * scale the keys are content hashes in a RocksDB state store, so state
-    * size is bytes-per-distinct-document, never the text itself.
+  /** Streaming exact dedup with keyed, bounded state
+    * (flatMapGroupsWithState): the first document per content hash
+    * survives — later micro-batches carrying an already-seen text emit
+    * nothing, and within one micro-batch the minimum doc id wins
+    * (deterministic under partition reordering). State per key is a single
+    * boolean; at crawl scale the keys are content hashes in a RocksDB state
+    * store (~90 B per key with its overhead), never the text itself.
     *
-    * State growth: NoTimeout means one entry per distinct document hash,
-    * forever. Sizing: a 32-hex-char key + boolean + RocksDB overhead is
-    * ~90 B/key, so 10^9 distinct documents ≈ 90 GB spread across executor
-    * RocksDB stores — feasible but unbounded. For an infinite crawl use
-    * [[dedupStreamTtl]], which bounds state to the documents seen inside a
-    * TTL window via event-time timeouts.
-    */
-  def dedupStream(spark: SparkSession, docs: Dataset[(Long, String)]): Dataset[(Long, String)] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    docs
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { case (id, text) => (Md5.hex(md, text), id, text) }
-      }
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, (Long, String)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[(String, Long, String)], state: GroupState[Boolean]) =>
-          if (state.exists) Iterator.empty
-          else {
-            state.update(true)
-            val first = rows.minBy(_._2)
-            Iterator.single((first._2, first._3))
-          }
-      }
-  }
-
-  /** [[dedupStream]] with bounded state: the per-hash state entry is
-    * evicted once the event-time watermark passes the key's last sighting
-    * plus `ttlMillis` (sliding TTL — every duplicate sighting extends the
-    * clock, so hot duplicates stay suppressed while cold hashes expire).
-    * Eviction trades exactness for boundedness: a duplicate arriving more
-    * than the TTL after its content hash was last seen is re-emitted. At
-    * crawl scale this caps RocksDB state at (documents seen per TTL
-    * window) × ~90 B instead of the corpus lifetime, and is the standard
-    * windowed-dedup contract (Spark's own dropDuplicatesWithinWatermark
-    * makes the same trade).
+    * The per-hash state entry is evicted once the event-time watermark
+    * passes the key's last sighting plus `ttlMillis` (sliding TTL — every
+    * duplicate sighting extends the clock, so hot duplicates stay
+    * suppressed while cold hashes expire). Eviction trades exactness for
+    * boundedness: a duplicate arriving more than the TTL after its content
+    * hash was last seen is re-emitted. This caps state at (documents seen
+    * per TTL window) × ~90 B instead of the corpus lifetime, and is the
+    * standard windowed-dedup contract (Spark's own
+    * dropDuplicatesWithinWatermark makes the same trade).
     *
     * Input rows carry an event timestamp; `watermarkDelay` is the usual
     * out-of-orderness bound (withWatermark).

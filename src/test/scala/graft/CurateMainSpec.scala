@@ -38,6 +38,11 @@ class CurateMainSpec extends AnyFunSuite {
     val e2 = intercept[IllegalArgumentException](
       ExtractMain.parse(List("--out", "/d", "--buckets")))
     assert(e2.getMessage.contains("--buckets requires a value"))
+    // nor does a next token that is itself a flag: `--out --benchmark` must
+    // not write to a directory named --benchmark
+    val e3 = intercept[IllegalArgumentException](
+      CurateMain.parse(List("--input", "/d/docs", "--out", "--benchmark", "/d/eval")))
+    assert(e3.getMessage == "--out requires a value")
   }
 
   test("null-text rows are dropped at intake, not NPE'd") {

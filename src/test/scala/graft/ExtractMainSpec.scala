@@ -20,6 +20,11 @@ class ExtractMainSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](ExtractMain.parse(List("--bogus")))
     // resume has one policy: stale buckets are always re-extracted
     assertThrows[IllegalArgumentException](ExtractMain.parse(List("--out", "/x", "--accept-stale-versions")))
+    // a value flag does not take the next flag as its value: `--out
+    // --no-resume` must not write to a directory named --no-resume
+    val e = intercept[IllegalArgumentException](
+      ExtractMain.parse(List("--input", "/data/pages", "--out", "--no-resume")))
+    assert(e.getMessage == "--out requires a value")
   }
 
   test("arg parsing: --buckets rejects non-positive and non-numeric values") {

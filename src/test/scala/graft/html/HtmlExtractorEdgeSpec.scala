@@ -14,56 +14,56 @@ class HtmlExtractorEdgeSpec extends AnyFunSuite {
     ex.tables(t).fragment.rows.map(_.columns)
 
   test("duplicate header names: python-dict semantics, last value wins") {
-    val ex = HtmlExtractor.extract(
+    val ex = StringExtract.extract(
       "<table><tr><th>Name</th><th>Name</th></tr><tr><td>a</td><td>b</td></tr></table>")
     assert(cells(ex) == List(Vector("name" -> Cell.Str("b"))))
   }
 
   test("ragged short rows pad with empty strings to the header width") {
-    val ex = HtmlExtractor.extract(
+    val ex = StringExtract.extract(
       "<table><tr><th>a</th><th>b</th><th>c</th></tr><tr><td>1</td></tr></table>")
     assert(cells(ex) == List(Vector(
       "a" -> Cell.Str("1"), "b" -> Cell.Str(""), "c" -> Cell.Str(""))))
   }
 
   test("rows wider than the th header: header pads with empty names, dict collapse keeps the last") {
-    val ex = HtmlExtractor.extract(
+    val ex = StringExtract.extract(
       "<table><tr><th>a</th></tr><tr><td>1</td><td>2</td><td>3</td></tr></table>")
     assert(cells(ex) == List(Vector("a" -> Cell.Str("1"), "" -> Cell.Str("3"))))
   }
 
   test("empty table emits nothing; th-only table emits an empty fragment") {
-    val none = HtmlExtractor.extract(
+    val none = StringExtract.extract(
       "<p>Some intro text that is long enough to be kept for sure.</p><table></table>")
     assert(none.tables.isEmpty)
-    val thOnly = HtmlExtractor.extract("<table><tr><th>a</th><th>b</th></tr></table>")
+    val thOnly = StringExtract.extract("<table><tr><th>a</th><th>b</th></tr></table>")
     assert(thOnly.tables.size == 1)
     assert(thOnly.tables.head.fragment.rows.isEmpty)
   }
 
   test("newline inside a cell becomes a space (C8); <br> concatenates") {
-    val nl = HtmlExtractor.extract("<table><tr><td>a\nb</td><td>x</td></tr></table>")
+    val nl = StringExtract.extract("<table><tr><td>a\nb</td><td>x</td></tr></table>")
     assert(cells(nl) == List(Vector("0" -> Cell.Str("a b"), "1" -> Cell.Str("x"))))
-    val br = HtmlExtractor.extract("<table><tr><td>a<br>b</td><td>x</td></tr></table>")
+    val br = StringExtract.extract("<table><tr><td>a<br>b</td><td>x</td></tr></table>")
     assert(cells(br) == List(Vector("0" -> Cell.Str("ab"), "1" -> Cell.Str("x"))))
   }
 
   test("comments never produce tables or text") {
-    val ex = HtmlExtractor.extract(
+    val ex = StringExtract.extract(
       "<!-- <table><tr><td>ghost</td></tr></table> --><p>Long enough paragraph to be kept here.</p>")
     assert(ex.tables.isEmpty)
     assert(!ex.mainText.contains("ghost"))
   }
 
   test("unclosed td/tr (implied closes) parse like explicit markup") {
-    val ex = HtmlExtractor.extract("<table><tr><td>a<td>b<tr><td>c</table>")
+    val ex = StringExtract.extract("<table><tr><td>a<td>b<tr><td>c</table>")
     assert(cells(ex) == List(
       Vector("0" -> Cell.Str("a"), "1" -> Cell.Str("b")),
       Vector("0" -> Cell.Str("c"), "1" -> Cell.Str(""))))
   }
 
   test("nested tables: outer and inner both emitted, inner text not duplicated into outer") {
-    val ex = HtmlExtractor.extract(
+    val ex = StringExtract.extract(
       "<table><tr><td>outer<table><tr><td>inner</td></tr></table></td><td>y</td></tr></table>")
     assert(ex.tables.size == 2)
     assert(cells(ex, 0) == List(Vector("0" -> Cell.Str("outer"), "1" -> Cell.Str("y"))))
@@ -71,12 +71,12 @@ class HtmlExtractorEdgeSpec extends AnyFunSuite {
   }
 
   test("'>' inside an attribute value does not break the tag scanner") {
-    val ex = HtmlExtractor.extract("""<table><tr><td title="a>b">v</td></tr></table>""")
+    val ex = StringExtract.extract("""<table><tr><td title="a>b">v</td></tr></table>""")
     assert(cells(ex) == List(Vector("0" -> Cell.Str("v"))))
   }
 
   test("non-numeric data-page falls back to the current page") {
-    val ex = HtmlExtractor.extract(
+    val ex = StringExtract.extract(
       """<div data-page="xx"><table><tr><td>v</td></tr></table></div>""")
     assert(ex.tables.size == 1)
     assert(ex.tables.head.fragment.page == 1)
@@ -100,9 +100,9 @@ class HtmlExtractorEdgeSpec extends AnyFunSuite {
   }
 
   test("character references in colspan and data-page values are decoded") {
-    val span = HtmlExtractor.extract("""<table><tr><td colspan="&#50;">a</td></tr></table>""")
+    val span = StringExtract.extract("""<table><tr><td colspan="&#50;">a</td></tr></table>""")
     assert(cells(span) == List(Vector("0" -> Cell.Str("a"), "1" -> Cell.Str("a"))))
-    val page = HtmlExtractor.extract("""<div data-page="&#51;"><table><tr><td>v</td></tr></table></div>""")
+    val page = StringExtract.extract("""<div data-page="&#51;"><table><tr><td>v</td></tr></table></div>""")
     assert(page.tables.map(_.fragment.page) == List(3))
   }
 

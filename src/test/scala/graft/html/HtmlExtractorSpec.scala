@@ -27,7 +27,7 @@ class HtmlExtractorSpec extends AnyFunSuite {
       |</body></html>""".stripMargin
 
   test("bordered markup table with th header") {
-    val ex = HtmlExtractor.extract(borderedPage)
+    val ex = StringExtract.extract(borderedPage)
     assert(ex.tables.size == 1)
     val frag = ex.tables.head.fragment
     assert(frag.page == 1)
@@ -52,7 +52,7 @@ class HtmlExtractorSpec extends AnyFunSuite {
         |<tr><td>Vulpes lucerna</td><td>mammal</td></tr>
         |<tr><td>Rana vitrea</td><td>amphibian</td></tr>
         |</table></body>""".stripMargin
-    val ex = HtmlExtractor.extract(html)
+    val ex = StringExtract.extract(html)
     val frag = ex.tables.head.fragment
     assert(frag.columnNames == Vector("0", "1"))
     assert(frag.rows.size == 2)
@@ -65,12 +65,12 @@ class HtmlExtractorSpec extends AnyFunSuite {
         |<tr><td>Common name</td><td>Scientific name</td></tr>
         |<tr><td>Lantern Fox</td><td>Vulpes lucerna</td></tr>
         |</table>""".stripMargin
-    val ex = HtmlExtractor.extract(html, ExtractSettings(hints = List("common_name")))
+    val ex = StringExtract.extract(html, ExtractSettings(hints = List("common_name")))
     val frag = ex.tables.head.fragment
     assert(frag.columnNames == Vector("common_name", "scientific_name"))
     assert(frag.rows.size == 1)
     // without hints the first row stays data
-    val ex2 = HtmlExtractor.extract(html)
+    val ex2 = StringExtract.extract(html)
     assert(ex2.tables.head.fragment.rows.size == 2)
     assert(ex2.tables.head.fragment.columnNames == Vector("0", "1"))
   }
@@ -82,7 +82,7 @@ class HtmlExtractorSpec extends AnyFunSuite {
         |<tr><td rowspan="2">X</td><td>1</td><td>2</td></tr>
         |<tr><td colspan="2">YZ</td></tr>
         |</table>""".stripMargin
-    val ex = HtmlExtractor.extract(html)
+    val ex = StringExtract.extract(html)
     val frag = ex.tables.head.fragment
     assert(frag.rows.size == 2)
     assert(strCell(frag.rows(1), "a") == "X") // rowspan fill
@@ -98,7 +98,7 @@ class HtmlExtractorSpec extends AnyFunSuite {
         |Lantern Fox     1200         stable
         |Glass Frog      85           declining
         |</pre></body>""".stripMargin
-    val ex = HtmlExtractor.extract(html)
+    val ex = StringExtract.extract(html)
     assert(ex.tables.size == 1)
     val frag = ex.tables.head.fragment
     assert(frag.columnNames == Vector("0", "1", "2"))
@@ -115,7 +115,7 @@ class HtmlExtractorSpec extends AnyFunSuite {
         |-----------   -----
         |Lantern Fox   1200
         |</pre>""".stripMargin
-    val ex = HtmlExtractor.extract(html)
+    val ex = StringExtract.extract(html)
     val frag = ex.tables.head.fragment
     assert(frag.columnNames == Vector("name", "count"))
     assert(frag.rows.size == 1)
@@ -129,7 +129,7 @@ class HtmlExtractorSpec extends AnyFunSuite {
         |x     y
         |1     2
         |</pre>""".stripMargin
-    val ex = HtmlExtractor.extract(html)
+    val ex = StringExtract.extract(html)
     assert(ex.tables.size == 1)
     assert(ex.spans.head.kind == "markup")
   }
@@ -139,15 +139,15 @@ class HtmlExtractorSpec extends AnyFunSuite {
       """<div data-page="1"><p>Page one content, long enough to keep around.</p></div>
         |<div data-page="2"><table><tr><td>r1</td></tr></table></div>
         |<div data-page="3"><table><tr><td>r2</td></tr></table></div>""".stripMargin
-    val ex = HtmlExtractor.extract(html)
+    val ex = StringExtract.extract(html)
     assert(ex.tables.map(_.fragment.page) == List(2, 3))
-    val ranged = HtmlExtractor.extract(html, ExtractSettings(pageRange = Some((3, 3))))
+    val ranged = StringExtract.extract(html, ExtractSettings(pageRange = Some((3, 3))))
     assert(ranged.tables.map(_.fragment.page) == List(3))
   }
 
   test("entities and NFKC in cells") {
     val html = """<table><tr><td>a &amp; b&nbsp;&eacute;</td><td>x&#233;y ﬁn</td></tr></table>"""
-    val ex = HtmlExtractor.extract(html)
+    val ex = StringExtract.extract(html)
     val r = ex.tables.head.fragment.rows.head
     assert(strCell(r, "0") == "a & b é")
     assert(strCell(r, "1") == "xéy fin") // NFKC expands the fi ligature
@@ -168,7 +168,7 @@ class HtmlExtractorSpec extends AnyFunSuite {
           List(ColumnMapping(1, "Scientific Name"), ColumnMapping(0, "Common"))),
         TableMapping("ignored second mapping", "none", 1, 1, List(ColumnMapping(0, "x")))),
       citation = "Imaginary Atlas (2031)")
-    val ex = HtmlExtractor.extract(html, ExtractSettings(mapping = Some(mapping)))
+    val ex = StringExtract.extract(html, ExtractSettings(mapping = Some(mapping)))
     assert(ex.citation.contains("Imaginary Atlas (2031)"))
     assert(ex.tables.size == 2) // one fragment per page, first mapping only
     val f1 = ex.tables.head
@@ -182,20 +182,20 @@ class HtmlExtractorSpec extends AnyFunSuite {
   }
 
   test("raw extraction JSON mirrors the reference writer layout") {
-    val ex = HtmlExtractor.extract("""<table><tr><th>A</th></tr><tr><td>v</td></tr></table>""")
+    val ex = StringExtract.extract("""<table><tr><th>A</th></tr><tr><td>v</td></tr></table>""")
     val json = HtmlExtractor.toRawJson("demo.html", ex)
     assert(json == """{"tables": [{"table_fragments": [{"rows": [{"a": "v"}], "page": 1}]}], "citation": null, "metadata": {"filename": "demo.html"}}""")
   }
 
   test("extraction is deterministic and input-order independent") {
-    val ex1 = HtmlExtractor.extract(borderedPage)
-    val ex2 = HtmlExtractor.extract(borderedPage)
+    val ex1 = StringExtract.extract(borderedPage)
+    val ex2 = StringExtract.extract(borderedPage)
     assert(HtmlExtractor.toRawJson("f", ex1) == HtmlExtractor.toRawJson("f", ex2))
   }
 
   test("empty / boilerplate-only page yields no tables and empty-ish text") {
     val html = """<nav><a href="/">A very long navigation link list goes here</a></nav>"""
-    val ex = HtmlExtractor.extract(html)
+    val ex = StringExtract.extract(html)
     assert(ex.tables.isEmpty)
     assert(ex.mainText.isEmpty)
   }

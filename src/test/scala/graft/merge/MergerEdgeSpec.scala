@@ -278,7 +278,9 @@ class MergerEdgeSpec extends AnyFunSuite {
         r("family" -> "Family", "scientific_name" -> "Scientific name"),
         r(ammi: _*)), 1)))),
       citation = Cell.Str("Flora (2020)"))
-    val filtered = MergeOps.filterHeaderRows(doc)
+    // the remove-header-rows posttransformer, run by the load phase
+    val filtered = MergePipeline.load(doc, MergePipeline.Settings(
+      pretransformers = Nil, posttransformers = List(new FilterHeaderRowsTransformer)))
     assert(filtered.tables.head.fragments.head.rows == List(r(ammi: _*)))
     assert(filtered.citation == Cell.Str("Flora (2020)"))
   }

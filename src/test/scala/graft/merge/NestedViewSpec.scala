@@ -68,7 +68,7 @@ class NestedViewSpec extends AnyFunSuite {
   }
 
   test("registered temp view answers plain spark.sql with LATERAL VIEW explodes") {
-    MergeJob.registerNestedView(spark, merged, "merged_tables")
+    MergeJob.nestedMergedTables(spark, merged).createOrReplaceTempView("merged_tables")
     val out = spark.sql(
       """SELECT col_name, count(*) AS n_cells
         |FROM merged_tables

@@ -78,29 +78,6 @@ class OpsSpec extends AnyFunSuite {
     assert(Similarity.ivfCentroids(emb.filter(col("vec_id") < 5), 16).length == 5)
   }
 
-  test("Lloyd refinement: exact fixed-point means, identical under repartitioning") {
-    val init = Similarity.ivfCentroids(emb, 8)
-    val refinedA = Similarity.refineCentroids(spark, emb, init)
-    val refinedB = Similarity.refineCentroids(spark, emb.repartition(13), init)
-    // long accumulation is associative -> refined centroids are bit-equal
-    // regardless of partition layout (float averaging would not be)
-    assert(refinedA.map(_._1).toSeq == refinedB.map(_._1).toSeq)
-    refinedA.zip(refinedB).foreach { case ((_, a), (_, b)) =>
-      assert(a.toSeq == b.toSeq)
-    }
-    // refinement moved at least one centroid off its init position
-    assert(refinedA.zip(init).exists { case ((_, r), (_, o)) => r.toSeq != o.toSeq })
-    // refined IVF keeps usable recall vs brute force
-    val queries = emb.filter(col("vec_id") < 10)
-    val exact = Similarity.bruteForceTopK(queries, emb, 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val refined = Similarity.ivfTopKRefined(spark, queries, emb, 10,
-      numCentroids = 8, nProbe = 4, refineRounds = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (exact & refined).size.toDouble / exact.size
-    assert(recall >= 0.5, s"refined IVF recall $recall too low")
-  }
-
   test("cosine near-dup finds planted scaled twins (scale-invariance of cosine)") {
     val planted = emb.select(col("vec_id"), col("embedding")).union(
       emb.filter(col("vec_id") % 25 === 0).select(
@@ -141,19 +118,6 @@ class OpsSpec extends AnyFunSuite {
         id -> sig
       }.toMap
     assert(sigs == want)
-  }
-
-  test("cosineNearDupPairsAuto sizes planes from the corpus and keeps the planted twins") {
-    val planted = emb.select(col("vec_id"), col("embedding")).union(
-      emb.filter(col("vec_id") % 25 === 0).select(
-        (col("vec_id") + 100000).as("vec_id"),
-        transform(col("embedding"), x => x * lit(1.001f)).as("embedding")))
-    val pairs = Similarity.cosineNearDupPairsAuto(planted, 0.95).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val expected = emb.filter(col("vec_id") % 25 === 0)
-      .select("vec_id").collect().map(_.getLong(0))
-      .map(id => (id, id + 100000)).toSet
-    assert(expected.forall(pairs.contains), s"missing ${expected -- pairs}")
   }
 
   test("shingle kernel trims SQL-style: control whitespace survives tokenization") {
@@ -260,38 +224,7 @@ class OpsSpec extends AnyFunSuite {
     assert(s3 > 50 && s3 < 150, s"src3 kept $s3")
   }
 
-  test("train/holdout split is disjoint, complete, and id-stable as the corpus grows") {
-    import spark.implicits._
-    val ids = (0L until 2000L).toDF("doc_id")
-    val (train, holdout) = Sampling.trainHoldoutSplit(ids, col("doc_id"), holdoutPermille = 100)
-    val t = train.collect().map(_.getLong(0)).toSet
-    val h = holdout.collect().map(_.getLong(0)).toSet
-    assert((t & h).isEmpty)
-    assert(t.size + h.size == 2000)
-    assert(h.size > 100 && h.size < 300, s"holdout ${h.size}") // ~10%
-    // growing the corpus never moves an existing id across the split
-    val (_, holdout2) = Sampling.trainHoldoutSplit(
-      (0L until 4000L).toDF("doc_id"), col("doc_id"), holdoutPermille = 100)
-    val h2 = holdout2.collect().map(_.getLong(0)).toSet
-    assert(h2.filter(_ < 2000L) == h)
-  }
-
-  test("split composes with sampling: holdout fraction survives a 0.5 downsample") {
-    import spark.implicits._
-    // the r4 trap: split and sample keying low buckets of the SAME hash
-    // made "10% holdout of a 0.5 sample" actually 20% (holdout buckets
-    // survived sampling entirely). With the independent split hash the
-    // holdout share of the SAMPLED corpus stays ~10%.
-    val rows = (0L until 10000L).map(i => (i, "web")).toDF("doc_id", "source")
-    val sampled = Sampling.stratifiedSample(
-      rows, col("source"), col("doc_id"), Map("web" -> 0.5))
-    val (_, holdout) = Sampling.trainHoldoutSplit(sampled, col("doc_id"), holdoutPermille = 100)
-    val nSampled = sampled.count().toDouble
-    val frac = holdout.count() / nSampled
-    assert(frac > 0.07 && frac < 0.13, s"holdout fraction of sample was $frac")
-  }
-
-  test("advanceLedger: re-running the same batch against the advanced ledger accepts nothing") {
+  test("incremental dedup: min id wins within a batch, ledgered hashes are rejected") {
     import spark.implicits._
     val ledger = Seq("known text").toDF("text").select(md5(col("text")).as("content_md5"))
     val batch = Seq(
@@ -300,13 +233,12 @@ class OpsSpec extends AnyFunSuite {
     val accepted = Dedup.incrementalExactDedup(batch, ledger)
     // within-batch min-id wins; ledgered hash rejected
     assert(accepted.collect().map(_.getLong(1)).toSet == Set(3L, 9L))
-    val advanced = Dedup.advanceLedger(ledger, accepted)
-    assert(advanced.count() == 3) // disjoint union: 1 prior + 2 accepted
-    // idempotence: the SAME batch replayed accepts zero rows
-    assert(Dedup.incrementalExactDedup(batch, advanced).count() == 0)
-    // and a later batch still dedups against everything accepted so far
+    // the ledger grown by the accepted hashes: the SAME batch replayed
+    // accepts zero rows, and a later batch dedups against everything so far
+    val grown = ledger.union(accepted.select(col("content_md5")))
+    assert(Dedup.incrementalExactDedup(batch, grown).count() == 0)
     val next = Seq((20L, "fresh text"), (21L, "brand new")).toDF("doc_id", "text")
-    assert(Dedup.incrementalExactDedup(next, advanced)
+    assert(Dedup.incrementalExactDedup(next, grown)
       .collect().map(_.getLong(1)).toSet == Set(21L))
   }
 
@@ -330,10 +262,11 @@ class OpsSpec extends AnyFunSuite {
     assert(viaBloom == viaExact, "bloom prune must not change the accepted set")
     assert(viaBloom.size == 120 && viaBloom.forall(_._2 < 2000L), "min-id twins win, replays rejected")
 
-    // append loop: advance ledger AND filter, replay the same batch -> zero
+    // append loop: grow the ledger, rebuild its filter, replay the same
+    // batch -> zero
     val accepted = Dedup.incrementalExactDedupBloom(batch, ledger, lb)
-    val ledger2 = Dedup.advanceLedger(ledger, accepted)
-    val lb2 = Dedup.advanceLedgerBloom(lb, accepted)
+    val ledger2 = ledger.union(accepted.select(col("content_md5")))
+    val lb2 = Dedup.ledgerBloom(ledger2, expectedItems = 320, fpp = 0.2)
     assert(Dedup.incrementalExactDedupBloom(batch, ledger2, lb2).count() == 0)
     // a later batch dedups against everything accepted so far
     val next = Seq((5000L, "new doc 7 body"), (5001L, "genuinely unseen")).toDF("doc_id", "text")
@@ -352,7 +285,7 @@ class OpsSpec extends AnyFunSuite {
       ids(Dedup.incrementalExactDedup(batch, ledger)))
   }
 
-  test("bloom ledger: no false negatives; incompatible advance parameters fail loudly") {
+  test("bloom ledger: no false negatives") {
     import spark.implicits._
     val ledger = (0 until 500).map(i => s"doc $i").toDF("text")
       .select(md5(col("text")).as("content_md5"))
@@ -360,13 +293,8 @@ class OpsSpec extends AnyFunSuite {
     // Bloom contract the prune's correctness rests on: every ledger digest
     // answers mightContain=true — a false negative would skip verification
     // and admit a duplicate
-    val misses = ledger.collect().map(_.getString(0)).count(h => !lb.filter.mightContainString(h))
+    val misses = ledger.collect().map(_.getString(0)).count(h => !lb.mightContainString(h))
     assert(misses == 0, s"$misses ledger digests answered mightContain=false")
-    // advancing with a filter sized differently is an error, not silent
-    // corruption: mergeInPlace requires identical bit/hash geometry
-    val other = Seq("x").toDF("text").select(md5(col("text")).as("content_md5"))
-    val incompatible = Dedup.LedgerBloom(lb.filter, expectedItems = 9999, fpp = 0.5)
-    intercept[Exception] { Dedup.advanceLedgerBloom(incompatible, other) }
   }
 
   test("decontamination: docs sharing an 8-gram with the benchmark flag") {
@@ -514,17 +442,17 @@ class OpsSpec extends AnyFunSuite {
     val a = s"alpha beta gamma $shared delta epsilon"
     val b = s"zeta eta theta iota $shared kappa"
     val c = "completely different vocabulary with no overlap at all here"
-    assert((TextAnalysis.winnowSet(a) & TextAnalysis.winnowSet(b)).nonEmpty)
-    assert((TextAnalysis.winnowSet(a) & TextAnalysis.winnowSet(c)).isEmpty)
+    assert((OpsReferences.winnowSet(a) & OpsReferences.winnowSet(b)).nonEmpty)
+    assert((OpsReferences.winnowSet(a) & OpsReferences.winnowSet(c)).isEmpty)
 
     // short docs (|grams| <= w) collapse to exactly one window minimum
-    assert(TextAnalysis.winnowSet("tiny doc").size == 1)
-    assert(TextAnalysis.winnowSet("one two three four five").size == 1) // 3 grams, w=4
+    assert(OpsReferences.winnowSet("tiny doc").size == 1)
+    assert(OpsReferences.winnowSet("one two three four five").size == 1) // 3 grams, w=4
 
     // the DataFrame summary matches the set
     val df = TextAnalysis.winnowFingerprintRows(spark, Seq((1L, a)).toDF("doc_id", "text"))
       .collect().head
-    val set = TextAnalysis.winnowSet(a)
+    val set = OpsReferences.winnowSet(a)
     assert(df.getInt(1) == set.size)
     assert(df.getLong(2) == set.head)
     assert(df.getLong(3) == set.sum)

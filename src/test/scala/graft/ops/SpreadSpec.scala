@@ -125,7 +125,7 @@ class SpreadSpec extends AnyFunSuite {
       (4L, "señora STRASSE aa bb cc dd ee")).toDF("doc_id", "text")
     val typed = DupSpans.gramDigestRows(spark, df, 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getAs[Array[Byte]](2).toSeq)).toSet
-    val column = DupSpans.gramPositionRows(spark, df, 3)
+    val column = OpsReferences.gramPositionRows(spark, df, 3)
       .select(col("doc_id"), col("pos"), unhex(md5(col("gram"))).as("g"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getAs[Array[Byte]](2).toSeq)).toSet
     assert(typed == column)

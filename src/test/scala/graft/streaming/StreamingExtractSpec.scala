@@ -44,19 +44,22 @@ class StreamingExtractSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
+    // one event time and a day's TTL: nothing is evicted, so every hash
+    // stays suppressed for the whole stream
+    val t0 = new java.sql.Timestamp(1735689600000L) // 2025-01-01T00:00:00Z
+    val input = MemoryStream[(Long, String, java.sql.Timestamp)]
     val base = java.nio.file.Files.createTempDirectory("graft-stream-dedup").toString
-    val q = StreamingExtract.dedupStream(spark, input.toDS())
+    val q = StreamingExtract.dedupStreamTtl(spark, input.toDS())
       .toDF("doc_id", "text")
       .writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("dedup_out")
       .option("checkpointLocation", s"$base/ck")
       .start()
     // batch 1: in-batch duplicate (7 vs 3 — min id wins) + a unique
-    input.addData((7L, "alpha text"), (3L, "alpha text"), (10L, "beta text"))
+    input.addData((7L, "alpha text", t0), (3L, "alpha text", t0), (10L, "beta text", t0))
     q.processAllAvailable()
     // batch 2: cross-batch duplicate must be suppressed by keyed state
-    input.addData((99L, "alpha text"), (11L, "gamma text"))
+    input.addData((99L, "alpha text", t0), (11L, "gamma text", t0))
     q.processAllAvailable()
     q.stop()
     val out = spark.table("dedup_out").as[(Long, String)].collect().sortBy(_._1)
