@@ -13,8 +13,8 @@ import graft.core.JVal._
   *  - a cell is None | plain string | multi-value-with-agreement
   *
   * Python dicts preserve insertion order, and the reference's goldens are
-  * byte-stable only because of that — so columns are a Vector of pairs with
-  * dict-update semantics, never a hash map.
+  * byte-stable only because of that — so columns are a Vector of pairs, built
+  * with dict-update semantics by [[RowBuilder]], never a hash map.
   */
 final case class ValueWithAgreement(value: String, agreementLevel: Int)
 
@@ -151,14 +151,27 @@ object RowData {
     rows.foreach(_.columns.foreach { case (k, _) => seen += k })
     seen.toVector
   }
+}
 
-  /** python dict-update semantics: replace in place when the key exists,
-    * else append.
-    */
-  def dictUpdate(cols: Vector[(String, Cell)], key: String, value: Cell): Vector[(String, Cell)] = {
-    val idx = cols.indexWhere(_._1 == key)
-    if (idx >= 0) cols.updated(idx, (key, value)) else cols :+ ((key, value))
-  }
+/** The one row builder: python dict update, linear in the number of puts. A name
+  * keeps its first pair's position and takes its last put's value. `init` is kept
+  * as it stands: a name a JSON row holds twice keeps both pairs; puts go to the first. */
+final class RowBuilder(init: Vector[(String, Cell)] = Vector.empty) {
+  private[this] val pairs = scala.collection.mutable.ArrayBuffer.from(init)
+  private[this] val slots = new java.util.HashMap[String, Integer]
+  init.indices.foreach(i => slots.putIfAbsent(init(i)._1, i))
+
+  /** dict[name] = value */
+  def put(name: String, value: Cell): Unit = combine(name, value)((_, v) => v)
+
+  /** [[put]], but a name already present takes `f(existing, value)`. */
+  def combine(name: String, value: Cell)(f: (Cell, Cell) => Cell): Unit =
+    slots.putIfAbsent(name, pairs.size) match {
+      case null => pairs += ((name, value))
+      case i => pairs(i) = (name, f(pairs(i)._2, value))
+    }
+
+  def result(): Vector[(String, Cell)] = pairs.toVector
 }
 
 /** TableFragment — schema.py:109-121 */

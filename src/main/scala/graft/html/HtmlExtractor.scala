@@ -498,16 +498,17 @@ object HtmlExtractor {
         val width = if (data.isEmpty) 0 else data.map(_.length).max
         (0 until width).map(_.toString).toVector
     }
-    val rows = data.map { cells =>
-      var cols = Vector.empty[(String, Cell)]
-      names.zipWithIndex.foreach { case (n, idx) =>
-        val v = if (idx < cells.length) cells(idx) else ""
-        cols = RowData.dictUpdate(cols, n, Cell.Str(v))
-      }
-      RowData(cols)
-    }.toList
-    Fragment(rows, raw.page)
+    Fragment(rowsOf(names.zipWithIndex, data), raw.page)
   }
+
+  /** One row per grid row under dict-update rules: each (name, column) slot
+    * takes that column's cell, or "" past the row's end. */
+  private def rowsOf(slots: Seq[(String, Int)], data: Vector[Vector[String]]): List[RowData] =
+    data.map { cells =>
+      val b = new RowBuilder
+      slots.foreach { case (n, c) => b.put(n, Cell.Str(if (c < cells.length) cells(c) else "")) }
+      RowData(b.result())
+    }.toList
 
   // -------------------------------------------------------------------
   // Scan-all read (readers/document.py:188-206 analog, with per-page
@@ -599,15 +600,8 @@ object HtmlExtractor {
     if (data.isEmpty) return None
     val width = data.map(_.length).max
     if (tm.columnMappings.exists(m => m.fromColumnNumber < 0 || m.fromColumnNumber >= width)) return None
-    val rows = data.map { cells =>
-      var cols = Vector.empty[(String, Cell)]
-      tm.columnMappings.foreach { m =>
-        val v = if (m.fromColumnNumber < cells.length) cells(m.fromColumnNumber) else ""
-        cols = RowData.dictUpdate(cols, Text.normalizeColumnName(m.toColumnName), Cell.Str(v))
-      }
-      RowData(cols)
-    }.toList
-    Some((Fragment(rows, page), raw))
+    val slots = tm.columnMappings.map(m => (Text.normalizeColumnName(m.toColumnName), m.fromColumnNumber))
+    Some((Fragment(rowsOf(slots, data), page), raw))
   }
 
   // -------------------------------------------------------------------

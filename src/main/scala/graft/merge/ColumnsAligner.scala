@@ -30,22 +30,15 @@ object ColumnsAligner {
     */
   def renameRow(mapping: collection.Map[String, String], row: RowData): RowData = {
     if (mapping.isEmpty) return row
-    var renamed = Vector.empty[(String, Cell)]
+    val b = new RowBuilder
     row.columns.foreach { case (column, value) =>
       val newName = mapping.getOrElse(column, column)
-      if (newName != Analyzers.RemoveColumn) {
-        renamed.indexWhere(_._1 == newName) match {
-          case -1 => renamed = renamed :+ ((newName, value))
-          case idx =>
-            val existing = renamed(idx)._2
-            val merged =
-              if (column == newName) appendColumnValue(value, existing)
-              else appendColumnValue(existing, value)
-            renamed = renamed.updated(idx, (newName, merged))
+      if (newName != Analyzers.RemoveColumn)
+        b.combine(newName, value) { (existing, v) =>
+          if (column == newName) appendColumnValue(v, existing) else appendColumnValue(existing, v)
         }
-      }
     }
-    row.withColumns(renamed)
+    row.withColumns(b.result())
   }
 
   val MaxSample = 50

@@ -250,19 +250,18 @@ final class SplitColumnTransformer(language: String = "en") extends FragmentTran
       col -> ((l.replace("_", " "), r.replace("_", " ")))
     }
     fragment.copy(rows = fragment.rows.map { row =>
-      var cols = Vector.empty[(String, Cell)]
+      val b = new RowBuilder
       row.columns.foreach { case (col, value) =>
         splits.get(col) match {
           case Some((leftHeader, rightHeader)) =>
             val (lh, rh) = headerTexts(col)
             val (lv, rv) = splitColumnValue(value, lh, rh)
-            cols = RowData.dictUpdate(cols, leftHeader, lv)
-            cols = RowData.dictUpdate(cols, rightHeader, rv)
-          case None =>
-            cols = RowData.dictUpdate(cols, col, value)
+            b.put(leftHeader, lv)
+            b.put(rightHeader, rv)
+          case None => b.put(col, value)
         }
       }
-      row.withColumns(cols)
+      row.withColumns(b.result())
     })
   }
 }

@@ -45,12 +45,11 @@ object MergeOps {
   /** merge.py:74-103 */
   def dropEmptyColumns(doc: TableDoc): TableDoc =
     mapFragments(doc) { fr =>
-      val allCols = fr.columnNames
-      val emptyCols = allCols.filter { col =>
-        // missing cell == dict .get -> None == empty (merge.py:85-89)
-        fr.rows.forall(_.get(col).forall(_.isEmptyValue))
-      }.toSet
-      fr.copy(rows = fr.rows.map(r => r.withColumns(r.columns.filterNot { case (k, _) => emptyCols.contains(k) })))
+      // a name stays when a row's first cell of it (what `RowData.get` reads)
+      // is not empty; a missing cell is dict .get -> None == empty (merge.py:85-89)
+      val kept = scala.collection.mutable.HashSet.empty[String]
+      fr.rows.foreach(_.columns.distinctBy(_._1).foreach { case (k, v) => if (!v.isEmptyValue) kept += k })
+      fr.copy(rows = fr.rows.map(r => r.withColumns(r.columns.filter { case (k, _) => kept.contains(k) })))
     }
 
   /** merge.py:106-112: drop empty fragments; drop tables left with none. */

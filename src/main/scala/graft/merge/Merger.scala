@@ -50,9 +50,9 @@ object FragmentsBuilder {
     * order first, left's values win, left-only keys appended.
     */
   def mergeColumnsWithoutAgreement(left: RowData, right: RowData): Vector[(String, Cell)] = {
-    var cols = right.normalize().columns
-    left.normalize().columns.foreach { case (k, v) => cols = RowData.dictUpdate(cols, k, v) }
-    cols
+    val b = new RowBuilder(right.normalize().columns)
+    left.normalize().columns.foreach { case (k, v) => b.put(k, v) }
+    b.result()
   }
 
   /** fragments_builder.py:20-37: per column, per distinct value, summed
@@ -95,16 +95,16 @@ final class TableFragmentBuilder(
     columnAgreement: Boolean) {
 
   val page: Int = initialFragment.page
-  private var rows: List[RowData] =
+  private val rows = scala.collection.mutable.ListBuffer.from(
     initialFragment.rows.zipWithIndex.map { case (r, i) =>
       r.normalize(rowAgreement = true).copy(
         sources = initialUuid.map(List(_)),
         rowIdx = Some(i))
-    }
+    })
 
   def nextLeftRows(): List[RowData] = {
-    val r = rows
-    rows = Nil
+    val r = rows.toList
+    rows.clear()
     r
   }
 
@@ -118,10 +118,10 @@ final class TableFragmentBuilder(
   def mergeAndAppend(left: RowData, right: RowData): Unit =
     append(FragmentsBuilder.mergeRows(left, right, agreement, columnAgreement))
 
-  def build(): Fragment = Fragment(rows.filterNot(_.isEmpty), page)
+  def build(): Fragment = Fragment(rows.toList.filterNot(_.isEmpty), page)
 
   private def append(row: RowData): Unit =
-    rows = rows :+ row.normalize(rowAgreement = true)
+    rows += row.normalize(rowAgreement = true)
 }
 
 /** N-way fuzzy ordered full-outer merge — reference parity with
@@ -201,7 +201,7 @@ object Merger {
               val rightUuid = rightDoc.uuid
               val rightRows = rightFragment.rows.zipWithIndex.map { case (r, i) =>
                 ColumnsAligner.renameRow(mapping, r).copy(rowIdx = Some(i))
-              }
+              }.toVector
               val leftRows = builder.nextLeftRows()
               var rightIdx = 0
 
@@ -221,7 +221,7 @@ object Merger {
                   builder.appendUnmatched(leftRow)
                 }
               }
-              builder.appendSkipped(rightRows.drop(rightIdx), rightUuid)
+              builder.appendSkipped(rightRows.drop(rightIdx).toList, rightUuid)
             }
           }
         }

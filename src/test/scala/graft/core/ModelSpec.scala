@@ -25,10 +25,12 @@ class ModelSpec extends AnyFunSuite {
 
   test("dict-update keeps original position for existing keys") {
     val cols = Vector("a" -> (Cell.Str("1"): Cell), "b" -> (Cell.Str("2"): Cell))
-    val updated = RowData.dictUpdate(cols, "a", Cell.Str("9"))
-    assert(updated == Vector("a" -> Cell.Str("9"), "b" -> Cell.Str("2")))
-    val appended = RowData.dictUpdate(cols, "c", Cell.Str("3"))
-    assert(appended.map(_._1) == Vector("a", "b", "c"))
+    val updated = new RowBuilder(cols)
+    updated.put("a", Cell.Str("9"))
+    assert(updated.result() == Vector("a" -> Cell.Str("9"), "b" -> Cell.Str("2")))
+    val appended = new RowBuilder(cols)
+    appended.put("c", Cell.Str("3"))
+    assert(appended.result().map(_._1) == Vector("a", "b", "c"))
   }
 
   test("is_empty_value semantics (schema.py:83-90)") {
