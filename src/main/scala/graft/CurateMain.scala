@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Cli
-import graft.ops.{Curation, Decontaminate, DupSpans, LineDedup}
+import graft.ops.{Curation, LineDedup}
 
 /** spark-submit entrypoint for the corpus-curation pipeline — the
   * training-data hygiene chain composed from the independently-oracled
@@ -15,7 +15,10 @@ import graft.ops.{Curation, Decontaminate, DupSpans, LineDedup}
   *  3. duplicated-substring coverage gate ([[graft.ops.DupSpans]]) — docs
   *     over `--max-dup-permille` duplicated tokens dropped;
   *  4. benchmark decontamination ([[graft.ops.Decontaminate]]) when
-  *     `--benchmark` is given — contaminated ids left-anti joined out.
+  *     `--benchmark` is given — contaminated docs dropped.
+  *
+  * Gates 2-4 run as one keyed pass, [[graft.ops.Curation.gates]], which
+  * decides each doc as the three standalone ops would.
   *
   * Every run builds this one chain; the flags below set thresholds inside
   * it and never add or remove a gate.
@@ -30,15 +33,14 @@ import graft.ops.{Curation, Decontaminate, DupSpans, LineDedup}
   *   [--max-dup-permille 500]       # span-coverage gate (dup_tokens/n_tokens)
   * }}}
   *
-  * Scale shape: every gate runs on a SCALAR stream — the quality/dedup,
-  * span-coverage and contamination stages each reduce to a (doc_id) keep
-  * or drop set, those sets intersect as 8-byte-row joins, and the corpus
-  * text joins the final keep set exactly once (left semi). The line strip
-  * transforms text in place (its own digests shuffle, not the text), so
-  * document text crosses the wire at most twice end to end regardless of
-  * how many gates there are. Per-stage counts in the final stats line
-  * are observed as a side effect of one count of the output, which stays
-  * persisted for the write (see [[run]]).
+  * Scale shape: document text never crosses a gate's exchange. The line
+  * strip shuffles its line digests and rebuilds text in place; the gates
+  * tokenize each stripped doc once and shuffle only keyed scalar rows (one
+  * content MD5 per doc, one 16-byte digest per k-gram), once on the key
+  * and once on doc_id; the corpus text then joins the kept ids once (left
+  * semi). Per-stage counts in the final stats line are observed as a side
+  * effect of one count of the output, which stays persisted for the write
+  * (see [[run]]).
   *
   * Cluster topology belongs to spark-submit flags, not this code; the
   * session is `getOrCreate()` with no master override.
@@ -98,8 +100,10 @@ object CurateMain {
     * stat -1 — so the chain can be registered as a lazily-built query (the
     * driver's oracle replay).
     *
-    * STATS (computeStats = true): each gate count is a `Dataset.observe`
-    * on its frame, collected as a side effect of the ONE action this call
+    * STATS (computeStats = true): the intake and strip counts are a
+    * `Dataset.observe` on their frames, the three gate counts one observe
+    * of three sums on the per-doc verdicts, all collected as a side
+    * effect of the ONE action this call
     * runs — a `count()` of the output, which is persisted MEMORY_AND_DISK
     * so the caller's write reads the cached rows instead of re-running the
     * chain. That output is the only frame left persisted: a caller in a
@@ -109,21 +113,26 @@ object CurateMain {
   def run(spark: SparkSession, docs: DataFrame, benchmark: Option[DataFrame],
       args: Args, computeStats: Boolean = true): (DataFrame, Stats) = {
     // A fresh Observation per stat point (none when construction-pure),
-    // read once the output's action has run. Adaptive execution drops a
-    // subtree whose consumer turned out empty, and its observation with
-    // it; such a stat falls back to counting its frame directly.
-    def observed(df: DataFrame): (DataFrame, Option[() => Long]) =
+    // read once the output's action has run: one Long per `stats` column.
+    // Adaptive execution drops a subtree whose consumer turned out empty,
+    // and its observation with it; such a point falls back to aggregating
+    // its frame directly.
+    def observed(df: DataFrame, stats: Column*): (DataFrame, Option[() => Seq[Long]]) =
       if (!computeStats) (df, None)
       else {
         val o = Observation()
-        (df.observe(o, count(lit(1)).as("n")),
-          Some(() => o.get.get("n").fold(df.count())(_.asInstanceOf[Long])))
+        val named = stats.zipWithIndex.map { case (c, i) => c.as(s"s$i") }
+        (df.observe(o, named.head, named.tail: _*), Some(() => {
+          val m = o.get
+          if (m.isEmpty) df.agg(named.head, named.tail: _*).head().toSeq.map(_.asInstanceOf[Long])
+          else named.indices.map(i => m(s"s$i").asInstanceOf[Long])
+        }))
       }
     // null text is dropped at intake and counted out of input_docs: the
     // strip's posexplode would drop such a row silently, and the typed
     // signal pass would NPE on it
     val (intake, inputN) = observed(
-      docs.select(col("doc_id"), col("text")).filter(col("text").isNotNull))
+      docs.select(col("doc_id"), col("text")).filter(col("text").isNotNull), count(lit(1)))
     // The strip consumes `input` twice (line-digest side + rebuild join
     // side). When the input is itself an expensive subtree — the
     // end-to-end path feeds the whole extraction pipeline in here — one
@@ -141,40 +150,35 @@ object CurateMain {
     // Such rows are counted in input_docs (observed above the pin) and by
     // no later gate.
     val input = graft.ops.Spread.shareIfComplex(intake.filter(col("doc_id").isNotNull))
-    // Every gate is a scalar (doc_id) stream; text joins once at the end.
-    // The stripped corpus feeds FOUR consumers (quality gate, span gate,
-    // decontamination, final semi-join); one hash exchange on doc_id is
-    // pinned above it (guide §2.4 "share one exchange") and exchange reuse
-    // collapses the consumers onto it, so the strip (and everything below
-    // it, observations included) executes exactly once per action, at the
-    // cost of one (doc_id, text) shuffle.
+    // The stripped corpus has two consumers: the gates' keyed pass and the
+    // final semi-join. Each re-runs the strip's narrow rebuild over the
+    // strip's own exchanges (reused, so the strip's shuffles and the input
+    // below them run once); a doc_id exchange pinned here to share the
+    // rebuild would shuffle the whole text once more, and where the strip
+    // already leaves the rows hash-partitioned on doc_id (Spread fired)
+    // the planner drops such a pin anyway.
     val (stripped, strippedN) = observed(
-      LineDedup.stripRepeatedLines(input, args.lineMinDf).filter(col("text") =!= ""))
-    val lined = stripped.repartition(col("doc_id"))
-    val (keepQuality, qualityN) = observed(Curation.curate(spark, lined).select(col("doc_id")))
-    val (keepSpan, spanN) = observed(DupSpans.dupCoverage(spark, lined, args.gramK)
-      .filter(col("dup_tokens") * 1000 <= col("n_tokens") * args.maxDupPermille)
-      .select(col("doc_id")))
-    val dropContam = benchmark.map(b =>
-      observed(Decontaminate.contaminationHits(spark, lined, b, args.gramK)
-        .select(col("doc_id"))))
-
-    val kept = keepQuality.join(keepSpan, Seq("doc_id"))
-    val keep = dropContam.fold(kept)(d => kept.join(d._1, Seq("doc_id"), "left_anti"))
-    val out = lined.join(keep, Seq("doc_id"), "left_semi")
+      LineDedup.stripRepeatedLines(input, args.lineMinDf).filter(col("text") =!= ""),
+      count(lit(1)))
+    val (verdicts, gateN) = observed(
+      Curation.gates(spark, stripped, benchmark, args.gramK, args.maxDupPermille).toDF(),
+      count_if(col("keeper")), count_if(col("span_ok")), count_if(col("contaminated")))
+    val keep = verdicts.filter(col("keeper") && col("span_ok") && !col("contaminated"))
+      .select(col("doc_id"))
+    val out = stripped.join(keep, Seq("doc_id"), "left_semi")
 
     if (!computeStats) (out, Stats(-1L, -1L, -1L, -1L, -1L, -1L))
     else {
       val cachedOut = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val outputDocs = cachedOut.count()
-      // -1 = no benchmark given (vs a legitimate 0 from a decontamination that ran)
-      def n(stat: Option[() => Long]): Long = stat.fold(-1L)(_())
+      val Seq(keptQuality, keptSpan, contaminated) = gateN.get()
       (cachedOut, Stats(
-        inputDocs = n(inputN),
-        afterLineStrip = n(strippedN),
-        keptQuality = n(qualityN),
-        keptSpanGate = n(spanN),
-        contaminated = n(dropContam.flatMap(_._2)),
+        inputDocs = inputN.get().head,
+        afterLineStrip = strippedN.get().head,
+        keptQuality = keptQuality,
+        keptSpanGate = keptSpan,
+        // -1 = no benchmark given (vs a legitimate 0 from a decontamination that ran)
+        contaminated = if (benchmark.isDefined) contaminated else -1L,
         outputDocs = outputDocs))
     }
   }

@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   * the scan tasks — and only (doc_id, matched gram) pairs, i.e. the
   * contaminated sliver, ever shuffle. Document text never shuffles. The
   * strip itself is the consumer's left-anti join on the contaminated ids
-  * ([[graft.CurateMain]], q_span_decontam_chain).
+  * (q_span_decontam_chain); [[graft.CurateMain]] applies the same rule
+  * inside its keyed gate pass ([[Curation.gates]]).
   */
 object Decontaminate {
 

@@ -48,20 +48,30 @@ object DupSpans {
           val toks = TextKernel.lowerWords(text)
           if (toks.length < k) Iterator.empty
           else {
-            val bytes = toks.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            (0 to toks.length - k).iterator.map { i =>
-              digest.reset()
-              var j = i
-              while (j < i + k) {
-                if (j > i) digest.update(' '.toByte)
-                digest.update(bytes(j))
-                j += 1
-              }
-              (docId, i, digest.digest())
-            }
+            val bytes = tokenBytes(toks)
+            (0 to toks.length - k).iterator.map(i => (docId, i, gramDigest(digest, bytes, i, k)))
           }
         }
       }.toDF("doc_id", "pos", "g")
+  }
+
+  /** UTF-8 bytes of each token, the input of [[gramDigest]]. */
+  private[ops] def tokenBytes(toks: Array[String]): Array[Array[Byte]] =
+    toks.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** MD5 of the gram `tokens(from until from+len)` joined by single
+    * spaces, fed token by token: equal to `unhex(md5(gram))` of the joined
+    * string, without building it. `len = 0` digests the empty string. */
+  private[ops] def gramDigest(digest: java.security.MessageDigest,
+      bytes: Array[Array[Byte]], from: Int, len: Int): Array[Byte] = {
+    digest.reset()
+    var j = from
+    while (j < from + len) {
+      if (j > from) digest.update(' '.toByte)
+      digest.update(bytes(j))
+      j += 1
+    }
+    digest.digest()
   }
 
   /** Maximal duplicated-token spans: (doc_id, start_tok, end_tok), both

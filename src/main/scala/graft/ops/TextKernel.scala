@@ -29,8 +29,12 @@ object TextKernel {
 
   // ---- tokenizer
 
+  /** `\s+`, compiled once: a multi-char regex misses `String.split`'s
+    * fast path, which would compile it again for every document. */
+  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
+
   /** Whitespace words of `s`, empties dropped, case kept. */
-  def words(s: String): Array[String] = s.split("\\s+").filter(_.nonEmpty)
+  def words(s: String): Array[String] = Whitespace.split(s).filter(_.nonEmpty)
 
   /** ROOT-lowercased [[words]] of the space-trimmed text — the
     * dedup/fingerprint/vocab token array. Trimmed first, as in

@@ -197,6 +197,71 @@ class CurateMainSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("plan shape: one keyed pass, the strip's rebuild once per consumer, four shuffles") {
+    import org.apache.spark.sql.catalyst.plans.LeftOuter
+    import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val (corpus, benchmark) = planted
+    val (out, _) = CurateMain.run(spark, corpus, Some(benchmark), CurateMain.Args(),
+      computeStats = false)
+    out.collect()
+    // the plan adaptive execution ran: a reused exchange or query stage is
+    // a leaf there, so each node counted below runs once per action
+    val plan = out.queryExecution.executedPlan
+    def count(p: SparkPlan => Boolean): Int =
+      new AdaptiveSparkPlanHelper {}.collect(plan) { case n if p(n) => n }.size
+    val counts = (
+      count(_.isInstanceOf[MapPartitionsExec]),
+      // the strip's rebuild: the corpus joined with its removed-line sets
+      count {
+        case j: BroadcastHashJoinExec =>
+          j.joinType == LeftOuter && j.right.output.exists(_.name == "removed")
+        case _ => false
+      },
+      count(_.isInstanceOf[ShuffleExchangeExec]))
+    // one typed pass tokenizes each doc; the rebuild runs under the keyed
+    // pass and under the output's semi-join; the shuffles are the strip's
+    // doc_id spread and line-digest count, the gates' key and doc_id
+    assert(counts == ((1, 2, 4)), plan.toString)
+  }
+
+  test("stats: docs shorter than k, a whitespace-only doc and a gram repeated inside one doc match the standalone ops") {
+    import spark.implicits._
+    val (corpus, benchmark) = planted
+    val args = CurateMain.Args()
+    val k = args.gramK
+    val edge = Seq(
+      // fewer than k tokens: its whole run is its one gram, as it is for
+      // the first benchmark item below
+      3000001L -> "Zeta ypsilon xi",
+      3000002L -> "Omikron pi rho sigma",
+      // no token at all: the empty run, as for the blank benchmark item
+      3000003L -> " \t ",
+      // one k-gram twice and nowhere else: covers 16 of its 18 tokens
+      3000004L -> (Seq.fill(2)((1 to k).map(i => s"selfgram$i").mkString(" ")) :+ "tail end").mkString(" "))
+      .toDF("doc_id", "text")
+    val edgeBench = Seq("zeta  YPSILON xi", "  ").toDF("text")
+    val docsAll = corpus.unionByName(edge)
+    val benchAll = benchmark.unionByName(edgeBench)
+    val (out, stats) = CurateMain.run(spark, docsAll, Some(benchAll), args)
+    assert(stats == directStats(docsAll, benchAll, args))
+    out.unpersist()
+
+    // doc by doc on the edge docs: the fused verdicts against the standalone ops
+    def ids(df: DataFrame): Set[Long] = df.select("doc_id").as[Long].collect().toSet
+    val v = Curation.gates(spark, edge, Some(edgeBench), k, args.maxDupPermille)
+    val spanOk = ids(DupSpans.dupCoverage(spark, edge, k)
+      .filter(col("dup_tokens") * 1000 <= col("n_tokens") * args.maxDupPermille))
+    val hits = ids(Decontaminate.contaminationHits(spark, edge, edgeBench, k))
+    assert(ids(v.filter(col("span_ok")).toDF()) == spanOk)
+    assert(ids(v.filter(col("contaminated")).toDF()) == hits)
+    assert(ids(v.filter(col("keeper")).toDF()) == ids(Curation.curate(spark, edge)))
+    assert(hits == Set(3000001L, 3000003L))
+    assert(spanOk == Set(3000001L, 3000002L, 3000003L))
+  }
+
   test("stats: a gate that empties the chain still reports every gate's count") {
     // three-word docs: the quality gate keeps none of them, so adaptive
     // execution prunes the other gates' subtrees from the output's plan
