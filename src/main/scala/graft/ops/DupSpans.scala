@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: the corpus tokenizes in a single typed pass on the scan
   * tasks (a `mapPartitions` flatMap — the HOF-lambda re-evaluation trap
   * rules out `transform(sequence(...))` over a computed token array) and
-  * only (doc_id, pos, 16-byte gram digest) triples ever shuffle — document
-  * text never leaves its scan partition and the corpus is never
-  * repartitioned. Gram frequency is a partial-aggregated groupBy, so a
+  * only (doc_id, pos, 16-byte gram digest) triples shuffle on the gram;
+  * document text shuffles only where [[Spread.spread]] spreads a small
+  * input. Gram frequency is a partial-aggregated groupBy, so a
   * boilerplate gram shared by millions of pages is absorbed map-side; the
   * flag-back join is gram-keyed (AQE splits a residual mega-gram), and the
   * span merge is a doc_id-partitioned window whose exchange the final

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * low-boilerplate corpus AQE broadcasts it and the corpus text never
   * shuffles, while a boilerplate-heavy crawl degrades to one doc_id
   * shuffle — the same single-regroup cost the published recipes pay. The
-  * rebuild itself is pure codegen'd array ops over one `split` per row.
+  * rebuild splits an affected doc once and is linear in its lines.
   */
 object LineDedup {
 
@@ -34,7 +34,7 @@ object LineDedup {
   /** (doc_id, idx, h): one row per line with its 0-based index and the
     * 16-byte digest of the normalized line.
     */
-  def lineHashRows(docs: DataFrame): DataFrame =
+  private def lineHashRows(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), posexplode(split(col("text"), "\n")).as(Seq("idx", "line")))
       .select(col("doc_id"), col("idx"), unhex(md5(normLine(col("line")))).as("h"))
 
@@ -43,25 +43,23 @@ object LineDedup {
     * drop or keep them; the row stays so per-doc accounting survives).
     */
   def stripRepeatedLines(docs: DataFrame, minDf: Long = 2L): DataFrame = {
-    // Spread-guarded (tiny inputs otherwise run the explode+digest pass on
-    // 1-2 scan tasks), and BOTH consumers below — the line-digest side and
-    // the rebuild join side — read the same spread projection, so when it
-    // fires the docs subtree evaluates once behind a reused exchange
-    // instead of twice.
+    // Spread-guarded: tiny inputs otherwise explode+digest on 1-2 scan
+    // tasks. Where it fires, the digest count reuses the rebuild side's
+    // exchange; the removed-set side reads the docs again under an inferred
+    // isnotnull(doc_id) unless the caller drops null ids (PlanSpec "line strip").
     val d = Spread.spread(docs.select(col("doc_id"), col("text")))
     val lines = lineHashRows(d)
     val repeated = lines.groupBy(col("h")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf).select(col("h"))
     val removedPerDoc = lines.join(repeated, Seq("h"))
       .groupBy(col("doc_id")).agg(collect_set(col("idx")).as("removed"))
-    val rebuilt =
-      array_join(
-        transform(
-          filter(
-            transform(split(col("text"), "\n"), (l, i) => struct(l.as("l"), i.as("i"))),
-            s => !array_contains(col("removed"), s.getField("i"))),
-          s => s.getField("l")),
-        "\n")
+    // The outer transform binds the split lines once as a lambda variable:
+    // a projected column read by the inner lambda would be inlined there (a
+    // filter on the output text is pushed below the projection), re-splitting
+    // the doc per kept line. Kept indices: a hash-set difference, in order.
+    val rebuilt = element_at(transform(array(split(col("text"), "\n")), ls =>
+      array_join(transform(array_except(sequence(lit(0), size(ls) - 1), col("removed")),
+        i => element_at(ls, i + 1)), "\n")), 1)
     d.join(removedPerDoc, Seq("doc_id"), "left")
       .select(col("doc_id"),
         when(col("removed").isNull, col("text")).otherwise(rebuilt).as("text"))

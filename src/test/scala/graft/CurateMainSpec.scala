@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
 import org.apache.spark.sql.types._
-import graft.ops.{Curation, Decontaminate, DupSpans, LineDedup}
+import graft.ops.{Curation, Decontaminate, DupSpans}
 
 class CurateMainSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
@@ -79,23 +79,8 @@ class CurateMainSpec extends AnyFunSuite {
     (corpus, benchmark)
   }
 
-  /** The six stats as direct counts of the frames the gates compute,
-    * built and counted one by one. */
-  private def directStats(corpus: DataFrame, benchmark: DataFrame, args: CurateMain.Args): CurateMain.Stats = {
-    val intake = corpus.select(col("doc_id"), col("text")).filter(col("text").isNotNull)
-    val lined = LineDedup.stripRepeatedLines(intake, args.lineMinDf).filter(col("text") =!= "")
-    val quality = Curation.curate(spark, lined).select(col("doc_id"))
-    val span = DupSpans.dupCoverage(spark, lined, args.gramK)
-      .filter(col("dup_tokens") * 1000 <= col("n_tokens") * args.maxDupPermille)
-      .select(col("doc_id"))
-    val contam = Decontaminate.contaminationHits(spark, lined, benchmark, args.gramK)
-      .select(col("doc_id"))
-    val output = lined.join(quality, Seq("doc_id"), "left_semi")
-      .join(span, Seq("doc_id"), "left_semi")
-      .join(contam, Seq("doc_id"), "left_anti")
-    CurateMain.Stats(intake.count(), lined.count(), quality.count(),
-      span.count(), contam.count(), output.count())
-  }
+  private def directStats(corpus: DataFrame, benchmark: DataFrame, args: CurateMain.Args) =
+    CurateReference.directStats(spark, corpus, benchmark, args)
 
   test("pipeline: gates compose — banner lines stripped, near-dup family span-gated, benchmark overlap dropped") {
     val (corpus, benchmark) = planted
@@ -221,9 +206,12 @@ class CurateMainSpec extends AnyFunSuite {
         case _ => false
       },
       count(_.isInstanceOf[ShuffleExchangeExec]))
-    // one typed pass tokenizes each doc; the rebuild runs under the keyed
-    // pass and under the output's semi-join; the shuffles are the strip's
-    // doc_id spread and line-digest count, the gates' key and doc_id
+    // one typed pass tokenizes each doc; the rebuild, a narrow pass linear
+    // in a doc's lines, runs under the keyed pass and again under the
+    // output's semi-join: sharing it would take one more doc_id exchange of
+    // the text, which the planner drops where the strip's spread already
+    // partitions on doc_id; the shuffles are the strip's doc_id spread and
+    // line-digest count, the gates' key and doc_id
     assert(counts == ((1, 2, 4)), plan.toString)
   }
 

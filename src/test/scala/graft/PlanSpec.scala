@@ -49,6 +49,29 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("REPARTITION_BY_COL"), p)
   }
 
+  test("line strip: the digest count reuses the rebuild side's spread; the removed-set side spreads again") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ReusedExchangeExec, ShuffleExchangeExec}
+    val df = SparkEntry.queries("q_line_dedup")(spark, sfDir)
+    df.collect()
+    // the plan adaptive execution ran, where a reused exchange is a leaf
+    val nodes = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) { case n => n }
+    def isSpread(n: Any) = n match {
+      case s: ShuffleExchangeExec => s.shuffleOrigin == REPARTITION_BY_COL
+      case _ => false
+    }
+    val spreads = nodes.count(isSpread)
+    val reused = nodes.count {
+      case r: ReusedExchangeExec => isSpread(r.child)
+      case _ => false
+    }
+    // the optimizer infers isnotnull(doc_id) under the removed-set side
+    // only, so that copy no longer matches the other two; a caller that
+    // filters null doc_ids first (CurateMain) gets one spread, which its
+    // "plan shape" test counts
+    assert((spreads, reused) == ((2, 1)), df.queryExecution.executedPlan.toString)
+  }
+
   test("stratified sampling is a pure narrow filter: zero Exchange") {
     val p = plan("q_stratified_sample")
     assert(!p.contains("Exchange"), p)

@@ -74,12 +74,16 @@ class DupSpansPropertiesSpec extends AnyFunSuite {
   }
 
   // fixed line pool incl. case/whitespace variants of the same normalized
-  // form; every entry can repeat across docs — the reference recomputes df
-  // from the actual corpus, so nothing is unique by construction
+  // form, blank, space-only and CR-ended lines; every entry can repeat
+  // across docs and inside one doc — the reference recomputes df from the
+  // actual corpus, so nothing is unique by construction
   private val line: Gen[String] = Gen.oneOf(
-    "aa bb", "cc dd", "ee ff", "AA bb", " cc dd ", "zz qq ww")
-  private val linedDoc: Gen[String] = Gen.chooseNum(1, 4).flatMap(n =>
-    Gen.listOfN(n, line).map(_.mkString("\n")))
+    "aa bb", "cc dd", "ee ff", "AA bb", " cc dd ", "zz qq ww", "", " ", "\r", "x\r")
+  private val linedDoc: Gen[String] = for {
+    n <- Gen.chooseNum(1, 8)
+    ls <- Gen.listOfN(n, line)
+    trailing <- Gen.oneOf("", "\n")
+  } yield ls.mkString("\n") + trailing
   private val linedCorpus: Gen[List[String]] = Gen.chooseNum(2, 5).flatMap(n =>
     Gen.listOfN(n, linedDoc))
 
