@@ -14,7 +14,6 @@ import graft.pipeline.{ExtractJob, Page}
   *   --out    /data/extracted_run    # output root (extracted/ + _lineage/)
   *   [--buckets 4096]                # url-hash partitions (size so p99 fits a core)
   *   [--no-resume]                   # ignore existing lineage, redo everything
-  *   [--synthetic /root/testdata/sfX[:factor]]  # sandbox demo input instead of --input
   * }}}
   *
   * Cluster topology (master, executor count/cores/memory, dynamic
@@ -31,17 +30,15 @@ object ExtractMain {
 
   final case class Args(
       input: Option[String] = None,
-      synthetic: Option[String] = None,
       out: Option[String] = None,
       buckets: Int = 4096,
       resume: Boolean = true)
 
-  private val valueFlags = Set("--input", "--synthetic", "--out", "--buckets")
+  private val valueFlags = Set("--input", "--out", "--buckets")
 
   def parse(argv: List[String], acc: Args = Args()): Args = Cli.checked(valueFlags, argv) match {
     case Nil => acc
     case "--input" :: v :: rest => parse(rest, acc.copy(input = Some(v)))
-    case "--synthetic" :: v :: rest => parse(rest, acc.copy(synthetic = Some(v)))
     case "--out" :: v :: rest => parse(rest, acc.copy(out = Some(v)))
     case "--buckets" :: v :: rest =>
       parse(rest, acc.copy(buckets = Cli.positiveInt("--buckets", v)))
@@ -71,33 +68,18 @@ object ExtractMain {
 
   def main(argv: Array[String]): Unit = {
     val args = parse(argv.toList)
+    val input = args.input.getOrElse(throw new IllegalArgumentException("--input is required"))
     val out = args.out.getOrElse(throw new IllegalArgumentException("--out is required"))
-    if (args.input.isEmpty == args.synthetic.isEmpty)
-      throw new IllegalArgumentException("exactly one of --input / --synthetic is required")
 
     val builder = SparkSession.builder().appName("graft-extract")
     val spark = builder.getOrCreate()
     applyJobConfs(spark, args.buckets)
 
     import spark.implicits._
-    val pages =
-      args.input match {
-        case Some(path) =>
-          // by-name projection: tolerate extra columns in the source table,
-          // fail fast (AnalysisException) when a contract column is missing
-          spark.read.parquet(path)
-            .select("url", "warc_ts", "html", "text", "lang").as[Page]
-        case None =>
-          args.synthetic.get.split(':') match {
-            case Array(dir) => graft.pages.SyntheticPages.pages(spark, dir)
-            case Array(dir, factor)
-                if factor.nonEmpty && factor.length <= 9 &&
-                  factor.forall(_.isDigit) && factor.toInt > 0 =>
-              graft.pages.SyntheticPages.pagesReplicated(spark, dir, factor.toInt)
-            case _ => throw new IllegalArgumentException(
-              s"--synthetic expects dir[:factor] with a positive integer factor, got ${args.synthetic.get}")
-          }
-      }
+    // by-name projection: tolerate extra columns in the source table, fail
+    // fast (AnalysisException) when a contract column is missing
+    val pages = spark.read.parquet(input)
+      .select("url", "warc_ts", "html", "text", "lang").as[Page]
 
     val cfg = ExtractJob.Config(buckets = args.buckets, resume = args.resume)
     val t0 = System.nanoTime()

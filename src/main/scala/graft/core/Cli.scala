@@ -26,10 +26,10 @@ private[graft] object Cli {
     n
   }
 
-  /** Locale.ROOT number rendering: the f-interpolator formats via the JVM
-    * default locale, and a comma-decimal cluster image (de_DE, fr_FR)
-    * would emit `"wall_sec":4,283` — invalid JSON.
+  /** Locale.ROOT number rendering to 3 decimals: the f-interpolator
+    * formats via the JVM default locale, and a comma-decimal cluster image
+    * (de_DE, fr_FR) would emit `"wall_sec":4,283` — invalid JSON.
     */
-  def jsonNum(d: Double, prec: Int = 3): String =
-    String.format(java.util.Locale.ROOT, "%." + prec + "f", Double.box(d))
+  def jsonNum(d: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
 }

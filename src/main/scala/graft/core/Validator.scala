@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** S13 tablevalidate — reference parity with
   * /root/reference/src/tablevalidate/validate.py:16-29 and
@@ -43,7 +43,8 @@ object Validator {
     }
   }
 
-  /** Full validation report over (name, json) rows, skip-list applied. */
+  /** Full validation report over (name, json) rows, skip-list applied:
+    * every file with its status, the `-a/--all` mode. */
   def report(spark: SparkSession, files: Dataset[(String, String)]): Dataset[ValidationResult] = {
     import spark.implicits._
     files
@@ -54,9 +55,6 @@ object Validator {
   /** `-q/--quiet`: exit 1 on the first invalid file, no output. */
   def hasErrors(report: Dataset[ValidationResult]): Boolean =
     report.filter(_.status != Valid).take(1).nonEmpty
-
-  /** `-a/--all`: every file with its status. */
-  def reportAll(report: Dataset[ValidationResult]): DataFrame = report.toDF()
 
   /** default mode: statuses in name order up to and including the first
     * error (the sequential CLI prints VALID lines then stops at the error).

@@ -170,14 +170,14 @@ object Curation {
         count(when(col("kind") === Window, col("pos"))).as("windows"),
         min(when(col("kind") === Survivor, col("doc_id"))).as("first"),
         max(col("kind") === Bench).as("bench"))
-      .filter(col("windows") >= 2 || col("first").isNotNull || col("bench"))
+      .filter(col("windows") >= DupSpans.MinCount || col("first").isNotNull || col("bench"))
     def flag(c: Column): Column = coalesce(c, lit(false))
     // a hash join over the co-partitioned sides: the broadcast adaptive
     // execution would otherwise pick costs one more job and stage barrier
     keyed.join(perKey.hint("shuffle_hash"), Seq("key"), "left")
       .select(col("doc_id"), col("kind"), col("pos"),
         flag(col("kind") === Survivor && col("first") === col("doc_id")).as("keeper"),
-        flag(col("kind") === Window && col("windows") >= 2).as("dup"),
+        flag(col("kind") === Window && col("windows") >= DupSpans.MinCount).as("dup"),
         flag(col("kind").isin(Window, Run) && col("bench")).as("hit"))
       .filter(col("kind") <= Survivor || col("dup") || col("hit"))
       .groupBy(col("doc_id")).as[Long, (Long, Byte, Int, Boolean, Boolean, Boolean)]

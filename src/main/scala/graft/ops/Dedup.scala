@@ -28,12 +28,23 @@ object Dedup {
     docs.groupBy(md5(text).as("content_md5"))
       .agg(min(key).as("keep_id"), count(lit(1)).as("dup_count"))
 
-  /** maxBucket caps LSH bucket size: buckets above it are degenerate
+  /** The one MinHash+LSH configuration [[minhashLshPairs]] runs:
+    * `NumHashes` seeded permutations in `Bands` bands of
+    * `NumHashes / Bands` rows, over word `ShingleSize`-grams; a candidate
+    * pair is kept at exact Jaccard >= `JaccardThreshold`. The
+    * recall==exact oracles (q_minhash_dedup, q_near_dup_keeper) pin these
+    * values.
+    */
+  final val NumHashes = 32
+  final val Bands = 8
+  final val ShingleSize = 3
+  final val JaccardThreshold = 0.5
+
+  /** Caps LSH bucket size: buckets above it are degenerate
     * (boilerplate/low-information members) and would otherwise enumerate
     * O(n²) pairs — the standard skew guard for LSH dedup at scale.
     */
-  final case class LshConfig(numHashes: Int = 32, bands: Int = 8, shingleSize: Int = 3,
-      jaccardThreshold: Double = 0.5, maxBucket: Int = 64)
+  final val MaxBucket = 64
 
   /** Typed (doc_id, shingles) — one linear pass per document over
     * [[TextKernel.docTexts]] (spread-guarded: a tiny input otherwise runs
@@ -80,23 +91,23 @@ object Dedup {
     * q_near_dup_keeper): a "one base hash + cheap per-permutation mix"
     * rewrite was tried and dropped ONE true pair at the driver's sf0.01
     * verify scale (80 vs 81 oracle rows), so the per-gram cost floor is the
-    * numHashes re-seeded char folds. What this pass does save, value-
+    * NumHashes re-seeded char folds. What this pass does save, value-
     * identically: the gram strings are never materialized (the
-    * `numHashes` FNV states stream the window's token chars directly —
+    * `NumHashes` FNV states stream the window's token chars directly —
     * same char sequence as the mkString'd gram, like DupSpans'
     * digest pass), and the former `.distinct` is dropped outright (min
     * over a multiset equals min over its set, so duplicate grams cannot
     * change a signature).
     */
-  def bandHashRows(spark: SparkSession, docs: DataFrame, cfg: LshConfig): DataFrame = {
+  def bandHashRows(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val rowsPerBand = cfg.numHashes / cfg.bands
+    val rowsPerBand = NumHashes / Bands
     TextKernel.docTexts(docs).mapPartitions { it =>
-      val numH = cfg.numHashes
+      val numH = NumHashes
       val states = new Array[Long](numH)
       it.flatMap { case (docId, text) =>
         val tokens = TextKernel.lowerWords(text)
-        val n = cfg.shingleSize
+        val n = ShingleSize
         val mins = Array.fill(numH)(Long.MaxValue)
         // fold the gram tokens(from until from+len) joined by ' ' into all
         // numH seeded FNV states, then avalanche + min-update each
@@ -133,7 +144,7 @@ object Dedup {
           val last = tokens.length - n
           while (st <= last) { vote(st, n); st += 1 }
         }
-        (0 until cfg.bands).iterator.map { b =>
+        (0 until Bands).iterator.map { b =>
           var h = FnvOffset ^ b.toLong
           var i = b * rowsPerBand
           while (i < (b + 1) * rowsPerBand) {
@@ -154,13 +165,13 @@ object Dedup {
     * through lambda evaluation. Same pair set: ids sorted ascending, all
     * i<j pairs.
     */
-  def candidatesOf(banded: DataFrame, cfg: LshConfig): DataFrame = {
+  private def candidatesOf(banded: DataFrame): DataFrame = {
     val spark = banded.sparkSession
     import spark.implicits._
     banded
       .groupBy(col("band"), col("band_hash"))
       .agg(collect_list(col("doc_id")).as("ids"))
-      .filter(size(col("ids")) > 1 && size(col("ids")) <= cfg.maxBucket)
+      .filter(size(col("ids")) > 1 && size(col("ids")) <= MaxBucket)
       .select(col("ids")).as[Seq[Long]]
       .flatMap { ids =>
         val s = ids.toArray
@@ -175,14 +186,14 @@ object Dedup {
   }
 
   /** Exact-Jaccard verification: join shingle sets back by doc id. */
-  def verifyPairs(withShingles: DataFrame, candidates: DataFrame, cfg: LshConfig): DataFrame = {
+  private def verifyPairs(withShingles: DataFrame, candidates: DataFrame): DataFrame = {
     val sa = withShingles.select(col("doc_id").as("a"), col("shingles").as("sh_a"))
     val sb = withShingles.select(col("doc_id").as("b"), col("shingles").as("sh_b"))
     candidates.join(sa, "a").join(sb, "b")
       .withColumn("jaccard",
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(col("jaccard") >= cfg.jaccardThreshold)
+      .filter(col("jaccard") >= JaccardThreshold)
       .select(col("a"), col("b"), col("jaccard"))
   }
 
@@ -232,14 +243,14 @@ object Dedup {
 
   /** MinHash+LSH near-duplicate pairs with exact Jaccard verification.
     * Input must have columns (doc_id, text). Output: (a, b, jaccard) with
-    * a < b, jaccard >= threshold. Only (doc_id, band, hash) triples, the
-    * candidate ids and 8-byte shingle hashes ever shuffle — never the text.
+    * a < b, jaccard >= [[JaccardThreshold]]. A pair is a candidate when
+    * both docs share a (band, band_hash) bucket, so only a bucket key that
+    * occurs at least twice (and at most [[MaxBucket]] times) emits pairs.
+    * Only (doc_id, band, hash) triples, the candidate ids and 8-byte
+    * shingle hashes ever shuffle — never the text.
     */
-  def minhashLshPairs(spark: SparkSession, docs: DataFrame, cfg: LshConfig = LshConfig()): DataFrame = {
-    val banded = bandHashRows(spark, docs, cfg)
-    val candidates = candidatesOf(banded, cfg)
-    verifyPairs(shingleHashRows(spark, docs, cfg.shingleSize), candidates, cfg)
-  }
+  def minhashLshPairs(spark: SparkSession, docs: DataFrame): DataFrame =
+    verifyPairs(shingleHashRows(spark, docs, ShingleSize), candidatesOf(bandHashRows(spark, docs)))
 
   /** SimHash bit width (bits 0..61 — see [[TextKernel.polyHash64]]). */
   val SimhashBits = 62

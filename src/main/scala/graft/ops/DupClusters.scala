@@ -31,12 +31,17 @@ import org.apache.spark.sql.functions._
   *    `localCheckpoint` (blocks are lost with an executor, fine for
   *    local/test runs). Same iteration count either way (spec-gated);
   *  - convergence is detected with a bounded `isEmpty` probe per round, so
-  *    easy graphs stop early and `maxIter` only bounds adversarial chains.
+  *    easy graphs stop early and [[MaxIter]] only bounds adversarial chains.
   *
   * Output is deterministic regardless of partitioning: every vertex ends
   * with `cluster_id` = the minimum vertex id of its component.
   */
 object DupClusters {
+
+  /** Rounds after which propagation stops, converged or not: pointer
+    * doubling needs O(log d) rounds for diameter d, so 30 covers chains far
+    * longer than any near-dup graph holds. */
+  final val MaxIter = 30
 
   /** Connected components of the undirected graph given by `edges`
     * (columns `src`, `dst`; direction, duplicates and self-loops are
@@ -47,9 +52,8 @@ object DupClusters {
   def connectedComponents(
       spark: SparkSession,
       edges: DataFrame,
-      vertices: Option[DataFrame] = None,
-      maxIter: Int = 30): DataFrame =
-    connectedComponentsResult(spark, edges, vertices, maxIter).labels
+      vertices: Option[DataFrame] = None): DataFrame =
+    connectedComponentsResult(spark, edges, vertices).labels
 
   /** connectedComponents plus the convergence iteration count (for tests /
     * metrics).
@@ -67,8 +71,7 @@ object DupClusters {
   def connectedComponentsResult(
       spark: SparkSession,
       edges: DataFrame,
-      vertices: Option[DataFrame] = None,
-      maxIter: Int = 30): CCResult = {
+      vertices: Option[DataFrame] = None): CCResult = {
     val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
     val sym = truncate(spark, e
       .union(e.select(col("dst").as("src"), col("src").as("dst")))
@@ -82,7 +85,7 @@ object DupClusters {
     var labels = truncate(spark, vs.select(col("id"), col("id").as("label")))
     var iter = 0
     var converged = false
-    while (iter < maxIter && !converged) {
+    while (iter < MaxIter && !converged) {
       // (1) propagate: min neighbor label per vertex
       val nbr = sym
         .join(labels.withColumnRenamed("id", "src"), "src")

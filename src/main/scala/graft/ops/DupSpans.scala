@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Exact duplicated-substring spans — the sub-document complement to the
   * doc-level dedup family (exact md5, MinHash+LSH, SimHash): find every
   * maximal token run that is covered by a word k-gram occurring at least
-  * `minCount` times anywhere in the corpus (cross-document or repeated
+  * twice ([[MinCount]]) anywhere in the corpus (cross-document or repeated
   * within one document). This is the distributed analog of the published
   * suffix-array exact-substring dedup recipe: k-gram seeds stand in for
   * suffix-array matches, and overlapping seeds merge into maximal spans.
@@ -24,6 +24,11 @@ import org.apache.spark.sql.functions._
   * groupBy reuses (grouping keys ⊇ partition keys ⇒ no second shuffle).
   */
 object DupSpans {
+
+  /** A k-gram is duplicated when it occurs at least twice in the corpus:
+    * the one rule [[dupSpans]], [[dupCoverage]] and [[Curation.gates]]
+    * apply. */
+  final val MinCount = 2L
 
   /** One row per k-token window over [[TextKernel.lowerWords]]: (doc_id,
     * pos, g) with 0-based token position and the 16-byte MD5 digest of the
@@ -76,19 +81,19 @@ object DupSpans {
 
   /** Maximal duplicated-token spans: (doc_id, start_tok, end_tok), both
     * 0-based inclusive token indices. Every token in a span is covered by
-    * some k-gram occurring >= minCount times in the corpus; spans merge on
+    * some k-gram occurring at least twice in the corpus; spans merge on
     * OVERLAP only (two windows k apart touch but share no token, so they
     * stay separate spans). Clean documents are absent — at corpus scale a
     * 99%-empty per-doc span list would force a doc_id shuffle of the whole
     * corpus; derive "clean" downstream by anti-join when needed.
     */
-  def dupSpans(spark: SparkSession, docs: DataFrame, k: Int, minCount: Long = 2L): DataFrame = {
+  def dupSpans(spark: SparkSession, docs: DataFrame, k: Int): DataFrame = {
     // 16-byte digest (not the gram text) is what shuffles; md5 is already
     // collision-free at corpus scale and cross-engine recomputable, though
     // the digest never leaves this query.
     val grams = gramDigestRows(spark, docs, k)
     val dup = grams.groupBy(col("g")).agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= minCount).select(col("g"))
+      .filter(col("cnt") >= MinCount).select(col("g"))
     val hits = grams.join(dup, Seq("g")).select(col("doc_id"), col("pos"))
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val islands = hits
@@ -107,8 +112,8 @@ object DupSpans {
     * The span side aggregates to one row per contaminated doc before the
     * join, so the full-corpus side joins against a sliver.
     */
-  def dupCoverage(spark: SparkSession, docs: DataFrame, k: Int, minCount: Long = 2L): DataFrame = {
-    val perDoc = dupSpans(spark, docs, k, minCount)
+  def dupCoverage(spark: SparkSession, docs: DataFrame, k: Int): DataFrame = {
+    val perDoc = dupSpans(spark, docs, k)
       .groupBy(col("doc_id"))
       .agg(sum(col("end_tok") - col("start_tok") + 1).as("dup_tokens"))
     val toks = TextKernel.lowerWordsCol(col("text"))

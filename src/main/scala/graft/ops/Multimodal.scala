@@ -5,14 +5,13 @@ import org.apache.spark.sql.functions._
 
 /** Multimodal column handling: image/audio/video payloads travel as opaque
   * `binary` columns with typed metadata alongside. The decode/feature steps
-  * run as batched per-partition transforms (the Scala analog of
-  * `mapInPandas`): one iterator pass, schema declared up front, rows
-  * processed in Arrow-sized batches.
+  * run as per-partition transforms (the Scala analog of `mapInPandas`):
+  * one iterator pass, schema declared up front, one payload at a time.
   *
   * The actual codec is STUBBED (no image/audio libraries ship in this
   * container): `decodeStub` derives deterministic fake metadata from the
-  * bytes. The Spark-side plumbing — binary column, batch shape, schema,
-  * partitioning — is real and tested; swap `decodeStub` for a real decoder
+  * bytes. The Spark-side plumbing — binary column, schema, partitioning —
+  * is real and tested; swap `decodeStub` for a real decoder
   * on a cluster with codecs installed.
   */
 object Multimodal {
@@ -54,28 +53,20 @@ object Multimodal {
       .as[MediaRow]
   }
 
-  /** Batched decode: mapPartitions with an explicit batch size — the
-    * mapInPandas-shaped seam where a real decoder would amortize codec
-    * setup per batch.
-    */
-  def decodeBatched(spark: SparkSession, media: Dataset[MediaRow], batchSize: Int = 64): Dataset[MediaMeta] = {
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        // per-batch decoder setup would go here (codec contexts, buffers)
-        batch.iterator.map { m =>
-          val (format, w, h, frames) = decodeStub(m.payload)
-          MediaMeta(m.doc_id, m.payload.length.toLong, format, w, h, frames)
-        }
-      }
-    }
-  }
-
   /** The full metadata query (oracle-checkable: every output column is a
-    * deterministic integer/string function of octet_length(text)).
+    * deterministic integer/string function of octet_length(text)): one
+    * mapPartitions pass over the media table, the seam where a real
+    * decoder would set up its codec once per task.
     */
-  def mediaMetaQuery(spark: SparkSession, sfDir: String): DataFrame =
-    decodeBatched(spark, mediaTable(spark, sfDir)).toDF()
+  def mediaMetaQuery(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    mediaTable(spark, sfDir).mapPartitions { it =>
+      it.map { m =>
+        val (format, w, h, frames) = decodeStub(m.payload)
+        MediaMeta(m.doc_id, m.payload.length.toLong, format, w, h, frames)
+      }
+    }.toDF()
+  }
 
   // ---- REAL image decode path (P6 PPM — an actual binary image format
   // decodable in pure JVM, no codec libraries needed). The stub above
@@ -179,8 +170,8 @@ object Multimodal {
     * feature-extract / resize / frame-sample list): one row per kept frame
     * — frames 0, k, 2k, … of each video payload (non-video rows pass
     * through with the single frame 0). A narrow generate-per-row explode;
-    * at 100 TB the frame DECODE would run inside the same batched seam as
-    * decodeBatched, so only sampled frames ever decode.
+    * at 100 TB the frame DECODE would run inside the same per-task seam as
+    * mediaMetaQuery, so only sampled frames ever decode.
     */
   def sampleFrames(spark: SparkSession, media: Dataset[MediaRow], everyK: Int): DataFrame = {
     import spark.implicits._
@@ -253,55 +244,51 @@ object Multimodal {
     * typed pass; the oracle predicts each channel sum from the generator
     * arithmetic restricted to its residue class.
     */
-  def ppmFeatureQuery(spark: SparkSession, sfDir: String, batchSize: Int = 64): DataFrame = {
+  def ppmFeatureQuery(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     ppmTable(spark, sfDir).mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          decodePpmPixels(m.payload).map { case (w, h, _, off, need) =>
-            val sums = new Array[Long](3)
-            var i = 0
-            while (i < need) {
-              sums(i % 3) += m.payload(off + i) & 0xff
-              i += 1
-            }
-            PpmFeatures(m.doc_id, w, h, sums(0), sums(1), sums(2))
+      it.flatMap { m =>
+        decodePpmPixels(m.payload).map { case (w, h, _, off, need) =>
+          val sums = new Array[Long](3)
+          var i = 0
+          while (i < need) {
+            sums(i % 3) += m.payload(off + i) & 0xff
+            i += 1
           }
+          PpmFeatures(m.doc_id, w, h, sums(0), sums(1), sums(2))
         }
       }
     }.toDF()
   }
 
-  /** Resize the synthetic PPM corpus (factor 2) to integer summaries. */
-  def ppmResizeQuery(spark: SparkSession, sfDir: String, factor: Int = 2,
-      batchSize: Int = 64): DataFrame = {
+  /** The pooling factor of [[ppmResizeQuery]] (q_multimodal_resize). */
+  private val ResizeFactor = 2
+
+  /** Resize the synthetic PPM corpus by [[ResizeFactor]] to integer summaries. */
+  def ppmResizeQuery(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     ppmTable(spark, sfDir).mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          avgPoolPpm(m.payload, factor).map { r =>
-            var poly = 7L
-            var sum = 0L
-            r.values.foreach { v =>
-              sum += v
-              poly = (poly * 31 + v) % 2147483647L
-            }
-            PpmResized(m.doc_id, r.out_w, r.out_h, sum, poly)
+      it.flatMap { m =>
+        avgPoolPpm(m.payload, ResizeFactor).map { r =>
+          var poly = 7L
+          var sum = 0L
+          r.values.foreach { v =>
+            sum += v
+            poly = (poly * 31 + v) % 2147483647L
           }
+          PpmResized(m.doc_id, r.out_w, r.out_h, sum, poly)
         }
       }
     }.toDF()
   }
 
-  /** Decode the PPM table with the REAL parser (batched like decodeBatched). */
-  def ppmMetaQuery(spark: SparkSession, sfDir: String, batchSize: Int = 64): DataFrame = {
+  /** Decode the PPM table with the REAL parser (one pass, like mediaMetaQuery). */
+  def ppmMetaQuery(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     ppmTable(spark, sfDir).mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { m =>
-          decodePpm(m.payload).map { case (w, h, maxval, sum) =>
-            PpmMeta(m.doc_id, w, h, maxval, sum)
-          }
+      it.flatMap { m =>
+        decodePpm(m.payload).map { case (w, h, maxval, sum) =>
+          PpmMeta(m.doc_id, w, h, maxval, sum)
         }
       }
     }.toDF()

@@ -39,18 +39,6 @@ object Salting {
       .agg(sum(col("partial_n")).as("n"), sum(col("partial_sum")).as("total"))
   }
 
-  /** Per-host frequency capping — the crawl-sampling step that keeps a
-    * mega-host from dominating the training mix: at most `cap` documents
-    * per host, chosen deterministically (lowest `orderCol` first). One
-    * hash-partitioned window (never global); only (host, order) scalars
-    * drive the shuffle.
-    *
-    * CONTRACT: `orderCol` must be a non-null integral (long) key that is
-    * unique within a host (doc id) — row_number breaks ties by partition
-    * arrival order, so a tied key (e.g. a coarse timestamp) would make the
-    * kept sample depend on partitioning; cast/compose a unique long key
-    * first.
-    */
   /** Budget-capped stratum sampling — the token-budget variant of
     * [[capPerHost]] (training-mix construction: "fill each source to N
     * tokens"): keep each stratum's lowest-`orderCol` rows while the running
@@ -114,6 +102,18 @@ object Salting {
       .drop(run, h, o, wgt)
   }
 
+  /** Per-host frequency capping — the crawl-sampling step that keeps a
+    * mega-host from dominating the training mix: at most `cap` documents
+    * per host, chosen deterministically (lowest `orderCol` first). One
+    * hash-partitioned window (never global); only (host, order) scalars
+    * drive the shuffle.
+    *
+    * CONTRACT: `orderCol` must be a non-null integral (long) key that is
+    * unique within a host (doc id) — row_number breaks ties by partition
+    * arrival order, so a tied key (e.g. a coarse timestamp) would make the
+    * kept sample depend on partitioning; cast/compose a unique long key
+    * first.
+    */
   def capPerHost(df: DataFrame, hostCol: Column, orderCol: Column, cap: Int): DataFrame = {
     val h = "__graft_cap_host"
     val o = "__graft_cap_order"

@@ -216,13 +216,13 @@ object Similarity {
     best
   }
 
-  /** Quantize a float component to fixed point: floor(x * scale + 0.5) —
+  /** Quantize a float component to fixed point: floor(x * FixedPointScale + 0.5) —
     * every step exact in IEEE double, so Spark and any other engine agree
     * bit-for-bit (the float-sum order-dependence that makes distributed
     * k-means nondeterministic never arises: LONG sums are associative).
     */
-  def quantize(x: Float, scale: Long = FixedPointScale): Long =
-    math.floor(x.toDouble * scale + 0.5).toLong
+  def quantize(x: Float): Long =
+    math.floor(x.toDouble * FixedPointScale + 0.5).toLong
 
   /** Per-cell assignment statistics with exact fixed-point sums: member
     * counts plus Σq and Σ|q| over quantized components, under the same
@@ -231,8 +231,7 @@ object Similarity {
     * recomputes it exactly (q_ivf_cell_stats). Scalar-only rows into a
     * partial-aggregated groupBy; the corpus never shuffles.
     */
-  def ivfCellStats(spark: SparkSession, corpus: DataFrame, numCentroids: Int,
-      scale: Long = FixedPointScale): DataFrame = {
+  def ivfCellStats(spark: SparkSession, corpus: DataFrame, numCentroids: Int): DataFrame = {
     import spark.implicits._
     val cents = ivfCentroids(corpus, numCentroids)
     val bc = spark.sparkContext.broadcast(cents)
@@ -243,7 +242,7 @@ object Similarity {
           var tot = 0L
           var totAbs = 0L
           emb.foreach { x =>
-            val q = quantize(x, scale)
+            val q = quantize(x)
             tot += q
             totAbs += math.abs(q)
           }
@@ -256,30 +255,38 @@ object Similarity {
         sum(col("q_abs_sum")).as("comp_abs_sum"))
   }
 
+  /** Hyperplanes of the sign-LSH signature, so one signature bucket is
+    * expected to hold n / 2^Planes of n vectors: about 64 at n = 16k. A
+    * corpus much larger than that needs more planes (ceil(log2(n / 64))
+    * keeps the expected bucket near 64), or `maxBucket` starts discarding
+    * whole healthy buckets. The registered demo query runs at n ≤ 2.1k,
+    * where buckets average single digits.
+    */
+  final val Planes = 8
+
   /** Deterministic pseudo-random hyperplane matrix for sign-LSH, cached per
-    * (planes, dim) per JVM. The plane components are CONSTANTS of (p, j) —
-    * round 3 re-derived them per row per array element inside HOF lambdas
+    * dim per JVM. The plane components are CONSTANTS of (p, j) — round 3
+    * re-derived them per row per array element inside HOF lambdas
     * (xxhash64 + string concat, the measured HOF-child trap from BENCH.md:
     * O(planes×dim) hash+format ops per ROW, and the worst benched query).
-    * Now each executor materializes the matrix once (planes×dim doubles,
-    * e.g. 62×1024 ≈ 0.5 MB) and the projection is a pure flops loop.
+    * Now each executor materializes the matrix once (Planes×dim doubles)
+    * and the projection is a pure flops loop.
     */
-  def planeMatrix(planes: Int, dim: Int): Array[Array[Double]] =
-    planeCache.computeIfAbsent((planes, dim), { key =>
-      Array.tabulate(key._1, key._2) { (p, j) =>
+  def planeMatrix(dim: Int): Array[Array[Double]] =
+    planeCache.computeIfAbsent(dim, { d =>
+      Array.tabulate(Planes, d) { (p, j) =>
         TextKernel.hash64(s"plane$p:$j", 0L).toDouble / Long.MaxValue.toDouble
       }
     })
 
   private val planeCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Array[Double]]]()
+    new java.util.concurrent.ConcurrentHashMap[Int, Array[Array[Double]]]()
 
-  /** (vec_id, sig, embedding) with sig = the `planes` sign bits of the
+  /** (vec_id, sig, embedding) with sig = the [[Planes]] sign bits of the
     * hyperplane projections — one typed pass per row, matrix from the
     * per-JVM cache (the simhashRows shape; nothing recomputed per element).
     */
-  def hyperplaneSigRows(corpus: DataFrame, planes: Int): DataFrame = {
-    require(planes >= 1 && planes <= 62, s"planes must be in [1, 62], got $planes")
+  def hyperplaneSigRows(corpus: DataFrame): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     // deliberately NOT Spread-guarded: at the registered-query scale the
@@ -288,17 +295,17 @@ object Similarity {
     corpus.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
       .mapPartitions { it =>
         // one-element (dim -> matrix) memo per task: the cache probe is a
-        // ConcurrentHashMap lookup + boxed-tuple key allocation, and at
+        // ConcurrentHashMap lookup + boxed key allocation, and at
         // 10^9 rows that's 10^9 probes for a constant — resolve it once
         // per partition (re-resolving only if the dim ever changes mid-
         // partition, which a well-formed corpus never does)
         var memoDim = -1
         var m: Array[Array[Double]] = null
         it.map { case (id, emb) =>
-          if (emb.length != memoDim) { m = planeMatrix(planes, emb.length); memoDim = emb.length }
+          if (emb.length != memoDim) { m = planeMatrix(emb.length); memoDim = emb.length }
           var sig = 0L
           var p = 0
-          while (p < planes) {
+          while (p < Planes) {
             val row = m(p)
             var acc = 0.0
             var j = 0
@@ -316,18 +323,11 @@ object Similarity {
     * projections onto deterministic pseudo-random planes) + exact verify.
     * `maxBucket` caps bucket size — one degenerate hyperplane bucket (e.g.
     * near-zero embeddings) would otherwise enumerate O(n²) pairs with full
-    * embeddings inside collect_list (same skew guard as Dedup.candidatesOf).
-    *
-    * SIZE THE PLANES TO THE CORPUS: expected bucket size is n / 2^planes,
-    * so the default 8 planes suits n ≲ 16k (bucket ≈ 64); at 1M vectors use
-    * ~14+ planes or the cap starts discarding whole healthy buckets (recall
-    * loss, not graceful degradation): planes = ceil(log2(n / 64)) keeps
-    * the expected bucket at ~64. The registered demo query runs at
-    * n ≤ 2.1k where buckets average single digits.
+    * embeddings inside collect_list (same skew guard as Dedup's LSH
+    * buckets). [[Planes]] sizes the buckets to the corpus.
     */
-  def cosineNearDupPairs(corpus: DataFrame, threshold: Double, planes: Int = 8,
-      maxBucket: Int = 64): DataFrame = {
-    val sigs = hyperplaneSigRows(corpus, planes)
+  def cosineNearDupPairs(corpus: DataFrame, threshold: Double, maxBucket: Int = 64): DataFrame = {
+    val sigs = hyperplaneSigRows(corpus)
     val buckets = sigs.groupBy(col("sig"))
       .agg(collect_list(struct(col("vec_id"), col("embedding"))).as("members"))
       .filter(size(col("members")) > 1 && size(col("members")) <= maxBucket)

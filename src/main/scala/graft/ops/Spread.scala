@@ -78,8 +78,8 @@ object Spread {
     * chain), so exchange reuse collapses all consumers onto a single
     * physical evaluation. A scan-shaped input passes through unchanged:
     * re-scanning it per consumer costs less than shuffling it, and
-    * [[spread]] owns its parallelism.
+    * [[spread]] owns its parallelism. The exchange hashes `doc_id`.
     */
-  def shareIfComplex(df: DataFrame, by: Column = col("doc_id")): DataFrame =
-    if (scanShaped(df.queryExecution.optimizedPlan)) df else df.repartition(by)
+  def shareIfComplex(df: DataFrame): DataFrame =
+    if (scanShaped(df.queryExecution.optimizedPlan)) df else df.repartition(col("doc_id"))
 }

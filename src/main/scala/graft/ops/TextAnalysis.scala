@@ -289,23 +289,19 @@ object TextAnalysis {
   }
 
   /** True winnowing fingerprint (the local-minimum document fingerprinting
-    * scheme: k-gram hashes, sliding window of w, keep each window's
-    * minimum; the distinct minima are the fingerprint set — guarantees any
-    * shared run of w+k-1 tokens between two documents shares a selected
-    * hash). Poly-hashed so an independent engine can recompute the exact
+    * scheme: [[WinnowK]]-gram hashes, sliding window of [[WinnowW]], keep
+    * each window's minimum; the distinct minima are the fingerprint set —
+    * guarantees any shared run of w+k-1 tokens between two documents
+    * shares a selected hash). Poly-hashed so an independent engine can recompute the exact
     * set; summarized per doc as (set size, set min, set sum) to keep the
     * output row small. One typed narrow pass over the scan — no shuffle,
     * nothing but the 4 scalars leaves the task.
     */
-  def winnowFingerprintRows(
-      spark: org.apache.spark.sql.SparkSession,
-      docs: DataFrame,
-      k: Int = 3,
-      w: Int = 4): DataFrame = {
+  def winnowFingerprintRows(spark: org.apache.spark.sql.SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
     TextKernel.docTexts(docs).mapPartitions { it =>
       it.map { case (id, text) =>
-        val fp = winnowDistinctSorted(text, k, w)
+        val fp = winnowDistinctSorted(text, WinnowK, WinnowW)
         var sum = 0L
         var i = 0
         while (i < fp.length) { sum += fp(i); i += 1 }
@@ -313,6 +309,11 @@ object TextAnalysis {
       }
     }.toDF("doc_id", "n_fp", "fp_min", "fp_sum")
   }
+
+  /** Gram length and window width of [[winnowFingerprintRows]]
+    * (q_fingerprint_winnow). */
+  final val WinnowK = 3
+  final val WinnowW = 4
 
   /** Sorted distinct window minima. Hot path: gram hashes are folded
     * incrementally over the token array (no k-gram strings are ever

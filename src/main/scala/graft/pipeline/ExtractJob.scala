@@ -81,7 +81,7 @@ object ExtractJob {
         n_tables = ex.tables.size,
         n_table_rows = ex.tables.map(_.fragment.rows.size).sum,
         tables_json = HtmlExtractor.toRawJson(fileNameOf(p.url), ex),
-        spans = Convert.spans(ex),
+        spans = ex.spans,
         citation = ex.citation,
         status = ex.status,
         html_bytes = htmlBytes)

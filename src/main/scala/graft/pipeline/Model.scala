@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.html.Extracted
+import graft.html.TableSpan
 
 /** Input row contract (BASELINE.json input_hint): one Common-Crawl-style
   * web page.
@@ -11,8 +11,6 @@ final case class Page(
     html: Array[Byte],
     text: String,
     lang: String)
-
-final case class SpanRow(page: Int, start: Int, end: Int, kind: String)
 
 /** One extraction output row per url (north rule: extracted main text +
   * table spans, byte-identical per url).
@@ -33,7 +31,7 @@ final case class ExtractedPage(
     n_tables: Int,
     n_table_rows: Int,
     tables_json: String,
-    spans: Seq[SpanRow],
+    spans: Seq[TableSpan],
     citation: Option[String],
     status: String,
     html_bytes: Long)
@@ -51,8 +49,3 @@ final case class LineageRow(
     url_min: String,
     url_max: String,
     extractor_version: String)
-
-object Convert {
-  def spans(ex: Extracted): Seq[SpanRow] =
-    ex.spans.map(s => SpanRow(s.page, s.start, s.end, s.kind))
-}

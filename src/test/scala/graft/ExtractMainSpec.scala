@@ -14,10 +14,12 @@ class ExtractMainSpec extends AnyFunSuite {
     assert(a.out.contains("/data/run"))
     assert(a.buckets == 512)
     assert(!a.resume)
-    val d = ExtractMain.parse(List("--out", "/x", "--synthetic", "/root/testdata/sf0.001:3"))
-    assert(d.buckets == 4096 && d.resume)
-    assert(d.synthetic.contains("/root/testdata/sf0.001:3"))
+    val d = ExtractMain.parse(List("--out", "/x"))
+    assert(d.buckets == 4096 && d.resume && d.input.isEmpty)
     assertThrows[IllegalArgumentException](ExtractMain.parse(List("--bogus")))
+    // one input path: --input; --synthetic is an unknown arg
+    assertThrows[IllegalArgumentException](
+      ExtractMain.parse(List("--out", "/x", "--synthetic", "/data/docs:3")))
     // resume has one policy: stale buckets are always re-extracted
     assertThrows[IllegalArgumentException](ExtractMain.parse(List("--out", "/x", "--accept-stale-versions")))
     // a value flag does not take the next flag as its value: `--out

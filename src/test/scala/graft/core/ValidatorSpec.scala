@@ -90,7 +90,7 @@ class ValidatorSpec extends AnyFunSuite {
       "3.tables.json" -> valid,
       "4.tables.json" -> invalid).toDS()
     val rep = Validator.report(spark, files)
-    assert(Validator.reportAll(rep).count() == 4)
+    assert(rep.count() == 4)
     val untilFirst = Validator.reportUntilFirstError(rep).collect().toList
     assert(untilFirst.map(_.name) == List("1.tables.json", "2.tables.json"))
     assert(untilFirst.last.status == Validator.MalformedJson)

@@ -35,7 +35,7 @@ class DupClustersSpec extends AnyFunSuite {
   test("pointer doubling converges on a 100-long chain well inside maxIter") {
     import spark.implicits._
     // a plain propagate-only scheme needs ~100 rounds here; the compressed
-    // scheme must finish inside the default maxIter=30 (O(log d))
+    // scheme must finish inside DupClusters.MaxIter = 30 (O(log d))
     val e = (0L until 100L).map(i => (i, i + 1)).toDF("src", "dst")
     val got = DupClusters.connectedComponents(spark, e)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -12,7 +12,7 @@ object OpsReferences {
   /** The winnowing fingerprint set itself (sorted), the set that
     * [[TextAnalysis.winnowFingerprintRows]] summarizes per document.
     */
-  def winnowSet(text: String, k: Int = 3, w: Int = 4): scala.collection.SortedSet[Long] =
+  def winnowSet(text: String, k: Int = TextAnalysis.WinnowK, w: Int = TextAnalysis.WinnowW): scala.collection.SortedSet[Long] =
     scala.collection.immutable.SortedSet.from(TextAnalysis.winnowDistinctSorted(text, k, w))
 
   /** One row per k-token window: (doc_id, pos, gram) with 0-based token

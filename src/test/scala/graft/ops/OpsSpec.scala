@@ -93,25 +93,25 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("hyperplane signatures: cached constant matrix, typed pass matches a driver recompute") {
-    // the plane matrix is a CONSTANT of (planes, dim): one JVM-cached
+    // the plane matrix is a CONSTANT of dim: one JVM-cached
     // instance (round 3 re-derived every component per row per element
     // inside HOF lambdas — the measured BENCH.md trap, worst benched query)
-    val m1 = Similarity.planeMatrix(8, 16)
-    assert(m1 eq Similarity.planeMatrix(8, 16)) // same cached instance
-    assert(m1.length == 8 && m1.head.length == 16)
+    val m1 = Similarity.planeMatrix(16)
+    assert(m1 eq Similarity.planeMatrix(16)) // same cached instance
+    assert(m1.length == Similarity.Planes && m1.head.length == 16)
     assert(m1.flatten.forall(v => v >= -1.0 && v <= 1.0))
     assert(m1(0)(0) != m1(1)(0) || m1(0)(1) != m1(1)(1)) // planes differ
 
-    val sigs = Similarity.hyperplaneSigRows(emb.filter(col("vec_id") < 20), 8)
+    val sigs = Similarity.hyperplaneSigRows(emb.filter(col("vec_id") < 20))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = emb.filter(col("vec_id") < 20)
       .select(col("vec_id"), col("embedding")).collect()
       .map { r =>
         val id = r.getLong(0)
         val e = r.getSeq[Float](1).toArray
-        val m = Similarity.planeMatrix(8, e.length)
+        val m = Similarity.planeMatrix(e.length)
         var sig = 0L
-        for (p <- 0 until 8) {
+        for (p <- 0 until Similarity.Planes) {
           val acc = e.indices.map(j => e(j) * m(p)(j)).sum
           if (acc > 0) sig |= (1L << p)
         }

@@ -91,20 +91,20 @@ class SpreadSpec extends AnyFunSuite {
     // hash family). Duplicate grams are exercised (doc 1) — min is
     // duplicate-insensitive, so dropping the distinct cannot change it.
     import spark.implicits._
-    val cfg = Dedup.LshConfig()
+    import Dedup.{Bands, NumHashes, ShingleSize}
     val df = Seq(
       (1L, "aa bb cc dd aa bb cc dd"),
       (2L, "Straße Señor bb"),
       (3L, "xx")).toDF("doc_id", "text")
-    val got = Dedup.bandHashRows(spark, df, cfg)
+    val got = Dedup.bandHashRows(spark, df)
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val rowsPerBand = cfg.numHashes / cfg.bands
+    val rowsPerBand = NumHashes / Bands
     df.collect().foreach { r =>
-      val grams = Dedup.shinglesOf(r.getString(1), cfg.shingleSize)
-      val mins = (0 until cfg.numHashes).map { i =>
+      val grams = Dedup.shinglesOf(r.getString(1), ShingleSize)
+      val mins = (0 until NumHashes).map { i =>
         grams.map(g => TextKernel.hash64(g, i * 0x9E3779B97F4A7C15L)).min
       }
-      (0 until cfg.bands).foreach { b =>
+      (0 until Bands).foreach { b =>
         var h = 0xcbf29ce484222325L ^ b.toLong
         (b * rowsPerBand until (b + 1) * rowsPerBand).foreach { i =>
           h ^= mins(i); h *= 0x100000001b3L

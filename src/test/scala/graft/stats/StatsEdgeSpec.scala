@@ -340,6 +340,21 @@ class StatsEdgeSpec extends AnyFunSuite {
     assert(w.toString == want)
   }
 
+  test("writeReport with columns streams the unique-column block formatStats appends") {
+    val spark = graft.SharedSpark.spark
+    import spark.implicits._
+    val docs = Seq(
+      paper("""{"page": 1, "rows": [{"species": "Apiaceae", "count": "42"}]}"""),
+      paper("""{"page": 1, "rows": [{"species": "Rosaceae", "flag": "true"}]}"""))
+    val perDoc = docs.zipWithIndex.map { case (d, i) => Stats.paperStats(s"p$i", d) }
+    val columns = Stats.uniqueColumns(docs)
+    val w = new java.io.StringWriter()
+    Stats.writeReport(spark, spark.createDataset(perDoc), w, sortMode = "asc", columns = Some(columns))
+    val want = Stats.formatStats(GlobalStatsRow.accumulate(perDoc), perDoc, Some(columns)) + "\n"
+    assert(w.toString == want)
+    assert(want.contains("Unique Columns:\ncount:int\nflag:bool\nspecies:str"))
+  }
+
   test("format_stats per-paper block carries counters and percentages") {
     val s = stats(
       """{"page": 1, "rows": [
