@@ -10,7 +10,8 @@ import graft.ops.{Curation, LineDedup}
   * operators, in the order the published recipes run them:
   *
   *  1. repeated-line strip ([[graft.ops.LineDedup]]) — boilerplate lines
-  *     removed, text rebuilt; fully-boilerplate docs dropped;
+  *     removed, text rebuilt; fully-boilerplate docs, left empty, get no
+  *     verdict from the gates and are dropped;
   *  2. quality + repetition gates and exact dedup ([[graft.ops.Curation]]);
   *  3. duplicated-substring coverage gate ([[graft.ops.DupSpans]]) — docs
   *     over `--max-dup-permille` duplicated tokens dropped;
@@ -156,10 +157,13 @@ object CurateMain {
     // below them run once); a doc_id exchange pinned here to share the
     // rebuild would shuffle the whole text once more, and where the strip
     // already leaves the rows hash-partitioned on doc_id (Spread fired)
-    // the planner drops such a pin anyway.
+    // the planner drops such a pin anyway. A doc the strip left empty is
+    // not filtered here: such a filter is pushed below the rebuild's
+    // projection and evaluates the rebuild once more per consumer. The
+    // gates give an empty doc no verdict, so it never joins the output.
     val (stripped, strippedN) = observed(
-      LineDedup.stripRepeatedLines(input, args.lineMinDf).filter(col("text") =!= ""),
-      count(lit(1)))
+      LineDedup.stripRepeatedLines(input, args.lineMinDf),
+      count_if(col("text") =!= ""))
     val (verdicts, gateN) = observed(
       Curation.gates(spark, stripped, benchmark, args.gramK, args.maxDupPermille).toDF(),
       count_if(col("keeper")), count_if(col("span_ok")), count_if(col("contaminated")))

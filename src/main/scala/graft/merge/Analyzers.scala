@@ -13,9 +13,6 @@ object Analyzers {
   type Mapping = scala.collection.mutable.LinkedHashMap[String, String]
   def emptyMapping: Mapping = scala.collection.mutable.LinkedHashMap.empty[String, String]
 
-  /** column_value_to_strings — analyzers.py:15-20 */
-  def cellStrings(c: Cell): List[String] = c.strings
-
   /** analyzers.py:23-40 */
   def renamableSourceColumns(columns: List[String], schema: Option[ColumnSchema]): List[String] =
     schema match {
@@ -27,6 +24,40 @@ object Analyzers {
     schema match {
       case Some(sc) => columns.filter(sc.contains)
       case None => columns.filter(Text.isSemanticColumn)
+    }
+
+  /** The side a merge-time analyzer renames: the right fragment's renamable
+    * source columns onto the left's target columns when only the right has
+    * sources, the mirror case when only the left has them, else neither.
+    * Returns (source columns, source rows, target columns, target rows).
+    */
+  def sourceAndTarget(
+      leftColumnNames: List[String], rightColumnNames: List[String],
+      leftRows: List[RowData], rightRows: List[RowData],
+      schema: Option[ColumnSchema]): Option[(List[String], List[RowData], List[String], List[RowData])] = {
+    val leftSources = renamableSourceColumns(leftColumnNames, schema)
+    val rightSources = renamableSourceColumns(rightColumnNames, schema)
+    val leftTargets = renamableTargetColumns(leftColumnNames, schema)
+    val rightTargets = renamableTargetColumns(rightColumnNames, schema)
+    if (rightSources.nonEmpty && leftTargets.nonEmpty && leftSources.isEmpty)
+      Some((rightSources, rightRows, leftTargets, leftRows))
+    else if (leftSources.nonEmpty && rightTargets.nonEmpty && rightSources.isEmpty)
+      Some((leftSources, leftRows, rightTargets, rightRows))
+    else None
+  }
+
+  /** The values a semantic analyzer scores a column by (analyzers.py:232-243):
+    * a scalar stripped, a multi-value cell's FIRST entry stripped; null and
+    * blank values skipped.
+    */
+  def sampleValues(rows: List[RowData], columnName: String): List[String] =
+    rows.flatMap { row =>
+      row.get(columnName) match {
+        case None | Some(Cell.Null) => None
+        case Some(Cell.Str(s)) => Some(Text.pyStrip(s)).filter(_.nonEmpty)
+        case Some(Cell.Multi(vs)) =>
+          vs.headOption.map(v => Text.pyStrip(v.value)).filter(_.nonEmpty)
+      }
     }
 
   /** Greedy 1-1 assignment by descending score; python's sort is stable so
@@ -126,7 +157,7 @@ final class HintsLoadTimeAnalyzer(hints: List[String], safe: Boolean = true) ext
     columns.foreach { column =>
       row.get(column).foreach { v =>
         if (v != Cell.Null) {
-          val strings = Analyzers.cellStrings(v).map(Text.pyStrip).filter(_.nonEmpty)
+          val strings = v.strings.map(Text.pyStrip).filter(_.nonEmpty)
           strings.headOption.foreach(s => result(column) = Text.normalizeColumnName(s))
         }
       }
@@ -155,7 +186,6 @@ final class AliasLoadTimeAnalyzer(aliases: Vector[(String, String)]) extends Loa
 /** analyzers.py:153-258 — deterministic scorer instead of spaCy. */
 final class ColumnNameSemanticLoadTimeAnalyzer(
     threshold: Double = 0.5,
-    language: String = "en",
     schema: Option[ColumnSchema] = None) extends LoadTimeAnalyzer {
 
   def buildMapping(columnNames: List[String], rows: List[RowData]): Analyzers.Mapping = {
@@ -168,7 +198,7 @@ final class ColumnNameSemanticLoadTimeAnalyzer(
         val schemaColumns = sc.columnNames
         val scores = List.newBuilder[(Double, String, String)]
         candidates.foreach { candidate =>
-          val values = sampleValues(rows, candidate)
+          val values = Analyzers.sampleValues(rows, candidate)
           if (values.nonEmpty) {
             val columnNameScore: Option[Double] =
               if (Text.isSemanticColumn(candidate))
@@ -185,18 +215,6 @@ final class ColumnNameSemanticLoadTimeAnalyzer(
         Analyzers.greedyAssignment(scores.result())
     }
   }
-
-  /** analyzers.py:232-243: scalar -> strip; multi -> FIRST entry only. */
-  private def sampleValues(rows: List[RowData], columnName: String): List[String] = {
-    rows.flatMap { row =>
-      row.get(columnName) match {
-        case None | Some(Cell.Null) => None
-        case Some(Cell.Str(s)) => Some(Text.pyStrip(s)).filter(_.nonEmpty)
-        case Some(Cell.Multi(vs)) =>
-          vs.headOption.map(v => Text.pyStrip(v.value)).filter(_.nonEmpty)
-      }
-    }
-  }
 }
 
 /** analyzers.py:276-355 */
@@ -206,20 +224,8 @@ final class JaccardMergeTimeAnalyzer(
 
   def buildMapping(
       leftColumnNames: List[String], rightColumnNames: List[String],
-      leftRows: List[RowData], rightRows: List[RowData]): Analyzers.Mapping = {
-    val leftSources = Analyzers.renamableSourceColumns(leftColumnNames, schema)
-    val rightSources = Analyzers.renamableSourceColumns(rightColumnNames, schema)
-    val leftTargets = Analyzers.renamableTargetColumns(leftColumnNames, schema)
-    val rightTargets = Analyzers.renamableTargetColumns(rightColumnNames, schema)
-
-    val sel: Option[(List[String], List[RowData], List[String], List[RowData])] =
-      if (rightSources.nonEmpty && leftTargets.nonEmpty && leftSources.isEmpty)
-        Some((rightSources, rightRows, leftTargets, leftRows))
-      else if (leftSources.nonEmpty && rightTargets.nonEmpty && rightSources.isEmpty)
-        Some((leftSources, leftRows, rightTargets, rightRows))
-      else None
-
-    sel match {
+      leftRows: List[RowData], rightRows: List[RowData]): Analyzers.Mapping =
+    Analyzers.sourceAndTarget(leftColumnNames, rightColumnNames, leftRows, rightRows, schema) match {
       case None => Analyzers.emptyMapping
       case Some((sourceColumns, sourceRows, targetColumns, targetRows)) =>
         val sourceSets = sourceColumns.map(c => c -> columnValueSet(sourceRows, c)).toMap
@@ -233,7 +239,6 @@ final class JaccardMergeTimeAnalyzer(
         // analyzers.py:320-333: sort then same greedy loop
         Analyzers.greedyAssignment(scores)
     }
-  }
 
   /** analyzers.py:335-343: unidecode(re.sub(r"\s+"," ", v.strip()).lower()) */
   private def normalizeValue(v: String): String = Text.jaccardNormalizeValue(v)
@@ -243,7 +248,7 @@ final class JaccardMergeTimeAnalyzer(
     rows.foreach { row =>
       row.get(column) match {
         case None | Some(Cell.Null) =>
-        case Some(c) => Analyzers.cellStrings(c).foreach(s => result += normalizeValue(s))
+        case Some(c) => c.strings.foreach(s => result += normalizeValue(s))
       }
     }
     result.toSet
@@ -258,30 +263,17 @@ final class JaccardMergeTimeAnalyzer(
 /** analyzers.py:358-458 */
 final class ColumnValueSemanticMergeTimeAnalyzer(
     threshold: Double = 0.5,
-    language: String = "en",
     schema: Option[ColumnSchema] = None) extends MergeTimeAnalyzer {
 
   def buildMapping(
       leftColumnNames: List[String], rightColumnNames: List[String],
-      leftRows: List[RowData], rightRows: List[RowData]): Analyzers.Mapping = {
-    val leftSources = Analyzers.renamableSourceColumns(leftColumnNames, schema)
-    val rightSources = Analyzers.renamableSourceColumns(rightColumnNames, schema)
-    val leftTargets = Analyzers.renamableTargetColumns(leftColumnNames, schema)
-    val rightTargets = Analyzers.renamableTargetColumns(rightColumnNames, schema)
-
-    val sel: Option[(List[String], List[RowData], List[String])] =
-      if (rightSources.nonEmpty && leftTargets.nonEmpty && leftSources.isEmpty)
-        Some((rightSources, rightRows, leftTargets))
-      else if (leftSources.nonEmpty && rightTargets.nonEmpty && rightSources.isEmpty)
-        Some((leftSources, leftRows, rightTargets))
-      else None
-
-    sel match {
+      leftRows: List[RowData], rightRows: List[RowData]): Analyzers.Mapping =
+    Analyzers.sourceAndTarget(leftColumnNames, rightColumnNames, leftRows, rightRows, schema) match {
       case None => Analyzers.emptyMapping
-      case Some((sourceColumns, sourceRows, targetColumns)) =>
+      case Some((sourceColumns, sourceRows, targetColumns, _)) =>
         val scores = List.newBuilder[(Double, String, String)]
         sourceColumns.foreach { sourceColumn =>
-          val values = sampleValues(sourceRows, sourceColumn)
+          val values = Analyzers.sampleValues(sourceRows, sourceColumn)
           if (values.nonEmpty) {
             targetColumns.foreach { targetColumn =>
               val score = SemanticScorer.semanticScore(values, targetColumn)
@@ -291,16 +283,4 @@ final class ColumnValueSemanticMergeTimeAnalyzer(
         }
         Analyzers.greedyAssignment(scores.result())
     }
-  }
-
-  private def sampleValues(rows: List[RowData], columnName: String): List[String] = {
-    rows.flatMap { row =>
-      row.get(columnName) match {
-        case None | Some(Cell.Null) => None
-        case Some(Cell.Str(s)) => Some(Text.pyStrip(s)).filter(_.nonEmpty)
-        case Some(Cell.Multi(vs)) =>
-          vs.headOption.map(v => Text.pyStrip(v.value)).filter(_.nonEmpty)
-      }
-    }
-  }
 }

@@ -160,12 +160,10 @@ final class FilterHeaderRowsTransformer(hints: List[String] = Nil) extends Fragm
   * `w` with `len(text) > 2` (sic — the whole text, reproduced) whose
   * lowercase form is a known vocabulary word.
   */
-final class FragmentValuesReverser(language: String = "en") extends FragmentTransformer {
-  private val known = SemanticScorer.knownWordsFor(language)
-
+object FragmentValuesReverser extends FragmentTransformer {
   private def countKnownWords(text: String): Int =
     if (text.length <= 2) 0
-    else text.split("\\s+").count(w => known.contains(w.toLowerCase(java.util.Locale.ROOT)))
+    else text.split("\\s+").count(w => SemanticScorer.KnownWords.contains(w.toLowerCase(java.util.Locale.ROOT)))
 
   private def cellScore(v: Cell): Int = v match {
     case Cell.Null => 0

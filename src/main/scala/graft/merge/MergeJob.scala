@@ -59,8 +59,8 @@ final case class MergedFlatRow(
 
 /** Serializable merge configuration (the Spark-shippable form of
   * MergePipeline.Settings, whose stage instances are not serializable and
-  * are built per document group by `toSettings`). Defaults are the
-  * tablemerge CLI defaults.
+  * are built per document group by `toSettings`). Its defaults are the
+  * tablemerge CLI defaults, and the only place they are written.
   */
 final case class MergeConfig(
     filterTitleRows: Boolean = true,
@@ -111,7 +111,7 @@ final case class MergeConfig(
     val schema = schemaStr.map(ColumnSchema.parse)
 
     val pre = List.newBuilder[FragmentTransformer]
-    if (fixReversedColumnValues) pre += new FragmentValuesReverser(semanticLanguage)
+    if (fixReversedColumnValues) pre += FragmentValuesReverser
     if (filterTitleRows) pre += FilterTitleRowsTransformer
     if (stripLeadingRowNumbers) pre += LeadingRowNumberTransformer
     if (normalizePunctuation) pre += NormalizePunctuationTransformer
@@ -122,12 +122,12 @@ final case class MergeConfig(
     if (hintsMode.nonEmpty && hints.nonEmpty) load += new HintsLoadTimeAnalyzer(hints, safeHints)
     if (aliases.nonEmpty) load += new AliasLoadTimeAnalyzer(aliases)
     if (useColumnNameSemantic)
-      load += new ColumnNameSemanticLoadTimeAnalyzer(threshold, semanticLanguage, schema)
+      load += new ColumnNameSemanticLoadTimeAnalyzer(threshold, schema)
 
     val mergeTime = List.newBuilder[MergeTimeAnalyzer]
     if (useJaccard) mergeTime += new JaccardMergeTimeAnalyzer(threshold, schema)
     if (useColumnValueSemantic)
-      mergeTime += new ColumnValueSemanticMergeTimeAnalyzer(threshold, semanticLanguage, schema)
+      mergeTime += new ColumnValueSemanticMergeTimeAnalyzer(threshold, schema)
 
     MergePipeline.Settings(
       pretransformers = pre.result(),

@@ -10,20 +10,19 @@ import graft.core._
   */
 object MergePipeline {
 
-  /** Defaults are the tablemerge CLI defaults: --filter-title-rows on,
-    * FilterEmptyRows always appended last (__main__.py:675-688),
-    * drop-empty-columns/tables postprocessors on. `MergeConfig.toSettings`
-    * builds one from a serializable configuration.
+  /** The stages of one merge, in pipeline order. `MergeConfig.toSettings`
+    * builds one from a serializable configuration, and `MergeConfig()`
+    * holds the tablemerge CLI defaults.
     */
   final case class Settings(
-      pretransformers: List[FragmentTransformer] = List(FilterTitleRowsTransformer, FilterEmptyRowsTransformer),
-      tablesFileTransformer: TablesFileTransformer = NullTablesFileTransformer,
-      loadAnalyzers: List[LoadTimeAnalyzer] = Nil,
-      posttransformers: List[FragmentTransformer] = Nil,
-      mergeAnalyzers: List[MergeTimeAnalyzer] = Nil,
-      agreement: Agreement = SimpleCountAgreement,
-      columnAgreement: Boolean = false,
-      postprocessors: List[PostProcessor] = PostProcessors.build(None))
+      pretransformers: List[FragmentTransformer],
+      tablesFileTransformer: TablesFileTransformer,
+      loadAnalyzers: List[LoadTimeAnalyzer],
+      posttransformers: List[FragmentTransformer],
+      mergeAnalyzers: List[MergeTimeAnalyzer],
+      agreement: Agreement,
+      columnAgreement: Boolean,
+      postprocessors: List[PostProcessor])
 
   private def transformDoc(doc: TableDoc, transformers: List[FragmentTransformer]): TableDoc =
     if (transformers.isEmpty) doc

@@ -186,44 +186,38 @@ object Merger {
       val clusters = makeFragmentsClusters(tablesCluster, docs, offsets)
       val mergedFragments = clusters.toList.sortBy(_._1).map { case (_, mergeTargets) =>
         val (leftFragment0, leftDoc) = mergeTargets.head
-        val firstRight = mergeTargets.tail.collectFirst { case (f, _) if f != null => f }
+        val firstRight = mergeTargets.tail.headOption.map(_._1)
         val mapping = ColumnsAligner.mergeTimeMapping(leftFragment0, firstRight, analyzers)
         val leftFragment = leftFragment0.copy(
           rows = leftFragment0.rows.map(ColumnsAligner.renameRow(mapping, _)))
 
         val builder = new TableFragmentBuilder(leftFragment, leftDoc.uuid, agreement, columnAgreement)
 
-        var break = false
         mergeTargets.tail.foreach { case (rightFragment, rightDoc) =>
-          if (!break) {
-            if (rightFragment == null) break = true
-            else {
-              val rightUuid = rightDoc.uuid
-              val rightRows = rightFragment.rows.zipWithIndex.map { case (r, i) =>
-                ColumnsAligner.renameRow(mapping, r).copy(rowIdx = Some(i))
-              }.toVector
-              val leftRows = builder.nextLeftRows()
-              var rightIdx = 0
+          val rightUuid = rightDoc.uuid
+          val rightRows = rightFragment.rows.zipWithIndex.map { case (r, i) =>
+            ColumnsAligner.renameRow(mapping, r).copy(rowIdx = Some(i))
+          }.toVector
+          val leftRows = builder.nextLeftRows()
+          var rightIdx = 0
 
-              leftRows.foreach { leftRow =>
-                while (rightIdx < rightRows.length &&
-                  rightRows(rightIdx).rowIdx.getOrElse(0) < leftRow.rowIdx.getOrElse(0)) {
-                  builder.appendSkipped(List(rightRows(rightIdx)), rightUuid)
-                  rightIdx += 1
-                }
-                if (rightIdx < rightRows.length &&
-                  rightRows(rightIdx).rowIdx == leftRow.rowIdx &&
-                  sameRow(leftRow, rightRows(rightIdx))) {
-                  val rightRow = rightRows(rightIdx).copy(sources = rightUuid.map(List(_)))
-                  builder.mergeAndAppend(leftRow, rightRow)
-                  rightIdx += 1
-                } else {
-                  builder.appendUnmatched(leftRow)
-                }
-              }
-              builder.appendSkipped(rightRows.drop(rightIdx).toList, rightUuid)
+          leftRows.foreach { leftRow =>
+            while (rightIdx < rightRows.length &&
+              rightRows(rightIdx).rowIdx.getOrElse(0) < leftRow.rowIdx.getOrElse(0)) {
+              builder.appendSkipped(List(rightRows(rightIdx)), rightUuid)
+              rightIdx += 1
+            }
+            if (rightIdx < rightRows.length &&
+              rightRows(rightIdx).rowIdx == leftRow.rowIdx &&
+              sameRow(leftRow, rightRows(rightIdx))) {
+              val rightRow = rightRows(rightIdx).copy(sources = rightUuid.map(List(_)))
+              builder.mergeAndAppend(leftRow, rightRow)
+              rightIdx += 1
+            } else {
+              builder.appendUnmatched(leftRow)
             }
           }
+          builder.appendSkipped(rightRows.drop(rightIdx).toList, rightUuid)
         }
         builder.build()
       }

@@ -80,6 +80,4 @@ object SemanticScorer {
     "dusk", "moth", "ibis", "shrew", "finch", "vulpes", "lucerna", "rana",
     "vitrea", "bubo", "prunae", "cyprinus", "speculum", "tinea", "crepusculi",
     "eudocimus", "sorex", "stratae", "fringilla", "cafeata")
-
-  def knownWordsFor(language: String): Set[String] = KnownWords
 }

@@ -135,12 +135,12 @@ object PostProcessors {
   /** build_postprocessors — postprocessor.py:155-175 (order is load-bearing). */
   def build(
       schema: Option[ColumnSchema],
-      filterColumns: Boolean = false,
-      orderColumns: Boolean = false,
-      coerceTypes: Boolean = false,
-      onlySemanticColumns: Boolean = false,
-      dropEmptyColumns: Boolean = true,
-      dropEmptyTables: Boolean = true): List[PostProcessor] = {
+      filterColumns: Boolean,
+      orderColumns: Boolean,
+      coerceTypes: Boolean,
+      onlySemanticColumns: Boolean,
+      dropEmptyColumns: Boolean,
+      dropEmptyTables: Boolean): List[PostProcessor] = {
     val b = List.newBuilder[PostProcessor]
     if (onlySemanticColumns) b += FilterSemanticColumnsPostProcessor
     if (dropEmptyColumns) b += DropEmptyColumnsPostProcessor

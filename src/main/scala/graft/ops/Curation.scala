@@ -116,7 +116,8 @@ object Curation {
   final case class Verdict(doc_id: Long, keeper: Boolean, span_ok: Boolean, contaminated: Boolean)
 
   /** The three gates of [[graft.CurateMain]] in one keyed pass over
-    * `(doc_id, text)` rows, one [[Verdict]] per doc:
+    * `(doc_id, text)` rows, one [[Verdict]] per doc whose text is not
+    * empty (an empty doc gets no verdict):
     *  - `keeper`: the doc survives the quality and repetition gates and is
     *    the minimum doc_id of its content MD5 among survivors, as in
     *    [[curate]];
@@ -144,7 +145,7 @@ object Curation {
     import spark.implicits._
     val docRows = TextKernel.docTexts(docs).mapPartitions { it =>
       val md = java.security.MessageDigest.getInstance("MD5")
-      it.flatMap { case (id, text) =>
+      it.filter(!_._2.isEmpty).flatMap { case (id, text) =>
         val toks = TextKernel.lowerWords(text)
         val kind = if (docSignals(text, toks).survives) Survivor else Doc
         val doc = (id, kind, md.digest(text.getBytes(java.nio.charset.StandardCharsets.UTF_8)),

@@ -67,18 +67,18 @@ object Similarity {
       extends Aggregator[(Long, Long, Double), Seq[Neighbor], Seq[Neighbor]] {
     private val ord: Ordering[Neighbor] =
       Ordering.by((n: Neighbor) => (-n.score, n.neighbor_id))
-    def zero: Seq[Neighbor] = Vector.empty
-    def reduce(buf: Seq[Neighbor], x: (Long, Long, Double)): Seq[Neighbor] = {
+    override def zero: Seq[Neighbor] = Vector.empty
+    override def reduce(buf: Seq[Neighbor], x: (Long, Long, Double)): Seq[Neighbor] = {
       val n = Neighbor(x._2, x._3)
       if (buf.size < k) (buf :+ n).sorted(ord)
       else if (ord.lt(n, buf.last)) (buf.init :+ n).sorted(ord)
       else buf
     }
-    def merge(a: Seq[Neighbor], b: Seq[Neighbor]): Seq[Neighbor] =
+    override def merge(a: Seq[Neighbor], b: Seq[Neighbor]): Seq[Neighbor] =
       (a ++ b).sorted(ord).take(k)
-    def finish(r: Seq[Neighbor]): Seq[Neighbor] = r.sorted(ord)
-    def bufferEncoder: Encoder[Seq[Neighbor]] = ExpressionEncoder[Seq[Neighbor]]()
-    def outputEncoder: Encoder[Seq[Neighbor]] = ExpressionEncoder[Seq[Neighbor]]()
+    override def finish(r: Seq[Neighbor]): Seq[Neighbor] = r.sorted(ord)
+    override def bufferEncoder: Encoder[Seq[Neighbor]] = ExpressionEncoder[Seq[Neighbor]]()
+    override def outputEncoder: Encoder[Seq[Neighbor]] = ExpressionEncoder[Seq[Neighbor]]()
   }
 
   /** (query_id, neighbor_id, score) -> ranked top-k per query. */

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.shim
 import org.apache.spark.sql.types._
 import graft.ops.{Curation, Decontaminate, DupSpans}
 
@@ -164,22 +163,20 @@ class CurateMainSpec extends AnyFunSuite {
         sites.add(exec.flatMap(id => Option(execs.get(id.toLong))).getOrElse(s"job ${js.jobId} outside SQL")); ()
       }
     }
-    shim.waitUntilEmpty(sc)
-    sc.addSparkListener(listener)
-    try {
+    SharedSpark.listening(listener) {
       CurateMain.run(spark, corpus, Some(benchmark), CurateMain.Args(), computeStats = false)
-      shim.waitUntilEmpty(sc)
-      assert(sites.isEmpty, s"construction-pure run submitted jobs: $sites")
+    }
+    assert(sites.isEmpty, s"construction-pure run submitted jobs: $sites")
 
-      val cachedBefore = sc.getPersistentRDDs.keySet
-      val (out, _) = CurateMain.run(spark, corpus, Some(benchmark), CurateMain.Args())
-      shim.waitUntilEmpty(sc)
-      assert(sc.getPersistentRDDs.keySet.diff(cachedBefore).size == 1)
-      val distinctSites = sites.toArray(Array.empty[String]).toSet
-      assert(distinctSites.size == 1 && distinctSites.head.startsWith("count at CurateMain"),
-        s"jobs came from: $distinctSites")
-      out.unpersist()
-    } finally sc.removeSparkListener(listener)
+    val cachedBefore = sc.getPersistentRDDs.keySet
+    val (out, _) = SharedSpark.listening(listener) {
+      CurateMain.run(spark, corpus, Some(benchmark), CurateMain.Args())
+    }
+    assert(sc.getPersistentRDDs.keySet.diff(cachedBefore).size == 1)
+    val distinctSites = sites.toArray(Array.empty[String]).toSet
+    assert(distinctSites.size == 1 && distinctSites.head.startsWith("count at CurateMain"),
+      s"jobs came from: $distinctSites")
+    out.unpersist()
   }
 
   test("plan shape: one keyed pass, the strip's rebuild once per consumer, four shuffles") {
@@ -213,6 +210,23 @@ class CurateMainSpec extends AnyFunSuite {
     // partitions on doc_id; the shuffles are the strip's doc_id spread and
     // line-digest count, the gates' key and doc_id
     assert(counts == ((1, 2, 4)), plan.toString)
+  }
+
+  test("plan shape: no filter on the stripped text re-runs the rebuild, so each consumer runs it once") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayExcept
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val (corpus, benchmark) = planted
+    val (out, _) = CurateMain.run(spark, corpus, Some(benchmark), CurateMain.Args(),
+      computeStats = false)
+    out.collect()
+    val plan = out.queryExecution.executedPlan
+    // the rebuild's kept-index difference, once per expression that
+    // rebuilds a doc: a filter on the output text pushed below the
+    // rebuild's projection would hold a second copy under each consumer
+    val rebuilds = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case n => n.expressions.map(_.collect { case e: ArrayExcept => e }.size).sum
+    }.sum
+    assert(rebuilds == 2, plan.toString)
   }
 
   test("stats: docs shorter than k, a whitespace-only doc and a gram repeated inside one doc match the standalone ops") {

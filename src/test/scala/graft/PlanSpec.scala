@@ -133,12 +133,10 @@ class PlanSpec extends AnyFunSuite {
         jobs.incrementAndGet(); ()
       }
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    SharedSpark.listening(listener) {
       SparkEntry.queries.foreach { case (_, fn) => fn(spark, sfDir) }
-      org.apache.spark.sql.graft.shim.waitUntilEmpty(spark.sparkContext)
-      assert(jobs.get() <= 1, s"${jobs.get()} Spark jobs ran during query construction")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get() <= 1, s"${jobs.get()} Spark jobs ran during query construction")
   }
 
   test("curation pass is one corpus scan + one partial-agg shuffle (no window)") {

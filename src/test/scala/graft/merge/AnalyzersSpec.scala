@@ -10,10 +10,11 @@ import graft.core._
   * word-vector similarity (en_core_web_md / es_core_news_md); the engine's
   * A5/A7 use the deterministic SemanticScorer instead, so those cases keep
   * the reference's DECISION STRUCTURE (value-based mapping to the closest
-  * schema name, threshold gate, own-name-closer rejection, greedy 1-1,
-  * language pass-through) over vocabularies the surface scorer can relate
-  * (shared stems instead of distributional neighbors). Everything else is
-  * ported verbatim.
+  * schema name, threshold gate, own-name-closer rejection, greedy 1-1)
+  * over vocabularies the surface scorer can relate (shared stems instead
+  * of distributional neighbors); the scorer reads no language, so the (es)
+  * cases differ from the (en) ones only in their vocabularies. Everything
+  * else is ported verbatim.
   */
 class AnalyzersSpec extends AnyFunSuite {
 
@@ -224,7 +225,7 @@ class AnalyzersSpec extends AnyFunSuite {
         s("0" -> c, "1" -> a, "2" -> code)
       }.toList, 1)
     val got = nameSemMapping(
-      new ColumnNameSemanticLoadTimeAnalyzer(0.3, "en", Some(ColorAnimalSchema)),
+      new ColumnNameSemanticLoadTimeAnalyzer(0.3, Some(ColorAnimalSchema)),
       left.columnNames.toList, left.rows)
     assert(got == Map("0" -> "color", "1" -> "animal"))
   }
@@ -235,7 +236,7 @@ class AnalyzersSpec extends AnyFunSuite {
         s("0" -> c, "1" -> a, "2" -> code)
       }.toList, 1)
     assert(nameSemMapping(
-      new ColumnNameSemanticLoadTimeAnalyzer(0.99, "en", Some(ColorAnimalSchema)),
+      new ColumnNameSemanticLoadTimeAnalyzer(0.99, Some(ColorAnimalSchema)),
       left.columnNames.toList, left.rows).isEmpty)
   }
 
@@ -245,7 +246,7 @@ class AnalyzersSpec extends AnyFunSuite {
         s("0" -> c, "1" -> a, "2" -> code)
       }.toList, 1)
     val got = nameSemMapping(
-      new ColumnNameSemanticLoadTimeAnalyzer(0.3, "es", Some(ColorAnimalSchemaEs)),
+      new ColumnNameSemanticLoadTimeAnalyzer(0.3, Some(ColorAnimalSchemaEs)),
       left.columnNames.toList, left.rows)
     assert(got == Map("0" -> "color", "1" -> "animal"))
   }
@@ -256,7 +257,7 @@ class AnalyzersSpec extends AnyFunSuite {
         s("0" -> c, "1" -> a, "2" -> code)
       }.toList, 1)
     assert(nameSemMapping(
-      new ColumnNameSemanticLoadTimeAnalyzer(0.99, "es", Some(ColorAnimalSchemaEs)),
+      new ColumnNameSemanticLoadTimeAnalyzer(0.99, Some(ColorAnimalSchemaEs)),
       left.columnNames.toList, left.rows).isEmpty)
   }
 
@@ -268,7 +269,7 @@ class AnalyzersSpec extends AnyFunSuite {
         s("animalia" -> c, "tone" -> a)
       }.toList, 1)
     val got = nameSemMapping(
-      new ColumnNameSemanticLoadTimeAnalyzer(0.3, "en", Some(ColorAnimalSchema)),
+      new ColumnNameSemanticLoadTimeAnalyzer(0.3, Some(ColorAnimalSchema)),
       left.columnNames.toList, left.rows)
     assert(got == Map("animalia" -> "color", "tone" -> "animal"))
   }
@@ -279,12 +280,12 @@ class AnalyzersSpec extends AnyFunSuite {
     val left = Fragment(List(s("colored" -> "colored"), s("colored" -> "colored item")), 1)
     val schema = ColumnSchema.parse("color:str")
     assert(nameSemMapping(
-      new ColumnNameSemanticLoadTimeAnalyzer(0.3, "en", Some(schema)),
+      new ColumnNameSemanticLoadTimeAnalyzer(0.3, Some(schema)),
       left.columnNames.toList, left.rows).isEmpty)
     // sanity: without the own-name advantage the same values DO map
     val misnamed = Fragment(List(s("zzz" -> "colored"), s("zzz" -> "colored item")), 1)
     assert(nameSemMapping(
-      new ColumnNameSemanticLoadTimeAnalyzer(0.3, "en", Some(schema)),
+      new ColumnNameSemanticLoadTimeAnalyzer(0.3, Some(schema)),
       misnamed.columnNames.toList, misnamed.rows).toMap == Map("zzz" -> "color"))
   }
 
@@ -294,7 +295,7 @@ class AnalyzersSpec extends AnyFunSuite {
     val left = semanticFrag(Species)
     val right = numericFrag(Species)
     val loadMapping = ColumnsAligner.loadTimeMapping(
-      left, List(new ColumnNameSemanticLoadTimeAnalyzer(0.3, "en", Some(SpeciesSchema))))
+      left, List(new ColumnNameSemanticLoadTimeAnalyzer(0.3, Some(SpeciesSchema))))
     // all left columns are already in the schema -> no candidates, no renames
     assert(loadMapping.isEmpty)
     val renamedLeft = Fragment(left.rows.map(ColumnsAligner.renameRow(loadMapping, _)), left.page)
@@ -311,7 +312,7 @@ class AnalyzersSpec extends AnyFunSuite {
     assert(jaccardOnly == Map("1" -> "area", "2" -> "family"))
 
     val loadMapping = ColumnsAligner.loadTimeMapping(
-      left, List(new ColumnNameSemanticLoadTimeAnalyzer(0.1, "en", Some(SpeciesSchema))))
+      left, List(new ColumnNameSemanticLoadTimeAnalyzer(0.1, Some(SpeciesSchema))))
     val renamedLeft = Fragment(left.rows.map(ColumnsAligner.renameRow(loadMapping, _)), left.page)
     val chain = ColumnsAligner.mergeTimeMapping(
       renamedLeft, Some(right), List(new JaccardMergeTimeAnalyzer(0.6))).toMap
@@ -441,7 +442,7 @@ class AnalyzersSpec extends AnyFunSuite {
   // ---- value/string helpers ------------------------------------------------
 
   test("column_value_to_strings returns empty for None (null cell)") {
-    assert(Analyzers.cellStrings(Cell.Null).isEmpty)
+    assert(Cell.Null.strings.isEmpty)
   }
 
   test("extract_column_str_values returns empty for None (null column value)") {
@@ -528,7 +529,7 @@ class AnalyzersSpec extends AnyFunSuite {
       ColorishValues.lazyZip(AnimalishValues).map { (c, a) => s("color" -> c, "animal" -> a) }.toList, 1)
     val right = Fragment(
       ColorishValues.lazyZip(AnimalishValues).map { (c, a) => s("animalia" -> c, "tone" -> a) }.toList, 1)
-    assert(valSemMapping(new ColumnValueSemanticMergeTimeAnalyzer(0.3, "en", schema), left, right)
+    assert(valSemMapping(new ColumnValueSemanticMergeTimeAnalyzer(0.3, schema), left, right)
       == Map("animalia" -> "color", "tone" -> "animal"))
   }
 }

@@ -22,7 +22,7 @@ class LoaderSpec extends AnyFunSuite {
   test("load returns a parsed doc through the default phases") {
     val loaded = MergePipeline.load(
       doc("""{"table_fragments": [{"rows": [{"species": "Ammi majus"}], "page": 1}]}"""),
-      MergePipeline.Settings(pretransformers = Nil))
+      MergeConfig().toSettings.copy(pretransformers = Nil))
     assert(loaded.tables.size == 1)
     assert(rowsOf(loaded) == List(List("species" -> "Ammi majus")))
   }
@@ -33,7 +33,7 @@ class LoaderSpec extends AnyFunSuite {
         """{"table_fragments": [{"rows": [
           |  {"0": "Figure 1. Species list"},
           |  {"0": "Ammi majus", "1": "Apiaceae"}], "page": 1}]}""".stripMargin),
-      MergePipeline.Settings(pretransformers = List(FilterTitleRowsTransformer)))
+      MergeConfig().toSettings.copy(pretransformers = List(FilterTitleRowsTransformer)))
     assert(rowsOf(loaded) == List(List("0" -> "Ammi majus", "1" -> "Apiaceae")))
   }
 
@@ -43,7 +43,7 @@ class LoaderSpec extends AnyFunSuite {
         """{"citation": null, "tables": [
           |  {"table_fragments": [{"rows": [{"species": "Ammi majus"}], "page": 1}]},
           |  {"table_fragments": [{"rows": [{"species": "Rosa canina"}], "page": 2}]}]}""".stripMargin),
-      MergePipeline.Settings(pretransformers = Nil,
+      MergeConfig().toSettings.copy(pretransformers = Nil,
         tablesFileTransformer = SafeConsecutiveFragmentsCompactor))
     // same columns on consecutive pages -> compacted into ONE table with
     // both fragments preserved (reference asserts exactly this shape)
@@ -61,7 +61,7 @@ class LoaderSpec extends AnyFunSuite {
           |  {"0": ""},
           |  {"0": "Ammi majus", "1": "Apiaceae"},
           |  {"0": "", "1": ""}], "page": 1}]}""".stripMargin),
-      MergePipeline.Settings(pretransformers = List(FilterEmptyRowsTransformer)))
+      MergeConfig().toSettings.copy(pretransformers = List(FilterEmptyRowsTransformer)))
     assert(rowsOf(loaded) == List(List("0" -> "Ammi majus", "1" -> "Apiaceae")))
   }
 
@@ -71,7 +71,7 @@ class LoaderSpec extends AnyFunSuite {
         """{"table_fragments": [{"rows": [
           |  {"0": "Ammi majus", "1": "Apiaceae"},
           |  {"0": "Rosa canina", "1": "Rosaceae"}], "page": 1}]}""".stripMargin),
-      MergePipeline.Settings()) // defaults: title + empty filters on
+      MergeConfig().toSettings) // defaults: title + empty filters on
     assert(rowsOf(loaded) == List(
       List("0" -> "Ammi majus", "1" -> "Apiaceae"),
       List("0" -> "Rosa canina", "1" -> "Rosaceae")))

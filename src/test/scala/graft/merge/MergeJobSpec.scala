@@ -3,9 +3,9 @@ package graft.merge
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Dataset, Row}
-import org.apache.spark.sql.graft.shim
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
+import graft.SharedSpark.listening
 import graft.core._
 import graft.pages.SyntheticPages
 import graft.pipeline.ExtractJob
@@ -68,16 +68,6 @@ class MergeJobSpec extends AnyFunSuite {
   private def cacheIds(): Set[Int] = spark.sparkContext.getPersistentRDDs.collect {
     case (id, rdd) if rdd.name == s"In-memory table ${MergeJob.CacheName}" => id
   }.toSet
-
-  /** Runs `action` with `listener` attached, after every earlier event has
-    * been delivered and before the listener is read. */
-  private def listening[A](listener: SparkListener)(action: => A): A = {
-    val sc = spark.sparkContext
-    shim.waitUntilEmpty(sc)
-    sc.addSparkListener(listener)
-    try { val a = action; shim.waitUntilEmpty(sc); a }
-    finally sc.removeSparkListener(listener)
-  }
 
   private def flatRows(merged: Dataset[MergedDoc]): Seq[MergedFlatRow] =
     MergeJob.flattenMerged(spark, merged).collect().toSeq

@@ -279,7 +279,7 @@ class MergerEdgeSpec extends AnyFunSuite {
         r(ammi: _*)), 1)))),
       citation = Cell.Str("Flora (2020)"))
     // the remove-header-rows posttransformer, run by the load phase
-    val filtered = MergePipeline.load(doc, MergePipeline.Settings(
+    val filtered = MergePipeline.load(doc, MergeConfig().toSettings.copy(
       pretransformers = Nil, posttransformers = List(new FilterHeaderRowsTransformer)))
     assert(filtered.tables.head.fragments.head.rows == List(r(ammi: _*)))
     assert(filtered.citation == Cell.Str("Flora (2020)"))

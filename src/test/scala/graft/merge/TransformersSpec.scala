@@ -20,12 +20,12 @@ class TransformersSpec extends AnyFunSuite {
       row("a" -> "xoF nretnaL"), // "Lantern Fox" reversed
       row("a" -> "gorF ssalG"))
     val frag = Fragment(reversedRows, 1)
-    val out = new FragmentValuesReverser("en").transformFragment(frag)
+    val out = FragmentValuesReverser.transformFragment(frag)
     assert(strCell(out.rows.head, "a") == "Lantern Fox")
     assert(strCell(out.rows(1), "a") == "Glass Frog")
     // already-correct text stays untouched
     val ok = Fragment(List(row("a" -> "Lantern Fox")), 1)
-    assert(new FragmentValuesReverser("en").transformFragment(ok) == ok)
+    assert(FragmentValuesReverser.transformFragment(ok) == ok)
   }
 
   test("F7 split: conjunction column names split at the conjunction token") {
@@ -56,7 +56,7 @@ class TransformersSpec extends AnyFunSuite {
 
   test("A5 column-name semantic analyzer renames via schema when values echo the column name") {
     val schema = ColumnSchema.parse("scientific_name:str status:str")
-    val analyzer = new ColumnNameSemanticLoadTimeAnalyzer(0.3, "en", Some(schema))
+    val analyzer = new ColumnNameSemanticLoadTimeAnalyzer(0.3, Some(schema))
     val rows = List(
       row("0" -> "scientific name Vulpes", "1" -> "status stable"),
       row("0" -> "scientific name Rana", "1" -> "status declining"))
@@ -66,7 +66,7 @@ class TransformersSpec extends AnyFunSuite {
   }
 
   test("A7 value semantic analyzer maps numeric to opposing semantic columns") {
-    val analyzer = new ColumnValueSemanticMergeTimeAnalyzer(0.3, "en", None)
+    val analyzer = new ColumnValueSemanticMergeTimeAnalyzer(0.3, None)
     val left = List(row("species_name" -> "species name alpha"))
     val right = List(row("0" -> "species name alpha"))
     val mapping = analyzer.buildMapping(List("species_name"), List("0"), left, right)
